@@ -101,9 +101,6 @@ def _q_canon_groups(spark, sf_dir):
     )
 
 
-_BLOCK_KEY = "lower(split_part(text, ' ', 1)) || '|' || lower(split_part(text, ' ', 2))"
-
-
 def _block_key_col():
     return F.concat_ws(
         "|",

@@ -81,7 +81,3 @@ ERROR_CATALOG: dict[str, tuple[str, str, str]] = {
 # match_type values are a separate vocabulary (MatchType.java analog), kept
 # here so the catalog test can tell codes from types.
 MATCH_TYPES = {"EXACT", "CANONICAL", "PHONETIC", "PHRASE", "ALIAS", "NO_MATCH"}
-
-
-def is_known_code(code: str) -> bool:
-    return code in ERROR_CATALOG

@@ -42,9 +42,9 @@ W_TOOL = 1.0
 W_JW, W_LEV, W_TOKEN = 0.4, 0.3, 0.3
 
 # Acceptance cutoff analog of MATCH_LIMIT = 0.5 (ALANameSearcher.java:67),
-# recalibrated on the labeled fixture (tools/calibrate_threshold.py, with
-# phonetic token-set scoring: gold negatives max 0.817, gold positives min
-# 0.893 -> 0.855 splits with margin on both sides).
+# recalibrated on the labeled synthetic fixture (phonetic token-set scoring:
+# gold negatives max 0.817, gold positives min 0.893 -> 0.855 splits with
+# margin on both sides).
 DEFAULT_MATCH_THRESHOLD = 0.855
 
 

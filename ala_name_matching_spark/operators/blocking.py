@@ -209,46 +209,6 @@ def block_table(
     ).select("tier", "block_key", "record_id")
 
 
-def canon_group_map(features: DataFrame) -> DataFrame:
-    """(record_id -> group_rep) for EVERY record, group_rep = min record_id
-    of its (canon_key, role, tool) group.
-
-    The contraction map: connected components runs on the (small) rep graph
-    only; this map extends component labels back to all records with one
-    join. One groupBy + one join back, both on narrow columns.
-    """
-    grp = ["canon_key", "role", "_tool_c"]
-    with_tool = features.withColumn(
-        "_tool_c", F.coalesce(F.col("tool"), F.lit("<null>"))
-    )
-    reps = with_tool.groupBy(*grp).agg(F.min("record_id").alias("group_rep"))
-    return with_tool.join(reps, grp).select("record_id", "group_rep")
-
-
-def canon_group_edges(features: DataFrame) -> DataFrame:
-    """Linear-cost edges for the exact/canonical tiers (J1/J2) -- no self-join.
-
-    Canonical-key equality is transitive, so records sharing
-    (canon_key, role, tool) merge by definition: one groupBy emits
-    (record_id -> min record_id) edges, O(n) rows, no quadratic blowup even
-    for a block holding 5% of all rows. Grouping includes the secondary
-    context fields so the homonym gate (identical text, conflicting
-    role/tool, ALANameSearcher.java:1418-1491 analog) is preserved: exact
-    duplicates with conflicting context never share a group.
-
-    Exact-tier (lower(norm_text)) equality implies canonical equality, so the
-    canonical grouping subsumes tier J1 for clustering purposes.
-    """
-    grp = ["canon_key", "role", "_tool_c"]
-    with_tool = features.withColumn("_tool_c", F.coalesce(F.col("tool"), F.lit("<null>")))
-    reps = with_tool.groupBy(*grp).agg(F.min("record_id").alias("group_rep"))
-    return (
-        with_tool.join(reps, grp)
-        .filter(F.col("record_id") != F.col("group_rep"))
-        .select(F.col("record_id").alias("src"), F.col("group_rep").alias("dst"))
-    )
-
-
 def canon_group_representatives(features: DataFrame) -> DataFrame:
     """One row per canonical group -- the meta-blocking input for tier J4.
 
@@ -336,29 +296,6 @@ def _group_hash_cols(canon_key, role, tool_c) -> list:
         F.xxhash64(canon_key, role, tool_c).alias("_g1"),
         F.xxhash64(canon_key, role, tool_c, F.lit("salt2")).alias("_g2"),
     ]
-
-
-def group_map_from_reps(features: DataFrame, reps: DataFrame) -> DataFrame:
-    """(record_id -> group_rep) derived from an already-materialized rep
-    table -- avoids repeating the canonical groupBy that built the reps
-    (canon_group_map ran the identical aggregation a second time). The join
-    runs on the 128-bit group hash (16 bytes/row shuffled, not the text)."""
-    lookup = (
-        reps.select("_g1", "_g2", F.col("record_id").alias("group_rep"))
-        if "_g1" in reps.columns
-        else reps.select(
-            *_group_hash_cols(F.col("canon_key"), F.col("role"), F.col("tool_c")),
-            F.col("record_id").alias("group_rep"),
-        )
-    )
-    with_tool = features.withColumn(
-        "_tool_c", F.coalesce(F.col("tool"), F.lit("<null>"))
-    )
-    keyed = with_tool.select(
-        *_group_hash_cols(F.col("canon_key"), F.col("role"), F.col("_tool_c")),
-        "record_id",
-    )
-    return keyed.join(lookup, ["_g1", "_g2"]).select("record_id", "group_rep")
 
 
 def salt_and_cap_blocks(

@@ -22,12 +22,9 @@ see plans/pipeline.py checkpointing).
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-_TIMING = os.environ.get("ALA_SPARK_PHASE_TIMING", "") == "1"
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -162,63 +159,33 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
         }
     )
     out = pd.concat([out, out2], ignore_index=True).drop_duplicates("record_id")
-    sdf = spark.createDataFrame(out)
-    # driver-built label tables carry their known row count so downstream
-    # joins can broadcast them instead of shuffling the big side
-    sdf._ala_local_rows = len(out)
-    return sdf
+    return spark.createDataFrame(out)
 
 
-def _driver_labels_and_winners(edges: DataFrame, edges_pdf=None):
-    """Driver fast path for label + representative election combined.
+def _labels_and_winners_pdf(pdf):
+    """Label + representative election over an edge pandas frame (src, dst,
+    src_prio, dst_prio): (grp_rep, cluster_id, representative_id) for every
+    NODE of the edge graph.
 
-    Returns a pandas frame (grp_rep, cluster_id, representative_id) covering
-    every NODE of the edge graph, or None when the edges lack prio columns.
-    Election semantics match the distributed groupBy form exactly: winner =
-    max priority, ties broken by lexicographic-min node id (B7,
-    ALATaxonResolver.principals analog with the documented tie
-    non-determinism removed). Every member group of a multi-group cluster is
-    an edge endpoint, so endpoint prios (carried on the edge table by
-    match_edges) cover exactly the groups that need election -- groups
-    outside the graph are singleton clusters and elect themselves via
-    coalesce, no aggregation anywhere.
+    Pure pandas/numpy; shared by the driver lanes and the block-local
+    mapInPandas kernel. Election semantics match
+    representative.elect_representatives exactly: winner = max priority,
+    ties broken by lexicographic-min node id (B7, ALATaxonResolver.principals
+    analog with the documented tie non-determinism removed). Every member
+    group of a multi-group cluster is an edge endpoint, so endpoint prios
+    (carried on the edge table by match_edges) cover exactly the groups that
+    need election -- groups outside the graph are singleton clusters and
+    elect themselves via coalesce, no aggregation anywhere.
     """
     import numpy as np
     import pandas as pd
 
-    if "src_prio" not in edges.columns or "dst_prio" not in edges.columns:
-        return None
-    t0 = time.time()
-    if edges_pdf is not None:
-        # edge list already read driver-side from the local phase checkpoint
-        # (pyarrow, no Spark job) -- see CheckpointManager.read_local_pandas
-        pdf = edges_pdf
-    else:
-        pdf = edges.select("src", "dst", "src_prio", "dst_prio").toPandas()
-    if _TIMING:
-        print(f"[cc] edges load: {time.time() - t0:6.2f}s rows={len(pdf)}", flush=True)
     if len(pdf) == 0:
         return pd.DataFrame(
             {"grp_rep": pd.Series(dtype=object),
              "cluster_id": pd.Series(dtype=object),
              "representative_id": pd.Series(dtype=object)}
         )
-    t0 = time.time()
-    out = _labels_and_winners_pdf(pdf)
-    if _TIMING:
-        print(f"[cc] driver UF+election: {time.time() - t0:6.2f}s nodes={len(out)}", flush=True)
-    return out
-
-
-def _labels_and_winners_pdf(pdf):
-    """UF + election over an edge pandas frame (src, dst, src_prio, dst_prio).
-
-    Pure pandas/numpy; shared by the driver fast lane and the block-local
-    mapInPandas kernel. Winner = max priority, ties -> lexicographic-min
-    node id (B7 semantics, deterministic)."""
-    import numpy as np
-    import pandas as pd
-
     sorted_uniques, rank, codes, a, b, lab = _uf_core(pdf)
     n_nodes = len(sorted_uniques)
     # per-node priority (consistent across edges; last write wins is fine)
@@ -258,8 +225,8 @@ def block_local_labels(edges: DataFrame, num_partitions: int | None = None) -> D
     partition contains every edge of every component it touches. Scales with
     executors (pure narrow work after one hash exchange); at 10^12 turns the
     edge table is the contracted rep graph, orders of magnitude smaller than
-    the corpus. Multi-tier configurations (components may cross tiers) must
-    use connected_components instead -- callers gate on tier count.
+    the corpus. Requires a single blocking tier (the pipeline blocks on the
+    phonetic tier only); with several tiers components could cross blocks.
     """
     import pandas as pd
 
@@ -291,7 +258,6 @@ def connected_components(
     edges: DataFrame,
     max_iterations: int = 20,
     driver_max_edges: int | None = None,
-    n_edges: int | None = None,
 ) -> DataFrame:
     """(record_id, cluster_id) for every node appearing in `edges`.
 
@@ -299,7 +265,6 @@ def connected_components(
     large-star/small-star until the edge multiset is a stable star forest
     (signature: count + sum of xxhash64 of the sorted pair). Graphs under
     `driver_max_edges` use the driver union-find fast path (same labels).
-    `n_edges`, when known (checkpoint footer counts), skips the sizing job.
     """
     # resolve at call time so runtime overrides of the module global (tests,
     # env flips) switch this gate and group_label_table's gate together
@@ -310,18 +275,13 @@ def connected_components(
         # cheap narrow count (upstream edge phase is already materialized);
         # union-find tolerates duplicate edges, so no distinct() shuffle and
         # no extra localCheckpoint on the driver path
-        if n_edges is None:
-            n_edges = cur.count()
-        if n_edges <= driver_max_edges:
-            if _TIMING:
-                print(f"[cc] driver union-find on {n_edges} edges", flush=True)
+        if cur.count() <= driver_max_edges:
             return _driver_union_find(cur)
     # no input distinct/materialization: the edge phase arrives committed
     # (a parquet scan) and already pair-unique (salted sub-blocks are
     # pair-disjoint); round 1's small-star distinct dedupes anything else
     prev_sig = None
     for _round in range(max_iterations):
-        t0 = time.time()
         cur = _small_star(_large_star(cur)).localCheckpoint(eager=True)
         sig_row = cur.agg(
             F.count("*").alias("n"),
@@ -330,8 +290,6 @@ def connected_components(
             ).alias("h"),
         ).collect()[0]
         sig = (sig_row["n"], sig_row["h"])
-        if _TIMING:
-            print(f"[cc] round {_round}: {time.time() - t0:6.2f}s edges={sig[0]}", flush=True)
         if sig == prev_sig:
             break
         prev_sig = sig
@@ -341,27 +299,10 @@ def connected_components(
     return assign.union(roots).distinct()
 
 
-def assign_clusters(records: DataFrame, edges: DataFrame) -> DataFrame:
-    """Left-join component labels onto the full record table.
-
-    Singletons (no accepted edge) become their own cluster -- the same
-    outcome as a reference name that matches nothing (NO_MATCH rows keep
-    their own identity).
-    """
-    comps = connected_components(edges)
-    return records.join(comps, "record_id", "left").withColumn(
-        "cluster_id", F.coalesce(F.col("cluster_id"), F.col("record_id"))
-    )
-
-
 def group_label_table(
     reps: DataFrame,
     rep_edges: DataFrame,
-    broadcast_threshold_rows: int = 8_000_000,
     n_edges: int | None = None,
-    edges_pdf=None,
-    table_writer=None,
-    block_local: bool = False,
 ) -> DataFrame:
     """(group hash -> cluster_id, representative_id) for EVERY canonical group.
 
@@ -375,102 +316,41 @@ def group_label_table(
     representative.elect_representatives (B7, ALATaxonResolver.principals
     analog, deterministic tie-break).
 
-    Small graphs (the common case -- the rep graph is the contraction of
-    exact duplicates) take the driver lane: numpy union-find + election over
-    the edge list (`edges_pdf` lets the caller hand in a local pyarrow read
-    of the committed edge phase, skipping the collect job), then the
-    ~|nodes|-sized label frame re-enters the plan via `table_writer` as a
-    parquet scan (half the cost of createDataFrame's arrow conversion at
-    millions of rows) and broadcast-attaches to the rep table -- one small
-    distributed job, no driver-side pass over the |groups|-sized table.
-    Large graphs go distributed: with `block_local=True` (single blocking
-    tier -- components provably confined to one salted sub-block) one
-    repartition + partition-local union-find (block_local_labels); otherwise
-    iterated large-star/small-star + a groupBy election.
+    `rep_edges` is the match_edges output (src, dst, src_prio, dst_prio,
+    block_id); `n_edges`, when known (checkpoint footer counts), skips the
+    sizing job. Small graphs (the common case -- the rep graph is the
+    contraction of exact duplicates) take the driver lane: numpy union-find
+    + election over the collected edge list, and the ~|nodes|-sized label
+    frame broadcast-attaches to the rep table. Large graphs go distributed
+    through block_local_labels: the pipeline blocks on a single tier, so
+    components are confined to one salted sub-block and one repartition +
+    partition-local union-find replaces iterated star rounds.
     """
-    from ala_name_matching_spark.operators.blocking import _group_hash_cols
-
     spark = reps.sparkSession
-    label_pdf = None
     if n_edges is None:
         n_edges = rep_edges.count()
     if n_edges <= _DRIVER_CC_MAX_EDGES:
-        label_pdf = _driver_labels_and_winners(rep_edges, edges_pdf=edges_pdf)
-    hash_cols = (
-        [F.col("_g1"), F.col("_g2")]
-        if "_g1" in reps.columns
-        else _group_hash_cols(F.col("canon_key"), F.col("role"), F.col("tool_c"))
-    )
-    if label_pdf is not None:
-        label_tbl = None
-        if len(label_pdf) and table_writer is not None:
-            t0 = time.time()
-            path = table_writer("p5_labels", label_pdf)
-            if path is not None:
-                label_tbl = spark.read.parquet(path)
-            if _TIMING:
-                print(f"[cc] label pyarrow write: {time.time() - t0:6.2f}s", flush=True)
-        if label_tbl is None:
-            if len(label_pdf):
-                t0 = time.time()
-                label_tbl = spark.createDataFrame(label_pdf)
-                if _TIMING:
-                    print(f"[cc] label createDataFrame: {time.time() - t0:6.2f}s", flush=True)
-            else:
-                label_tbl = spark.createDataFrame(
-                    [], "grp_rep string, cluster_id string, representative_id string"
-                )
-        groups = reps.select(*hash_cols, F.col("record_id").alias("grp_rep"))
-        return (
-            groups.join(F.broadcast(label_tbl), "grp_rep", "left")
-            .withColumn("cluster_id", F.coalesce(F.col("cluster_id"), F.col("grp_rep")))
-            .withColumn(
-                "representative_id",
-                F.coalesce(F.col("representative_id"), F.col("grp_rep")),
-            )
-            .select("_g1", "_g2", "cluster_id", "representative_id")
+        label_pdf = _labels_and_winners_pdf(
+            rep_edges.select("src", "dst", "src_prio", "dst_prio").toPandas()
         )
-    if block_local and {"src", "dst", "src_prio", "dst_prio", "block_id"} <= set(
-        rep_edges.columns
-    ):
+        labels = F.broadcast(
+            spark.createDataFrame(label_pdf)
+            if len(label_pdf)
+            else spark.createDataFrame(
+                [], "grp_rep string, cluster_id string, representative_id string"
+            )
+        )
+    else:
         labels = block_local_labels(rep_edges)
-        groups = reps.select(*hash_cols, F.col("record_id").alias("grp_rep"))
-        return (
-            groups.join(labels, "grp_rep", "left")
-            .withColumn("cluster_id", F.coalesce(F.col("cluster_id"), F.col("grp_rep")))
-            .withColumn(
-                "representative_id",
-                F.coalesce(F.col("representative_id"), F.col("grp_rep")),
-            )
-            .select("_g1", "_g2", "cluster_id", "representative_id")
+    groups = reps.select("_g1", "_g2", F.col("record_id").alias("grp_rep"))
+    return (
+        groups.join(labels, "grp_rep", "left")
+        .withColumn("cluster_id", F.coalesce(F.col("cluster_id"), F.col("grp_rep")))
+        .withColumn(
+            "representative_id",
+            F.coalesce(F.col("representative_id"), F.col("grp_rep")),
         )
-    comps = connected_components(rep_edges, n_edges=n_edges)
-    rep_label = comps.select(F.col("record_id").alias("grp_rep"), F.col("cluster_id"))
-    local_rows = getattr(comps, "_ala_local_rows", None)
-    if local_rows is not None and local_rows <= broadcast_threshold_rows:
-        rep_label = F.broadcast(rep_label)
-    groups = reps.select(
-        *hash_cols,
-        F.col("record_id").alias("grp_rep"),
-        F.length("canon_text").alias("_prio"),
-    )
-    labeled = groups.join(rep_label, "grp_rep", "left").withColumn(
-        "cluster_id", F.coalesce(F.col("cluster_id"), F.col("grp_rep"))
-    )
-    # B7 election on the group table: min(struct(-prio, rep)) = max
-    # priority, ties to smallest record_id -- the same total order as
-    # elect_representatives over all records, since prio is
-    # group-constant and grp_rep is the group's min record_id.
-    winners = labeled.groupBy("cluster_id").agg(
-        F.min(
-            F.struct(
-                (-F.coalesce(F.col("_prio").cast("long"), F.lit(-(1 << 40)))).alias("_np"),
-                F.col("grp_rep").alias("_rid"),
-            )
-        )["_rid"].alias("representative_id")
-    )
-    return labeled.join(winners, "cluster_id").select(
-        "_g1", "_g2", "cluster_id", "representative_id"
+        .select("_g1", "_g2", "cluster_id", "representative_id")
     )
 
 
@@ -479,7 +359,7 @@ def label_attach_arrow(reps_tbl, label_pdf):
     Arrow table, no Spark job and no python-object churn.
 
     `reps_tbl` is the (_g1,_g2,record_id) pyarrow read of the committed rep
-    phase; `label_pdf` the _driver_labels_and_winners frame. The left join +
+    phase; `label_pdf` the _labels_and_winners_pdf frame. The left join +
     coalesce run in Arrow's multithreaded C++ kernels -- measured ~5x faster
     than the equivalent pandas merge on a million object strings, and the
     result streams straight to parquet (CheckpointManager.write_driver_table)
@@ -488,7 +368,7 @@ def label_attach_arrow(reps_tbl, label_pdf):
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    if label_pdf is None or not len(label_pdf):
+    if not len(label_pdf):
         return pa.table(
             {
                 "_g1": reps_tbl["_g1"],
@@ -513,28 +393,12 @@ def label_attach_arrow(reps_tbl, label_pdf):
     )
 
 
-def _keyed_records(records: DataFrame) -> DataFrame:
-    from ala_name_matching_spark.operators.blocking import _group_hash_cols
-
-    if "_g1" in records.columns:  # hash precomputed in the P1 artifact
-        return records
-    return records.select(
-        "*",
-        *_group_hash_cols(
-            F.col("canon_key"),
-            F.col("role"),
-            F.coalesce(F.col("tool"), F.lit("<null>")),
-        ),
-    )
+# group-label tables up to this many rows broadcast into the record attach
+_BROADCAST_MAX_GROUPS = 8_000_000
 
 
-def _maybe_broadcast(group_full: DataFrame, n_groups, threshold):
-    strategy = os.environ.get("ALA_SPARK_FINAL_JOIN", "")
-    if _TIMING:
-        print(f"[cc] final join: n_groups={n_groups} strategy={strategy or 'auto'}", flush=True)
-    if strategy != "shuffle" and (
-        strategy == "broadcast" or (n_groups is not None and n_groups <= threshold)
-    ):
+def _maybe_broadcast(group_full: DataFrame, n_groups) -> DataFrame:
+    if n_groups is not None and n_groups <= _BROADCAST_MAX_GROUPS:
         return F.broadcast(group_full)
     return group_full
 
@@ -543,20 +407,20 @@ def attach_cluster_columns(
     records: DataFrame,
     group_full: DataFrame,
     n_groups: int | None = None,
-    broadcast_threshold_rows: int = 8_000_000,
 ) -> DataFrame:
     """Wide clustered view: every record column + cluster/representative cols.
 
-    ONE join on the 128-bit group hash -- broadcast when the group-label
-    table is small (it is, by construction: groups are the contraction of
-    exact duplicates), so the wide record rows never shuffle. Beyond
-    `broadcast_threshold_rows` the in-memory fallback is a hash join on
+    `records` is the P1 feature table (it carries the group hash). ONE join
+    on the 128-bit group hash -- broadcast when the group-label table is
+    small (it is, by construction: groups are the contraction of exact
+    duplicates), so the wide record rows never shuffle. Beyond
+    `_BROADCAST_MAX_GROUPS` the in-memory fallback is a hash join on
     (_g1,_g2); for COMMITTED tables at that scale use
     attach_cluster_columns_bucketed instead -- bucketed layouts make the
     same join exchange-free on both sides.
     """
-    gf = _maybe_broadcast(group_full, n_groups, broadcast_threshold_rows)
-    out = _keyed_records(records).join(gf, ["_g1", "_g2"]).drop("_g1", "_g2")
+    out = records.join(_maybe_broadcast(group_full, n_groups), ["_g1", "_g2"])
+    out = out.drop("_g1", "_g2")
     return out.withColumn(
         "is_representative", F.col("record_id") == F.col("representative_id")
     )
@@ -594,7 +458,6 @@ def assignment_table(
     records: DataFrame,
     group_full: DataFrame,
     n_groups: int | None = None,
-    broadcast_threshold_rows: int = 8_000_000,
 ) -> DataFrame:
     """Narrow record-level ER product: (record_id, cluster_id,
     representative_id, is_representative).
@@ -606,74 +469,14 @@ def assignment_table(
     With the hash precomputed in the P1 artifact the probe scan reads ONLY
     (record_id, _g1, _g2) -- three fixed-width columns, no text, no hashing.
     """
-    gf = _maybe_broadcast(group_full, n_groups, broadcast_threshold_rows)
-    keyed = (
-        records.select("record_id", "_g1", "_g2")
-        if "_g1" in records.columns
-        else _keyed_records(records.select("record_id", "canon_key", "role", "tool"))
+    out = records.select("record_id", "_g1", "_g2").join(
+        _maybe_broadcast(group_full, n_groups), ["_g1", "_g2"]
     )
-    out = keyed.join(gf, ["_g1", "_g2"])
     return out.select(
         "record_id",
         "cluster_id",
         "representative_id",
         (F.col("record_id") == F.col("representative_id")).alias("is_representative"),
-    )
-
-
-def assign_clusters_via_groups(
-    records: DataFrame,
-    reps: DataFrame,
-    rep_edges: DataFrame,
-    broadcast_threshold_rows: int = 8_000_000,
-    n_groups: int | None = None,
-    n_edges: int | None = None,
-    edges_pdf=None,
-    table_writer=None,
-) -> DataFrame:
-    """group_label_table + attach_cluster_columns in one call (compat API)."""
-    group_full = group_label_table(
-        reps,
-        rep_edges,
-        broadcast_threshold_rows=broadcast_threshold_rows,
-        n_edges=n_edges,
-        edges_pdf=edges_pdf,
-        table_writer=table_writer,
-    )
-    return attach_cluster_columns(
-        records, group_full, n_groups=n_groups,
-        broadcast_threshold_rows=broadcast_threshold_rows,
-    )
-
-
-def assign_clusters_contracted(
-    records: DataFrame, group_map: DataFrame, rep_edges: DataFrame
-) -> DataFrame:
-    """Cluster assignment via graph contraction.
-
-    `group_map` = (record_id -> group_rep) from the transitive canonical
-    grouping (operators/blocking.canon_group_map); `rep_edges` connect group
-    reps only (the fuzzy tier). CC runs on the contracted graph -- orders of
-    magnitude fewer nodes/edges than the record graph -- and labels extend
-    back through the map with one join. Labels are identical to running CC
-    on the full graph: group_rep is the min record of its group, and the
-    component label is the min rep = min record of the whole component.
-    """
-    comps = connected_components(rep_edges)
-    rep_label = comps.select(
-        F.col("record_id").alias("group_rep"), F.col("cluster_id")
-    )
-    # The driver union-find path knows its exact row count; when the label
-    # table is broadcastable, the big group_map side needn't shuffle at all.
-    local_rows = getattr(comps, "_ala_local_rows", None)
-    if local_rows is not None and local_rows <= 3_000_000:
-        rep_label = F.broadcast(rep_label)
-    mapped = group_map.join(rep_label, "group_rep", "left")
-    mapped = mapped.withColumn(
-        "cluster_id", F.coalesce(F.col("cluster_id"), F.col("group_rep"))
-    ).select("record_id", "cluster_id")
-    return records.join(mapped, "record_id", "left").withColumn(
-        "cluster_id", F.coalesce(F.col("cluster_id"), F.col("record_id"))
     )
 
 

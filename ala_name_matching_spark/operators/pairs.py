@@ -5,13 +5,12 @@ scores them one by one (ALANameSearcher.performSearch, ALANameSearcher.java:
 1152-1271; MatchMetrics.computeMatch, MatchMetrics.java:114-166). Here the
 same computation is a block self-join followed by expression-based scoring:
 
-  1. self-join the salted block table on block_id with record_id_l <
-     record_id_r (each unordered pair once),
-  2. distinct (tier union can propose the same pair under several keys --
-     dedupe BEFORE paying for payload join + scoring),
-  3. join the two payload sides, score with pair_score_cols (only the
-     Jaro-Winkler kernel leaves the JVM, via Arrow),
-  4. hard homonym gate (V5 analog): identical-text pairs whose secondary
+  1. join the payload onto the salted block table, then self-join it on
+     block_id with record_id_l < record_id_r (each unordered pair once,
+     both payloads riding the one block shuffle -- payload_pairs),
+  2. score with pair_score_cols (only the Jaro-Winkler kernel leaves the
+     JVM, via Arrow),
+  3. hard homonym gate (V5 analog): identical-text pairs whose secondary
      context (role/tool) conflicts are rejected with an error code rather
      than merged (ALANameSearcher homonym path :1253-1265,1418-1491).
 """
@@ -93,26 +92,6 @@ def payload_pairs(
     return l.join(r, "block_id").filter(
         F.col("record_id_l") < F.col("record_id_r")
     )
-
-
-def score_pairs(
-    pairs: DataFrame,
-    records: DataFrame,
-    payload_cols: list[str] | None = None,
-) -> DataFrame:
-    """Join payloads onto the pair list and compute the A1 score vector.
-
-    `records` must carry PAYLOAD_COLS. Two hash joins on record_id (string);
-    at production scale `records` would be bucketed on record_id so both
-    sides co-locate. The score itself is one projection -- JVM expressions
-    plus the Arrow JW kernel -- no extra shuffle.
-    """
-    payload_cols = payload_cols or PAYLOAD_COLS
-    payload = records.select(*payload_cols)
-    l = payload.select([F.col(c).alias(f"{c}_l") for c in payload_cols])
-    r = payload.select([F.col(c).alias(f"{c}_r") for c in payload_cols])
-    joined = pairs.join(l, "record_id_l").join(r, "record_id_r")
-    return apply_pair_scores(joined, has_tokens="phonetic_tokens" in payload_cols)
 
 
 def apply_pair_scores(
@@ -205,22 +184,21 @@ def match_edges(
     ALANameSearcher.java:67), recalibrated for the JW+Lev+token blend.
 
     Edges carry each endpoint's election priority (canon_text length, the
-    A6/B7 score analog) so the small-graph clustering path can elect cluster
-    representatives driver-side without a distributed groupBy -- every member
-    group of a multi-group cluster is an edge endpoint, so endpoint prios
-    cover exactly the groups that need election.
+    A6/B7 score analog) so clustering can elect cluster representatives from
+    the edge list without a distributed groupBy -- every member group of a
+    multi-group cluster is an edge endpoint, so endpoint prios cover exactly
+    the groups that need election. `scored` must come from payload_pairs
+    (it carries block_id).
     """
-    cols = [
+    return scored.filter(
+        (F.col("score") >= threshold) & ~F.col("homonym_conflict")
+    ).select(
         F.col("record_id_l").alias("src"),
         F.col("record_id_r").alias("dst"),
         F.col("score"),
         F.length("canon_text_l").alias("src_prio"),
         F.length("canon_text_r").alias("dst_prio"),
-    ]
-    if "block_id" in scored.columns:
         # carried through so clustering can exploit block-locality (see
         # payload_pairs) -- 8 bytes/row on an already-narrow table
-        cols.append(F.col("block_id"))
-    return scored.filter(
-        (F.col("score") >= threshold) & ~F.col("homonym_conflict")
-    ).select(*cols)
+        F.col("block_id"),
+    )

@@ -80,6 +80,11 @@ def stratified_sample(
     return df.filter(bucket < cut)
 
 
+# how the strict-weights error message shows a NULL weight (message text,
+# not an error code of functions/errors.ERROR_CATALOG)
+_NULL_TEXT = "NULL"
+
+
 def _positive_weights(
     df: DataFrame, weight_col: str, strict: bool
 ) -> DataFrame:
@@ -87,9 +92,17 @@ def _positive_weights(
     zero mass to weight <= 0 (ln(u)/w flips sign), so those rows are
     filtered; with `strict` the filter becomes an execution-time
     raise_error -- zero extra Spark actions, the check rides the same
-    scan -- for callers where a non-positive weight is an upstream bug."""
+    scan -- for callers where a non-positive (or NULL) weight is an
+    upstream bug.
+
+    The raise is an ordinary filter predicate, so Catalyst may combine it
+    with, push it past, or evaluate it before the caller's own filters: a
+    caller filter (before or after the sampler) does not reliably shield
+    rows from the check. Clean the weight column upstream instead."""
     w = F.col(weight_col).cast("double")
     if strict:
+        # concat with NULL is NULL, so a NULL weight is named explicitly
+        shown = F.coalesce(F.col(weight_col).cast("string"), F.lit(_NULL_TEXT))
         # schema-preserving: the raise rides the filter itself
         return df.where(
             F.when(w > 0, F.lit(True)).otherwise(
@@ -99,7 +112,7 @@ def _positive_weights(
                             f"weighted sample: non-positive weight in "
                             f"'{weight_col}' (strict_weights=True): "
                         ),
-                        F.col(weight_col).cast("string"),
+                        shown,
                     )
                 ).cast("boolean")
             )

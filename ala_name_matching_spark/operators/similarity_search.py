@@ -80,27 +80,6 @@ def dot_expanded_col(a: Column, b: Column, dim: int) -> Column:
     )
 
 
-def norm_expanded_col(a: Column, dim: int) -> Column:
-    """norm_col for a KNOWN width; same codegen/bit-identity contract."""
-    return F.sqrt(
-        _sum_left_assoc(
-            [
-                F.element_at(a, i + 1).cast("double")
-                * F.element_at(a, i + 1).cast("double")
-                for i in range(dim)
-            ]
-        )
-    )
-
-
-def cosine_expanded_col(a: Column, b: Column, dim: int) -> Column:
-    """cosine_col for a KNOWN width; bit-identical, codegen-compiled."""
-    denom = norm_expanded_col(a, dim) * norm_expanded_col(b, dim)
-    return F.when(denom > 0, dot_expanded_col(a, b, dim) / denom).otherwise(
-        F.lit(0.0)
-    )
-
-
 def cosine_col(a: Column, b: Column) -> Column:
     denom = norm_col(a) * norm_col(b)
     return F.when(denom > 0, dot_col(a, b) / denom).otherwise(F.lit(0.0))
@@ -139,19 +118,6 @@ def brute_force_topk(
 def _hyperplanes(dim: int, n_planes: int) -> np.ndarray:
     rng = np.random.RandomState(ANN_SEED)
     return rng.standard_normal((n_planes, dim)).astype(np.float64)
-
-
-def lsh_signature_udf(dim: int, n_planes: int = 16):
-    """Arrow-vectorized random-hyperplane signature: int bitmask per vector."""
-    planes = _hyperplanes(dim, n_planes)
-
-    def sig(batch: pd.Series) -> pd.Series:
-        m = np.stack(batch.to_numpy())  # (rows, dim)
-        bits = (m @ planes.T) > 0  # (rows, n_planes)
-        weights = (1 << np.arange(n_planes)).astype(np.int64)
-        return pd.Series(bits @ weights)
-
-    return F.pandas_udf(sig, T.LongType())
 
 
 def lsh_multitable_udf(dim: int, n_planes: int, n_tables: int):

@@ -29,9 +29,7 @@ stable (conv_id, turn_idx) ordering (BASELINE.json input_hint).
 
 from __future__ import annotations
 
-import os
-import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -48,7 +46,7 @@ from ala_name_matching_spark.operators.blocking import (
 )
 from ala_name_matching_spark.operators import clustering
 from ala_name_matching_spark.operators.clustering import (
-    _driver_labels_and_winners,
+    _labels_and_winners_pdf,
     assignment_table,
     attach_cluster_columns,
     group_label_table,
@@ -66,15 +64,11 @@ from ala_name_matching_spark.sources.checkpoints import CheckpointManager
 class PipelineConfig:
     block_cap: int = DEFAULT_BLOCK_CAP
     match_threshold: float = DEFAULT_MATCH_THRESHOLD
-    fuzzy_tiers: tuple[int, ...] = field(default=(TIER_PHONETIC,))
     # 20-byte binary record ids (blocking.with_record_id(binary=True)):
     # ~3x lighter CC-label/edge/pair shuffle bytes than conv-string ids at
     # 10^12 rows; cluster partitions are identical
     # (tests/test_pipeline_e2e.py::test_binary_id_lane_cluster_parity)
     binary_ids: bool = False
-
-
-_TIMING = os.environ.get("ALA_SPARK_PHASE_TIMING", "") == "1"
 
 
 def _phase(ckpt: CheckpointManager, name: str, build) -> DataFrame:
@@ -89,19 +83,12 @@ def _phase(ckpt: CheckpointManager, name: str, build) -> DataFrame:
     """
     if ckpt.exists(name):
         return ckpt.read(name)
-    t0 = time.time()
-    try:
-        if not ckpt.enabled:
-            return build().localCheckpoint(eager=True)
-        return ckpt.materialize(name, build())
-    finally:
-        if _TIMING:
-            print(f"[phase] {name:16s} {time.time() - t0:7.2f}s", flush=True)
+    if not ckpt.enabled:
+        return build().localCheckpoint(eager=True)
+    return ckpt.materialize(name, build())
 
 
-
-
-def _driver_label_artifact(ckpt: CheckpointManager, fuzzy_edges: DataFrame) -> bool:
+def _driver_label_artifact(ckpt: CheckpointManager) -> bool:
     """All-driver p5 lane: write p5_group_labels without any Spark job.
 
     Eligible when the committed edge phase is small (< _DRIVER_CC_MAX_EDGES,
@@ -117,8 +104,6 @@ def _driver_label_artifact(ckpt: CheckpointManager, fuzzy_edges: DataFrame) -> b
     n_edges = ckpt.row_count("p4_edges")
     if n_edges is None or n_edges > clustering._DRIVER_CC_MAX_EDGES:
         return False
-    if not {"src", "dst", "src_prio", "dst_prio"} <= set(fuzzy_edges.columns):
-        return False
     edges_pdf = ckpt.read_local_pandas(
         "p4_edges", ["src", "dst", "src_prio", "dst_prio"]
     )
@@ -127,14 +112,8 @@ def _driver_label_artifact(ckpt: CheckpointManager, fuzzy_edges: DataFrame) -> b
     reps_tbl = ckpt.read_local_arrow("p2_canon_reps", ["_g1", "_g2", "record_id"])
     if reps_tbl is None:
         return False
-    label_pdf = _driver_labels_and_winners(fuzzy_edges, edges_pdf=edges_pdf)
-    if label_pdf is None:
-        return False
-    t0 = time.time()
-    group_tbl = label_attach_arrow(reps_tbl, label_pdf)
+    group_tbl = label_attach_arrow(reps_tbl, _labels_and_winners_pdf(edges_pdf))
     ckpt.write_driver_table("p5_group_labels", group_tbl, n_files=16)
-    if _TIMING:
-        print(f"[cc] arrow label attach+write: {time.time() - t0:6.2f}s", flush=True)
     return True
 
 
@@ -152,9 +131,10 @@ def run_pipeline(
                          fused into the edge phase (stats table committed)
       P4 pairs+scores -- bounded self-join + Arrow JW kernel, payloads ride
                          the one block shuffle
-      P5 group labels -- driver UF on the CONTRACTED rep graph (distributed
-                         large-star/small-star beyond 5M edges) + one small
-                         broadcast attach onto the |groups|-sized rep table
+      P5 group labels -- driver UF on the CONTRACTED rep graph (one
+                         block_id repartition + partition-local UF beyond 5M
+                         edges) + one small broadcast attach onto the
+                         |groups|-sized rep table
       P6 assignment   -- ONE broadcast probe of the records, scan pruned to
                          the 4 key columns, narrow output -- the text payload
                          is never read, shuffled, or rewritten
@@ -187,7 +167,7 @@ def run_pipeline(
         # size). Only the block STATS are committed -- the lost-pair
         # accounting is the metrics contract (north_rule), not a dataflow
         # input: the pair join consumes just (block_id, record_id).
-        blocks = block_table(reps, tiers=cfg.fuzzy_tiers)
+        blocks = block_table(reps, tiers=(TIER_PHONETIC,))
         salted, stats = salt_and_cap_blocks(blocks, block_cap=cfg.block_cap)
         ckpt.materialize("p3_block_stats", stats)
         # single fuzzy tier -> salted sub-blocks are pair-disjoint, so the
@@ -215,67 +195,27 @@ def run_pipeline(
     # group labels onto the feature table on the 128-bit group hash -- at
     # 100 TB the input corpus is never rewritten to carry a cluster column,
     # so no job in the pipeline ever shuffles or re-encodes the text payload.
-    t5 = time.time()
     # phase row counts come from checkpoint parquet footers (metadata-only,
     # no Spark job -- driver actions are fixed, non-scaling costs); fall back
     # to count() when checkpoints are off (tiny in-memory test runs)
     n_groups = ckpt.row_count("p2_canon_reps")
     if n_groups is None:
         n_groups = reps.count()
-
-    def build_labels():
-        n_edges = ckpt.row_count("p4_edges")
-        edge_cols = ["src", "dst"] + (
-            ["src_prio", "dst_prio"]
-            if "src_prio" in fuzzy_edges.columns
-            else []
-        )
-        # driver fast-path input: local pyarrow read of the committed edge
-        # phase (no Spark collect job) -- None on remote storage or when
-        # checkpointing is off, in which case the collect path takes over.
-        # Gated on the footer count: above the driver-UF threshold the
-        # distributed lane runs and a driver-side read of the whole edge
-        # table would be pure OOM risk with the result discarded.
-        edges_pdf = (
-            ckpt.read_local_pandas("p4_edges", edge_cols)
-            if len(edge_cols) == 4
-            and n_edges is not None
-            and n_edges <= clustering._DRIVER_CC_MAX_EDGES
-            else None
-        )
-        keep = edge_cols + (
-            ["block_id"] if "block_id" in fuzzy_edges.columns else []
-        )
-        return group_label_table(
-            reps,
-            fuzzy_edges.select(*keep),
-            n_edges=n_edges,
-            edges_pdf=edges_pdf,
-            table_writer=ckpt.write_driver_table,
-            # single blocking tier -> components are provably confined to one
-            # salted sub-block; the distributed lane is one repartition +
-            # partition-local UF instead of iterated star rounds
-            block_local=len(cfg.fuzzy_tiers) == 1,
-        )
-
-    if ckpt.exists("p5_group_labels"):
-        labels = ckpt.read("p5_group_labels")
-    elif _driver_label_artifact(ckpt, fuzzy_edges):
-        # all-driver lane: numpy UF + Arrow join wrote the phase artifact
-        # directly (no Spark job at all); re-enter the plan as a parquet scan
+    if ckpt.exists("p5_group_labels") or _driver_label_artifact(ckpt):
+        # resumed, or the all-driver lane (numpy UF + Arrow join, no Spark
+        # job) just wrote the phase artifact; re-enter as a parquet scan
         labels = ckpt.read("p5_group_labels")
     else:
-        labels = _phase(ckpt, "p5_group_labels", build_labels)
-    if _TIMING:
-        print(f"[phase] p5_cc           {time.time() - t5:7.2f}s", flush=True)
-    t6 = time.time()
+        labels = _phase(
+            ckpt,
+            "p5_group_labels",
+            lambda: group_label_table(reps, fuzzy_edges, ckpt.row_count("p4_edges")),
+        )
     if not ckpt.exists("p6_clusters"):
         ckpt.materialize(
             "p6_clusters", assignment_table(features, labels, n_groups=n_groups)
         )
     ckpt.write_metrics()
-    if _TIMING:
-        print(f"[phase] p6_clusters     {time.time() - t6:7.2f}s", flush=True)
     # lazy wide view: norm/canon text re-derived as projections (dropped by
     # Catalyst unless a consumer actually selects them)
     return restore_text_columns(

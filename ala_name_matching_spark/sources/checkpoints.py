@@ -67,8 +67,6 @@ class CheckpointManager:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(self._path(phase))
-        if os.environ.get("ALA_SPARK_PHASE_TIMING", "") == "1":
-            print(f"[ckpt] {phase} write {time.time() - t0:6.2f}s", flush=True)
         out = self.read(phase)
         # Per-partition lineage rows (S5): one output file per write task, so
         # parquet footers carry the per-partition row counts -- metadata-only,
@@ -128,14 +126,6 @@ class CheckpointManager:
         the two-cluster-size criterion. The Iceberg analog is a direct
         manifest-guided pyarrow read of the snapshot's data files.
         """
-        files = self._local_files(phase)
-        if files is None:
-            return None
-        from concurrent.futures import ThreadPoolExecutor
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         tbl = self.read_local_arrow(phase, columns)
         return tbl.to_pandas() if tbl is not None else None
 

@@ -1,11 +1,13 @@
 """Connected-components correctness on known graphs (SURVEY.md §2.6 B6)."""
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
+from ala_name_matching_spark.operators import clustering as cl
 from ala_name_matching_spark.operators.clustering import (
-    assign_clusters,
     connected_components,
+    group_label_table,
 )
 
 
@@ -37,26 +39,41 @@ def test_star_and_duplicate_edges(spark):
     assert set(got) == {"a", "b", "c", "m"}
 
 
-def test_assign_clusters_singletons(spark):
-    records = spark.createDataFrame(
-        pd.DataFrame({"record_id": ["a", "b", "c", "d"], "v": [1, 2, 3, 4]})
+def _group_labels(spark, rep_ids, edges):
+    """group_label_table over reps keyed (_g1 = position, _g2 = 0) and
+    match_edges-shaped edges (src, dst, src_prio, dst_prio, block_id);
+    returns record -> (cluster_id, representative_id)."""
+    reps = spark.createDataFrame(
+        [(i, 0, r) for i, r in enumerate(rep_ids)],
+        "_g1 long, _g2 long, record_id string",
     )
-    edges = spark.createDataFrame(pd.DataFrame([("a", "b")], columns=["src", "dst"]))
-    got = {
-        r["record_id"]: r["cluster_id"]
-        for r in assign_clusters(records, edges).collect()
+    rep_edges = spark.createDataFrame(
+        edges, "src string, dst string, src_prio int, dst_prio int, block_id string"
+    )
+    return {
+        rep_ids[r["_g1"]]: (r["cluster_id"], r["representative_id"])
+        for r in group_label_table(reps, rep_edges).collect()
     }
-    assert got == {"a": "a", "b": "a", "c": "c", "d": "d"}
 
 
-def test_empty_edges(spark):
-    records = spark.createDataFrame(pd.DataFrame({"record_id": ["a", "b"], "v": [1, 2]}))
-    edges = spark.createDataFrame([], schema="src string, dst string")
-    got = {
-        r["record_id"]: r["cluster_id"]
-        for r in assign_clusters(records, edges).collect()
+# -1 forces the block-local lane even for an empty edge table
+_LANES = {"driver": 5_000_000, "block_local": -1}
+
+
+@pytest.mark.parametrize("lane", sorted(_LANES))
+def test_group_label_table_singletons(spark, monkeypatch, lane):
+    monkeypatch.setattr(cl, "_DRIVER_CC_MAX_EDGES", _LANES[lane])
+    # b has the higher priority, so it represents {a, b}; c, d match nothing
+    got = _group_labels(spark, ["a", "b", "c", "d"], [("a", "b", 3, 5, "k|0")])
+    assert got == {
+        "a": ("a", "b"), "b": ("a", "b"), "c": ("c", "c"), "d": ("d", "d"),
     }
-    assert got == {"a": "a", "b": "b"}
+
+
+@pytest.mark.parametrize("lane", sorted(_LANES))
+def test_group_label_table_empty_edges(spark, monkeypatch, lane):
+    monkeypatch.setattr(cl, "_DRIVER_CC_MAX_EDGES", _LANES[lane])
+    assert _group_labels(spark, ["a", "b"], []) == {"a": ("a", "a"), "b": ("b", "b")}
 
 
 def test_distributed_matches_driver_path(spark):
@@ -74,18 +91,34 @@ def test_distributed_matches_driver_path(spark):
     assert driver == dist
 
 
-def test_via_groups_driver_vs_distributed_parity(spark):
-    """assign_clusters_via_groups: driver-side election == distributed election.
+def test_p5_three_lane_parity(spark, monkeypatch, tmp_path):
+    """The three p5 lanes agree record by record.
 
-    Runs the full pipeline on the synthetic fixture twice, forcing the
-    distributed groupBy-election path the second time, and asserts identical
-    (cluster_id, representative) assignments for every record.
+    Runs the full pipeline on the synthetic fixture once per lane -- the
+    checkpointed all-driver lane (_driver_label_artifact), the in-memory
+    driver lane of group_label_table, and its block-local distributed lane
+    (driver gate forced to 0) -- and asserts identical (cluster_id,
+    representative_id, is_representative) for every record.
     """
-    from ala_name_matching_spark.operators import clustering as cl
-    from ala_name_matching_spark.plans.pipeline import run_pipeline
+    from ala_name_matching_spark.plans import pipeline
+    from ala_name_matching_spark.sources.checkpoints import CheckpointManager
     from ala_name_matching_spark.sources.transcripts import synthesize_transcripts
 
     t = synthesize_transcripts(spark, 2000, partitions=4).drop("entity_id")
+    lanes = []
+    artifact, block_local = pipeline._driver_label_artifact, cl.block_local_labels
+
+    def spy_artifact(ckpt):
+        wrote = artifact(ckpt)
+        lanes.append("artifact" if wrote else "group_label_table")
+        return wrote
+
+    def spy_block_local(edges):
+        lanes.append("block_local")
+        return block_local(edges)
+
+    monkeypatch.setattr(pipeline, "_driver_label_artifact", spy_artifact)
+    monkeypatch.setattr(cl, "block_local_labels", spy_block_local)
 
     def snap(df):
         return {
@@ -95,14 +128,15 @@ def test_via_groups_driver_vs_distributed_parity(spark):
             ).collect()
         }
 
-    got_driver = snap(run_pipeline(t))
-    saved = cl._DRIVER_CC_MAX_EDGES
-    try:
-        cl._DRIVER_CC_MAX_EDGES = 0
-        got_dist = snap(run_pipeline(t))
-    finally:
-        cl._DRIVER_CC_MAX_EDGES = saved
-    assert got_driver == got_dist
+    ckpt = CheckpointManager(spark, str(tmp_path / "ckpt"))
+    got_artifact = snap(pipeline.run_pipeline(t, checkpoints=ckpt))
+    got_driver = snap(pipeline.run_pipeline(t))
+    monkeypatch.setattr(cl, "_DRIVER_CC_MAX_EDGES", 0)
+    got_block_local = snap(pipeline.run_pipeline(t))
+    assert lanes == ["artifact", "group_label_table", "group_label_table", "block_local"]
+    assert ckpt.row_count("p4_edges") > 0, "fixture must exercise the fuzzy lane"
+    assert len(got_artifact) == 2000
+    assert got_artifact == got_driver == got_block_local
 
 
 def test_incremental_cc_parity_with_full_recompute(spark):

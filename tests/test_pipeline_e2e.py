@@ -124,7 +124,7 @@ def test_checkpoint_resume(spark, transcripts, tmp_path):
     # the all-driver p5 lane (write_driver_table) must leave the SAME S5
     # lineage rows as materialize() -- no hole depending on which lane ran
     phases = {m["phase"] for m in metrics}
-    assert "p5_group_labels" in phases or "p5_labels" in phases
+    assert "p5_group_labels" in phases
     p5 = [m for m in metrics if m["phase"].startswith("p5_")]
     assert sum(m["rows"] for m in p5) > 0
 

@@ -97,9 +97,7 @@ def test_pipeline_phase_shuffle_inventory(transcripts):
     # The attach join must be BROADCAST -- the wide record rows (text
     # payload) never shuffle; a shuffle here is exactly the regression the
     # scaling bench would catch two hours later.
-    labels = group_label_table(reps, fuzzy, block_local=True).localCheckpoint(
-        eager=True
-    )
+    labels = group_label_table(reps, fuzzy).localCheckpoint(eager=True)
     attached = attach_cluster_columns(feat, labels, n_groups=reps.count())
     assert _shuffles(attached) == 0, "p6 attach must be broadcast-only"
     plan = attached._jdf.queryExecution().executedPlan().toString()

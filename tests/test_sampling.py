@@ -303,6 +303,15 @@ def test_weighted_sample_strict_weights(spark):
         weighted_sample_per_group(
             df, "w", k=25, group_col="lang", strict_weights=True
         ).collect()
+    # a NULL weight fails too, and the message still names the column
+    # (concat with a NULL weight used to null the whole message)
+    nulls = spark.createDataFrame(
+        [(i, "en", None if i == 3 else 1.0) for i in range(20)],
+        "doc_id long, lang string, w double",
+    )
+    with pytest.raises(Exception) as err:
+        weighted_sample(nulls, "doc_id", "w", k=25, strict_weights=True).collect()
+    assert "non-positive weight in 'w' (strict_weights=True): NULL" in str(err.value)
     # strict passes untouched when all weights are positive
     ok = spark.createDataFrame(pdf[pdf.w > 0])
     assert (

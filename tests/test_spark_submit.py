@@ -29,11 +29,27 @@ def _spark_submit() -> str:
     return found
 
 
-def test_spark_submit_pyfiles_end_to_end(tmp_path):
+def _build(dest_dir) -> str:
     sys.path.insert(0, os.path.join(REPO, "jobs"))
     from package_pyfiles import build
 
-    zip_path = build("dist")
+    return build(str(dest_dir))
+
+
+def test_committed_zip_matches_sources(tmp_path):
+    """dist/ala_er_pyfiles.zip is committed for deployment; it must be
+    byte-identical to a fresh build of the package sources (the build is
+    deterministic), so a source change without a rebuild fails here.
+    Rebuild with: python jobs/package_pyfiles.py"""
+    with open(_build(tmp_path), "rb") as fresh, open(
+        os.path.join(REPO, "dist", "ala_er_pyfiles.zip"), "rb"
+    ) as committed:
+        assert fresh.read() == committed.read(), "stale dist zip: rebuild it"
+
+
+def test_spark_submit_pyfiles_end_to_end(tmp_path):
+    # built under tmp_path: the test must not rewrite the committed zip
+    zip_path = _build(tmp_path / "dist")
     job = tmp_path / "run_er.py"
     shutil.copyfile(os.path.join(REPO, "jobs", "run_er.py"), job)
     out = tmp_path / "clusters"
