@@ -4,8 +4,9 @@ entry(spark)   -- flagship: full ER pipeline (blocking -> scoring -> CC ->
                   representatives) over the sf0.001 documents table viewed as
                   transcripts; returns the cluster summary.
 queries()      -- one callable per implemented operator (SURVEY.md §2 +
-                  training-data extensions), each (spark, sf_dir) -> DataFrame.
-oracle_sql()   -- DuckDB-equivalent SQL per query. ALL 129 queries are
+                  training-data extensions), each (spark, sf_dir) -> DataFrame:
+                  every module-level `_q_<name>` function, keyed by `<name>`.
+oracle_sql()   -- DuckDB-equivalent SQL per query. Every query is
                   value-checked (incl. an independent DuckDB treat_word
                   re-implementation for the phonetic blocking key, an
                   unrolled-CTE replay of the SemDeDup k-means loop, a
@@ -871,7 +872,7 @@ def _q_pack_sequences(spark, sf_dir):
 
 
 def _q_cosine_neardups_exact(spark, sf_dir):
-    # embedding-cosine near-dup (exact baseline; LSH variant is rows-only)
+    # embedding-cosine near-dup (exact baseline for the LSH variant)
     from ala_name_matching_spark.operators.similarity_search import cosine_col
 
     emb = _read(spark, sf_dir, "embeddings")
@@ -1853,7 +1854,7 @@ def _q_cohort_retention(spark, sf_dir):
     return cohort_retention(_read(spark, sf_dir, "events"), max_weeks=12)
 
 
-def _q_gap_fill(spark, sf_dir):
+def _q_gap_fill_minutes(spark, sf_dir):
     # hypertable gap-fill: per-user minute grid with forward-filled values
     from ala_name_matching_spark.operators.temporal import gap_fill
 
@@ -2430,7 +2431,7 @@ def _q_quantile_profile_chars(spark, sf_dir):
     return quantile_profile(_docs(spark, sf_dir), "n_chars", ["lang"])
 
 
-def _q_setsim_join(spark, sf_dir):
+def _q_setsim_join_pairs(spark, sf_dir):
     # Prefix-filtered set-similarity self-join (AllPairs/PPJoin,
     # Bayardo 2007 / Xiao 2008): every doc pair with 3-gram-shingle
     # Jaccard >= 0.6, computed WITHOUT the all-pairs product -- candidates
@@ -3837,7 +3838,7 @@ def _q_rematch_stragglers(spark, sf_dir):
     return out.select("record_id", "cluster_id", "rematch_cluster_id")
 
 
-# --- rows-only checks (genuinely not SQL-expressible) -----------------------
+# --- pipeline, graph and approximate lanes (oracles replay them in SQL) -----
 
 def _q_er_clusters(spark, sf_dir):
     # the full fuzzy pipeline (phonetic UDF + blocking + scoring + CC +
@@ -3851,7 +3852,7 @@ def _q_er_clusters(spark, sf_dir):
 
 
 def _q_phonetic_keys(spark, sf_dir):
-    # Taxamatch phonetic key per document (Arrow UDF) -- rows-only check
+    # Taxamatch phonetic key per document (Arrow UDF)
     from ala_name_matching_spark.functions.phonetic import phonetic_key_udf
 
     return _docs(spark, sf_dir).select(
@@ -4346,186 +4347,8 @@ def _q_spelling_collision_qa(spark, sf_dir):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "normalize_text": _q_normalize_text,
-        "concat_key": _q_concat_key,
-        "canon_text": _q_canon_text,
-        "exact_dup_groups": _q_exact_dup_groups,
-        "canon_groups": _q_canon_groups,
-        "block_pair_counts": _q_block_pair_counts,
-        "pair_scores_lev": _q_pair_scores_lev,
-        "pair_scores_jw": _q_pair_scores_jw,
-        "token_jaccard_pairs": _q_token_jaccard_pairs,
-        "minhash_unigram_sig": _q_minhash_unigram_sig,
-        "fingerprint": _q_fingerprint,
-        "token_counts": _q_token_counts,
-        "lang_id": _q_lang_id,
-        "quality_score": _q_quality_score,
-        "gopher_flags": _q_gopher_flags,
-        "repetition_signals": _q_repetition_signals,
-        "tfidf_topk": _q_tfidf_topk,
-        "unigram_logprob": _q_unigram_logprob,
-        "profile_documents": _q_profile_documents,
-        "heavy_hitter_tokens": _q_heavy_hitter_tokens,
-        "length_stats_by_lang": _q_length_stats_by_lang,
-        "neardup_cluster_sizes": _q_neardup_cluster_sizes,
-        "benchmark_contamination": _q_benchmark_contamination,
-        "pii_scrub": _q_pii_scrub,
-        "cosine_topk": _q_cosine_topk,
-        "topk_orders_per_customer": _q_topk_orders_per_customer,
-        "homonym_counts": _q_homonym_counts,
-        "broadcast_lookup_join": _q_broadcast_lookup_join,
-        "anti_join_ladder": _q_anti_join_ladder,
-        "range_filter": _q_range_filter,
-        "distinct_accepted": _q_distinct_accepted,
-        "collect_set_names": _q_collect_set_names,
-        "priority_election": _q_priority_election,
-        "range_join": _q_range_join,
-        "sessionization": _q_sessionization,
-        "asof_attribution": _q_asof_attribution,
-        "windowed_counts": _q_windowed_counts,
-        "rollup_cascade": _q_rollup_cascade,
-        "scd2_user_versions": _q_scd2_user_versions,
-        "soundex_normalize": _q_soundex_normalize,
-        "name_complete": _q_name_complete,
-        "homonym_probe": _q_homonym_probe,
-        "autocomplete": _q_autocomplete,
-        "interval_containment": _q_interval_containment,
-        "nested_set_intervals": _q_nested_set_intervals,
-        "species_split_containment": _q_species_split_containment,
-        "json_extract": _q_json_extract,
-        "train_holdout_split": _q_train_holdout_split,
-        "stratified_sample": _q_stratified_sample,
-        "weighted_sample": _q_weighted_sample,
-        "pack_sequences": _q_pack_sequences,
-        "cosine_neardups_exact": _q_cosine_neardups_exact,
-        "embedding_neardups_lsh": _q_embedding_neardups_lsh,
-        "semdedup_prune": _q_semdedup_prune,
-        "jl_projection": _q_jl_projection,
-        "render_conversations": _q_render_conversations,
-        "sft_pairs": _q_sft_pairs,
-        "weighted_sample_per_lang": _q_weighted_sample_per_lang,
-        "pagerank_supply_graph": _q_pagerank_supply_graph,
-        "hits_supply_graph": _q_hits_supply_graph,
-        "streaming_neardup_match": _q_streaming_neardup_match,
-        "streaming_index_update": _q_streaming_index_update,
-        "streaming_semdedup_match": _q_streaming_semdedup_match,
-        "streaming_drift_monitor": _q_streaming_drift_monitor,
-        "compaction_checksum": _q_compaction_checksum,
-        "ann_ivf_persisted_topk": _q_ann_ivf_persisted_topk,
-        "ivfpq_full_probe_topk": _q_ivfpq_full_probe_topk,
-        "streaming_exact_dedup": _q_streaming_exact_dedup,
-        "streaming_incremental_er": _q_streaming_incremental_er,
-        "clean_pipeline": _q_clean_pipeline,
-        "bucketed_join_parity": _q_bucketed_join_parity,
-        "jaccard_verify_cross": _q_jaccard_verify_cross,
-        "prefix_containment": _q_prefix_containment,
-        "bm25_topk": _q_bm25_topk,
-        "fuzzy_bm25_topk": _q_fuzzy_bm25_topk,
-        "hard_negatives": _q_hard_negatives,
-        "ngram_containment": _q_ngram_containment,
-        "phrase_match": _q_phrase_match,
-        "order_cube": _q_order_cube,
-        "event_pivot": _q_event_pivot,
-        "skew_salted_join": _q_skew_salted_join,
-        "hll_distinct_tokens": _q_hll_distinct_tokens,
-        "kmv_overlap": _q_kmv_overlap,
-        "cosine_join_pairs": _q_cosine_join_pairs,
-        "kmv_containment": _q_kmv_containment,
-        "icws_weighted_jaccard": _q_icws_weighted_jaccard,
-        "icws_lsh_candidates": _q_icws_lsh_candidates,
-        "shipping_priority": _q_shipping_priority,
-        "pricing_summary": _q_pricing_summary,
-        "mad_outliers": _q_mad_outliers,
-        "lca_pairs": _q_lca_pairs,
-        "benford_profile": _q_benford_profile,
-        "local_supplier_volume": _q_local_supplier_volume,
-        "perplexity_buckets": _q_perplexity_buckets,
-        "drift_psi_bins": _q_drift_psi_bins,
-        "bloom_prefilter_join": _q_bloom_prefilter_join,
-        "quantile_profile_chars": _q_quantile_profile_chars,
-        "setsim_join_pairs": _q_setsim_join,
-        "ed_join_pairs": _q_ed_join_pairs,
-        "pprl_dice_pairs": _q_pprl_dice_pairs,
-        "dsir_selection": _q_dsir_selection,
-        "quality_lr_weights": _q_quality_lr_weights,
-        "blocklist_filter": _q_blocklist_filter,
-        "hdr_quantile_chars": _q_hdr_quantile_chars,
-        "symspell_lookup": _q_symspell_lookup,
-        "zorder_key_orders": _q_zorder_key_orders,
-        "bigram_logprob": _q_bigram_logprob,
-        "bpe_pair_counts": _q_bpe_pair_counts,
-        "bpe_merges": _q_bpe_merges,
-        "bpe_tokenize": _q_bpe_tokenize,
-        "fs_match_weights": _q_fs_match_weights,
-        "fs_multilevel_weights": _q_fs_multilevel_weights,
-        "fs_level_weights": _q_fs_level_weights,
-        "uncertain_pairs": _q_uncertain_pairs,
-        "tf_adjusted_weights": _q_tf_adjusted_weights,
-        "snm_pairs": _q_snm_pairs,
-        "monge_elkan_pairs": _q_monge_elkan_pairs,
-        "tfidf_cosine_pairs": _q_tfidf_cosine_pairs,
-        "soft_tfidf_pairs": _q_soft_tfidf_pairs,
-        "golden_record": _q_golden_record,
-        "meta_blocking_prune": _q_meta_blocking_prune,
-        "bcubed_scorecard": _q_bcubed_scorecard,
-        "adjusted_rand": _q_adjusted_rand,
-        "nmi_scorecard": _q_nmi_scorecard,
-        "cluster_cohesion": _q_cluster_cohesion,
-        "cluster_repair": _q_cluster_repair,
-        "two_source_linkage": _q_two_source_linkage,
-        "threshold_sweep": _q_threshold_sweep,
-        "block_size_histogram": _q_block_size_histogram,
-        "cm_token_counts": _q_cm_token_counts,
-        "conv_neardup_pairs": _q_conv_neardup_pairs,
-        "conv_prefix_rescrape": _q_conv_prefix_rescrape,
-        "conv_dup_profile": _q_conv_dup_profile,
-        "er_pair_quality": _q_er_pair_quality,
-        "er_blocking_quality": _q_er_blocking_quality,
-        "winnowing_pairs": _q_winnowing_pairs,
-        "strip_dup_spans": _q_strip_dup_spans,
-        "line_dedup": _q_line_dedup,
-        "gap_fill_minutes": _q_gap_fill,
-        "funnel_stages": _q_funnel_stages,
-        "cohort_retention": _q_cohort_retention,
-        "event_transitions": _q_event_transitions,
-        "rfm_segments": _q_rfm_segments,
-        "chunk_documents": _q_chunk_documents,
-        "frame_schedule": _q_frame_schedule,
-        "table_checksum": _q_table_checksum,
-        "char_entropy": _q_char_entropy,
-        "issue_flags": _q_issue_flags,
-        "phrase_parse": _q_phrase_parse,
-        "phrase_join": _q_phrase_join,
-        "alias_lookup": _q_alias_lookup,
-        "rematch_stragglers": _q_rematch_stragglers,
-        "misapplied_resolution": _q_misapplied_resolution,
-        "synonym_enrich": _q_synonym_enrich,
-        # oracle-checked since round 2 (exact-Jaccard oracle; independent
-        # DuckDB treat_word re-implementation for the blocking key):
-        "minhash_lsh_neardups": _q_minhash_lsh_neardups,
-        "phonetic_keys": _q_phonetic_keys,
-        # oracle-checked CC lane: recursive-CTE closure oracle
-        "neardup_doc_clusters": _q_neardup_doc_clusters,
-        "cluster_triangles": _q_cluster_triangles,
-        "edge_support_bridges": _q_edge_support_bridges,
-        "kcore_membership": _q_kcore_membership,
-        "split_leakage": _q_split_leakage,
-        "incremental_cc": _q_incremental_cc,
-        "cross_doc_dup_ngrams": _q_cross_doc_dup_ngrams,
-        "dedup_keep_best": _q_dedup_keep_best,
-        "mixture_weights": _q_mixture_weights,
-        # rows-only (no oracle_sql entry):
-        "er_clusters": _q_er_clusters,
-        "simhash_neardups": _q_simhash_neardups,
-        "ann_lsh_topk": _q_ann_lsh_topk,
-        "ann_ivf_topk": _q_ann_ivf_topk,
-        "pq_adc_topk": _q_pq_adc_topk,
-        "sq_rerank_topk": _q_sq_rerank_topk,
-        "dm_fuzzy_lookup": _q_dm_fuzzy_lookup,
-        "spelling_collision_qa": _q_spelling_collision_qa,
-        "double_metaphone_keys": _q_double_metaphone_keys,
-    }
+    """Every `_q_<name>` above, keyed by `<name>`, in definition order."""
+    return {name[3:]: fn for name, fn in globals().items() if name.startswith("_q_")}
 
 
 # --------------------------------------------------------------------------

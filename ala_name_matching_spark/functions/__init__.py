@@ -17,6 +17,5 @@ from ala_name_matching_spark.functions.phonetic import (  # noqa: F401
 from ala_name_matching_spark.functions.similarity import (  # noqa: F401
     jaro_winkler,
     levenshtein_similarity,
-    pair_score_udf,
     token_set_similarity,
 )

@@ -248,9 +248,3 @@ def pair_score_cols(
         "tool_sim": tool,
         "score": num / den,
     }
-
-
-def pair_score_udf(*args, **kwargs):  # pragma: no cover - compat shim
-    raise NotImplementedError(
-        "scoring is expression-based; use pair_score_cols (only JW is a UDF)"
-    )

@@ -140,6 +140,7 @@ def run_clean_pipeline(
     stripped = _stage("c4_strip", stripped)
     n4 = stripped.count()
     counts.append(("c4_strip", n3, n4))
+    ckpt.write_metrics()
 
     stats = spark.createDataFrame(
         [(s, int(i), int(o)) for s, i, o in counts],

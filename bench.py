@@ -25,6 +25,160 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # ER bench size scales with SF: sf0.1 -> 120k turns
 ER_TURNS = int(os.environ.get("SPARK_GRAFT_ER_TURNS", "120000"))
 
+# The timed queries() subset, run after er_pipeline in this order; every
+# name must be a queries() key (tests/test_oracle_types.py pins it).
+BENCH_QUERIES = (
+    "pair_scores_lev",
+    "pair_scores_jw",
+    "minhash_lsh_neardups",
+    "simhash_neardups",
+    "cosine_topk",
+    "ann_lsh_topk",
+    "ann_ivf_topk",
+    "pq_adc_topk",
+    "broadcast_lookup_join",
+    "topk_orders_per_customer",
+    "range_join",
+    "sessionization",
+    "nested_set_intervals",
+    "windowed_counts",
+    "quality_score",
+    "lang_id",
+    "benchmark_contamination",
+    "pii_scrub",
+    "pack_sequences",
+    "cross_doc_dup_ngrams",
+    "unigram_logprob",
+    "mixture_weights",
+    "asof_attribution",
+    "rollup_cascade",
+    "heavy_hitter_tokens",
+    "bm25_topk",
+    "fuzzy_bm25_topk",
+    "semdedup_prune",
+    "prefix_containment",
+    "setsim_join_pairs",
+    "ed_join_pairs",
+    "pprl_dice_pairs",
+    "bpe_merges",
+    "dsir_selection",
+    "quality_lr_weights",
+    "symspell_lookup",
+    "hdr_quantile_chars",
+    "blocklist_filter",
+    "zorder_key_orders",
+    "bigram_logprob",
+    "phrase_match",
+    "winnowing_pairs",
+    "strip_dup_spans",
+    "line_dedup",
+    "cluster_triangles",
+    "edge_support_bridges",
+    "kcore_membership",
+    "split_leakage",
+    "incremental_cc",
+    "shipping_priority",
+    "pricing_summary",
+    "local_supplier_volume",
+    "mad_outliers",
+    "benford_profile",
+    "lca_pairs",
+    "icws_weighted_jaccard",
+    "icws_lsh_candidates",
+    "hll_distinct_tokens",
+    "kmv_overlap",
+    "cosine_join_pairs",
+    "perplexity_buckets",
+    "drift_psi_bins",
+    "sq_rerank_topk",
+    "funnel_stages",
+    "cohort_retention",
+    "event_transitions",
+    "rfm_segments",
+    "bloom_prefilter_join",
+    "cm_token_counts",
+    "snm_pairs",
+    "fs_match_weights",
+    "fs_multilevel_weights",
+    "fs_level_weights",
+    "uncertain_pairs",
+    "kmv_containment",
+    "conv_neardup_pairs",
+    "conv_prefix_rescrape",
+    "monge_elkan_pairs",
+    "tfidf_cosine_pairs",
+    "meta_blocking_prune",
+    "bcubed_scorecard",
+    "two_source_linkage",
+    "cluster_repair",
+    "threshold_sweep",
+    "pagerank_supply_graph",
+    "hits_supply_graph",
+    "jl_projection",
+    "render_conversations",
+    # real Structured Streaming jobs (file source, availableNow,
+    # epoch-idempotent sink) -- their wall time includes the
+    # micro-batch machinery, which IS the operator's honest cost
+    "streaming_neardup_match",
+    "streaming_index_update",
+    "streaming_semdedup_match",
+    "streaming_drift_monitor",
+    "streaming_exact_dedup",
+    "streaming_incremental_er",
+    # round-5 additions: disk-roundtrip + composition parity lanes
+    "compaction_checksum",
+    "ann_ivf_persisted_topk",
+    "ivfpq_full_probe_topk",
+    "bucketed_join_parity",
+    "jaccard_verify_cross",
+    # end-to-end corpus-cleaning pipeline (the documents-side
+    # er_pipeline sibling): four stages, honest full cost
+    "clean_pipeline",
+)
+
+
+def gc_all(spark):
+    """Block-manager hygiene between timed runs.
+
+    Many operators eagerly localCheckpoint skinny intermediates whose
+    blocks are released only when the driver GCs the python DataFrame AND
+    the async ContextCleaner drains. At ~80 queries x 2 runs the backlog
+    of dead blocks squeezes execution memory and later pair-heavy queries
+    spill (measured: pprl 4.7 s -> 81 s, setsim 4.3 s -> 36 s purely from
+    run position). Forcing both GCs restores isolation so each number
+    measures the OPERATOR, not the block-manager backlog of its
+    predecessors.
+    """
+    import gc
+
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
+    spark.catalog.clearCache()
+
+
+def consume(df):
+    """Force FULL materialization of every output column.
+
+    A bare .count() lets Catalyst prune pure-projection columns --
+    pair_scores_lev's levenshtein (and monge_elkan's DP) never ran in
+    the timed region before round 3's fix. Hashing all columns into
+    one JVM aggregate (no driver transfer) makes the timed work equal
+    what the correctness harness actually collects.
+
+    The aggregate over the hash must consume its VALUE: count(_h)
+    still prunes (xxhash64 is non-nullable, so Catalyst rewrites
+    count(_h) to count(1) and drops the projection -- verified in the
+    executed plan, where levenshtein vanished). bit_xor(_h) folds
+    every hash into one long with no overflow semantics to worry
+    about, so nothing upstream is prunable.
+    """
+    from pyspark.sql import functions as F
+
+    cols = [F.col(c) for c in df.columns]
+    return df.select(F.xxhash64(*cols).alias("_h")).agg(
+        F.bit_xor("_h")
+    ).collect()[0][0]
+
 
 def main():
     import __spark_entry__ as entry_mod
@@ -35,22 +189,6 @@ def main():
     spark = get_spark("bench", master=f"local[{CPUS}]", shuffle_partitions=CPUS)
 
     timings: dict[str, float] = {}
-
-    def gc_all():
-        # Block-manager hygiene: many operators eagerly localCheckpoint
-        # skinny intermediates whose blocks are released only when the
-        # driver GCs the python DataFrame AND the async ContextCleaner
-        # drains. At ~80 queries x 2 runs the backlog of dead blocks
-        # squeezes execution memory and later pair-heavy queries spill
-        # (measured: pprl 4.7 s -> 81 s, setsim 4.3 s -> 36 s purely
-        # from run position). Forcing both GCs restores isolation so each
-        # number measures the OPERATOR, not the block-manager backlog of
-        # its predecessors.
-        import gc as _gc
-
-        _gc.collect()
-        spark.sparkContext._jvm.System.gc()
-        spark.catalog.clearCache()
 
     def timed(name, fn):
         # Steady-state discipline: one untimed warm pass, then the timed
@@ -74,37 +212,14 @@ def main():
         n = None
         best = None
         for _ in range(2):
-            gc_all()
+            gc_all(spark)
             t0 = time.time()
             n = fn()
             dt = time.time() - t0
             best = dt if best is None else min(best, dt)
         timings[name] = round(best, 3)
-        gc_all()
+        gc_all(spark)
         return n
-
-    def consume(df):
-        """Force FULL materialization of every output column.
-
-        A bare .count() lets Catalyst prune pure-projection columns --
-        pair_scores_lev's levenshtein (and monge_elkan's DP) never ran in
-        the timed region before round 3's fix. Hashing all columns into
-        one JVM aggregate (no driver transfer) makes the timed work equal
-        what the correctness harness actually collects.
-
-        The aggregate over the hash must consume its VALUE: count(_h)
-        still prunes (xxhash64 is non-nullable, so Catalyst rewrites
-        count(_h) to count(1) and drops the projection -- verified in the
-        executed plan, where levenshtein vanished). bit_xor(_h) folds
-        every hash into one long with no overflow semantics to worry
-        about, so nothing upstream is prunable.
-        """
-        from pyspark.sql import functions as F
-
-        cols = [F.col(c) for c in df.columns]
-        return df.select(F.xxhash64(*cols).alias("_h")).agg(
-            F.bit_xor("_h")
-        ).collect()[0][0]
 
     # Input staging (untimed): the north rule's input is a STORED table
     # (Iceberg at production; parquet stand-in here, like every other bench
@@ -135,114 +250,7 @@ def main():
     er_turns_per_sec = round(ER_TURNS / timings["er_pipeline"], 1)
 
     qs = entry_mod.queries()
-    for name in [
-        "pair_scores_lev",
-        "pair_scores_jw",
-        "minhash_lsh_neardups",
-        "simhash_neardups",
-        "cosine_topk",
-        "ann_lsh_topk",
-        "ann_ivf_topk",
-        "pq_adc_topk",
-        "broadcast_lookup_join",
-        "topk_orders_per_customer",
-        "range_join",
-        "sessionization",
-        "nested_set_intervals",
-        "windowed_counts",
-        "quality_score",
-        "lang_id",
-        "benchmark_contamination",
-        "pii_scrub",
-        "pack_sequences",
-        "cross_doc_dup_ngrams",
-        "unigram_logprob",
-        "mixture_weights",
-        "asof_attribution",
-        "rollup_cascade",
-        "heavy_hitter_tokens",
-        "bm25_topk",
-        "fuzzy_bm25_topk",
-        "semdedup_prune",
-        "prefix_containment",
-        "setsim_join_pairs",
-        "ed_join_pairs",
-        "pprl_dice_pairs",
-        "bpe_merges",
-        "dsir_selection",
-        "quality_lr_weights",
-        "symspell_lookup",
-        "hdr_quantile_chars",
-        "blocklist_filter",
-        "zorder_key_orders",
-        "bigram_logprob",
-        "phrase_match",
-        "winnowing_pairs",
-        "strip_dup_spans",
-        "line_dedup",
-        "cluster_triangles",
-        "edge_support_bridges",
-        "kcore_membership",
-        "split_leakage",
-        "incremental_cc",
-        "shipping_priority",
-        "pricing_summary",
-        "local_supplier_volume",
-        "mad_outliers",
-        "benford_profile",
-        "lca_pairs",
-        "icws_weighted_jaccard",
-        "icws_lsh_candidates",
-        "hll_distinct_tokens",
-        "kmv_overlap",
-        "cosine_join_pairs",
-        "perplexity_buckets",
-        "drift_psi_bins",
-        "sq_rerank_topk",
-        "funnel_stages",
-        "cohort_retention",
-        "event_transitions",
-        "rfm_segments",
-        "bloom_prefilter_join",
-        "cm_token_counts",
-        "snm_pairs",
-        "fs_match_weights",
-        "fs_multilevel_weights",
-        "fs_level_weights",
-        "uncertain_pairs",
-        "kmv_containment",
-        "conv_neardup_pairs",
-        "conv_prefix_rescrape",
-        "monge_elkan_pairs",
-        "tfidf_cosine_pairs",
-        "meta_blocking_prune",
-        "bcubed_scorecard",
-        "two_source_linkage",
-        "cluster_repair",
-        "threshold_sweep",
-        "pagerank_supply_graph",
-        "hits_supply_graph",
-        "jl_projection",
-        "render_conversations",
-        # real Structured Streaming jobs (file source, availableNow,
-        # epoch-idempotent sink) -- their wall time includes the
-        # micro-batch machinery, which IS the operator's honest cost
-        "streaming_neardup_match",
-        "streaming_index_update",
-        "streaming_semdedup_match",
-        "streaming_drift_monitor",
-        "streaming_exact_dedup",
-        "streaming_incremental_er",
-        # round-5 additions: disk-roundtrip + composition parity lanes
-        "compaction_checksum",
-        "ann_ivf_persisted_topk",
-        "ivfpq_full_probe_topk",
-        "bucketed_join_parity",
-        "jaccard_verify_cross",
-        # end-to-end corpus-cleaning pipeline (the documents-side
-        # er_pipeline sibling): four stages, honest full cost
-        "clean_pipeline",
-    ]:
+    for name in BENCH_QUERIES:
         fn = qs[name]
         timed(name, lambda f=fn: consume(f(spark, SF_DIR)))
 

@@ -149,14 +149,7 @@ def main(argv: list[str] | None = None) -> int:
         # narrow deliverable. run_pipeline just committed the identical table
         # as the p6_clusters phase -- write --output from that scan instead of
         # re-executing the record probe join (the heaviest final job) twice.
-        if ckpt.exists("p6_clusters"):
-            clustered = ckpt.read("p6_clusters")
-        else:
-            # checkpointing off: Catalyst prunes the probe scan to the
-            # id/hash columns, so this job never reads the text payload
-            clustered = clustered.select(
-                "record_id", "cluster_id", "representative_id", "is_representative"
-            )
+        clustered = ckpt.read("p6_clusters")
     if args.format == "iceberg":
         clustered.writeTo(args.output).createOrReplace()
     else:

@@ -7,6 +7,9 @@ own stage and the stats table must account for every drop. Also covers
 checkpointed resume (phases skip on the second run).
 """
 
+import json
+import os
+
 import pytest
 
 from ala_name_matching_spark.plans.clean_pipeline import run_clean_pipeline
@@ -77,3 +80,12 @@ def test_resume_skips_committed_phases(spark, fixture_docs, tmp_path):
     a = sorted(map(tuple, first["clean"].collect()))
     b = sorted(map(tuple, second["clean"].collect()))
     assert a == b and n_first == len(a)
+
+    # S5 lineage: every stage leaves its per-partition rows in _metrics.json,
+    # and the resumed run keeps them
+    with open(os.path.join(root, "_metrics.json")) as fh:
+        metrics = json.load(fh)
+    phases = {m["phase"] for m in metrics}
+    assert phases == {"c1_quality", "c2_exact", "c3_neardup", "c4_strip"}
+    c4_rows = sum(m["rows"] for m in metrics if m["phase"] == "c4_strip")
+    assert c4_rows == n_first

@@ -8,6 +8,9 @@ to Spark's. The fix is CAST(... AS BIGINT) at the outermost projection; this
 test pins the whole class shut by binding every oracle (no execution -- the
 relation's types come from DuckDB's binder) and asserting no HUGEINT
 anywhere in the result schema, including nested list/struct types.
+
+It also pins the single query registry: queries(), oracle_sql() and the
+bench's selection must agree on query names.
 """
 
 from __future__ import annotations
@@ -18,6 +21,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
+import bench
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 TABLES = [
@@ -51,3 +55,12 @@ def test_no_oracle_emits_hugeint(con):
         f"oracles emitting HUGEINT columns (wrap the aggregate in "
         f"CAST(... AS BIGINT)): {offenders}"
     )
+
+
+def test_one_query_registry():
+    """queries() is derived from the _q_<name> definitions; every query has
+    an oracle, and the bench only times registered queries."""
+    qs = entry_mod.queries()
+    assert set(qs) == set(entry_mod.oracle_sql())
+    assert {k for k, fn in qs.items() if fn.__name__ != "_q_" + k} == set()
+    assert set(bench.BENCH_QUERIES) <= set(qs)

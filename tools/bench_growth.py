@@ -21,8 +21,7 @@ The default query list is NOT hardcoded: it is the top-N most expensive
 queries of the LATEST BENCH_r*.json in the repo root (VERDICT r04 #3 --
 a frozen snapshot silently stops guarding once the cost frontier moves,
 which is exactly how the r04 streaming-semdedup fixed-k defect escaped
-the r03-pinned list). Falls back to a static list only when no bench
-JSON exists.
+the r03-pinned list).
 
 Usage: python tools/bench_growth.py [sf_small] [sf_big] [limit] [only...]
 Exits 1 if any query's ratio breaches the limit.
@@ -39,19 +38,7 @@ import time
 
 sys.path.insert(0, ".")
 
-# fallback only -- used when no BENCH_r*.json is present
-_STATIC_FALLBACK = [
-    "semdedup_prune",
-    "ed_join_pairs",
-    "phrase_match",
-    "symspell_lookup",
-    "pprl_dice_pairs",
-    "kcore_membership",
-    "cluster_triangles",
-    "edge_support_bridges",
-    "setsim_join_pairs",
-    "pq_adc_topk",
-]
+from bench import consume, gc_all  # noqa: E402
 
 TOP_N = 10
 
@@ -59,23 +46,15 @@ TOP_N = 10
 def default_queries(repo_root: str = ".", top_n: int = TOP_N) -> list[str]:
     """Top-N most expensive queries of the latest BENCH_r*.json (by round
     number), so the growth guard always tracks the live cost frontier."""
-    cands = glob.glob(os.path.join(repo_root, "BENCH_r*.json"))
-    best, best_round = None, -1
-    for p in cands:
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
-        if m and int(m.group(1)) > best_round:
-            best, best_round = p, int(m.group(1))
-    if best is None:
-        return list(_STATIC_FALLBACK)
+    best = max(
+        glob.glob(os.path.join(repo_root, "BENCH_r*.json")),
+        key=lambda p: int(re.search(r"BENCH_r(\d+)\.json$", p).group(1)),
+    )
     with open(best) as f:
         bench = json.load(f)
     # the driver wraps bench.py's JSON line under "parsed"; a raw
     # bench.py capture has "queries" at top level
-    qtimes = bench.get("queries") or bench.get("parsed", {}).get(
-        "queries", {}
-    )
-    if not qtimes:
-        return list(_STATIC_FALLBACK)
+    qtimes = bench.get("queries") or bench["parsed"]["queries"]
     # er_pipeline is benched via run_pipeline directly, not a queries()
     # entry -- its growth story is the scaling protocol's, not this
     # harness's -- so drop any bench key that queries() cannot serve
@@ -93,34 +72,16 @@ def default_queries(repo_root: str = ".", top_n: int = TOP_N) -> list[str]:
 SMALL_FLOOR_SEC = 0.15
 
 
-def consume(spark, df):
-    """bench.py's honest materialization: hash every output column."""
-    from pyspark.sql import functions as F
-
-    cols = [F.col(c) for c in df.columns]
-    return (
-        df.select(F.xxhash64(*cols).alias("_h")).agg(F.bit_xor("_h")).collect()[0][0]
-    )
-
-
-def _gc_all(spark):
-    import gc
-
-    gc.collect()
-    spark.sparkContext._jvm.System.gc()
-    spark.catalog.clearCache()
-
-
 def timed_run(spark, fn, sf_dir):
-    consume(spark, fn(spark, sf_dir))  # warm (codegen/JIT)
+    consume(fn(spark, sf_dir))  # warm (codegen/JIT)
     # release the warm pass's dead checkpoint blocks before timing --
     # bench.py's warm-to-timed hygiene; the blocks scale with data, so
     # skipping this inflates t_big more than t_small and fakes ratios
-    _gc_all(spark)
+    gc_all(spark)
     t0 = time.time()
-    consume(spark, fn(spark, sf_dir))
+    consume(fn(spark, sf_dir))
     dt = time.time() - t0
-    _gc_all(spark)
+    gc_all(spark)
     return dt
 
 

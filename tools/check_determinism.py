@@ -61,17 +61,7 @@ def _run_canary(spark) -> None:
 
 # the SAME normalization as the correctness gate -- imported, not copied,
 # so the two sweeps can never drift apart
-from check_oracles import norm_cell  # noqa: E402
-
-
-def frame_sig(df):
-    cols = df.columns
-    idx = sorted(range(len(cols)), key=lambda i: cols[i])
-    rows = [
-        tuple(norm_cell(r[i]) for i in idx) for r in df.collect()
-    ]
-    rows.sort(key=lambda t: tuple(str(x) for x in t))
-    return [cols[i] for i in idx], rows
+from check_oracles import frame_to_rows  # noqa: E402
 
 
 def main():
@@ -110,7 +100,8 @@ def main():
                 sys.exit(2)
         for n in names:
             try:
-                results[n].append(frame_sig(queries[n](spark, sf_dir)))
+                df = queries[n](spark, sf_dir)
+                results[n].append(frame_to_rows(df.columns, df.collect()))
             except Exception as e:  # noqa: BLE001
                 results[n].append(("ERROR", repr(e)[:300]))
         spark.stop()
