@@ -11,15 +11,18 @@ al. orderings):
   c3_neardup   MinHash-LSH candidates -> exact-Jaccard verify ->
                connected components -> quality-aware keep-best election
   c4_strip     cross-doc duplicated-span removal on the survivors
-  c5_pack      stats row per stage for the lineage contract
 
-Every stage commits through CheckpointManager (resume = skip committed
-phases, same S3/S5 contract as the ER job); each is linear, partially
-aggregated, and reuses the operator modules -- this file only sequences
-them, so batch/streaming/ad-hoc callers cannot drift from the pipeline.
+Every stage is built or resumed by CheckpointManager.phase (a committed
+stage is read back and never rebuilt, same S3/S5 contract as the ER job),
+and the per-stage stats rows come from the commits' footers. Each stage is
+linear, partially aggregated, and reuses the operator modules -- this file
+only sequences them, so batch/streaming/ad-hoc callers cannot drift from
+the pipeline.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -41,11 +44,7 @@ def run_clean_pipeline(
     `clean` columns: (doc_id, clean_text, n_tokens, n_removed) for every
     surviving doc; `stats` one row per stage with docs_in/docs_out.
     """
-    from ala_name_matching_spark.operators.dedup import (
-        dedup_keep_best,
-        exact_duplicates,
-        strip_dup_spans,
-    )
+    from ala_name_matching_spark.operators import dedup
     from ala_name_matching_spark.operators.text_analysis import (
         char_entropy,
         gopher_quality_columns,
@@ -53,49 +52,29 @@ def run_clean_pipeline(
     )
 
     ckpt = checkpoints or CheckpointManager(docs.sparkSession, "", enabled=False)
-    spark = docs.sparkSession
-    counts: list[tuple[str, int, int]] = []
-    n0 = docs.count()
-
-    def _stage(name: str, df: DataFrame) -> DataFrame:
-        # the ER pipeline's _phase rule: every stage output is a lineage
-        # barrier. With durable checkpoints the parquet read-back cuts
-        # it; without them an eager localCheckpoint must -- otherwise the
-        # whole four-stage chain is ONE lazy lineage and each stage's
-        # count, the CC iterations inside c3, and the final consumer all
-        # re-execute every upstream stage (measured 206 s -> 32 s for
-        # the sf0.1 clean_pipeline query).
-        out = ckpt.materialize(name, df)
-        if not ckpt.enabled:
-            out = out.localCheckpoint(eager=True)
-        return out
 
     # c1: hard quality gates -- all JVM expressions, one scan + one entropy agg
-    gq = gopher_quality_columns(F.col(text_col))
-    flagged = docs.select(
-        F.col(id_col), F.col(text_col),
-        language_id_col(F.col(text_col)).alias("lang_id"),
-        gq["flagged"].alias("gopher_flagged"),
-    )
-    ent = char_entropy(docs, id_col, text_col)
-    q = (
-        flagged.join(ent, id_col)
-        .filter(~F.col("gopher_flagged") & (F.col("char_entropy") >= min_entropy))
-        .select(id_col, text_col)
-    )
-    q = _stage("c1_quality", q)
-    n1 = q.count()
-    counts.append(("c1_quality", n0, n1))
+    def c1_quality(df: DataFrame) -> DataFrame:
+        gq = gopher_quality_columns(F.col(text_col))
+        flagged = df.select(
+            F.col(id_col), F.col(text_col),
+            language_id_col(F.col(text_col)).alias("lang_id"),
+            gq["flagged"].alias("gopher_flagged"),
+        )
+        ent = char_entropy(df, id_col, text_col)
+        return (
+            flagged.join(ent, id_col)
+            .filter(~F.col("gopher_flagged") & (F.col("char_entropy") >= min_entropy))
+            .select(id_col, text_col)
+        )
 
     # c2: exact dedup -- drop every member of a dup group except keep_id
-    dups = exact_duplicates(q, id_col, text_col)
-    drop = dups.select(F.explode("doc_ids").alias(id_col), "keep_id").filter(
-        F.col(id_col) != F.col("keep_id")
-    ).select(id_col)
-    d2 = q.join(drop, id_col, "left_anti")
-    d2 = _stage("c2_exact", d2)
-    n2 = d2.count()
-    counts.append(("c2_exact", n1, n2))
+    def c2_exact(df: DataFrame) -> DataFrame:
+        dups = dedup.exact_duplicates(df, id_col, text_col)
+        drop = dups.select(F.explode("doc_ids").alias(id_col), "keep_id").filter(
+            F.col(id_col) != F.col("keep_id")
+        ).select(id_col)
+        return df.join(drop, id_col, "left_anti")
 
     # c3: near-dup clusters + keep-best election. Edges come from the
     # LSH-BANDED candidate lane (MinHash band join -> exact-Jaccard
@@ -107,43 +86,42 @@ def run_clean_pipeline(
     # minhash_lsh_neardups property; the clean_pipeline oracle keeps the
     # exact all-pairs SQL as truth, so any missed >= threshold pair
     # fails the value check rather than passing silently.
-    from ala_name_matching_spark.operators.dedup import (
-        minhash_lsh_candidates,
-        ngram_jaccard_pairs,
-    )
-
-    # 32 hashes / 16 bands (2 rows per band): collision probability for a
-    # threshold-worthy pair (j >= 0.5) is 1-(1-j^2)^16 >= 0.99, vs ~0.90
-    # at 16/8 -- an organic j=0.68 pair was measured to slip through the
-    # smaller signature. Candidate volume stays sparse (a j=0.02
-    # background pair collides with p ~ 0.006).
-    lsh_cands = minhash_lsh_candidates(
-        d2, id_col=id_col, text_col=text_col, num_hashes=32, bands=16,
-        shingle_n=3,
-    )
-    lsh_edges = ngram_jaccard_pairs(
-        d2, lsh_cands, id_col=id_col, text_col=text_col,
-        shingle_n=3, threshold=jaccard_threshold,
-    )
-    keep = dedup_keep_best(
-        d2, id_col, text_col, threshold=jaccard_threshold, edges=lsh_edges
-    )
-    d3 = d2.join(
-        keep.filter(F.col("keep")).select(id_col), id_col, "left_semi"
-    )
-    d3 = _stage("c3_neardup", d3)
-    n3 = d3.count()
-    counts.append(("c3_neardup", n2, n3))
+    def c3_neardup(df: DataFrame) -> DataFrame:
+        # 32 hashes / 16 bands (2 rows per band): collision probability for
+        # a threshold-worthy pair (j >= 0.5) is 1-(1-j^2)^16 >= 0.99, vs
+        # ~0.90 at 16/8 -- an organic j=0.68 pair was measured to slip
+        # through the smaller signature. Candidate volume stays sparse (a
+        # j=0.02 background pair collides with p ~ 0.006).
+        lsh_cands = dedup.minhash_lsh_candidates(
+            df, id_col=id_col, text_col=text_col, num_hashes=32, bands=16,
+            shingle_n=3,
+        )
+        lsh_edges = dedup.ngram_jaccard_pairs(
+            df, lsh_cands, id_col=id_col, text_col=text_col,
+            shingle_n=3, threshold=jaccard_threshold,
+        )
+        keep = dedup.dedup_keep_best(
+            df, id_col, text_col, threshold=jaccard_threshold, edges=lsh_edges
+        )
+        return df.join(keep.filter(F.col("keep")).select(id_col), id_col, "left_semi")
 
     # c4: duplicated-span removal on the survivors
-    stripped = strip_dup_spans(d3, id_col, text_col, span_n=span_n)
-    stripped = _stage("c4_strip", stripped)
-    n4 = stripped.count()
-    counts.append(("c4_strip", n3, n4))
+    def c4_strip(df: DataFrame) -> DataFrame:
+        return dedup.strip_dup_spans(df, id_col, text_col, span_n=span_n)
+
+    # the input count is the only count() job: every stage count comes from
+    # its commit's parquet footers (count() of the localCheckpoint without
+    # checkpoints)
+    df, n_in, counts = docs, docs.count(), []
+    for stage in (c1_quality, c2_exact, c3_neardup, c4_strip):
+        name = stage.__name__
+        df = ckpt.phase(name, partial(stage, df))
+        n_out = ckpt.rows(name, df)
+        counts.append((name, n_in, n_out))
+        n_in = n_out
     ckpt.write_metrics()
 
-    stats = spark.createDataFrame(
-        [(s, int(i), int(o)) for s, i, o in counts],
-        "stage string, docs_in bigint, docs_out bigint",
+    stats = docs.sparkSession.createDataFrame(
+        counts, "stage string, docs_in bigint, docs_out bigint"
     )
-    return {"clean": stripped, "stats": stats}
+    return {"clean": df, "stats": stats}

@@ -71,23 +71,6 @@ class PipelineConfig:
     binary_ids: bool = False
 
 
-def _phase(ckpt: CheckpointManager, name: str, build) -> DataFrame:
-    """Build-or-resume one pipeline phase.
-
-    With checkpoints disabled we still materialize the phase output
-    (executor-local storage via localCheckpoint, lineage truncated): every
-    phase output is consumed by >=2 downstream branches, and without
-    materialization each branch recomputes the full upstream DAG -- measured
-    369 s vs 49 s e2e at 150k turns / local[32]. This is the in-memory analog
-    of the Iceberg phase commit the production pipeline performs.
-    """
-    if ckpt.exists(name):
-        return ckpt.read(name)
-    if not ckpt.enabled:
-        return build().localCheckpoint(eager=True)
-    return ckpt.materialize(name, build())
-
-
 def _driver_label_artifact(ckpt: CheckpointManager) -> bool:
     """All-driver p5 lane: write p5_group_labels without any Spark job.
 
@@ -97,7 +80,7 @@ def _driver_label_artifact(ckpt: CheckpointManager) -> bool:
     -> rep) map read from the committed rep phase, write the phase artifact
     chunked. The two Spark jobs this replaces (label attach + group-table
     write) were pure fixed cost in the two-cluster-size criterion. Returns
-    False when ineligible -- callers fall back to the distributed lane.
+    False when ineligible -- the p5 builder falls back to group_label_table.
     """
     if not ckpt.enabled:
         return False
@@ -142,8 +125,7 @@ def run_pipeline(
     cfg = config or PipelineConfig()
     ckpt = checkpoints or CheckpointManager(None, "", enabled=False)
 
-    features = _phase(
-        ckpt,
+    features = ckpt.phase(
         "p1_features",
         # narrow artifact: originals + record_id + canon_key + group hash.
         # No phonetic kernel (reps re-derive it post-agg), no norm/canon
@@ -155,7 +137,7 @@ def run_pipeline(
     # net LOSS (102 s vs 83 s e2e) -- the phonetic_tokens arrays are heavy to
     # cache and the memoized Arrow kernel recomputes cheaply. With
     # checkpoints enabled the parquet read-back cuts lineage instead.
-    reps = _phase(ckpt, "p2_canon_reps", lambda: canon_group_representatives(features))
+    reps = ckpt.phase("p2_canon_reps", lambda: canon_group_representatives(features))
 
     par = transcripts.sparkSession.sparkContext.defaultParallelism
 
@@ -185,7 +167,7 @@ def run_pipeline(
         scored = apply_pair_scores(pairs, min_partitions=par)
         return match_edges(scored, threshold=cfg.match_threshold)
 
-    fuzzy_edges = _phase(ckpt, "p4_edges", build_edges)
+    fuzzy_edges = ckpt.phase("p4_edges", build_edges)
 
     # CC on the contracted rep graph only; labels + representative election
     # live on the |groups|-sized table (p5_group_labels -- the committed
@@ -195,22 +177,17 @@ def run_pipeline(
     # group labels onto the feature table on the 128-bit group hash -- at
     # 100 TB the input corpus is never rewritten to carry a cluster column,
     # so no job in the pipeline ever shuffles or re-encodes the text payload.
-    # phase row counts come from checkpoint parquet footers (metadata-only,
-    # no Spark job -- driver actions are fixed, non-scaling costs); fall back
-    # to count() when checkpoints are off (tiny in-memory test runs)
-    n_groups = ckpt.row_count("p2_canon_reps")
-    if n_groups is None:
-        n_groups = reps.count()
-    if ckpt.exists("p5_group_labels") or _driver_label_artifact(ckpt):
-        # resumed, or the all-driver lane (numpy UF + Arrow join, no Spark
-        # job) just wrote the phase artifact; re-enter as a parquet scan
-        labels = ckpt.read("p5_group_labels")
-    else:
-        labels = _phase(
-            ckpt,
-            "p5_group_labels",
-            lambda: group_label_table(reps, fuzzy_edges, ckpt.row_count("p4_edges")),
-        )
+    n_groups = ckpt.rows("p2_canon_reps", reps)
+    # the all-driver lane (numpy UF + Arrow join, no Spark job) commits the
+    # phase itself when eligible; phase() then reads the artifact back
+    labels = ckpt.phase(
+        "p5_group_labels",
+        lambda: None
+        if _driver_label_artifact(ckpt)
+        else group_label_table(reps, fuzzy_edges, ckpt.row_count("p4_edges")),
+    )
+    # kept although materialize checks too: its read-back of a committed
+    # phase is a schema-inference Spark job, and nothing reads p6 here
     if not ckpt.exists("p6_clusters"):
         ckpt.materialize(
             "p6_clusters", assignment_table(features, labels, n_groups=n_groups)

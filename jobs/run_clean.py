@@ -34,12 +34,9 @@ def main() -> int:
     p.add_argument("--jaccard-threshold", type=float, default=0.5)
     args = p.parse_args()
 
-    import os
-
     spark = SparkSession.builder.appName("corpus-clean").getOrCreate()
     ckpt = CheckpointManager(
-        spark, args.checkpoint_dir or os.path.join(args.output + "_ck"),
-        enabled=True,
+        spark, args.checkpoint_dir or args.output + "_ck", enabled=True
     )
     docs = spark.read.parquet(args.input).select("doc_id", "text")
 

@@ -117,8 +117,7 @@ def main(argv: list[str] | None = None) -> int:
     cfg = PipelineConfig(**kwargs) if kwargs else None
 
     ckpt = CheckpointManager(
-        spark, args.checkpoint_dir or os.path.join(args.output + "_ck"),
-        enabled=True,
+        spark, args.checkpoint_dir or args.output + "_ck", enabled=True
     )
     if args.repair_strict is not None and args.output_mode != "assignment":
         p.error("--repair-strict requires --output-mode assignment")
@@ -130,22 +129,7 @@ def main(argv: list[str] | None = None) -> int:
         )
 
         clustered = repair_pipeline_clusters(ckpt, args.repair_strict)
-        if args.format == "iceberg":
-            clustered.writeTo(args.output).createOrReplace()
-        else:
-            clustered.write.mode("overwrite").parquet(args.output)
-        n = (
-            spark.read.parquet(args.output).count()
-            if args.format == "parquet"
-            else None
-        )
-        print(
-            f"er_pipeline done (repaired) rows={n} "
-            f"wall_sec={time.time() - t0:.1f} output={args.output}"
-        )
-        spark.stop()
-        return 0
-    if args.output_mode == "assignment":
+    elif args.output_mode == "assignment":
         # narrow deliverable. run_pipeline just committed the identical table
         # as the p6_clusters phase -- write --output from that scan instead of
         # re-executing the record probe join (the heaviest final job) twice.
@@ -155,7 +139,8 @@ def main(argv: list[str] | None = None) -> int:
     else:
         clustered.write.mode("overwrite").parquet(args.output)
     n = spark.read.parquet(args.output).count() if args.format == "parquet" else None
-    print(f"er_pipeline done rows={n} wall_sec={time.time() - t0:.1f} "
+    repaired = " (repaired)" if args.repair_strict is not None else ""
+    print(f"er_pipeline done{repaired} rows={n} wall_sec={time.time() - t0:.1f} "
           f"output={args.output}")
     spark.stop()
     return 0

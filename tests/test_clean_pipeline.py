@@ -65,7 +65,8 @@ def test_stagewise_drops_and_stats(spark, fixture_docs):
     assert 5 not in clean
 
 
-def test_resume_skips_committed_phases(spark, fixture_docs, tmp_path):
+def test_resume_skips_committed_phases(spark, fixture_docs, tmp_path, monkeypatch):
+    from ala_name_matching_spark.operators import dedup
     from ala_name_matching_spark.sources.checkpoints import CheckpointManager
 
     root = str(tmp_path / "clean_ck")
@@ -73,13 +74,19 @@ def test_resume_skips_committed_phases(spark, fixture_docs, tmp_path):
     first = run_clean_pipeline(fixture_docs, checkpoints=ck1)
     n_first = first["clean"].count()
 
-    # second run resumes: phases exist, outputs identical
+    # second run resumes: no stage builder runs (c3's LSH join and driver
+    # election, c4's span strip), outputs and stats identical
+    built = []
+    for fn in ("minhash_lsh_candidates", "dedup_keep_best", "strip_dup_spans"):
+        monkeypatch.setattr(dedup, fn, lambda *a, _fn=fn, **k: built.append(_fn))
     ck2 = CheckpointManager(spark, root, enabled=True)
     assert ck2.exists("c1_quality") and ck2.exists("c4_strip")
     second = run_clean_pipeline(fixture_docs, checkpoints=ck2)
+    assert built == []
     a = sorted(map(tuple, first["clean"].collect()))
     b = sorted(map(tuple, second["clean"].collect()))
     assert a == b and n_first == len(a)
+    assert second["stats"].collect() == first["stats"].collect()
 
     # S5 lineage: every stage leaves its per-partition rows in _metrics.json,
     # and the resumed run keeps them
@@ -89,3 +96,18 @@ def test_resume_skips_committed_phases(spark, fixture_docs, tmp_path):
     assert phases == {"c1_quality", "c2_exact", "c3_neardup", "c4_strip"}
     c4_rows = sum(m["rows"] for m in metrics if m["phase"] == "c4_strip")
     assert c4_rows == n_first
+
+
+def test_checkpoint_mode_parity(spark, fixture_docs, tmp_path):
+    """Footer counts (checkpointed) and count() (in-memory) give the same
+    stats, and both modes the same clean rows."""
+    from ala_name_matching_spark.sources.checkpoints import CheckpointManager
+
+    mem = run_clean_pipeline(fixture_docs)
+    ck = run_clean_pipeline(
+        fixture_docs, checkpoints=CheckpointManager(spark, str(tmp_path / "ck"))
+    )
+    assert mem["stats"].collect() == ck["stats"].collect()
+    assert sorted(map(tuple, mem["clean"].collect())) == sorted(
+        map(tuple, ck["clean"].collect())
+    )

@@ -104,15 +104,20 @@ def test_representatives(clustered):
     assert summary.filter(F.col("cluster_size") >= 2).count() > 0
 
 
-def test_checkpoint_resume(spark, transcripts, tmp_path):
+def test_checkpoint_resume(spark, transcripts, tmp_path, monkeypatch):
+    from ala_name_matching_spark.plans import pipeline
+
     root = str(tmp_path / "ckpt")
     ckpt = CheckpointManager(spark, root)
     out1 = run_pipeline(transcripts.drop("entity_id"), checkpoints=ckpt)
     n1 = out1.count()
     # resume: phases must be read back, not recomputed
+    built = []
+    monkeypatch.setattr(pipeline, "payload_pairs", lambda *a, **k: built.append(a))
     ckpt2 = CheckpointManager(spark, root)
     assert ckpt2.exists("p1_features") and ckpt2.exists("p4_edges")
     out2 = run_pipeline(transcripts.drop("entity_id"), checkpoints=ckpt2)
+    assert built == []
     assert out2.count() == n1
     # lineage/metrics written (S5 analog)
     import json, os

@@ -10,7 +10,8 @@ regressions are caught without re-benching. Counts are asserted as <= the
 audited inventory -- fewer is an improvement, more is a regression.
 
 Each phase is measured on its OWN build plan with the upstream phase
-materialized (localCheckpoint), exactly how plans/pipeline._phase runs it.
+materialized (localCheckpoint), exactly how CheckpointManager.phase runs it
+with checkpointing disabled.
 """
 
 import re
