@@ -5,7 +5,7 @@ so Catalyst/codegen applies; SimHash uses one Arrow-vectorized kernel):
 
   * exact            -- hash-groupBy on normalized text (linear)
   * MinHash + LSH    -- shingle -> K md5-min signatures -> bands ->
-                        bucket-join -> verified Jaccard
+                        bucket aggregate -> verified Jaccard
   * SimHash          -- 64-bit fingerprint, near-dup via hamming <= r
   * n-gram Jaccard   -- exact token-shingle Jaccard for candidate pairs
 
@@ -17,6 +17,7 @@ free-text corpora. Scale notes per function.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -51,24 +52,11 @@ def cap_lsh_buckets(
     operators/blocking.py:380). Returns (salted_entries, stats); salted
     entries replace `bucket_col` with a 64-bit salted hash id.
     """
-    sizes = entries.groupBy(bucket_col).agg(F.count("*").alias("bucket_size"))
-    sizes = sizes.withColumn(
-        "n_salts",
-        F.when(F.col("bucket_size") <= bucket_cap, F.lit(1)).otherwise(
-            F.ceil(F.col("bucket_size") / bucket_cap).cast("int")
-        ),
+    sizes = _salt_split(
+        entries.groupBy(bucket_col).agg(F.count("*").alias("bucket_size")), bucket_cap
     )
-    # pairs lost to the split: C(n,2) minus sub-bucket pairs via the
-    # balanced-split identity (expected value; see docstring on hash-salt
-    # balance)
-    n, k = F.col("bucket_size"), F.col("n_salts")
-    base, rem = (n / k).cast("long"), F.pmod(n, k)
-    sub_pairs = (k - rem) * base * (base - 1) / 2 + rem * (base + 1) * base / 2
     stats = sizes.select(
-        F.col(bucket_col).alias("bucket"),
-        "bucket_size",
-        "n_salts",
-        (n * (n - 1) / 2 - sub_pairs).cast("long").alias("lost_pairs"),
+        F.col(bucket_col).alias("bucket"), "bucket_size", "n_salts", "lost_pairs"
     )
     salted = (
         entries.join(sizes.filter(F.col("bucket_size") >= 2), bucket_col)
@@ -79,10 +67,29 @@ def cap_lsh_buckets(
             ),
         )
         .withColumn("_bkt", F.xxhash64(F.col(bucket_col), F.col("salt")))
-        .drop(bucket_col, "bucket_size", "n_salts", "salt")
+        .drop(bucket_col, "bucket_size", "n_salts", "lost_pairs", "salt")
         .withColumnRenamed("_bkt", bucket_col)
     )
     return salted, stats
+
+
+def _salt_split(sizes: DataFrame, bucket_cap: int | None) -> DataFrame:
+    """Adds (n_salts, lost_pairs) to a per-bucket `bucket_size` frame: the
+    ceil(n/cap) salted split of an oversized bucket and the pairs it loses,
+    C(n,2) minus the sub-bucket pairs by the balanced-split identity
+    (expected value; see cap_lsh_buckets on hash-salt balance).
+    bucket_cap=None keeps every bucket whole (n_salts 1, lost_pairs 0)."""
+    k = (
+        f"CASE WHEN bucket_size <= {bucket_cap} THEN 1"
+        f" ELSE CAST(ceil(bucket_size / {bucket_cap}) AS INT) END"
+        if bucket_cap
+        else "1"
+    )
+    base, rem = "CAST(bucket_size / n_salts AS BIGINT)", "pmod(bucket_size, n_salts)"
+    sub_pairs = f"(n_salts - {rem}) * {base} * ({base} - 1) / 2 + {rem} * ({base} + 1) * {base} / 2"
+    return sizes.selectExpr("*", f"{k} AS n_salts").selectExpr(
+        "*", f"CAST(bucket_size * (bucket_size - 1) / 2 - ({sub_pairs}) AS BIGINT) AS lost_pairs"
+    )
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -214,16 +221,21 @@ def minhash_band_table(
 ) -> DataFrame:
     """(doc_id, band_key) -- the banded MinHash index rows.
 
-    Shared by the batch self-join candidate generator and the streaming
-    matcher (which joins a micro-batch's band table against a precomputed
-    corpus band table). Compute shingles ONCE and explode, then K
-    min-aggregates: the column-per-hash formulation re-evaluates the
-    shingle expression K times per row (measured 109 s vs ~5 s at sf0.1);
-    the explode+groupBy shape gets map-side partial aggregation and a
-    single narrow shuffle.
+    Shared by the batch candidate generator and the streaming matcher
+    (which joins a micro-batch's band table against a precomputed corpus
+    band table), so both lanes key on the same bytes:
+    band_key = "b|mh_{b*r}|...|mh_{b*r+r-1}" with r = num_hashes // bands.
+
+    Compute shingles ONCE and explode, then K min-aggregates: every
+    per-shingle hash is code-generated arithmetic and the groupBy(doc_id)
+    gets map-side partial aggregation, so only one row of K longs per doc
+    and partition is shuffled. (A per-row array_min(transform(...)) form
+    needs no shuffle but evaluates K interpreted lambdas per shingle --
+    measured 1.6x slower on this table at 21k docs.) The hash, aggregate
+    and band expressions are SQL text: one py4j call per expression instead
+    of a Column tree per hash.
     """
     r = num_hashes // bands
-    exploded = shingle_explode(_spread(docs), id_col, text_col, shingle_n, out="sh")
     # Kirsch-Mitzenmacher double hashing (Kirsch & Mitzenmacher 2006):
     # h_i = (hA + i*hB) mod p from TWO md5 base hashes instead of one md5
     # per hash function -- 2 digests per exploded shingle, not K (measured
@@ -231,33 +243,21 @@ def minhash_band_table(
     # K). p = 2^31-1 keeps every product in int64; both base hashes and the
     # affine combos replay verbatim in any engine with md5.
     p = 2147483647
-    def base(tag: str):
-        return (
-            F.conv(
-                F.substring(F.md5(F.concat(F.lit(tag), F.col("sh"))), 1, 15),
-                16,
-                10,
-            ).cast("long")
-            % p
-        )
-    staged = exploded.select("doc_id", base("mhA|").alias("hA"), base("mhB|").alias("hB"))
+
+    def base(tag: str) -> str:
+        return f"cast(conv(substring(md5(concat('{tag}', s)), 1, 15), 16, 10) as bigint) % {p}"
+
+    staged = shingle_explode(_spread(docs), id_col, text_col, shingle_n, out="s").selectExpr(
+        "doc_id", f"{base('mhA|')} AS a", f"{base('mhB|')} AS b"
+    )
     sig = staged.groupBy("doc_id").agg(
-        *[
-            F.min((F.col("hA") + F.lit(i) * F.col("hB")) % p).alias(f"mh{i}")
-            for i in range(num_hashes)
-        ]
+        *[F.expr(f"min((a + {i} * b) % {p}) AS mh{i}") for i in range(bands * r)]
     )
-    band_cols = [
-        F.concat_ws("|", F.lit(str(b)), *[F.col(f"mh{b * r + j}") for j in range(r)]).alias(
-            f"band{b}"
-        )
+    keys = ", ".join(
+        f"concat_ws('|', '{b}', {', '.join(f'mh{i}' for i in range(b * r, (b + 1) * r))})"
         for b in range(bands)
-    ]
-    banded = sig.select("doc_id", *band_cols)
-    return banded.select(
-        "doc_id",
-        F.explode(F.array(*[F.col(f"band{b}") for b in range(bands)])).alias("band_key"),
     )
+    return sig.selectExpr("doc_id", f"explode(array({keys})) AS band_key")
 
 
 def minhash_lsh_candidates(
@@ -273,47 +273,61 @@ def minhash_lsh_candidates(
     """LSH candidate pairs: docs sharing >= 1 band of their MinHash signature.
 
     rows/bands tradeoff: P(candidate) = 1-(1-J^r)^b with r=num_hashes/bands.
-    Shuffle profile: one map to build signatures (no shuffle), one explode to
-    (band_key, doc) -- linear -- one self-join per band bucket. Hot buckets
-    (boilerplate text at 100 TB) are bounded by `bucket_cap` via
-    cap_lsh_buckets -- salted sub-buckets with per-bucket lost-pair
-    accounting (pass return_stats=True for (pairs, stats)); bucket_cap=None
-    disables capping (oracle-exactness mode for small corpora).
+    Shape: the band table (one partially aggregated shuffle on doc_id), one
+    exchange on band_key feeding both the bucket-size window and the
+    (band_key, salt) id-list aggregate (_lsh_sub_buckets), pairs generated
+    inside each sub-bucket row, then one distinct across bands. Hot buckets (boilerplate text at
+    100 TB) are bounded by `bucket_cap`: a bucket over the cap is split into
+    ceil(n/cap) salted sub-buckets (pmod(xxhash64(doc_id), n_salts), the
+    cap_lsh_buckets salt) before any id list is built, so no row ever holds
+    or pairs more than one ~cap-sized sub-bucket. The per-bucket stats
+    (bucket, bucket_size, n_salts, lost_pairs) come from the same rows (pass
+    return_stats=True for (pairs, stats)); bucket_cap=None disables capping
+    (oracle-exactness mode for small corpora).
     """
-    stacked = minhash_band_table(docs, id_col, text_col, num_hashes, bands, shingle_n)
-    # persist the NARROW banded table (doc_id, band_key -- rows x bands, tiny
-    # vs the corpus) BEFORE capping: cap_lsh_buckets runs a bucket-size
-    # aggregation AND a join over it, and the self-join adds two more
-    # consumers -- unpersisted, each re-evaluates the whole shingle-explode +
-    # K-min-agg subtree (measured 43 s vs 10 s at sf0.1 when the cap landed
-    # on the unpersisted table; at 100 TB it is 3-4 full corpus scans)
-    from pyspark import StorageLevel
-
-    stacked = stacked.persist(StorageLevel.MEMORY_AND_DISK)
-    stats = None
-    if bucket_cap:
-        stacked, stats = cap_lsh_buckets(stacked, "band_key", bucket_cap)
-        # the capped table is consumed twice by the self-join below; persist
-        # it too so the cap's size-agg + salt join run once, not per side
-        # (both reads below hit this cache, the pre-cap cache feeds the cap)
-        stacked = stacked.persist(StorageLevel.MEMORY_AND_DISK)
-    left = stacked.select(F.col("band_key"), F.col("doc_id").alias("doc_id_l"))
-    right = stacked.select(F.col("band_key"), F.col("doc_id").alias("doc_id_r"))
-    pairs = (
-        left.join(right, "band_key")
-        .filter(F.col("doc_id_l") < F.col("doc_id_r"))
-        .select("doc_id_l", "doc_id_r")
-        .distinct()
+    # pairs (doc_id_l < doc_id_r) of a sub-bucket's sorted id array `ids`:
+    # each id a (0-based index i) pairs with the ids after it
+    pair_rows = (
+        "inline(filter(flatten(transform(ids, (a, i) -> "
+        "transform(slice(ids, i + 2, size(ids)), b -> "
+        "named_struct('doc_id_l', a, 'doc_id_r', b)))), p -> p.doc_id_l < p.doc_id_r))"
     )
+    buckets = _lsh_sub_buckets(
+        minhash_band_table(docs, id_col, text_col, num_hashes, bands, shingle_n), bucket_cap
+    )
+    pairs = buckets.selectExpr(pair_rows).distinct()
     if return_stats:
-        if stats is None:
-            stats = stacked.groupBy(F.col("band_key").alias("bucket")).agg(
-                F.count("*").alias("bucket_size"),
-                F.lit(1).alias("n_salts"),
-                F.lit(0).cast("long").alias("lost_pairs"),
-            )
+        stats = buckets.selectExpr(
+            "band_key AS bucket", "bucket_size", "n_salts", "lost_pairs"
+        ).distinct()
         return pairs, stats
     return pairs
+
+
+def _lsh_sub_buckets(bands: DataFrame, bucket_cap: int | None) -> DataFrame:
+    """(band_key, salt, bucket_size, n_salts, lost_pairs, ids) over a
+    (doc_id, band_key) band table: one row per bucket, or per salted
+    sub-bucket of a bucket over the cap, with its sorted doc ids.
+
+    The bucket size is a window count, so ids are salted per row before the
+    collect_list: a boilerplate mega-bucket is never gathered into one row.
+    The window's exchange on band_key also satisfies the aggregate's
+    grouping (band_key is a subset of its keys), so this is one shuffle.
+    """
+    sized = _salt_split(
+        bands.selectExpr(
+            "doc_id", "band_key", "count(*) OVER (PARTITION BY band_key) AS bucket_size"
+        ),
+        bucket_cap,
+    )
+    return (
+        sized.selectExpr(
+            "band_key", "bucket_size", "n_salts", "lost_pairs", "doc_id",
+            "IF(n_salts = 1, 0, pmod(xxhash64(doc_id), n_salts)) AS salt",
+        )
+        .groupBy("band_key", "salt", "bucket_size", "n_salts", "lost_pairs")
+        .agg(F.expr("sort_array(collect_list(doc_id)) AS ids"))
+    )
 
 
 def ngram_jaccard_pairs(
@@ -327,26 +341,18 @@ def ngram_jaccard_pairs(
     """Verified near-duplicates: exact token-shingle Jaccard over candidates.
 
     Two id joins + one JVM expression (array_intersect/union); only candidate
-    pairs pay the cost -- the LSH stage bounded their number.
+    pairs pay the cost -- the LSH stage bounded their number. Both joins
+    read the same shingle table (a self-join, so its exchange is built once
+    and reused), and the candidate table's two reads (the id prune and the
+    verify join) share its exchange inside the plan. A caller that reads
+    the result more than once commits it (clean_pipeline's c3_edges)
+    instead of caching the candidates.
     """
-    # persist the narrow (id, id) candidate table: it is consumed three
-    # times below (twice by the id union, once by the verify join), and
-    # unpersisted each consumer re-runs the whole upstream LSH band join
-    # (measured 7.0 s -> ~1 s for the verify stage at sf0.1). LSH bounds the
-    # pair count, and MEMORY_AND_DISK spills if a 100 TB run's candidate
-    # set outgrows executor storage.
-    from pyspark import StorageLevel
-
-    candidates = candidates.persist(StorageLevel.MEMORY_AND_DISK)
     # semi-join prune BEFORE shingling: only docs that appear in a candidate
     # pair pay the shingle cost. The LSH stage guarantees candidates <<
     # corpus, so at 100 TB this turns two corpus-wide shingle builds into two
-    # candidate-sized ones.
-    cand_ids = (
-        candidates.select(F.col("doc_id_l").alias(id_col))
-        .union(candidates.select(F.col("doc_id_r").alias(id_col)))
-        .distinct()
-    )
+    # candidate-sized ones. A semi-join's build side needs no distinct.
+    cand_ids = candidates.selectExpr(f"explode(array(doc_id_l, doc_id_r)) AS {id_col}")
     sh = (
         docs.join(cand_ids, id_col, "left_semi")
         .select(
@@ -358,18 +364,16 @@ def ngram_jaccard_pairs(
             shingles_from_tokens(F.col("__toks"), shingle_n).alias("sh"),
         )
     )
-    out = (
-        candidates.join(sh.select(F.col("doc_id").alias("doc_id_l"), F.col("sh").alias("sh_l")), "doc_id_l")
-        .join(sh.select(F.col("doc_id").alias("doc_id_r"), F.col("sh").alias("sh_r")), "doc_id_r")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_l", "sh_r"))
-            / F.size(F.array_union("sh_l", "sh_r")),
+    return (
+        candidates.join(sh.alias("l"), F.col("doc_id_l") == F.col("l.doc_id"))
+        .join(sh.alias("r"), F.col("doc_id_r") == F.col("r.doc_id"))
+        .selectExpr(
+            "doc_id_l",
+            "doc_id_r",
+            "size(array_intersect(l.sh, r.sh)) / size(array_union(l.sh, r.sh)) AS jaccard",
         )
         .filter(F.col("jaccard") >= threshold)
-        .select("doc_id_l", "doc_id_r", "jaccard")
     )
-    return out
 
 
 def jaccard_verify_cross(
@@ -622,22 +626,35 @@ def neardup_clusters(
     """
     if edges is None:
         edges = jaccard_edges(docs, id_col, text_col, shingle_n, threshold)
+    return _attach_reps(docs.select(F.col(id_col).alias("doc_id")), _neardup_labels(edges))
+
+
+# int64 doc id -> 20-digit string: lex order == numeric order (non-negative
+# ids), the node-id encoding of the CC engine and its driver kernels
+_ID_PAD = "%020d"
+
+
+def _neardup_labels(edges: DataFrame, driver_max_edges: int | None = None) -> DataFrame:
+    """(doc_id, cluster_rep) for every node of a near-dup edge table, through
+    clustering.connected_components on padded ids (driver_max_edges as
+    there)."""
     from ala_name_matching_spark.operators.clustering import connected_components
 
-    pad = lambda c: F.format_string("%020d", c)  # noqa: E731
-    labels = connected_components(
-        edges.select(pad(F.col("doc_id_l")).alias("src"), pad(F.col("doc_id_r")).alias("dst"))
+    pad = lambda c: F.format_string(_ID_PAD, c)  # noqa: E731
+    return connected_components(
+        edges.select(pad(F.col("doc_id_l")).alias("src"), pad(F.col("doc_id_r")).alias("dst")),
+        driver_max_edges=driver_max_edges,
     ).select(
         F.col("record_id").cast("long").alias("doc_id"),
         F.col("cluster_id").cast("long").alias("cluster_rep"),
     )
-    return (
-        docs.select(F.col(id_col).alias("doc_id"))
-        .join(labels, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("cluster_rep", F.col("doc_id")).alias("cluster_rep"),
-        )
+
+
+def _attach_reps(nodes: DataFrame, labels: DataFrame) -> DataFrame:
+    """`nodes` (doc_id, ...) plus cluster_rep from `labels`; a doc outside
+    the edge graph is its own singleton cluster."""
+    return nodes.join(labels, "doc_id", "left").withColumn(
+        "cluster_rep", F.coalesce("cluster_rep", "doc_id")
     )
 
 
@@ -684,6 +701,33 @@ def cross_doc_dup_ngrams(
     )
 
 
+def quality_edges(
+    docs: DataFrame,
+    edges: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """(doc_id_l, doc_id_r, jaccard, quality_l, quality_r): near-dup edges
+    carrying both endpoints' quality_score_col -- the election input of
+    dedup_keep_best (as match_edges carries src_prio/dst_prio for the ER
+    election). Both endpoint joins read one quality table (a self-join, so
+    its exchange is built once)."""
+    from ala_name_matching_spark.operators.text_analysis import quality_score_col
+
+    q = docs.select(
+        F.col(id_col).alias("doc_id"),
+        quality_score_col(F.col(text_col)).alias("quality"),
+    )
+    return (
+        edges.join(q.alias("ql"), F.col("doc_id_l") == F.col("ql.doc_id"))
+        .join(q.alias("qr"), F.col("doc_id_r") == F.col("qr.doc_id"))
+        .selectExpr(
+            "doc_id_l", "doc_id_r", "jaccard",
+            "ql.quality AS quality_l", "qr.quality AS quality_r",
+        )
+    )
+
+
 def dedup_keep_best(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -691,6 +735,7 @@ def dedup_keep_best(
     shingle_n: int = 3,
     threshold: float = 0.5,
     edges: DataFrame | None = None,
+    n_edges: int | None = None,
 ) -> DataFrame:
     """(doc_id, cluster_rep, quality, keep): quality-aware dedup policy.
 
@@ -702,24 +747,61 @@ def dedup_keep_best(
     all dups" but "keep the best exemplar" (boilerplate-heavy mirrors lose
     to the cleanest copy).
 
-    Election is a single partial-aggregated min(struct(-quality, doc_id))
-    per cluster + a join back -- the same skew-immune agg+join shape as the
-    ER pipeline's representative election (representative.py), NOT a
-    row_number window: a mega-cluster (boilerplate at 100 TB) reduces
-    map-side to one row per partition instead of sorting all members in one
-    window partition.
+    Two lanes, split at clustering._DRIVER_CC_MAX_EDGES edges (the gate of
+    connected_components and group_label_table). Small graphs collect the
+    edges and run union-find + election in numpy on the driver
+    (clustering._labels_and_winners_pdf over padded ids with priority
+    rint(quality * 1e6) -- exact, quality_score_col rounds to 6 places --
+    so max priority then min id is the same rule); the node labels
+    broadcast-attach to the docs. Large graphs run distributed CC and a
+    single partially aggregated min(struct(-quality, doc_id)) per cluster
+    + a join back -- the skew-immune agg+join shape of the ER pipeline's
+    representative election (representative.py), NOT a row_number window:
+    a mega-cluster (boilerplate at 100 TB) reduces map-side to one row per
+    partition instead of sorting all members in one window partition.
 
-    Pass `edges` (e.g. LSH-verified pairs) for the production lane; the
-    default exact-Jaccard lane keeps the whole query oracle-checkable.
+    Pass `edges` (quality_edges over e.g. LSH-verified pairs) for the
+    production lane, and `n_edges` when known (checkpoint footer counts) to
+    skip the sizing job; the default exact-Jaccard lane keeps the whole
+    query oracle-checkable.
     """
+    from ala_name_matching_spark.operators import clustering
     from ala_name_matching_spark.operators.text_analysis import quality_score_col
 
-    labels = neardup_clusters(docs, id_col, text_col, shingle_n, threshold, edges)
+    if edges is None:
+        edges = quality_edges(
+            docs, jaccard_edges(docs, id_col, text_col, shingle_n, threshold), id_col, text_col
+        )
     q = docs.select(
         F.col(id_col).alias("doc_id"),
         quality_score_col(F.col(text_col)).alias("quality"),
     )
-    member = labels.join(q, "doc_id")
+    if n_edges is None:
+        n_edges = edges.count()
+    if n_edges <= clustering._DRIVER_CC_MAX_EDGES:
+        pdf = edges.select("doc_id_l", "doc_id_r", "quality_l", "quality_r").toPandas()
+        label_pdf = clustering._labels_and_winners_pdf(
+            pd.DataFrame({
+                "src": pdf["doc_id_l"].map(_ID_PAD.__mod__),
+                "dst": pdf["doc_id_r"].map(_ID_PAD.__mod__),
+                "src_prio": np.rint(pdf["quality_l"] * 1e6).astype("int64"),
+                "dst_prio": np.rint(pdf["quality_r"] * 1e6).astype("int64"),
+            })
+        )
+        labels = docs.sparkSession.createDataFrame(
+            pd.DataFrame({
+                "doc_id": label_pdf["grp_rep"].astype("int64"),
+                "cluster_rep": label_pdf["cluster_id"].astype("int64"),
+                "keep": label_pdf["grp_rep"] == label_pdf["representative_id"],
+            }),
+            "doc_id bigint, cluster_rep bigint, keep boolean",
+        )
+        return _attach_reps(q, F.broadcast(labels)).select(
+            "doc_id", "cluster_rep", "quality", F.coalesce("keep", F.lit(True)).alias("keep")
+        )
+    # over the gate: distributed CC directly (its own driver check would
+    # only recount the edges to fail the same gate)
+    member = _attach_reps(q, _neardup_labels(edges, driver_max_edges=0))
     best = member.groupBy("cluster_rep").agg(
         F.min(F.struct((-F.col("quality")).alias("nq"), F.col("doc_id").alias("best_id"))).alias("b")
     )

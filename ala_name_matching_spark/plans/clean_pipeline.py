@@ -8,8 +8,9 @@ al. orderings):
   c1_quality   language ID + Gopher flags + char entropy; drop docs
                failing the hard gates (map-only, pure JVM)
   c2_exact     exact dedup on normalized text (keep lowest id per group)
-  c3_neardup   MinHash-LSH candidates -> exact-Jaccard verify ->
-               connected components -> quality-aware keep-best election
+  c3_neardup   MinHash-LSH candidates -> exact-Jaccard verify, committed
+               as the side phase c3_edges -> connected components +
+               quality-aware keep-best election (dedup_keep_best)
   c4_strip     cross-doc duplicated-span removal on the survivors
 
 Every stage is built or resumed by CheckpointManager.phase (a committed
@@ -77,16 +78,17 @@ def run_clean_pipeline(
         return df.join(drop, id_col, "left_anti")
 
     # c3: near-dup clusters + keep-best election. Edges come from the
-    # LSH-BANDED candidate lane (MinHash band join -> exact-Jaccard
-    # verify), not the shared-shingle self-join: a boilerplate shingle
-    # shared by d docs makes the exact lane enumerate O(d^2) candidate
-    # rows (with a corpus-wide boilerplate tail that is ALL-pairs), while
-    # banding bounds candidates by actual signature collisions. The
-    # banded lane's recall vs the exact baseline is the audited
-    # minhash_lsh_neardups property; the clean_pipeline oracle keeps the
-    # exact all-pairs SQL as truth, so any missed >= threshold pair
-    # fails the value check rather than passing silently.
-    def c3_neardup(df: DataFrame) -> DataFrame:
+    # LSH-BANDED candidate lane (MinHash bands -> one bucket aggregate ->
+    # exact-Jaccard verify), not the shared-shingle self-join: a
+    # boilerplate shingle shared by d docs makes the exact lane enumerate
+    # O(d^2) candidate rows, while banding bounds candidates by actual
+    # signature collisions. The verified edges, with both endpoints'
+    # quality, are committed once as the side phase c3_edges (as p4_edges
+    # feeds p5), so the election reads a parquet scan and takes its edge
+    # count from the footers. The clean_pipeline oracle keeps the exact
+    # all-pairs SQL as truth, so any missed >= threshold pair fails the
+    # value check rather than passing silently.
+    def c3_edges(df: DataFrame) -> DataFrame:
         # 32 hashes / 16 bands (2 rows per band): collision probability for
         # a threshold-worthy pair (j >= 0.5) is 1-(1-j^2)^16 >= 0.99, vs
         # ~0.90 at 16/8 -- an organic j=0.68 pair was measured to slip
@@ -100,8 +102,13 @@ def run_clean_pipeline(
             df, lsh_cands, id_col=id_col, text_col=text_col,
             shingle_n=3, threshold=jaccard_threshold,
         )
+        return dedup.quality_edges(df, lsh_edges, id_col, text_col)
+
+    def c3_neardup(df: DataFrame) -> DataFrame:
+        edges = ckpt.phase("c3_edges", partial(c3_edges, df))
         keep = dedup.dedup_keep_best(
-            df, id_col, text_col, threshold=jaccard_threshold, edges=lsh_edges
+            df, id_col, text_col, threshold=jaccard_threshold, edges=edges,
+            n_edges=ckpt.rows("c3_edges", edges),
         )
         return df.join(keep.filter(F.col("keep")).select(id_col), id_col, "left_semi")
 

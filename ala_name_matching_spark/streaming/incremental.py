@@ -214,9 +214,10 @@ def streaming_neardup_match(
     """Streaming near-duplicate detection against a STATIC corpus index.
 
     The batch MinHash-LSH lane's streaming twin: each arriving document's
-    band keys (minhash_band_table -- the exact operator the batch self-join
-    uses, so the two lanes cannot drift) are joined against the corpus band
-    table, and candidates are verified with exact cross-table Jaccard.
+    band keys (minhash_band_table -- the exact operator the batch
+    candidate lane uses, so the two lanes cannot drift) are joined against
+    the corpus band table, and candidates are verified with exact
+    cross-table Jaccard.
     Writes (doc_id_l=query, doc_id_r=corpus, jaccard, epoch) effectively
     exactly-once (epoch-partitioned idempotent sink).
 

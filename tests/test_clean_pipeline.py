@@ -74,10 +74,12 @@ def test_resume_skips_committed_phases(spark, fixture_docs, tmp_path, monkeypatc
     first = run_clean_pipeline(fixture_docs, checkpoints=ck1)
     n_first = first["clean"].count()
 
-    # second run resumes: no stage builder runs (c3's LSH join and driver
-    # election, c4's span strip), outputs and stats identical
+    # second run resumes: no stage builder runs (c3's LSH candidates,
+    # verify, quality attach and election, c4's span strip), outputs and
+    # stats identical
     built = []
-    for fn in ("minhash_lsh_candidates", "dedup_keep_best", "strip_dup_spans"):
+    for fn in ("minhash_lsh_candidates", "ngram_jaccard_pairs", "quality_edges",
+               "dedup_keep_best", "strip_dup_spans"):
         monkeypatch.setattr(dedup, fn, lambda *a, _fn=fn, **k: built.append(_fn))
     ck2 = CheckpointManager(spark, root, enabled=True)
     assert ck2.exists("c1_quality") and ck2.exists("c4_strip")
@@ -93,7 +95,7 @@ def test_resume_skips_committed_phases(spark, fixture_docs, tmp_path, monkeypatc
     with open(os.path.join(root, "_metrics.json")) as fh:
         metrics = json.load(fh)
     phases = {m["phase"] for m in metrics}
-    assert phases == {"c1_quality", "c2_exact", "c3_neardup", "c4_strip"}
+    assert phases == {"c1_quality", "c2_exact", "c3_edges", "c3_neardup", "c4_strip"}
     c4_rows = sum(m["rows"] for m in metrics if m["phase"] == "c4_strip")
     assert c4_rows == n_first
 
@@ -111,3 +113,100 @@ def test_checkpoint_mode_parity(spark, fixture_docs, tmp_path):
     assert sorted(map(tuple, mem["clean"].collect())) == sorted(
         map(tuple, ck["clean"].collect())
     )
+
+
+@pytest.mark.parametrize("checkpointed", [False, True])
+def test_c3_distributed_lane_parity(spark, fixture_docs, tmp_path, monkeypatch, checkpointed):
+    """c3's dedup_keep_best elects on the driver at or below
+    _DRIVER_CC_MAX_EDGES (the c3_edges footer count) and runs distributed CC
+    above it: both lanes keep the same docs."""
+    from ala_name_matching_spark.operators import clustering, dedup
+    from ala_name_matching_spark.sources.checkpoints import CheckpointManager
+
+    def run(lane):
+        ck = CheckpointManager(spark, str(tmp_path / lane)) if checkpointed else None
+        out = run_clean_pipeline(fixture_docs, checkpoints=ck)
+        return sorted(map(tuple, out["clean"].collect())), out["stats"].collect()
+
+    calls = []
+    real_labels = dedup._neardup_labels
+    monkeypatch.setattr(
+        dedup, "_neardup_labels",
+        lambda *a, **k: calls.append("distributed") or real_labels(*a, **k),
+    )
+    driver = run("driver")
+    assert calls == []
+    monkeypatch.setattr(clustering, "_DRIVER_CC_MAX_EDGES", 0)
+    distributed = run("distributed")
+    assert calls == ["distributed"]
+    assert driver == distributed
+
+
+def test_c3_edges_recall_against_exact_jaccard_edges(spark, tmp_path):
+    """Recall of the banded lane against the exact all-pairs jaccard_edges.
+
+    The verify is exact, so every committed c3 edge is an exact edge, and
+    the bucket cap drops no candidate pair (lost_pairs sums to 0). Banding
+    is probabilistic: at 32 hashes / 16 bands a pair with Jaccard j becomes
+    a candidate with probability 1-(1-j^2)^16, which is >= 0.99 for
+    j >= 0.5 (0.9899 at exactly 0.5) and >= 0.999 for j >= 0.6. Every
+    exact pair at j >= 0.6 must be found; below that a miss is the
+    documented ~1% risk (this corpus misses one of its 9 pairs under 0.6:
+    j = 0.526). The clean_pipeline oracle stays exact all-pairs, so such a
+    miss fails the value check instead of passing silently."""
+    import random
+
+    from ala_name_matching_spark.operators import dedup
+    from ala_name_matching_spark.sources.checkpoints import CheckpointManager
+
+    rng = random.Random(11)
+    vocab = (
+        "river stone market harbor window garden letter morning silver candle "
+        "forest bridge castle meadow pencil rocket engine valley thunder basket "
+        "mirror ladder orange planet violin winter summer autumn spring desert "
+        "island jacket kitten lemon mountain needle ocean pepper rabbit saddle "
+        "the and of with to"
+    ).split()
+    rows = []
+    for d in range(40):
+        words = ["the"] + [rng.choice(vocab) for _ in range(rng.randrange(18, 30))] + ["and", "of"]
+        rows.append((d, " ".join(words)))
+        # near twins with 1..6 substituted tokens: Jaccard from ~0.9 down
+        # across the 0.5 threshold
+        twin = list(words)
+        for _ in range(rng.randrange(1, 7)):
+            twin[rng.randrange(1, len(twin))] = rng.choice(vocab)
+        rows.append((1000 + d, " ".join(twin)))
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+
+    ck = CheckpointManager(spark, str(tmp_path / "ck"))
+    run_clean_pipeline(docs, checkpoints=ck)
+    c2 = ck.read("c2_exact")
+    exact = {tuple(r) for r in dedup.jaccard_edges(c2, threshold=0.5).collect()}
+    edges = {
+        tuple(r)
+        for r in ck.read("c3_edges").select("doc_id_l", "doc_id_r", "jaccard").collect()
+    }
+    assert len(exact) >= 20 and edges <= exact
+    assert {e for e in exact if e[2] >= 0.6} <= edges
+    _, stats = dedup.minhash_lsh_candidates(
+        c2, num_hashes=32, bands=16, shingle_n=3, return_stats=True
+    )
+    assert stats.agg({"lost_pairs": "sum"}).collect()[0][0] == 0
+
+
+def test_checkpointed_run_releases_cache(spark, fixture_docs, tmp_path):
+    """A checkpointed run caches nothing it does not release: every stage
+    is a commit, and c3 is one plan whose intermediate tables are never
+    persisted."""
+    from ala_name_matching_spark.sources.checkpoints import CheckpointManager
+
+    def cached():
+        return {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    before = cached()
+    out = run_clean_pipeline(
+        fixture_docs, checkpoints=CheckpointManager(spark, str(tmp_path / "ck"))
+    )
+    out["clean"].collect()
+    assert cached() - before == set()

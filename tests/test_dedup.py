@@ -77,7 +77,11 @@ def test_lsh_bucket_cap_bounds_megabucket(spark):
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from ala_name_matching_spark.operators.dedup import minhash_lsh_candidates
+    from ala_name_matching_spark.operators.dedup import (
+        cap_lsh_buckets,
+        minhash_band_table,
+        minhash_lsh_candidates,
+    )
 
     # 120 byte-identical boilerplate docs -> every band bucket holds all 120
     rows = [(i, "this exact boilerplate sentence repeats everywhere") for i in range(120)]
@@ -97,6 +101,64 @@ def test_lsh_bucket_cap_bounds_megabucket(spark):
     for r in srows:
         n = r["bucket_size"]
         assert r["lost_pairs"] < n * (n - 1) // 2
+    # parity with the salt-then-self-join form over the same band table:
+    # cap_lsh_buckets + a band self-join gives the same pairs and stats
+    salted, ref_stats = cap_lsh_buckets(minhash_band_table(docs), "band_key", 30)
+    ref_pairs = (
+        salted.alias("a")
+        .join(salted.alias("b"), "band_key")
+        .where(F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(F.col("a.doc_id").alias("doc_id_l"), F.col("b.doc_id").alias("doc_id_r"))
+    )
+    assert {tuple(r) for r in capped.collect()} == {tuple(r) for r in ref_pairs.collect()}
+    assert sorted(map(tuple, stats.collect())) == sorted(map(tuple, ref_stats.collect()))
+    # the mega-bucket is salted before any id list is built: no row holds
+    # the whole bucket's 120 ids, only one ~30-id sub-bucket
+    from ala_name_matching_spark.operators.dedup import _lsh_sub_buckets
+
+    sub = _lsh_sub_buckets(minhash_band_table(docs), 30).selectExpr(
+        "band_key", "bucket_size", "size(ids) AS n_ids"
+    ).collect()
+    assert {r["bucket_size"] for r in sub} == {120}
+    assert max(r["n_ids"] for r in sub) < 60
+    assert sum(r["n_ids"] for r in sub) == 120 * len({r["band_key"] for r in sub})
+
+
+def test_band_keys_match_hashlib_replay(spark):
+    """The band-key bytes are a contract: the streaming matcher joins a
+    micro-batch's keys against a precomputed corpus band table, and any
+    engine with md5 can replay them. Replay minhash_band_table in plain
+    Python: token 3-gram shingles, md5 prefix -> int mod p, the
+    Kirsch-Mitzenmacher combinations h_i = (hA + i*hB) mod p, keys
+    "b|mh|mh"."""
+    import hashlib
+    import re
+
+    from ala_name_matching_spark.operators.dedup import minhash_band_table
+
+    p, n, num_hashes, bands = 2147483647, 3, 8, 4
+    texts = {
+        0: "The quick  brown fox jumps over the lazy dog",
+        1: "short doc",
+        2: "a b c d e f g a b c",
+    }
+
+    def base(tag, s):
+        return int(hashlib.md5((tag + s).encode()).hexdigest()[:15], 16) % p
+
+    want = set()
+    for doc_id, text in texts.items():
+        toks = re.sub(r"\s+", " ", text).strip().lower().split(" ")
+        sh = {" ".join(toks[i:i + n]) for i in range(max(len(toks) - n + 1, 1))}
+        h = [(base("mhA|", s), base("mhB|", s)) for s in sh]
+        mh = [min((a + i * b) % p for a, b in h) for i in range(num_hashes)]
+        r = num_hashes // bands
+        for b in range(bands):
+            want.add((doc_id, "|".join([str(b)] + [str(v) for v in mh[b * r:(b + 1) * r]])))
+
+    docs = spark.createDataFrame(list(texts.items()), "doc_id bigint, text string")
+    got = minhash_band_table(docs, num_hashes=num_hashes, bands=bands, shingle_n=n)
+    assert {tuple(r) for r in got.collect()} == want
 
 
 def test_simhash_pigeonhole_exact_recall(spark):
@@ -236,6 +298,26 @@ def test_dedup_keep_best_policy(spark, docs):
         assert keepers[0]["doc_id"] == min(
             r["doc_id"] for r in members if r["quality"] == qmax
         )
+
+
+def test_dedup_keep_best_lanes_agree(spark, docs, monkeypatch):
+    """The driver election (numpy over the collected edges) and the
+    distributed lane (CC + min(struct(-quality, doc_id))) give the same
+    table; n_edges skips the sizing count."""
+    from ala_name_matching_spark.operators import clustering
+    from ala_name_matching_spark.operators.dedup import (
+        dedup_keep_best,
+        jaccard_edges,
+        quality_edges,
+    )
+
+    edges = quality_edges(docs, jaccard_edges(docs, threshold=0.4))
+    n = edges.count()
+    driver = sorted(map(tuple, dedup_keep_best(docs, edges=edges, n_edges=n).collect()))
+    monkeypatch.setattr(clustering, "_DRIVER_CC_MAX_EDGES", 0)
+    distributed = sorted(map(tuple, dedup_keep_best(docs, edges=edges).collect()))
+    assert driver == distributed
+    assert driver == sorted(map(tuple, dedup_keep_best(docs, threshold=0.4).collect()))
 
 
 def test_neardup_clusters_no_edges(spark):
