@@ -2319,8 +2319,8 @@ def _q_drift_psi_bins(spark, sf_dir):
     # n_chars distribution, English slice vs the rest. Integer-arithmetic
     # equal-width bins over the combined range, additive smoothing, zero
     # bins materialized via a spine -- every term replays cross-engine.
-    # Totals are a bounded driver fold (drift_totals), per the FS/
-    # Misra-Gries bounded-summary discipline.
+    # Totals are a bounded fold over the n_bins rows by the caller, per
+    # the FS/Misra-Gries bounded-summary discipline.
     from ala_name_matching_spark.operators.profiling import (
         distribution_drift,
     )
@@ -2479,8 +2479,8 @@ def _q_zorder_key_orders(spark, sf_dir):
     # Z-order (Morton) key over (o_custkey, o_orderkey) -- the
     # multi-dimension data-skipping layout key (Delta/Iceberg OPTIMIZE
     # ZORDER BY). All-integer grid mapping + bit interleave, so the key
-    # replays bit-for-bit in SQL; write_zordered uses it to give every
-    # parquet file a tight min-max envelope on EVERY dimension.
+    # replays bit-for-bit in SQL; range-partitioning a write by it gives
+    # every parquet file a tight min-max envelope on EVERY dimension.
     from ala_name_matching_spark.sources.zorder import zorder_key
 
     o = _read(spark, sf_dir, "orders")

@@ -40,12 +40,12 @@ ERROR_CATALOG: dict[str, tuple[str, str, str]] = {
     ),
     "EXCLUDED": (
         "EXCLUDED (ErrorType.java:63)",
-        "operators/validation.filter_excluded; ladder best-match flag",
+        "operators/ladder.search_ladder best-match flag",
         "matched row is marked excluded from the index",
     ),
     "ASSOCIATED_EXCLUDED": (
         "ASSOCIATED_EXCLUDED (ErrorType.java:67)",
-        "operators/validation.filter_excluded; ladder sibling flag",
+        "operators/ladder.search_ladder sibling flag",
         "best match is clean but an excluded qualifying sibling existed",
     ),
     "MISAPPLIED": (
@@ -66,9 +66,8 @@ ERROR_CATALOG: dict[str, tuple[str, str, str]] = {
     ),
     "PARENT_CHILD_SYNONYM": (
         "PARENT_CHILD_SYNONYM (ErrorType.java:59)",
-        "operators/hierarchy.resolve_loops",
-        "directed parent chain closed on itself; edge cut at the "
-        "deterministic cycle root",
+        "(no operator: kept so the catalog covers the reference enum)",
+        "directed parent chain closed on itself",
     ),
     "NO_MATCH": (
         "(MetricsResultDTO null result; SPECIES_PLURAL's reject outcome, "

@@ -115,13 +115,6 @@ def swg_batch(
     return np.clip(sim, 0.0, 1.0)
 
 
-def swg_scalar(x: str | None, y: str | None) -> float | None:
-    """Convenience scalar wrapper (tests / spot checks)."""
-    out = swg_batch(pd.Series([x]), pd.Series([y]))
-    v = float(out[0])
-    return None if np.isnan(v) else v
-
-
 def swg_udf():
     """Arrow-batched pandas UDF column: SWG similarity of two string cols.
 

@@ -113,22 +113,6 @@ def bloom_might_contain(
     return cond
 
 
-def bloom_prefilter(
-    fact: DataFrame,
-    dim: DataFrame,
-    fact_key: str,
-    dim_key: str | None = None,
-    m_bits: int = 1 << 16,
-    k: int = 3,
-) -> DataFrame:
-    """fact rows whose key MIGHT be in dim (no true match lost; false
-    positives bounded by the m/k sizing). Place before the shuffle join."""
-    bitmap = bloom_bitmap(dim, dim_key or fact_key, m_bits, k)
-    return fact.where(
-        bloom_might_contain(F.col(fact_key), bitmap, m_bits, k)
-    )
-
-
 def bloom_join_stats(
     fact: DataFrame,
     dim: DataFrame,

@@ -168,10 +168,10 @@ def _labels_and_winners_pdf(pdf):
     NODE of the edge graph.
 
     Pure pandas/numpy; shared by the driver lanes and the block-local
-    mapInPandas kernel. Election semantics match
-    representative.elect_representatives exactly: winner = max priority,
-    ties broken by lexicographic-min node id (B7, ALATaxonResolver.principals
-    analog with the documented tie non-determinism removed). Every member
+    mapInPandas kernel. Election is B7 (the `priority_election` query's
+    rule): winner = max priority, ties broken by lexicographic-min node id
+    (ALATaxonResolver.principals analog with the documented tie
+    non-determinism removed). Every member
     group of a multi-group cluster is an edge endpoint, so endpoint prios
     (carried on the edge table by match_edges) cover exactly the groups that
     need election -- groups outside the graph are singleton clusters and
@@ -312,9 +312,8 @@ def group_label_table(
     group, so the per-cluster winner under (max priority, ties to min
     record_id) is decidable on the rep table alone. Labels are identical to
     CC on the full record graph: group_rep is the min record of its group and
-    the component label is the min rep. Election matches
-    representative.elect_representatives (B7, ALATaxonResolver.principals
-    analog, deterministic tie-break).
+    the component label is the min rep. Election is `_labels_and_winners_pdf`
+    (B7, ALATaxonResolver.principals analog, deterministic tie-break).
 
     `rep_edges` is the match_edges output (src, dst, src_prio, dst_prio,
     block_id); `n_edges`, when known (checkpoint footer counts), skips the
@@ -414,41 +413,10 @@ def attach_cluster_columns(
     on the 128-bit group hash -- broadcast when the group-label table is
     small (it is, by construction: groups are the contraction of exact
     duplicates), so the wide record rows never shuffle. Beyond
-    `_BROADCAST_MAX_GROUPS` the in-memory fallback is a hash join on
-    (_g1,_g2); for COMMITTED tables at that scale use
-    attach_cluster_columns_bucketed instead -- bucketed layouts make the
-    same join exchange-free on both sides.
+    `_BROADCAST_MAX_GROUPS` the fallback is a hash join on (_g1,_g2).
     """
     out = records.join(_maybe_broadcast(group_full, n_groups), ["_g1", "_g2"])
     out = out.drop("_g1", "_g2")
-    return out.withColumn(
-        "is_representative", F.col("record_id") == F.col("representative_id")
-    )
-
-
-def attach_cluster_columns_bucketed(
-    spark, features_table: str, labels_table: str
-) -> DataFrame:
-    """Beyond-broadcast attach lane: exchange-free wide view from COMMITTED
-    bucketed tables (closes the >8M-group full-shuffle fallback caveat).
-
-    When the group-label table exceeds the broadcast threshold, the plain
-    fallback hash join re-shuffles the wide record rows (text payload
-    included) on every derivation of the wide view. Instead, commit BOTH
-    the P1 feature table and the P5 label table hash-bucketed on
-    (_g1, _g2) -- exactly the join keys; Spark's planner requires all
-    cluster keys to match the bucket spec before trusting the layout --
-    with the same bucket count (sources/bucketed.write_bucketed), and the
-    equi-join plans with ZERO Exchange on either side --
-    the label shuffle is paid once at write time and amortized over every
-    read, the record payload never shuffles at all
-    (tests/test_bucketed.py::test_bucketed_attach_has_no_exchange asserts
-    the executed plan). Bucket count is a layout contract shared by the
-    two tables (write_bucketed docstring).
-    """
-    recs = spark.table(features_table)
-    labs = spark.table(labels_table)
-    out = recs.join(labs, ["_g1", "_g2"]).drop("_g1", "_g2")
     return out.withColumn(
         "is_representative", F.col("record_id") == F.col("representative_id")
     )

@@ -42,9 +42,8 @@ dropping terms above the cap BEFORE weighting and normalization (the
 textbook stopword-pruning move: those terms carry the least idf and the
 most join cost). With the cap the join is exact *in the capped space*
 -- identical documents still score 1.0 because norms exclude the capped
-terms too -- and `dropped_term_accounting` ledgers what was pruned,
-same honesty contract as dedup.cap_lsh_buckets. Default None = exact in
-the full space.
+terms too -- and what was pruned is exactly the terms `tfidf_weights`
+leaves out under the same cap. Default None = exact in the full space.
 """
 
 from __future__ import annotations
@@ -134,8 +133,7 @@ def tfidf_cosine_join(
 
     Exact in the full vector space when max_df is None; with max_df set,
     exact in the CAPPED space (terms above the cap removed before
-    weighting/normalization -- see module SCALE note; ledger via
-    `dropped_term_accounting`). Pairs are emitted once with
+    weighting/normalization -- see module SCALE note). Pairs are emitted once with
     id_l < id_r; cosine is 6-dp rounded, the keep decision is made on
     the quantized integer dot so both engines agree at the boundary.
     """
@@ -176,26 +174,3 @@ def tfidf_cosine_join(
     finally:
         wts.unpersist()
 
-
-def dropped_term_accounting(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_df: int = 1000,
-) -> DataFrame:
-    """One-row ledger of what a max_df cap discards: number of capped
-    terms, their postings, and the max pairs a single capped term could
-    have generated -- the same honesty contract as cap_lsh_buckets.
-    Computed from the raw term-frequency table alone (no weighting or
-    normalization work)."""
-    tf = _term_freqs(docs, id_col, text_col)
-    dfs = tf.groupBy("term").agg(F.count("*").alias("_df"))
-    return dfs.where(F.col("_df") > max_df).agg(
-        F.count("*").cast("long").alias("n_capped_terms"),
-        F.coalesce(F.sum("_df"), F.lit(0)).cast("long").alias(
-            "n_dropped_postings"
-        ),
-        F.coalesce(
-            F.max(F.expr("_df * (_df - 1L) div 2")), F.lit(0)
-        ).cast("long").alias("max_pairs_per_capped_term"),
-    )

@@ -153,15 +153,6 @@ def shingles_from_tokens(toks: Column, n: int) -> Column:
     return F.array_distinct(window)
 
 
-def token_shingles_col(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingles as array<string>, pure built-ins.
-
-    Compat form over raw text -- for hot paths prefer staging tokens_col in
-    a projection and calling shingles_from_tokens (see its PERF note).
-    """
-    return shingles_from_tokens(tokens_col(text), n)
-
-
 def shingle_explode(
     docs: DataFrame,
     id_col: str,
@@ -571,7 +562,7 @@ def jaccard_edges(
     threshold > 0 (J >= t > 0 implies at least one common shingle), so the
     output equals the all-pairs crossJoin baseline while only pairing docs
     that actually co-occur under some shingle. The intersection size falls
-    out of the join itself (count of shared shingles -- `token_shingles_col`
+    out of the join itself (count of shared shingles -- `shingles_from_tokens`
     is array_distinct, so explode yields one row per distinct shingle), and
     union size = |A| + |B| - inter, so no second array materialization.
 
@@ -755,8 +746,8 @@ def dedup_keep_best(
     so max priority then min id is the same rule); the node labels
     broadcast-attach to the docs. Large graphs run distributed CC and a
     single partially aggregated min(struct(-quality, doc_id)) per cluster
-    + a join back -- the skew-immune agg+join shape of the ER pipeline's
-    representative election (representative.py), NOT a row_number window:
+    + a join back -- the skew-immune agg+join shape of
+    `fusion.golden_record`'s representative pick, NOT a row_number window:
     a mega-cluster (boilerplate at 100 TB) reduces map-side to one row per
     partition instead of sorting all members in one window partition.
 
@@ -899,7 +890,7 @@ def ngram_containment_pairs(
     conditional-sum shape (see cross_doc_dup_ngrams). Hot shingles
     (boilerplate) are the skew hazard: `max_df` drops shingles appearing
     in more than that many docs BEFORE the self-join -- the same
-    stopword-class bound as retrieval's max_df_ratio; counts (and thus
+    stopword-class bound as cosine_join's max_df; counts (and thus
     containment denominators) are over the kept shingles, mirrored
     exactly in the oracle.
 

@@ -9,9 +9,9 @@ so a cluster whose best single record has a missing/garbled field still
 gets the field right if most members agree.
 
 Scale shape: one partial-aggregated groupBy per fused attribute (keyed
-on (cluster, value) then reduced to the cluster grain with the same
-min(struct(-count, value)) idiom elect_representatives uses -- skew-
-immune: no window sort over a hot cluster), plus one groupBy for member
+on (cluster, value) then reduced to the cluster grain with a
+min(struct(-count, value)) aggregate -- skew-immune: no window sort
+over a hot cluster), plus one groupBy for member
 counts, joined at the cluster grain. All joins are cluster-keyed and
 AQE-broadcastable when the fused table is small relative to members.
 
@@ -36,7 +36,8 @@ def golden_record(
 ) -> DataFrame:
     """One row per cluster: member count, modal value + support per attr,
     and (optionally) the representative id elected by longest text then
-    smallest id -- the same priority rule as elect_representatives.
+    smallest id -- the pipeline's B7 rule (`clustering._labels_and_winners_pdf`
+    elects by max priority = text length, ties to the smallest id).
 
     Output columns: (<cluster_col>, n_members, <attr>_gold,
     <attr>_support, ... [, rep_id]).

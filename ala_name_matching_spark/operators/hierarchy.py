@@ -10,8 +10,9 @@ V2 in SURVEY.md §2).
 Spark-first design: the hierarchy table (taxonomy analog) is orders of
 magnitude smaller than the record corpus -- the reference itself walks it
 sequentially in memory -- so the primary lane is a driver DFS over a
-collected edge list (gated by `max_driver_nodes`, the same discipline as the
-clustering driver lane). For hierarchies too large to collect there is a
+collected edge list (gated by `max_driver_nodes`, default
+`_DRIVER_TREE_MAX_NODES` = 5M nodes, the same discipline as the clustering
+driver lane). For hierarchies too large to collect there is a
 distributed lane: subtree sizes bottom-up + DFS offsets top-down, one
 bounded join iteration per tree level (depth iterations, NOT node
 iterations -- taxonomic/org trees are shallow). Both lanes produce identical
@@ -20,14 +21,10 @@ intervals given the same deterministic child ordering (sort by node id).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_DRIVER_TREE_MAX_NODES = int(
-    os.environ.get("ALA_SPARK_DRIVER_TREE_MAX_NODES", str(5_000_000))
-)
+_DRIVER_TREE_MAX_NODES = 5_000_000
 
 
 def nested_set_encode(
@@ -203,63 +200,6 @@ def _distributed_nested_set(edges: DataFrame, max_depth: int) -> DataFrame:
         F.col("lft").cast("long"),
         F.col("rgt").cast("long"),
         F.col("depth").cast("int"),
-    )
-
-
-def resolve_loops(edges: DataFrame, max_driver_nodes: int | None = None) -> DataFrame:
-    """B8 -- directed parent-loop resolution (Taxonomy.resolveLoops analog:
-    the reference walks parent chains and breaks cycles so the DFS
-    terminates). A node whose parent chain returns to itself has its OUTGOING
-    parent edge cut -- deterministically at the lexicographically smallest
-    node_id in the cycle, which becomes a root. Non-cycle edges pass through
-    unchanged; nodes whose chain merely ENTERS a cycle keep their parents.
-    Cut nodes carry error_code PARENT_CHILD_SYNONYM (ErrorType.java:59 --
-    the reference raises exactly this when a parent chain closes on itself);
-    untouched nodes carry null (ErrorType.NONE).
-
-    Driver lane only (hierarchies are taxonomy-sized; the reference itself
-    resolves loops in memory, Taxonomy.java): parent-pointer walk with
-    memoized colors, O(nodes).
-    """
-    if max_driver_nodes is None:
-        max_driver_nodes = _DRIVER_TREE_MAX_NODES
-    n = edges.count()
-    if n > max_driver_nodes:
-        raise ValueError(
-            f"resolve_loops driver lane capped at {max_driver_nodes} nodes; "
-            f"got {n} -- partition the hierarchy or raise "
-            "ALA_SPARK_DRIVER_TREE_MAX_NODES"
-        )
-    pdf = edges.select("node_id", "parent_id").toPandas()
-    parent = dict(zip(pdf["node_id"], pdf["parent_id"]))
-    color: dict = {}  # 1 = on current path, 2 = done
-    cuts = set()
-    for start in parent:
-        if color.get(start):
-            continue
-        path = []
-        v = start
-        while v is not None and not color.get(v):
-            color[v] = 1
-            path.append(v)
-            v = parent.get(v)
-            if v is not None and v not in parent:
-                v = None  # dangling parent: treat as root
-        if v is not None and color.get(v) == 1:
-            # found a cycle: v .. end of path
-            cycle = path[path.index(v):]
-            cuts.add(min(cycle))
-        for u in path:
-            color[u] = 2
-    out = pdf.copy()
-    out["error_code"] = None
-    if cuts:
-        cut_mask = out["node_id"].isin(cuts)
-        out.loc[cut_mask, "parent_id"] = None
-        out.loc[cut_mask, "error_code"] = "PARENT_CHILD_SYNONYM"
-    spark = edges.sparkSession
-    return spark.createDataFrame(
-        out, "node_id string, parent_id string, error_code string"
     )
 
 

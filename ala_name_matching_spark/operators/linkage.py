@@ -451,7 +451,7 @@ def reciprocal_best_match(
     best is the symmetric two-dataset version: A-side winner computed
     with one partial-aggregated groupBy (min(struct(-score, partner)) --
     max score, ties to the smallest partner id, the skew-immune idiom
-    elect_representatives uses), B-side symmetric, pair kept when it
+    `fusion.golden_record` uses), B-side symmetric, pair kept when it
     equals both winners. Two groupBys + two joins, no window sort over a
     hot key, fully deterministic.
 

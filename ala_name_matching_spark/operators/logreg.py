@@ -128,20 +128,3 @@ def train_logreg(
         sorted(w.items()), "bucket int, weight double"
     )
 
-
-def score_docs(
-    feats: DataFrame, weights: DataFrame, round_dp: int = 6
-) -> DataFrame:
-    """(id, score): sigmoid(w . x) per doc under the trained weights."""
-    m = (
-        feats.join(F.broadcast(weights), "bucket", "left")
-        .withColumn("weight", F.coalesce("weight", F.lit(0.0)))
-        .groupBy("id")
-        .agg(F.sum(F.col("x") * F.col("weight")).alias("m"))
-    )
-    return m.select(
-        "id",
-        F.round(
-            F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("m"))), round_dp
-        ).alias("score"),
-    )

@@ -1,182 +1,24 @@
-"""Multimodal column plumbing: binary payloads + typed metadata.
+"""Multimodal frame scheduling: the metadata-only half of media sampling.
 
-Image/audio/video are opaque `binary` columns with a typed metadata struct;
-decode / feature-extract / resize / frame-sample run as Arrow-batched
-`mapInPandas` kernels. The decode step itself is STUBBED (no image/audio
-libraries in this container): `decode_media` raises NotImplementedError
-unless `fake=True`, in which case a deterministic fake decoder (blake2b of
-the bytes -> fixed-dim float features) exercises the real Spark plumbing --
-schema, partitioning, UDF signature, batch shape -- end to end in tests.
-
-Scale notes: payload columns are heavy; every transform below projects the
-binary column away as early as possible and repartitions by media_id so a
-single oversized partition can't OOM an executor (maxPartitionBytes governs
-the scan; repartition governs the decode stage).
+Image/audio/video rows carry an opaque `binary` payload next to typed
+metadata (kind, duration_ms, ...). The sampling schedule is a function of
+the metadata alone, so it is computed without reading the payload column:
+Parquet column pruning keeps the binary bytes on disk, and only a final
+decode stage (which needs image/audio libraries this engine does not ship)
+would ever read them.
 """
 
 from __future__ import annotations
 
-import hashlib
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-MEDIA_SCHEMA = (
-    "media_id string, kind string, payload binary, "
-    "width int, height int, duration_ms int, mime string"
-)
-
-FEATURE_DIM = 16
-
-FEATURES_SCHEMA = f"media_id string, kind string, n_bytes long, features array<double>"
-
-
-def synth_media(spark: SparkSession, n: int = 64) -> DataFrame:
-    """Deterministic fake media table (payload = seeded bytes)."""
-    rows = []
-    kinds = ["image", "audio", "video"]
-    for i in range(n):
-        kind = kinds[i % 3]
-        payload = hashlib.blake2b(f"media{i}".encode(), digest_size=32).digest() * 8
-        rows.append(
-            (
-                f"m{i:05d}",
-                kind,
-                bytearray(payload),
-                64 if kind == "image" else None,
-                64 if kind == "image" else None,
-                1000 if kind != "image" else None,
-                {"image": "image/png", "audio": "audio/wav", "video": "video/mp4"}[kind],
-            )
-        )
-    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-
-
-def _fake_features(payload: bytes) -> list[float]:
-    """Deterministic stand-in for a real decoder: hash -> FEATURE_DIM floats."""
-    h = hashlib.blake2b(payload, digest_size=FEATURE_DIM * 2).digest()
-    arr = np.frombuffer(h, dtype=np.uint16).astype(np.float64) / 65535.0
-    return [float(x) for x in arr]
-
-
-def decode_media(media: DataFrame, fake: bool = False) -> DataFrame:
-    """Decode/feature-extract each payload via Arrow-batched mapInPandas.
-
-    Real decoders (PIL / torchaudio / ffmpeg) are NOT in this container --
-    with fake=False this raises NotImplementedError at plan-execution time,
-    clearly marking the stub. With fake=True the deterministic fake keeps
-    the distributed plumbing (binary Arrow transfer, batch iteration,
-    schema) fully exercised.
-    """
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not fake:
-                raise NotImplementedError(
-                    "media decoding requires image/audio libraries not present "
-                    "in this environment; pass fake=True for the deterministic stub"
-                )
-            out = pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": pdf["payload"].map(len).astype("int64"),
-                    "features": pdf["payload"].map(_fake_features),
-                }
-            )
-            yield out
-
-    # repartition by media_id: decode cost is per-row and payloads are heavy;
-    # hash distribution prevents a skewed scan partition from owning the work
-    return media.repartition("media_id").mapInPandas(run, schema=FEATURES_SCHEMA)
-
-
-def frame_sample(media: DataFrame, every_ms: int = 200, fake: bool = False) -> DataFrame:
-    """Frame-sampling plumbing for video rows: one output row per sampled ts.
-
-    The real frame grab is stubbed like decode_media; the fake emits
-    deterministic per-timestamp feature rows so downstream joins/windows can
-    be built and tested.
-    """
-    schema = "media_id string, frame_ts_ms int, features array<double>"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not fake:
-                raise NotImplementedError(
-                    "video frame sampling requires ffmpeg-class libraries; "
-                    "pass fake=True for the deterministic stub"
-                )
-            recs = []
-            for _, row in pdf.iterrows():
-                dur = row["duration_ms"] or 0
-                for ts in range(0, int(dur), every_ms):
-                    recs.append(
-                        {
-                            "media_id": row["media_id"],
-                            "frame_ts_ms": ts,
-                            "features": _fake_features(
-                                bytes(row["payload"]) + ts.to_bytes(4, "big")
-                            ),
-                        }
-                    )
-            yield pd.DataFrame(recs, columns=["media_id", "frame_ts_ms", "features"])
-
-    vids = media.filter(F.col("kind") == "video")
-    return vids.repartition("media_id").mapInPandas(run, schema=schema)
-
-
-def resize_media(
-    media: DataFrame, width: int = 32, height: int = 32, fake: bool = False
-) -> DataFrame:
-    """Resize plumbing for image rows: payload -> resized payload + new dims.
-
-    The pixel work is stubbed like decode_media (no PIL in this container);
-    the fake emits a deterministic pseudo-payload of exactly
-    width*height bytes derived from the source bytes, so downstream
-    size-sensitive logic (batching by byte budget, storage accounting) is
-    real and testable. Output schema mirrors the input media contract with
-    payload/width/height replaced.
-    """
-    schema = "media_id string, kind string, payload binary, width int, height int, mime string"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not fake:
-                raise NotImplementedError(
-                    "image resizing requires PIL-class libraries not present "
-                    "in this environment; pass fake=True for the deterministic stub"
-                )
-            n = width * height
-
-            def fake_resize(p):
-                h = hashlib.blake2b(bytes(p), digest_size=32).digest()
-                return bytearray((h * (n // len(h) + 1))[:n])
-
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "payload": pdf["payload"].map(fake_resize),
-                    "width": width,
-                    "height": height,
-                    "mime": pdf["mime"],
-                }
-            )
-
-    imgs = media.filter(F.col("kind") == "image")
-    return imgs.repartition("media_id").mapInPandas(run, schema=schema)
 
 
 def frame_schedule(media: DataFrame, every_ms: int = 200) -> DataFrame:
     """(media_id, kind, frame_idx, frame_ts_ms) -- the deterministic
     sampling schedule for timed media, metadata-only (never touches the
-    payload column, so Parquet column pruning keeps the binary bytes on
-    disk). This is the plan-side half of frame_sample: at scale you
-    compute/join/store schedules freely and only the final decode stage
-    (the stubbed Arrow kernel) reads payload bytes. JVM sequence explode;
+    payload column). At scale you compute/join/store schedules freely and
+    only the final decode stage reads payload bytes. JVM sequence explode;
     map-only."""
     timed = media.filter(
         (F.col("kind") != "image") & (F.col("duration_ms") > 0)

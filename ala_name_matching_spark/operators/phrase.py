@@ -24,7 +24,7 @@ All pure DataFrame expressions -- every operator here stays JVM-side.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 NULL_SENTINEL = "<null>"  # verbatim from ALANameSearcher.java:1087
@@ -76,15 +76,6 @@ def parse_phrase_cols(text) -> dict:
     }
 
 
-def with_phrase_columns(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Project F13 parse + F10 flags onto a table."""
-    cols = parse_phrase_cols(F.col(text_col))
-    out = df
-    for name, col in cols.items():
-        out = out.withColumn(name, col)
-    return out.withColumn("issue_flags", issue_flags_col(F.col(text_col)))
-
-
 def phrase_join(
     queries: DataFrame,
     index: DataFrame,
@@ -96,8 +87,8 @@ def phrase_join(
     Compulsory (head, phrase) equality; voucher matches when BOTH sides have
     one, and a missing voucher on either side still matches via the
     "<null>" sentinel (exactly the reference's optional-voucher clause,
-    ALANameSearcher.java:1022-1046,1087). Both sides must have parsed phrase
-    columns (with_phrase_columns).
+    ALANameSearcher.java:1022-1046,1087). Both sides must carry the
+    head/phrase/voucher columns of parse_phrase_cols.
     """
     # column-renamed sides (both may derive from one base frame -- a raw
     # attribute join would be ambiguous under Spark's self-join analysis)

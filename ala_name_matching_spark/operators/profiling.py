@@ -159,8 +159,8 @@ def quantile_profile(
 # [min, max] ((v - min) * n_bins div (range + 1) -- exact in both
 # engines); probabilities use additive smoothing so empty bins stay
 # finite; each output row carries only ITS OWN bin's terms (no
-# cross-bin float sum inside the frame -- totals are a 2*n_bins-row
-# driver fold, drift_totals, per the bounded-summary discipline).
+# cross-bin float sum inside the frame -- totals are a fold over at most
+# n_bins rows by the caller, per the bounded-summary discipline).
 # ---------------------------------------------------------------------------
 
 
@@ -190,7 +190,8 @@ def distribution_drift(
     drift terms of `value_col` (integer-valued) between the reference
     slice (split_col == ref_value) and everything else.
 
-    PSI = sum(psi_term); JSD = sum(jsd_term) (use drift_totals). Bins
+    PSI = sum(psi_term); JSD = sum(jsd_term), folded by the caller over
+    the n_bins rows. Bins
     cover the COMBINED min..max in n_bins equal-width integer buckets;
     every bin appears (zero-count bins included via a range spine), so
     smoothing keeps all logs finite.
@@ -260,18 +261,6 @@ def distribution_drift(
         psi.alias("psi_term"),
         jsd.alias("jsd_term"),
     )
-
-
-def drift_totals(bins) -> dict:
-    """Fold a distribution_drift frame (2*n_bins bounded rows) into
-    {psi, jsd} driver-side, summing in ascending-bin order."""
-    rows = sorted(bins.collect(), key=lambda r: r["bin"])
-    psi = 0.0
-    jsd = 0.0
-    for r in rows:
-        psi = psi + r["psi_term"]
-        jsd = jsd + r["jsd_term"]
-    return {"psi": round(psi, 6), "jsd": round(jsd, 6)}
 
 
 def mad_outliers(

@@ -16,10 +16,7 @@ and a query is a broadcast equi-join on `term` + one groupBy(query, doc)
 sum + per-query top-k window. At 100 TB: the postings build shuffles each
 token once (the same cost class as the MinHash signature build); queries
 never touch the corpus text again -- the scan is postings-only, pruned to
-the queried terms by the broadcast hash join (a few rows per term). Skewed
-terms (stopwords) are the hot-block analog: drop them by df ceiling
-(`max_df_ratio`) exactly as Lucene users do, which also bounds per-term
-posting lists.
+the queried terms by the broadcast hash join (a few rows per term).
 
 Scoring is the Lucene/Robertson BM25 form:
   idf(t)      = ln(1 + (N - df + 0.5) / (df + 0.5))
@@ -48,48 +45,6 @@ B = 0.75
 # through the same TaxonNameSoundEx treatment).
 
 
-def build_postings(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_df_ratio: float | None = None,
-    analyzer=tokens_col,
-) -> DataFrame:
-    """(term, doc_id, tf) postings. Tokens staged in their own projection
-    (see shingles_from_tokens PERF note) then exploded once; tf via one
-    partial-aggregated groupBy. `max_df_ratio` drops terms appearing in
-    more than that fraction of docs (stopword/hot-list cap)."""
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"), analyzer(F.col(text_col)).alias("toks")
-    )
-    posts = (
-        toks.select("doc_id", F.explode_outer("toks").alias("term"))
-        .filter(F.col("term").isNotNull() & (F.col("term") != ""))
-        .groupBy("term", "doc_id")
-        .agg(F.count("*").alias("tf"))
-    )
-    if max_df_ratio is not None:
-        n_docs = docs.count()
-        df_t = posts.groupBy("term").agg(F.count("*").alias("df"))
-        keep = df_t.filter(F.col("df") <= max_df_ratio * n_docs).select("term")
-        posts = posts.join(F.broadcast(keep), "term")
-    return posts
-
-
-def doc_lengths(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    analyzer=tokens_col,
-) -> DataFrame:
-    """(doc_id, dl) -- analyzed-term count per doc, same kernel as the
-    postings (BM25's dl must count what the postings count)."""
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(analyzer(F.col(text_col))).alias("dl"),
-    )
-
-
 def bm25_topk(
     docs: DataFrame,
     queries: DataFrame,
@@ -114,7 +69,7 @@ def bm25_topk(
     # persisted analyzed projection -- matters most for the fuzzy lane,
     # where the analyzer is an Arrow UDF pass over the corpus (unpersisted,
     # the lazy DAG re-runs it three times). At index-build-once scale use
-    # build_postings/doc_lengths to materialize these as tables instead.
+    # build_index to materialize these as tables instead.
     analyzed = docs.select(
         F.col(id_col).alias("doc_id"), analyzer(F.col(text_col)).alias("_toks")
     )
@@ -166,8 +121,8 @@ def bm25_score_candidates(
     b: float = B,
 ) -> DataFrame:
     """Shared BM25 scoring tail over (term, doc_id, tf) postings + (doc_id,
-    dl) lengths -- used by bm25_topk (in-memory) and bm25_topk_from_index
-    (persisted/streaming-maintained index)."""
+    dl) lengths -- used by bm25_topk (in-memory); the same tail scores a
+    persisted/streaming-maintained build_index layout."""
     df_t = posts.groupBy("term").agg(F.count("*").alias("df"))
     idf = F.log(F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5))
     tf_part = (F.col("tf") * (k1 + 1)) / (
@@ -238,31 +193,6 @@ def build_index(
         )
     finally:
         analyzed.unpersist()
-
-
-def bm25_topk_from_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    k1: float = K1,
-    b: float = B,
-    query_id_col: str = "query_id",
-    query_text_col: str = "qtext",
-    analyzer=tokens_col,
-) -> DataFrame:
-    """Query a persisted (possibly streaming-appended) index. Scores are
-    identical to bm25_topk over the equivalent corpus (parity-tested)."""
-    # column-explicit reads: the on-disk tables carry an `epoch` partition
-    # column (batch build = -1, one per streaming micro-batch) that scoring
-    # must not see
-    posts = spark.read.parquet(f"{path}/postings").select("term", "doc_id", "tf")
-    dl = spark.read.parquet(f"{path}/doclen").select("doc_id", "dl")
-    stats = dl.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).first()
-    qterms = query_terms(queries, query_id_col, query_text_col, analyzer)
-    return bm25_score_candidates(
-        posts, dl, int(stats["n"]), float(stats["avgdl"]), qterms, k, k1, b
-    )
 
 
 def build_positional_postings(

@@ -150,7 +150,8 @@ def hll_register_table(
 
     One narrow projection + one partial-aggregated groupBy; the exchange
     carries <= m rows per group. Registers from two disjoint slices merge
-    with hll_merge() into exactly the whole-data sketch (tested).
+    (element-wise max per bucket) into exactly the whole-data sketch
+    (tested).
     """
     group_cols = list(group_cols or [])
     m = 1 << p
@@ -171,17 +172,6 @@ def hll_register_table(
         .groupBy(*group_cols, "bucket")
         .agg(F.max("rank").alias("reg"))
     )
-
-
-def hll_merge(*register_tables: DataFrame) -> DataFrame:
-    """Merge sketches built by hll_register_table over the same grouping:
-    union + element-wise max per bucket (the mergeable-summary property)."""
-    it = iter(register_tables)
-    out = next(it)
-    for t in it:
-        out = out.unionByName(t)
-    keys = [c for c in out.columns if c != "reg"]
-    return out.groupBy(*keys).agg(F.max("reg").alias("reg"))
 
 
 def hll_estimate(
@@ -246,7 +236,7 @@ def cm_sketch_table(
 
     One narrow d-way explode + one partial-aggregated groupBy; the
     exchange carries <= d*w rows total. Two disjoint slices' grids merge
-    with cm_merge() into exactly the whole-data grid (tested).
+    (per-cell sum) into exactly the whole-data grid (tested).
     """
     rows = F.explode(F.sequence(F.lit(0), F.lit(d - 1))).alias("row_j")
     hashed = df.where(F.col(col).isNotNull()).select(
@@ -266,15 +256,6 @@ def cm_sketch_table(
         .groupBy("row_j", "bucket")
         .agg(F.count("*").alias("cnt"))
     )
-
-
-def cm_merge(*grids: DataFrame) -> DataFrame:
-    """Merge Count-Min grids over the same (d, w): union + per-cell sum."""
-    it = iter(grids)
-    out = next(it)
-    for g in it:
-        out = out.unionByName(g)
-    return out.groupBy("row_j", "bucket").agg(F.sum("cnt").alias("cnt"))
 
 
 def cm_estimate(
@@ -357,15 +338,6 @@ def hdr_histogram(
     )
 
 
-def hdr_merge(*hists: DataFrame) -> DataFrame:
-    """Merge histograms built with the same sub_bits: add counts."""
-    out = hists[0]
-    for h in hists[1:]:
-        out = out.unionByName(h)
-    keys = [c for c in out.columns if c != "cnt"]
-    return out.groupBy(*keys).agg(F.sum("cnt").alias("cnt"))
-
-
 def hdr_quantiles(
     hist: DataFrame,
     qs: list[float],
@@ -440,7 +412,7 @@ def kmv_sketch_table(
     Build shape: one distinct on (group, hash) (partial-agg'd -- the
     only pass over the data), then a per-group bottom-k window over
     DISTINCT hashes only. Sketches from two slices merge by union +
-    re-bottom-k (kmv_merge, tested), so partial sketches per partition
+    re-bottom-k (tested), so partial sketches per partition
     or per day roll up without touching the raw data again.
     """
     from pyspark.sql import Window
@@ -457,24 +429,6 @@ def kmv_sketch_table(
     w = Window.partitionBy(*g).orderBy("h")
     return (
         hashes.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .drop("_rn")
-    )
-
-
-def kmv_merge(*sketches: DataFrame, k: int = 64) -> DataFrame:
-    """Union KMV sketches over the same grouping: union + re-bottom-k."""
-    from pyspark.sql import Window
-
-    it = iter(sketches)
-    out = next(it)
-    for t in it:
-        out = out.unionByName(t)
-    g = [c for c in out.columns if c != "h"]
-    w = Window.partitionBy(*g).orderBy("h")
-    return (
-        out.distinct()
-        .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") <= k)
         .drop("_rn")
     )

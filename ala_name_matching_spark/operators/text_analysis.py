@@ -184,7 +184,7 @@ def repetition_signals(
             ).otherwise(F.lit(0.0)),
             6,
         ).alias("dup_token_frac"),
-        # NON-distinct bigrams: token_shingles_col dedups, so build raw here
+        # NON-distinct bigrams: dedup.shingles_from_tokens dedups, so build raw here
         F.transform(
             F.sequence(F.lit(1), F.greatest(F.size(toks) - 1, F.lit(1))),
             lambda i: F.concat_ws(" ", F.slice(toks, i, 2)),

@@ -9,60 +9,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ala_name_matching_spark.functions.phonetic import treat_word_udf
-
-
-def filter_excluded(candidates: DataFrame, query_col: str = "query_id") -> DataFrame:
-    """V1 -- excluded-name handling (ALANameSearcher.java:1216-1238).
-
-    Candidates carry a boolean `is_excluded`. Per query: if EVERY candidate
-    is excluded -> keep the first but flag EXCLUDED; if mixed -> drop the
-    excluded ones and flag PARTIALLY_EXCLUDED; else untouched.
-    """
-    w = Window.partitionBy(query_col)
-    out = candidates.withColumn(
-        "_n_excl", F.sum(F.col("is_excluded").cast("int")).over(w)
-    ).withColumn("_n", F.count("*").over(w))
-    all_excl = F.col("_n_excl") == F.col("_n")
-    return (
-        out.filter(all_excl | ~F.col("is_excluded"))
-        .withColumn(
-            "error_codes",
-            F.when(all_excl, F.array(F.lit("EXCLUDED")))
-            .when(F.col("_n_excl") > 0, F.array(F.lit("ASSOCIATED_EXCLUDED")))
-            .otherwise(F.array().cast("array<string>")),
-        )
-        .drop("_n_excl", "_n")
-    )
-
-
-def blocklist_flag(
-    results: DataFrame, blocklist: DataFrame, key_col: str = "canon_text"
-) -> DataFrame:
-    """V4 -- cross-rank-homonym analog: broadcast-join a small lookup of
-    always-ambiguous texts and raise a flag when matched without context
-    (cross_rank_homonyms.txt, ALANameSearcher.java:130-131,1369-1374)."""
-    bl = F.broadcast(blocklist.select(F.col("name").alias(key_col)).distinct())
-    return results.join(
-        bl.withColumn("_ambiguous", F.lit(True)), key_col, "left"
-    ).withColumn("ambiguous_flag", F.coalesce(F.col("_ambiguous"), F.lit(False))).drop(
-        "_ambiguous"
-    )
-
-
-def common_accepted(candidates: DataFrame, query_col: str = "query_id") -> DataFrame:
-    """V6 -- multiple hits acceptable iff all share one accepted target
-    (getCommonAcceptedConcept, ALANameSearcher.java:1115-1130). Candidates
-    carry `accepted_id` (nullable) and `index_id`; per query keep groups
-    whose countDistinct(coalesce(accepted_id, index_id)) == 1."""
-    tgt = F.coalesce(F.col("accepted_id"), F.col("index_id"))
-    per = candidates.groupBy(query_col).agg(
-        F.countDistinct(tgt).alias("n_targets"), F.count("*").alias("n")
-    )
-    return candidates.join(per, query_col).withColumn(
-        "common_accepted_ok", (F.col("n_targets") == 1) | (F.col("n") == 1)
-    ).drop("n_targets", "n")
-
 
 def resolve_misapplied(candidates: DataFrame, query_col: str = "query_id") -> DataFrame:
     """V3 -- misapplied-synonym resolution (checkForMisapplied,

@@ -1,62 +1,15 @@
-"""Source connectors (SURVEY.md §2.1 S1-S3).
+"""Table sink and compaction (SURVEY.md §2.1 S3).
 
-S1 (DwC-A star-record scan) becomes a core table + left-joined extension
-tables; S2 (CSV) a schema-explicit csv reader; S3 (Lucene index sink) the
-table-format writer -- Iceberg in production, parquet here (jars absent,
-import-gated), with compaction notes in sources/checkpoints.py.
+S3 (Lucene index sink) is the table-format writer -- Iceberg in
+production, parquet here (jars absent, import-gated) -- plus the
+bin-packing compaction of small files (compact_table). The S1/S2 scans
+have no wrapper: callers use `spark.read` directly.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: str | None = None,
-    sep: str = ",",
-    header: bool = True,
-) -> DataFrame:
-    """S2 -- CSV scan (opencsv tab/comma readers, ALANameIndexer.java:
-    1023-1027). Schema-explicit by default: inference is a full extra pass
-    at 100 TB and non-deterministic on dirty data."""
-    reader = spark.read.option("header", header).option("sep", sep)
-    if schema:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", True)  # tests/small files only
-    return reader.csv(path)
-
-
-def read_star(
-    spark: SparkSession,
-    core_path: str,
-    extensions: dict[str, tuple[str, str]] | None = None,
-    fmt: str = "parquet",
-) -> DataFrame:
-    """S1 -- star-record scan: core rows + left-joined extension tables.
-
-    The reference iterates DwC-A star records (core taxon row + vernacular /
-    identifier extension rows, DwcaNameIndexer.java:479-627). Spark-first:
-    each extension is its own columnar table left-joined (and collected into
-    an array column) on the core key -- Catalyst handles pruning; extension
-    rows never fan out the core cardinality.
-
-    extensions: {ext_name: (path, join_key)}
-    """
-    core = spark.read.format(fmt).load(core_path)
-    out = core
-    for name, (path, key) in (extensions or {}).items():
-        ext = spark.read.format(fmt).load(path)
-        agg = ext.groupBy(key).agg(
-            F.collect_list(F.struct(*[c for c in ext.columns if c != key])).alias(
-                f"{name}_rows"
-            )
-        )
-        out = out.join(agg, key, "left")
-    return out
 
 
 def write_table(df: DataFrame, path: str, fmt: str = "parquet", mode: str = "overwrite"):

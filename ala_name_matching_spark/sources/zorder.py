@@ -21,10 +21,10 @@ rule -- no doubles, no libm, identical in SQL):
   morton  bit b of cell_i lands at output bit b * n_cols + i -- a flat
           OR of shifted bit tests, pure codegen.
 
-`write_zordered` sorts by the key inside range partitions
-(repartitionByRange + sortWithinPartitions) and writes parquet -- the
-files then carry the tight per-dimension envelopes (asserted in tests by
-measuring per-file min-max area vs a single-column layout).
+A writer range-partitions by the key (repartitionByRange +
+sortWithinPartitions) and writes parquet -- the files then carry the
+tight per-dimension envelopes (asserted in tests by counting the files a
+non-sort-dimension predicate touches vs a single-column layout).
 """
 
 from __future__ import annotations
@@ -71,27 +71,3 @@ def zorder_key(
             )
     return key, bounds
 
-
-def write_zordered(
-    df: DataFrame,
-    cols: list[str],
-    path: str,
-    n_files: int = 8,
-    bits: int = 8,
-) -> dict[str, tuple[int, int]]:
-    """Write df to parquet in Z-order over `cols`; returns the bounds.
-
-    repartitionByRange on the key assigns each output file a contiguous
-    Morton-key range = a small hyper-rectangle bundle in column space;
-    sortWithinPartitions tightens row-group stats inside each file.
-    """
-    key, bounds = zorder_key(df, cols, bits)
-    (
-        df.withColumn("__zkey", key)
-        .repartitionByRange(n_files, "__zkey")
-        .sortWithinPartitions("__zkey")
-        .drop("__zkey")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    return bounds

@@ -12,8 +12,6 @@ Design for scale:
     store (Iceberg in production); each micro-batch broadcast- or
     hash-joins against it with the SAME batch operators (operators/ladder) --
     no separate streaming codepath to keep semantically in sync.
-  * watermarked tumbling-window aggregation gives per-window match-rate
-    metrics for monitoring (late turns handled by the watermark).
 """
 
 from __future__ import annotations
@@ -21,10 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ala_name_matching_spark.operators.blocking import (
-    with_blocking_columns,
-    with_record_id,
-)
 from ala_name_matching_spark.operators.ladder import search_ladder
 
 TRANSCRIPT_DDL = (
@@ -88,83 +82,6 @@ def incremental_match(
         .option("checkpointLocation", checkpoint_path)
         .trigger(availableNow=True)
         .start()
-    )
-
-
-def stateful_conversation_sessions(
-    stream: DataFrame, gap_seconds: int = 1800
-) -> DataFrame:
-    """Custom stateful operator: gap-based conversation sessionization via
-    applyInPandasWithState (the batch `sessionization` query's streaming
-    twin -- same integer-microsecond gap rule, so both paths agree).
-
-    Per conv_id the state is the OPEN session (start_us, last_us, n_turns).
-    A batch closes a session whenever a gap > gap_seconds appears between
-    consecutive turns (emitted immediately); the trailing open session stays
-    in state and is emitted when the event-time watermark passes
-    last_ts + gap (GroupStateTimeout.EventTimeTimeout) -- late turns inside
-    the watermark still extend it. At 10^12 turns the state store holds one
-    tiny tuple per ACTIVE conversation only.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    gap_us = gap_seconds * 1_000_000
-
-    def fn(key, pdfs, state: GroupState):
-        conv_id = key[0]
-        if state.hasTimedOut:
-            start_us, last_us, n = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "conv_id": [conv_id],
-                    "session_start": [pd.Timestamp(start_us, unit="us")],
-                    "session_end": [pd.Timestamp(last_us, unit="us")],
-                    "n_turns": [n],
-                }
-            )
-            return
-        ts = pd.concat([p["ts"] for p in pdfs]).sort_values()
-        us = (ts.astype("int64") // 1000).to_numpy()  # ns -> us
-        if state.exists:
-            start_us, last_us, n = state.get
-        else:
-            start_us, last_us, n = int(us[0]), int(us[0]) - 1, 0
-            # n counts turns already folded in; first turn handled below
-        closed = []
-        for t in us:
-            t = int(t)
-            if n and t - last_us > gap_us:
-                closed.append((start_us, last_us, n))
-                start_us, n = t, 0
-            last_us = max(last_us, t)
-            n += 1
-        state.update((start_us, last_us, n))
-        state.setTimeoutTimestamp(last_us // 1000 + gap_seconds * 1000)
-        if closed:
-            yield pd.DataFrame(
-                {
-                    "conv_id": [conv_id] * len(closed),
-                    "session_start": [pd.Timestamp(s, unit="us") for s, _, _ in closed],
-                    "session_end": [pd.Timestamp(e, unit="us") for _, e, _ in closed],
-                    "n_turns": [c for _, _, c in closed],
-                }
-            )
-
-    return (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=(
-                "conv_id string, session_start timestamp, "
-                "session_end timestamp, n_turns long"
-            ),
-            stateStructType="start_us long, last_us long, n_turns long",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
     )
 
 
@@ -262,30 +179,6 @@ def streaming_neardup_match(
     )
 
 
-def windowed_turn_counts(stream: DataFrame, window: str = "5 minutes") -> DataFrame:
-    """Watermarked tumbling-window turn counts per role (late data handled).
-
-    The monitoring aggregation: append-mode compatible (watermark closes
-    windows), usable with any sink.
-    """
-    return (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", window).alias("w"), F.col("role"))
-        # exact countDistinct is unsupported on streams; HLL sketch instead
-        .agg(
-            F.count("*").alias("n_turns"),
-            F.approx_count_distinct("conv_id").alias("n_convs"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "role",
-            "n_turns",
-            "n_convs",
-        )
-    )
-
-
 def streaming_index_update(
     stream: DataFrame,
     index_path: str,
@@ -297,7 +190,8 @@ def streaming_index_update(
     """Incremental retrieval-index maintenance: per micro-batch, APPEND the
     new docs' (term, doc_id, tf) postings and (doc_id, dl) rows to the
     build_index layout. Because BM25's global stats (df, N, avgdl) are
-    derived from these tables at query time (bm25_topk_from_index), the
+    derived from these tables at query time (retrieval.bm25_score_candidates
+    over the read-back tables), the
     append alone keeps every downstream score consistent -- no stats
     rebuild, no index rewrite. This is the streaming twin of the
     reference's "index once, search forever" architecture, upgraded to

@@ -44,57 +44,3 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path, no_broadcast):
     finally:
         spark.sql("DROP TABLE IF EXISTS bkt_left")
         spark.sql("DROP TABLE IF EXISTS bkt_right")
-
-
-def test_bucketed_attach_has_no_exchange(spark, tmp_path, no_broadcast):
-    """VERDICT r02 #5a: the beyond-broadcast attach lane. Features and
-    group labels committed bucketed on (_g1, _g2) -- exactly the join keys,
-    which Spark's planner requires before trusting the layout -- join with
-    ZERO Exchange on either side; the wide record payload never shuffles."""
-    import pandas as pd
-
-    from ala_name_matching_spark.operators.clustering import (
-        attach_cluster_columns_bucketed,
-    )
-
-    n = 300
-    feats = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "record_id": [f"c{i}#0" for i in range(n)],
-                "text": [f"payload text {i}" for i in range(n)],
-                "_g1": [i * 7 for i in range(n)],
-                "_g2": [i * 13 for i in range(n)],
-            }
-        )
-    )
-    labels = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "_g1": [i * 7 for i in range(n)],
-                "_g2": [i * 13 for i in range(n)],
-                "cluster_id": [f"c{i - (i % 3)}#0" for i in range(n)],
-                "representative_id": [f"c{i - (i % 3)}#0" for i in range(n)],
-            }
-        )
-    )
-    write_bucketed(
-        feats, "bkt_feats", str(tmp_path / "f"), ["_g1", "_g2"], n_buckets=4
-    )
-    write_bucketed(
-        labels, "bkt_labels", str(tmp_path / "g"), ["_g1", "_g2"], n_buckets=4
-    )
-    try:
-        out = attach_cluster_columns_bucketed(spark, "bkt_feats", "bkt_labels")
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, "attach path must be shuffle-free"
-        rows = {r["record_id"]: r for r in out.collect()}
-        assert len(rows) == n
-        assert rows["c3#0"]["cluster_id"] == "c3#0"
-        assert rows["c4#0"]["cluster_id"] == "c3#0"
-        assert rows["c3#0"]["is_representative"] is True
-        assert rows["c4#0"]["is_representative"] is False
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bkt_feats")
-        spark.sql("DROP TABLE IF EXISTS bkt_labels")

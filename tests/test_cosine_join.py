@@ -72,8 +72,8 @@ def test_cosine_matches_numpy_brute_force(spark):
 
 def test_cosine_max_df_cap_and_accounting(spark):
     from ala_name_matching_spark.operators.cosine_join import (
-        dropped_term_accounting,
         tfidf_cosine_join,
+        tfidf_weights,
     )
 
     # 'common' appears in every doc; pairs are only linked through it
@@ -83,7 +83,8 @@ def test_cosine_max_df_cap_and_accounting(spark):
     assert len(uncapped) == 15  # all C(6,2) pairs share 'common'
     capped = tfidf_cosine_join(d, threshold=0.01, max_df=3).collect()
     assert capped == []  # the only shared term was capped away
-    led = dropped_term_accounting(d, max_df=3).collect()[0]
-    assert led["n_capped_terms"] == 1
-    assert led["n_dropped_postings"] == 6
-    assert led["max_pairs_per_capped_term"] == 15
+    # the cap drops exactly the one term's 6 postings before weighting
+    full = {(r["doc_id"], r["term"]) for r in tfidf_weights(d).collect()}
+    kept = {(r["doc_id"], r["term"]) for r in tfidf_weights(d, max_df=3).collect()}
+    assert kept <= full
+    assert full - kept == {(i, "common") for i in range(6)}

@@ -212,13 +212,17 @@ def test_simhash_pigeonhole_exact_recall(spark):
 
 def test_jaccard_edges_match_crossjoin(spark, docs):
     """Shared-shingle candidate join == all-pairs baseline (completeness)."""
-    from ala_name_matching_spark.operators.dedup import jaccard_edges, token_shingles_col
+    from ala_name_matching_spark.operators.dedup import (
+        jaccard_edges,
+        shingles_from_tokens,
+        tokens_col,
+    )
 
     got = {
         (r["doc_id_l"], r["doc_id_r"]): round(r["jaccard"], 6)
         for r in jaccard_edges(docs, threshold=0.3).collect()
     }
-    sh = docs.select("doc_id", token_shingles_col(F.col("text"), 3).alias("sh"))
+    sh = docs.select("doc_id", shingles_from_tokens(tokens_col(F.col("text")), 3).alias("sh"))
     a = sh.select(F.col("doc_id").alias("l"), F.col("sh").alias("sa"))
     b = sh.select(F.col("doc_id").alias("r"), F.col("sh").alias("sb"))
     brute = {

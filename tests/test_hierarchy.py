@@ -2,8 +2,6 @@
 parity, V2 species-split containment."""
 
 import pandas as pd
-import pytest
-from pyspark.sql import functions as F
 
 from ala_name_matching_spark.operators.hierarchy import (
     nested_set_encode,
@@ -71,37 +69,3 @@ def test_species_split_check(spark):
     )
     out = {r["accepted_id"]: r["contained"] for r in species_split_check(syn, intervals).collect()}
     assert out == {"e": True, "c": False}
-
-
-def test_resolve_loops_b8(spark):
-    """B8: a directed parent cycle is cut at its lexicographically smallest
-    node (deterministic), which becomes a root; chains that merely lead
-    INTO the cycle keep their parents; the result encodes cleanly."""
-    from ala_name_matching_spark.operators.hierarchy import resolve_loops
-
-    pairs = [
-        ("x", "y"), ("y", "z"), ("z", "x"),   # 3-cycle -> cut at 'x'
-        ("w", "x"),                             # enters the cycle, kept
-        ("a", None), ("b", "a"),               # clean tree untouched
-        ("q", "missing"),                       # dangling parent tolerated
-    ]
-    fixed = resolve_loops(_edges(spark, pairs))
-    rows = fixed.collect()
-    got = {r["node_id"]: r["parent_id"] for r in rows}
-    assert got["x"] is None          # cycle cut here
-    assert got["y"] == "z" and got["z"] == "x" and got["w"] == "x"
-    assert got["a"] is None and got["b"] == "a" and got["q"] == "missing"
-    codes = {r["node_id"]: r["error_code"] for r in rows}
-    assert codes["x"] == "PARENT_CHILD_SYNONYM"  # ErrorType.java:59 analog
-    assert all(codes[n] is None for n in ("y", "z", "w", "a", "b", "q"))
-    # and the repaired forest nested-set-encodes without infinite walk
-    enc = nested_set_encode(
-        fixed.withColumn(
-            "parent_id",
-            F.when(F.col("parent_id") == "missing", F.lit(None)).otherwise(
-                F.col("parent_id")
-            ),
-        )
-    )
-    out = {r["node_id"]: r for r in enc.collect()}
-    assert out["w"]["lft"] > out["x"]["lft"] and out["w"]["rgt"] < out["x"]["rgt"]

@@ -7,6 +7,25 @@ import pytest
 from pyspark.sql import functions as F
 
 
+def _bm25_topk_from_index(spark, path, queries, k=5):
+    """Query a persisted (possibly streaming-appended) build_index layout
+    with the bm25_topk scoring tail. The on-disk tables carry an `epoch`
+    partition column (batch build = -1, one per micro-batch) that scoring
+    must not see."""
+    from ala_name_matching_spark.operators.retrieval import (
+        bm25_score_candidates,
+        query_terms,
+    )
+
+    posts = spark.read.parquet(f"{path}/postings").select("term", "doc_id", "tf")
+    dl = spark.read.parquet(f"{path}/doclen").select("doc_id", "dl")
+    stats = dl.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).first()
+    qterms = query_terms(queries)
+    return bm25_score_candidates(
+        posts, dl, int(stats["n"]), float(stats["avgdl"]), qterms, k
+    )
+
+
 def _df(spark, rows):
     return spark.createDataFrame(
         pd.DataFrame(
@@ -88,33 +107,6 @@ def test_streaming_incremental_match(spark, index, tmp_path):
     assert res == {"s#0": "EXACT", "s#1": "NO_MATCH"}
 
 
-def test_streaming_windowed_counts(spark, tmp_path):
-    from ala_name_matching_spark.streaming.incremental import (
-        read_transcript_stream,
-        windowed_turn_counts,
-    )
-
-    src = str(tmp_path / "in2")
-    rows = [("c", i, "user" if i % 2 else "assistant", f"text {i}", None, None) for i in range(8)]
-    pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"])
-    pdf["ts"] = pd.Timestamp("2026-01-01") + pd.to_timedelta(pdf["turn_idx"] * 60, unit="s")
-    spark.createDataFrame(
-        pdf,
-        schema="conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
-    ).write.parquet(src)
-    agg = windowed_turn_counts(read_transcript_stream(spark, src), "5 minutes")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("wcounts")
-        .outputMode("complete")
-        .start()
-    )
-    q.processAllAvailable()
-    got = spark.sql("SELECT sum(n_turns) AS n FROM wcounts").collect()[0]["n"]
-    q.stop()
-    assert got == 8
-
-
 def test_ladder_error_codes(spark, index):
     """Round-2 verdict item 10: error codes threaded through the ladder
     (performErrorCheckSearch analog, ALANameSearcher.java:660-682)."""
@@ -167,55 +159,6 @@ def test_ladder_error_codes(spark, index):
     out3 = search_ladder(q3, idx2).collect()[0]
     assert out3["index_id"] == "i#3"
     assert "ASSOCIATED_EXCLUDED" in out3["error_codes"]
-
-
-def test_stateful_conversation_sessions(spark, tmp_path):
-    """applyInPandasWithState gap-sessionization: in-batch gaps close
-    sessions immediately; the trailing open session stays in state."""
-    import pandas as pd
-
-    from ala_name_matching_spark.streaming.incremental import (
-        read_transcript_stream,
-        stateful_conversation_sessions,
-    )
-
-    src = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    ck = str(tmp_path / "ck")
-    base = pd.Timestamp("2026-01-01 00:00:00")
-    rows = []
-    # conv A: two sessions split by a 2h gap; conv B: one open session
-    for i in range(3):
-        rows.append(("A", i, "user", f"t{i}", None, base + pd.Timedelta(minutes=i)))
-    for i in range(3, 5):
-        rows.append(("A", i, "user", f"t{i}", None, base + pd.Timedelta(hours=2, minutes=i)))
-    rows.append(("B", 0, "user", "hi", None, base))
-    pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"])
-    spark.createDataFrame(
-        pdf,
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp",
-    ).coalesce(1).write.parquet(src)
-
-    stream = read_transcript_stream(spark, src)
-    q = (
-        stateful_conversation_sessions(stream, gap_seconds=1800)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r["conv_id"]: r for r in spark.read.parquet(out).collect()}
-    # conv A's FIRST session closes on the in-batch gap; conv B's lone
-    # session closes via the EVENT-TIME TIMEOUT (watermark = max event time
-    # - 10 min = 01:54 passes B's last_ts + 30 min = 00:30). A's second
-    # session (last 02:04, timeout 02:34 > watermark) stays open in state.
-    assert set(got) == {"A", "B"}
-    assert got["A"]["n_turns"] == 3
-    assert got["A"]["session_start"] == base.to_pydatetime()
-    assert got["B"]["n_turns"] == 1
 
 
 def test_streaming_exact_dedup(spark, tmp_path):
@@ -307,14 +250,13 @@ def test_streaming_neardup_match(spark, tmp_path):
 
 def test_streaming_index_update_bm25_parity(spark, tmp_path):
     """Appending streamed docs to the persisted retrieval index must leave
-    bm25_topk_from_index EXACTLY equal to bm25_topk over the union corpus
+    a query of the persisted index EXACTLY equal to bm25_topk over the union corpus
     (the derived-stats argument), and a term unique to a streamed doc must
     retrieve it."""
     import pandas as pd
 
     from ala_name_matching_spark.operators.retrieval import (
         bm25_topk,
-        bm25_topk_from_index,
         build_index,
     )
     from ala_name_matching_spark.streaming.incremental import streaming_index_update
@@ -346,7 +288,7 @@ def test_streaming_index_update_bm25_parity(spark, tmp_path):
     queries = spark.createDataFrame(
         pd.DataFrame({"query_id": [10, 11], "qtext": ["zeta", "beta gamma"]})
     )
-    from_index = bm25_topk_from_index(spark, idx, queries, k=4).collect()
+    from_index = _bm25_topk_from_index(spark, idx, queries, k=4).collect()
     # "zeta" exists only in streamed docs -> they must surface
     zeta_docs = {r["doc_id"] for r in from_index if r["query_id"] == 10}
     assert zeta_docs == {2, 3}
@@ -366,7 +308,6 @@ def test_streamed_index_compaction_preserves_scores(spark, tmp_path):
     import pandas as pd
 
     from ala_name_matching_spark.operators.retrieval import (
-        bm25_topk_from_index,
         build_index,
     )
     from ala_name_matching_spark.sources.readers import compact_table
@@ -394,13 +335,13 @@ def test_streamed_index_compaction_preserves_scores(spark, tmp_path):
         pd.DataFrame({"query_id": [1, 2], "qtext": ["delta", "alpha beta"]})
     )
     key = lambda r: (r["query_id"], r["doc_id"], r["score"], r["rank"])
-    before = sorted(map(key, bm25_topk_from_index(spark, idx, queries).collect()))
+    before = sorted(map(key, _bm25_topk_from_index(spark, idx, queries).collect()))
     n_before = len(glob.glob(f"{idx}/postings/**/*.parquet", recursive=True))
     stats = compact_table(
         spark, f"{idx}/postings", collapse_partitions={"epoch": -1}
     )
     n_after = len(glob.glob(f"{idx}/postings/**/*.parquet", recursive=True))
-    after = sorted(map(key, bm25_topk_from_index(spark, idx, queries).collect()))
+    after = sorted(map(key, _bm25_topk_from_index(spark, idx, queries).collect()))
     assert after == before
     assert n_after < n_before, (n_before, n_after, stats)
 
@@ -457,7 +398,6 @@ def test_streaming_index_replay_is_idempotent(spark, tmp_path):
 
     from ala_name_matching_spark.operators.retrieval import (
         bm25_topk,
-        bm25_topk_from_index,
         build_index,
     )
     from ala_name_matching_spark.streaming.incremental import streaming_index_update
@@ -496,7 +436,7 @@ def test_streaming_index_replay_is_idempotent(spark, tmp_path):
     )
     union = base_docs.unionByName(spark.createDataFrame(new_rows))
     key = lambda r: (r["query_id"], r["doc_id"], r["score"], r["rank"])
-    assert sorted(map(key, bm25_topk_from_index(spark, idx, queries).collect())) == \
+    assert sorted(map(key, _bm25_topk_from_index(spark, idx, queries).collect())) == \
         sorted(map(key, bm25_topk(union, queries).collect()))
 
 

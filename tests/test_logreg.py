@@ -6,11 +6,7 @@ import math
 
 import pyspark.sql.functions as F
 
-from ala_name_matching_spark.operators.logreg import (
-    score_docs,
-    tf_features,
-    train_logreg,
-)
+from ala_name_matching_spark.operators.logreg import tf_features, train_logreg
 
 ROWS = [
     (1, "the quick brown fox jumps over the lazy dog", 1.0),
@@ -68,7 +64,11 @@ def test_training_separates_labels(spark):
     feats = tf_features(df, n_buckets=64)
     labels = df.select(F.col("doc_id").alias("id"), "y")
     w = train_logreg(feats, labels, iters=10, lr=2.0)
-    scores = {r.id: r.score for r in score_docs(feats, w).collect()}
+    # sigmoid is monotone, so the margin w . x orders docs like the score
+    margins = feats.join(w, "bucket").groupBy("id").agg(
+        F.sum(F.col("x") * F.col("weight")).alias("m")
+    )
+    scores = {r.id: r.m for r in margins.collect()}
     pos = min(scores[i] for i, _, y in ROWS if y == 1.0)
     neg = max(scores[i] for i, _, y in ROWS if y == 0.0)
     assert pos > neg

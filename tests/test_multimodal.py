@@ -1,86 +1,42 @@
-"""Tests for multimodal binary-column plumbing (stubbed decode)."""
+"""Tests for the metadata-only frame schedule (operators/multimodal.py)."""
 
-import pytest
+import hashlib
+
 from pyspark.sql import functions as F
-from pyspark.errors import PythonException
 
-from ala_name_matching_spark.operators.multimodal import (
-    FEATURE_DIM,
-    decode_media,
-    frame_sample,
-    synth_media,
+from ala_name_matching_spark.operators.multimodal import frame_schedule
+
+MEDIA_SCHEMA = (
+    "media_id string, kind string, payload binary, "
+    "width int, height int, duration_ms int, mime string"
 )
 
 
-def test_decode_fake_plumbing(spark):
-    media = synth_media(spark, 12)
-    out = decode_media(media, fake=True)
-    rows = out.collect()
-    assert len(rows) == 12
-    assert all(len(r["features"]) == FEATURE_DIM for r in rows)
-    assert all(r["n_bytes"] == 256 for r in rows)
-    # deterministic: same payload -> same features
-    again = {r["media_id"]: r["features"] for r in decode_media(media, fake=True).collect()}
-    assert all(again[r["media_id"]] == r["features"] for r in rows)
-
-
-def test_decode_stub_raises_without_fake(spark):
-    media = synth_media(spark, 3)
-    with pytest.raises(PythonException, match="NotImplementedError"):
-        decode_media(media, fake=False).collect()
+def synth_media(spark, n: int = 64):
+    """Deterministic fake media table (payload = seeded bytes)."""
+    rows = []
+    kinds = ["image", "audio", "video"]
+    for i in range(n):
+        kind = kinds[i % 3]
+        payload = hashlib.blake2b(f"media{i}".encode(), digest_size=32).digest() * 8
+        rows.append(
+            (
+                f"m{i:05d}",
+                kind,
+                bytearray(payload),
+                64 if kind == "image" else None,
+                64 if kind == "image" else None,
+                1000 if kind != "image" else None,
+                {"image": "image/png", "audio": "audio/wav", "video": "video/mp4"}[kind],
+            )
+        )
+    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
 
 
 def test_frame_sample(spark):
     media = synth_media(spark, 9)
-    frames = frame_sample(media, every_ms=250, fake=True)
-    rows = frames.collect()
+    rows = frame_schedule(media, every_ms=250).filter("kind = 'video'").collect()
     vids = media.filter(F.col("kind") == "video").count()
     assert len(rows) == vids * 4  # 1000ms / 250ms
     assert {r["frame_ts_ms"] for r in rows} == {0, 250, 500, 750}
-
-
-def test_resize_media_fake_plumbing(spark):
-    from ala_name_matching_spark.operators.multimodal import resize_media, synth_media
-
-    media = synth_media(spark, n=12)
-    out = resize_media(media, width=8, height=4, fake=True).collect()
-    assert len(out) == 4  # 12 rows, every third is an image
-    for r in out:
-        assert len(r["payload"]) == 8 * 4
-        assert (r["width"], r["height"]) == (8, 4)
-    # determinism: same input -> same resized bytes
-    again = resize_media(media, width=8, height=4, fake=True).collect()
-    assert {r["media_id"]: bytes(r["payload"]) for r in out} == {
-        r["media_id"]: bytes(r["payload"]) for r in again
-    }
-
-
-def test_resize_media_stub_raises(spark):
-    import pytest as _pytest
-
-    from ala_name_matching_spark.operators.multimodal import resize_media, synth_media
-
-    with _pytest.raises(Exception, match="NotImplementedError|PIL"):
-        resize_media(synth_media(spark, n=3), fake=False).collect()
-
-
-def test_frame_schedule_matches_frame_sample_grid(spark):
-    """The metadata-only schedule must enumerate exactly the timestamps the
-    payload-reading frame_sample stub emits -- plan-side and decode-side
-    halves cannot drift."""
-    from ala_name_matching_spark.operators.multimodal import (
-        frame_sample,
-        frame_schedule,
-        synth_media,
-    )
-
-    media = synth_media(spark, n=9)
-    sched = {
-        (r["media_id"], r["frame_ts_ms"])
-        for r in frame_schedule(media, every_ms=200).filter("kind = 'video'").collect()
-    }
-    sampled = {
-        (r["media_id"], r["frame_ts_ms"])
-        for r in frame_sample(media, every_ms=200, fake=True).collect()
-    }
-    assert sched == sampled and sched
+    assert {r["frame_idx"] for r in rows} == {0, 1, 2, 3}

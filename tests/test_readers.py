@@ -1,43 +1,8 @@
-"""S1/S2/S3 source-connector tests (round-2: these were the only two
-SURVEY §2 rows with no test exercising them)."""
+"""S3 table-sink and compaction tests."""
 
-import pandas as pd
 from pyspark.sql import functions as F
 
-from ala_name_matching_spark.sources.readers import read_csv, read_star, write_table
-
-
-def test_read_csv_schema_explicit(spark, tmp_path):
-    p = str(tmp_path / "x.csv")
-    with open(p, "w") as fh:
-        fh.write("id\tname\n1\talpha\n2\tbeta\n")
-    df = read_csv(spark, p, schema="id int, name string", sep="\t")
-    rows = {r["id"]: r["name"] for r in df.collect()}
-    assert rows == {1: "alpha", 2: "beta"}
-    assert [f.dataType.simpleString() for f in df.schema.fields] == ["int", "string"]
-
-
-def test_read_star_core_plus_extensions(spark, tmp_path):
-    """S1: core cardinality preserved; extension rows collected per key
-    (DwcaNameIndexer star-record iteration analog)."""
-    core = spark.createDataFrame(
-        pd.DataFrame({"taxon_id": ["t1", "t2", "t3"], "name": ["a", "b", "c"]})
-    )
-    vern = spark.createDataFrame(
-        pd.DataFrame(
-            {"taxon_id": ["t1", "t1", "t2"], "vernacular": ["x", "y", "z"]}
-        )
-    )
-    core_p = str(tmp_path / "core")
-    vern_p = str(tmp_path / "vern")
-    core.write.parquet(core_p)
-    vern.write.parquet(vern_p)
-    out = read_star(spark, core_p, {"vern": (vern_p, "taxon_id")})
-    rows = {r["taxon_id"]: r for r in out.collect()}
-    assert len(rows) == 3  # extensions never fan out the core
-    assert sorted(x["vernacular"] for x in rows["t1"]["vern_rows"]) == ["x", "y"]
-    assert [x["vernacular"] for x in rows["t2"]["vern_rows"]] == ["z"]
-    assert rows["t3"]["vern_rows"] is None  # left join keeps coreless rows
+from ala_name_matching_spark.sources.readers import write_table
 
 
 def test_write_table_roundtrip(spark, tmp_path):

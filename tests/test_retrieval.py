@@ -1,7 +1,7 @@
 """BM25 ranked retrieval: operators/retrieval.py.
 
 Golden-value check on a tiny corpus (scores hand-derived from the
-Lucene/Robertson formula), postings shape, df-ceiling stopword cap, and
+Lucene/Robertson formula), the persisted index's postings shape and
 deterministic tie-break. The cross-engine replay runs under
 tools/check_oracles.py as `bm25_topk`.
 """
@@ -10,11 +10,7 @@ import math
 
 from pyspark.sql import functions as F
 
-from ala_name_matching_spark.operators.retrieval import (
-    bm25_topk,
-    build_postings,
-    doc_lengths,
-)
+from ala_name_matching_spark.operators.retrieval import bm25_topk, build_index
 
 CORPUS = [
     (0, "apple banana apple"),
@@ -33,15 +29,20 @@ def _bm25(tf, df, dl, n=4, avgdl=2.75, k1=1.2, b=0.75):
     return idf * tf * (k1 + 1) / (tf + k1 * (1 - b + b * dl / avgdl))
 
 
-def test_postings_and_doclen(spark):
+def test_postings_and_doclen(spark, tmp_path):
     docs = _df(spark, CORPUS)
+    build_index(docs, str(tmp_path))
     posts = {
-        (r["term"], r["doc_id"]): r["tf"] for r in build_postings(docs).collect()
+        (r["term"], r["doc_id"]): r["tf"]
+        for r in spark.read.parquet(str(tmp_path / "postings")).collect()
     }
     assert posts[("apple", 0)] == 2
     assert posts[("cherry", 2)] == 3
     assert ("apple", 1) not in posts
-    dl = {r["doc_id"]: r["dl"] for r in doc_lengths(docs).collect()}
+    dl = {
+        r["doc_id"]: r["dl"]
+        for r in spark.read.parquet(str(tmp_path / "doclen")).collect()
+    }
     assert dl == {0: 3, 1: 2, 2: 4, 3: 2}
 
 
@@ -65,15 +66,6 @@ def test_repeated_query_terms_count_once(spark):
     s1 = bm25_topk(docs, q1, k=1).first()["score"]
     s2 = bm25_topk(docs, q2, k=1).first()["score"]
     assert s1 == s2
-
-
-def test_max_df_ratio_drops_stopword_terms(spark):
-    rows = [(i, f"the word{i}") for i in range(10)]
-    docs = _df(spark, rows)
-    posts = build_postings(docs, max_df_ratio=0.5)
-    terms = {r["term"] for r in posts.select("term").distinct().collect()}
-    assert "the" not in terms  # df=10 > 0.5*10
-    assert "word3" in terms
 
 
 def test_tie_break_on_doc_id(spark):

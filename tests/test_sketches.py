@@ -54,7 +54,6 @@ def test_heavy_hitters_empty_and_tiny_capacity(spark):
 from ala_name_matching_spark.operators.sketches import (  # noqa: E402
     hll_distinct,
     hll_estimate,
-    hll_merge,
     hll_register_table,
 )
 
@@ -93,16 +92,10 @@ def test_hll_mergeability(spark):
     )
     a = whole.where(F.col("v").substr(2, 10).cast("long") % 2 == 0)
     b = whole.where(F.col("v").substr(2, 10).cast("long") % 2 == 1)
-    merged = {
-        (r["bucket"], r["reg"])
-        for r in hll_merge(
-            hll_register_table(a, "v"), hll_register_table(b, "v")
-        ).collect()
-    }
-    direct = {
-        (r["bucket"], r["reg"])
-        for r in hll_register_table(whole, "v").collect()
-    }
+    merged = {}
+    for r in hll_register_table(a, "v").collect() + hll_register_table(b, "v").collect():
+        merged[r["bucket"]] = max(merged.get(r["bucket"], 0), r["reg"])
+    direct = {r["bucket"]: r["reg"] for r in hll_register_table(whole, "v").collect()}
     assert merged == direct
     dup = whole.union(whole).union(whole)
     est_dup = hll_distinct(dup, "v").collect()[0]["hll_estimate"]
@@ -131,7 +124,6 @@ def test_hll_grouped(spark):
 
 from ala_name_matching_spark.operators.sketches import (  # noqa: E402
     cm_estimate,
-    cm_merge,
     cm_sketch_table,
 )
 
@@ -171,12 +163,10 @@ def test_cm_mergeability(spark):
     )
     a = whole.where(F.crc32(F.col("v")) % 2 == 0)
     b = whole.where(F.crc32(F.col("v")) % 2 == 1)
-    merged = {
-        (r["row_j"], r["bucket"]): r["cnt"]
-        for r in cm_merge(
-            cm_sketch_table(a, "v"), cm_sketch_table(b, "v")
-        ).collect()
-    }
+    merged = {}
+    for r in cm_sketch_table(a, "v").collect() + cm_sketch_table(b, "v").collect():
+        cell = (r["row_j"], r["bucket"])
+        merged[cell] = merged.get(cell, 0) + r["cnt"]
     direct = {
         (r["row_j"], r["bucket"]): r["cnt"]
         for r in cm_sketch_table(whole, "v").collect()
@@ -201,24 +191,15 @@ def test_kmv_mergeability_and_multiplicity(spark):
     must equal the whole-data sketch exactly; duplicates must not move it."""
     import pyspark.sql.functions as F
 
-    from ala_name_matching_spark.operators.sketches import (
-        kmv_merge,
-        kmv_sketch_table,
-    )
+    from ala_name_matching_spark.operators.sketches import kmv_sketch_table
 
     whole = spark.range(3000).select(
         F.concat(F.lit("k"), F.col("id")).alias("v")
     )
     a = whole.where(F.col("v").substr(2, 10).cast("long") % 2 == 0)
     b = whole.where(F.col("v").substr(2, 10).cast("long") % 2 == 1)
-    merged = {
-        r["h"]
-        for r in kmv_merge(
-            kmv_sketch_table(a, "v", k=64),
-            kmv_sketch_table(b, "v", k=64),
-            k=64,
-        ).collect()
-    }
+    union = kmv_sketch_table(a, "v", k=64).union(kmv_sketch_table(b, "v", k=64))
+    merged = set(sorted(r["h"] for r in union.collect())[:64])
     direct = {r["h"] for r in kmv_sketch_table(whole, "v", k=64).collect()}
     assert merged == direct and len(direct) == 64
     dup = whole.union(whole)

@@ -7,7 +7,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from ala_name_matching_spark.functions.swg import swg_batch, swg_scalar
+from ala_name_matching_spark.functions.swg import swg_batch
 
 
 def _swg_ref(a, b, match=5.0, mis=-3.0, op=5.0, ext=1.0):
@@ -31,22 +31,30 @@ def _swg_ref(a, b, match=5.0, mis=-3.0, op=5.0, ext=1.0):
     return min(1.0, best / (min(la, lb) * match))
 
 
+def _swg(pairs):
+    return swg_batch(pd.Series([a for a, _ in pairs]), pd.Series([b for _, b in pairs]))
+
+
 def test_hand_goldens():
-    assert swg_scalar("ABC", "ABC") == 1.0
-    assert swg_scalar("ABC", "ABD") == pytest.approx(10 / 15)
-    assert swg_scalar("AXC", "ABC") == pytest.approx(7 / 15)
-    # one gap: open cost 5 eats one match
-    assert swg_scalar("AC", "ABC") == pytest.approx(0.5)
-    # local alignment: perfect substring scores 1 regardless of context
-    assert swg_scalar("ABCDEF", "CDE") == 1.0
-    assert swg_scalar("SMITH", "SMYTH") == pytest.approx(0.68)
+    got = _swg(
+        [
+            ("ABC", "ABC"),
+            ("ABC", "ABD"),
+            ("AXC", "ABC"),
+            # one gap: open cost 5 eats one match
+            ("AC", "ABC"),
+            # local alignment: perfect substring scores 1 regardless of context
+            ("ABCDEF", "CDE"),
+            ("SMITH", "SMYTH"),
+        ]
+    )
+    assert got == pytest.approx([1.0, 10 / 15, 7 / 15, 0.5, 1.0, 0.68])
 
 
 def test_empty_and_null_conventions():
-    assert swg_scalar("", "") == 1.0
-    assert swg_scalar("", "A") == 0.0
-    assert swg_scalar("A", "") == 0.0
-    assert swg_scalar(None, "A") is None
+    got = _swg([("", ""), ("", "A"), ("A", ""), (None, "A")])
+    assert got[:3].tolist() == [1.0, 0.0, 0.0]
+    assert np.isnan(got[3])
     out = swg_batch(pd.Series([None, "X"]), pd.Series(["Y", None]))
     assert np.isnan(out).all()
 
@@ -80,9 +88,8 @@ def test_symmetry_and_bounds():
 
 def test_cap_truncates_consistently():
     long = "A" * 100
-    assert swg_scalar(long, long) == 1.0
     # cap means only the first 32 chars are compared
-    assert swg_scalar(long, "A" * 32 + "B" * 68) == 1.0
+    assert _swg([(long, long), (long, "A" * 32 + "B" * 68)]).tolist() == [1.0, 1.0]
 
 
 def test_author_gate_swg_waives_near_equal_tools(spark):

@@ -1,64 +1,13 @@
-"""Tests for the validation operator family (V1/V4/V6, J9, J10, B9)."""
+"""Tests for the validation operator family (V3, J9, J10, B9)."""
 
 import pandas as pd
 from pyspark.sql import functions as F
 
 from ala_name_matching_spark.operators.validation import (
     autocomplete,
-    blocklist_flag,
-    common_accepted,
-    filter_excluded,
     homonym_probe,
     spelling_collision_qa,
 )
-
-
-def test_filter_excluded(spark):
-    cands = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "query_id": ["q1", "q1", "q2", "q2", "q3"],
-                "index_id": ["a", "b", "c", "d", "e"],
-                "is_excluded": [True, False, True, True, False],
-            }
-        )
-    )
-    out = filter_excluded(cands).collect()
-    by_q = {}
-    for r in out:
-        by_q.setdefault(r["query_id"], []).append(r)
-    # q1 mixed: excluded candidate dropped, flag ASSOCIATED_EXCLUDED
-    assert [r["index_id"] for r in by_q["q1"]] == ["b"]
-    assert by_q["q1"][0]["error_codes"] == ["ASSOCIATED_EXCLUDED"]
-    # q2 all-excluded: kept but flagged EXCLUDED
-    assert len(by_q["q2"]) == 2
-    assert all(r["error_codes"] == ["EXCLUDED"] for r in by_q["q2"])
-    # q3 clean
-    assert by_q["q3"][0]["error_codes"] == []
-
-
-def test_blocklist_flag(spark):
-    res = spark.createDataFrame(
-        pd.DataFrame({"canon_text": ["alpha beta", "gamma delta"], "v": [1, 2]})
-    )
-    bl = spark.createDataFrame(pd.DataFrame({"name": ["alpha beta"]}))
-    out = {r["canon_text"]: r["ambiguous_flag"] for r in blocklist_flag(res, bl).collect()}
-    assert out == {"alpha beta": True, "gamma delta": False}
-
-
-def test_common_accepted(spark):
-    cands = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "query_id": ["q1", "q1", "q2", "q2"],
-                "index_id": ["a", "b", "c", "d"],
-                "accepted_id": ["x", "x", "y", "z"],
-            }
-        )
-    )
-    out = {(r["query_id"], r["index_id"]): r["common_accepted_ok"] for r in common_accepted(cands).collect()}
-    assert out[("q1", "a")] and out[("q1", "b")]  # both point at accepted x
-    assert not out[("q2", "c")] and not out[("q2", "d")]  # two targets
 
 
 def test_resolve_misapplied(spark):

@@ -3,7 +3,7 @@ vs a single-column layout (the data-skipping enabler), bounds reporting."""
 
 import pyspark.sql.functions as F
 
-from ala_name_matching_spark.sources.zorder import write_zordered, zorder_key
+from ala_name_matching_spark.sources.zorder import zorder_key
 
 
 def _grid_df(spark, n=64):
@@ -32,7 +32,15 @@ def test_zorder_prunes_the_non_sort_dimension(spark, tmp_path):
     df = _grid_df(spark)
     zpath = str(tmp_path / "z")
     lpath = str(tmp_path / "linear")
-    write_zordered(df, ["x", "y"], zpath, n_files=16, bits=6)
+    key, _ = zorder_key(df, ["x", "y"], bits=6)
+    (
+        df.withColumn("__zkey", key)
+        .repartitionByRange(16, "__zkey")
+        .sortWithinPartitions("__zkey")
+        .drop("__zkey")
+        .write.mode("overwrite")
+        .parquet(zpath)
+    )
     (
         df.repartitionByRange(16, "x")
         .sortWithinPartitions("x")
