@@ -1316,7 +1316,7 @@ def _q_compaction_checksum(spark, sf_dir):
     # same (n_rows, checksum) directly over the source table, so a green
     # row proves the rewrite preserved the exact row multiset; the
     # `compacted` literal additionally value-checks that the bin-pack
-    # actually RAN (16 files > n_target * slack by construction).
+    # actually RAN (16 files > 1.5 * n_target by construction).
     import shutil
     import tempfile
 

@@ -32,7 +32,7 @@ MAX_LEN = 4
 _VOWELS = "AEIOUY"
 
 
-def double_metaphone(word: str | None, max_length: int = MAX_LEN):
+def double_metaphone(word: str | None):
     """(primary, alternate) keys; alternate == primary when unambiguous.
 
     Input should be accent-folded (see functions/normalize.basic_py);
@@ -70,7 +70,7 @@ def double_metaphone(word: str | None, max_length: int = MAX_LEN):
         add("S")
         i = 1
 
-    while i < length and (len("".join(pri)) < max_length or len("".join(sec)) < max_length):
+    while i < length and (len("".join(pri)) < MAX_LEN or len("".join(sec)) < MAX_LEN):
         c = at(i)
         if c in _VOWELS:
             if i == 0:
@@ -427,7 +427,7 @@ def double_metaphone(word: str | None, max_length: int = MAX_LEN):
         else:
             i += 1
 
-    return ("".join(pri)[:max_length], "".join(sec)[:max_length])
+    return ("".join(pri)[:MAX_LEN], "".join(sec)[:MAX_LEN])
 
 
 def _dm_series(s: pd.Series) -> pd.DataFrame:

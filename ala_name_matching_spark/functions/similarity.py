@@ -204,8 +204,8 @@ def pair_score_cols(
     role_r: Column,
     tool_l: Column,
     tool_r: Column,
-    ptoks_l: Column | None = None,
-    ptoks_r: Column | None = None,
+    ptoks_l: Column,
+    ptoks_r: Column,
 ) -> dict[str, Column]:
     """A1 -- the full pair-score expression set.
 
@@ -214,18 +214,15 @@ def pair_score_cols(
     renormalization exactly like MatchMetrics.computeMatch's weight
     accumulation, MatchMetrics.java:132-146).
 
-    When phonetic token arrays are supplied, the token-set slot is computed
-    over them instead of raw tokens, so phonetic-class misspellings (the
-    error family treatWord folds) don't depress token overlap -- matching
-    the reference's char-level SWG field scoring, which never token-
-    penalizes a misspelling (MatchMetrics.java:158-166).
+    The token-set slot is computed over the phonetic token arrays, not raw
+    tokens, so phonetic-class misspellings (the error family treatWord
+    folds) don't depress token overlap -- matching the reference's
+    char-level SWG field scoring, which never token-penalizes a misspelling
+    (MatchMetrics.java:158-166).
     """
     jw = jaro_winkler_udf(canon_l, canon_r)
     lev = lev_similarity_col(canon_l, canon_r)
-    if ptoks_l is not None and ptoks_r is not None:
-        tok = array_jaccard_col(ptoks_l, ptoks_r)
-    else:
-        tok = token_set_similarity_col(canon_l, canon_r)
+    tok = array_jaccard_col(ptoks_l, ptoks_r)
     text = W_JW * jw + W_LEV * lev + W_TOKEN * tok
     role = context_sim_col(role_l, role_r)
     tool = context_sim_col(tool_l, tool_r)

@@ -37,41 +37,13 @@ TIER_PHONETIC = 3
 DEFAULT_BLOCK_CAP = 200
 
 
-def with_record_id(df: DataFrame, binary: bool = False) -> DataFrame:
-    """Stable unique record id.
+def with_record_id(df: DataFrame) -> DataFrame:
+    """Stable unique record id: the `conv_id#turn_idx` string.
 
-    Default lane -- `conv_id#turn_idx` string: human-readable, unique by
-    contract ((conv_id, turn_idx) is unique, FIXTURES.md §1), and NOT a
-    64-bit hash, which would collide at 10^12 rows (birthday bound).
-
-    `binary=True` -- fixed 20-byte binary id: big-endian bytes of TWO
-    independent xxhash64 runs over conv_id (a 128-bit conversation hash)
-    followed by the 4-byte turn index. Shuffle/label economics: CC labels,
-    edges, and the pair table all key on record_id, and a long conv string
-    rides each of them ~3x heavier than 20 fixed bytes at 10^12 rows.
-    Collision analysis: turn_idx rides in clear, so two records collide
-    only if two DISTINCT conv_ids collide on BOTH 64-bit hashes; at 10^11
-    conversations the expected number of colliding pairs is C(10^11, 2) /
-    2^128 ~= 1.5e-17 -- negligible (vs ~0.24 expected collisions for a
-    single 64-bit hash at that scale, which is why one xxhash64 is not
-    enough). BinaryType orders by unsigned lexicographic comparison in
-    Spark, numpy 'S' and pyarrow binary agree, so min-label CC semantics
-    are identical across the JVM and driver union-find lanes
-    (tests/test_pipeline_e2e.py::test_binary_id_lane_cluster_parity).
+    Human-readable, unique by contract ((conv_id, turn_idx) is unique,
+    FIXTURES.md §1), and NOT a 64-bit hash, which would collide at 10^12
+    rows (birthday bound).
     """
-    if binary:
-        h = lambda c: F.to_binary(F.lpad(F.hex(c), 16, "0"), F.lit("hex"))
-        return df.withColumn(
-            "record_id",
-            F.concat(
-                h(F.xxhash64(F.col("conv_id"))),
-                h(F.xxhash64(F.col("conv_id"), F.lit(0x5F3759DF))),
-                F.to_binary(
-                    F.lpad(F.hex(F.col("turn_idx").cast("long")), 8, "0"),
-                    F.lit("hex"),
-                ),
-            ),
-        )
     return df.withColumn(
         "record_id",
         F.concat_ws("#", F.col("conv_id"), F.col("turn_idx").cast("string")),
@@ -81,9 +53,7 @@ def with_record_id(df: DataFrame, binary: bool = False) -> DataFrame:
 def with_blocking_columns(
     df: DataFrame,
     text_col: str = "text",
-    include_tokens: bool = True,
     include_phonetic: bool = True,
-    binary_ids: bool = False,
 ) -> DataFrame:
     """Adds norm_text / canon_text / canon_key (+ phonetic columns).
 
@@ -98,7 +68,6 @@ def with_blocking_columns(
     smaller) rep table -- running the python kernel over every raw record
     was the single largest per-record cost and bought nothing. P1 then
     stays wholly inside the JVM (no python workers at all).
-    `include_tokens=False` keeps the key but omits the heavy token array.
     Point-query paths (ladder, streaming, evaluation) keep the defaults.
     """
     c = F.col(text_col)
@@ -107,23 +76,19 @@ def with_blocking_columns(
     # work -- measured as p1's dominant JVM cost at 1.2M turns)
     out = df.withColumn("norm_text", norm_text_col(c))
     out = out.withColumn("canon_text", canon_text_from_norm(F.col("norm_text")))
-    # binary record ids must salt placeholders via hex (a binary->string
-    # cast UTF-8-decodes and can merge distinct ids on invalid sequences)
-    rid = F.hex(F.col("record_id")) if binary_ids else F.col("record_id")
     out = out.withColumn(
-        "canon_key", canon_key_from_canon(F.col("canon_text"), rid)
+        "canon_key", canon_key_from_canon(F.col("canon_text"), F.col("record_id"))
     )
     if not include_phonetic:
         return out
     # single Arrow kernel producing both phonetic columns (memoized per batch)
     out = out.withColumn("_ph", phonetic_struct_udf(F.col("canon_text")))
     out = out.withColumn("phonetic_key", F.col("_ph.phonetic_key"))
-    if include_tokens:
-        out = out.withColumn("phonetic_tokens", F.col("_ph.phonetic_tokens"))
+    out = out.withColumn("phonetic_tokens", F.col("_ph.phonetic_tokens"))
     return out.drop("_ph")
 
 
-def pipeline_features(df: DataFrame, binary_ids: bool = False) -> DataFrame:
+def pipeline_features(df: DataFrame) -> DataFrame:
     """The committed P1 artifact: original columns + record_id + canon_key +
     the 128-bit group hash (_g1,_g2).
 
@@ -136,11 +101,7 @@ def pipeline_features(df: DataFrame, binary_ids: bool = False) -> DataFrame:
     p6's assignment probe read ONLY fixed-width columns (no text, no
     per-record hashing) -- Catalyst prunes the scan to (record_id,_g1,_g2).
     """
-    out = with_blocking_columns(
-        with_record_id(df, binary=binary_ids),
-        include_phonetic=False,
-        binary_ids=binary_ids,
-    )
+    out = with_blocking_columns(with_record_id(df), include_phonetic=False)
     cols = [c for c in out.columns if c not in ("norm_text", "canon_text")]
     return out.select(
         *cols,
@@ -370,16 +331,15 @@ def salted_join(
     on: str,
     row_col: str,
     n_salts: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
-    """Skew-immune equi-join: exact same rows as `fact.join(dim, on, how)`,
+    """Skew-immune inner equi-join: exact same rows as `fact.join(dim, on)`,
     but a hot key's fact rows land on `n_salts` reducers instead of one.
 
     The classic replicate-and-scatter: the dim side is exploded n_salts
     times (each key appears once per salt), the fact side picks a salt
     uniformly by hashing `row_col` (any row-unique column), and the join
     key becomes (on, salt) -- every fact row still meets exactly one dim
-    replica, so the result multiset is unchanged for inner and left joins.
+    replica, so the result multiset is unchanged.
     Use when the dim is too large to broadcast but fact keys are skewed
     enough to overload single shuffle partitions; AQE's skew-join split
     handles sort-merge skew adaptively, but this form also spreads the
@@ -388,36 +348,20 @@ def salted_join(
 
     This is the relational generalization of the ER block salting
     (salt_and_cap_blocks above) -- same trick, join-shaped.
-
-    Only fact-preserving join types are supported: with the dim side
-    replicated n_salts times, a right/full join would emit each UNMATCHED
-    dim row once per replica (matched rows are fine -- each fact row meets
-    exactly one replica -- but dim rows with no fact partner survive in all
-    n_salts copies).
     """
-    allowed = {
-        "inner", "left", "left_outer", "leftouter",
-        "left_semi", "leftsemi", "semi", "left_anti", "leftanti", "anti",
-    }
-    if how.lower() not in allowed:
-        raise ValueError(
-            f"salted_join: how={how!r} would duplicate unmatched dim rows "
-            f"{n_salts}x (dim side is replicated); use one of {sorted(allowed)}"
-        )
     salted_dim = dim.withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
     )
     salted_fact = fact.withColumn(
         "_salt", F.pmod(F.xxhash64(F.col(row_col)), F.lit(n_salts)).cast("int")
     )
-    return salted_fact.join(salted_dim, [on, "_salt"], how).drop("_salt")
+    return salted_fact.join(salted_dim, [on, "_salt"]).drop("_salt")
 
 
 def global_rank(
     df: DataFrame,
     order_cols: list[str],
     rank_col: str = "rank",
-    n_parts: int | None = None,
 ) -> DataFrame:
     """0-based dense global rank under (order_cols) -- WITHOUT the
     single-partition global window anti-pattern.
@@ -437,8 +381,7 @@ def global_rank(
     """
     from pyspark.sql import Window
 
-    if n_parts is None:
-        n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     d = (
         df.repartitionByRange(n_parts, *order_cols)
         .sortWithinPartitions(*order_cols)

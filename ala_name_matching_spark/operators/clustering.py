@@ -212,7 +212,7 @@ def _labels_and_winners_pdf(pdf):
     )
 
 
-def block_local_labels(edges: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def block_local_labels(edges: DataFrame) -> DataFrame:
     """(grp_rep, cluster_id, representative_id) for every edge node, computed
     with ONE exchange -- no iterative star rounds.
 
@@ -230,9 +230,7 @@ def block_local_labels(edges: DataFrame, num_partitions: int | None = None) -> D
     """
     import pandas as pd
 
-    spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism * 2
+    num_partitions = edges.sparkSession.sparkContext.defaultParallelism * 2
 
     def per_partition(batches):
         batches = list(batches)

@@ -28,11 +28,10 @@ Design (all three are linear in total turns, no all-pairs product):
   (one fingerprint-df groupBy + a join back).
 
 At 100 TB: every join here keys on a 128-bit content hash. For
-`conv_neardup_pairs` the hash's conversation-frequency is bounded by
-`max_df` (boilerplate fingerprints -- greetings, empty turns -- are
-excluded from the similarity universe on BOTH the candidate and the
-denominator side, the same hot-key discipline as dedup.cap_lsh_buckets),
-so no hot key survives to the exchange. Prefix hashes are unique-by-
+`conv_neardup_pairs` a fingerprint shared by n conversations (greetings,
+empty turns) is a hot key of the fingerprint self-join and yields n^2/2
+candidate rows; the set semantics are exact, with no boilerplate cap.
+Prefix hashes are unique-by-
 construction below md5 collision odds. Conversation sequences are
 collected per conv_id -- bounded by the longest conversation, not the
 corpus.
@@ -48,7 +47,7 @@ def render_conversations(
     turns: DataFrame,
     conv_col: str = "conv_id",
     idx_col: str = "turn_idx",
-    role_col: str | None = "role",
+    role_col: str = "role",
     text_col: str = "text",
     sep: str = "\n",
 ) -> DataFrame:
@@ -59,9 +58,8 @@ def render_conversations(
     invariant carries through verbatim: each turn's text appears exactly
     once, unmodified, in order).
 
-    Per-turn line = "{role}: {text}" when `role_col` is given, else the
-    bare text. The fold is the repo's sorted-fold contract:
-    collect_list(struct(turn_idx, line)) -> sort_array -> join, a total
+    Per-turn line = "{role}: {text}". The fold is the repo's sorted-fold
+    contract: collect_list(struct(turn_idx, line)) -> sort_array -> join, a total
     order because (conv_id, turn_idx) is unique by contract -- so the
     result is task-scheduling-independent and replays as DuckDB
     string_agg(line, sep ORDER BY turn_idx).
@@ -77,11 +75,7 @@ def render_conversations(
     # n_turns still counts it, breaking the "each turn's text appears
     # exactly once" invariant.
     text = F.coalesce(F.col(text_col), F.lit(""))
-    line = (
-        F.concat(F.coalesce(F.col(role_col), F.lit("")), F.lit(": "), text)
-        if role_col
-        else text
-    )
+    line = F.concat(F.coalesce(F.col(role_col), F.lit("")), F.lit(": "), text)
     return (
         turns.groupBy(F.col(conv_col).alias("conv_id"))
         .agg(
@@ -182,20 +176,12 @@ def conv_neardup_pairs(
     threshold: float = 0.5,
     conv_col: str = "conv_id",
     text_col: str = "text",
-    max_df: int | None = None,
 ) -> DataFrame:
     """(conv_l, conv_r, overlap, jaccard): conversation pairs whose distinct
     turn-fingerprint sets have Jaccard >= threshold. Exact (no hashing loss:
     a qualifying pair shares >= 1 fingerprint, so the fp join is lossless).
-
-    `max_df` drops fingerprints present in more than that many conversations
-    from the universe (numerator AND denominator) -- the boilerplate bound
-    that keeps the self-join skew-free at scale. None = exact semantics.
     """
     fps = conv_fingerprints(df, conv_col, text_col)
-    if max_df is not None:
-        keep = fps.groupBy("fp").count().where(F.col("count") <= max_df)
-        fps = fps.join(keep.select("fp"), "fp", "left_semi")
     sizes = fps.groupBy("conv_id").agg(F.count("*").alias("n"))
     inter = (
         fps.alias("a")

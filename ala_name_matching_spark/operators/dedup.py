@@ -482,7 +482,6 @@ def simhash_near_duplicates(
     text_col: str = "text",
     max_hamming: int = 3,
     n_bands: int = 4,
-    bucket_cap: int | None = DEFAULT_BUCKET_CAP,
     return_stats: bool = False,
 ) -> DataFrame:
     """Near-dups by SimHash hamming distance <= max_hamming.
@@ -490,10 +489,11 @@ def simhash_near_duplicates(
     Banded candidate generation (Charikar/Manku-style): the 64-bit
     fingerprint is split into `n_bands` equal bit-bands; candidates are
     pairs agreeing on >= 1 band. Pigeonhole guarantee: every pair with
-    hamming <= n_bands - 1 is found (a bucket SPLIT by the cap weakens this
-    to within-sub-bucket pairs -- the lost-pair count is reported in the
-    stats frame; pass return_stats=True). Hamming verification is JVM
-    bit_count(xor); the explode is linear in rows x bands.
+    hamming <= n_bands - 1 is found (a bucket over DEFAULT_BUCKET_CAP is
+    SPLIT by cap_lsh_buckets, which weakens this to within-sub-bucket pairs
+    -- the lost-pair count is reported in the stats frame; pass
+    return_stats=True). Hamming verification is JVM bit_count(xor); the
+    explode is linear in rows x bands.
     """
     band_bits = 64 // n_bands
     mask = (1 << band_bits) - 1
@@ -520,12 +520,10 @@ def simhash_near_duplicates(
     from pyspark import StorageLevel
 
     blocked = blocked.persist(StorageLevel.MEMORY_AND_DISK)
-    stats = None
-    if bucket_cap:
-        blocked, stats = cap_lsh_buckets(blocked, "bucket", bucket_cap)
-        # capped table feeds both self-join sides: persist so the cap stage
-        # runs once (the pre-cap cache feeds the cap's agg + join)
-        blocked = blocked.persist(StorageLevel.MEMORY_AND_DISK)
+    blocked, stats = cap_lsh_buckets(blocked, "bucket", DEFAULT_BUCKET_CAP)
+    # capped table feeds both self-join sides: persist so the cap stage
+    # runs once (the pre-cap cache feeds the cap's agg + join)
+    blocked = blocked.persist(StorageLevel.MEMORY_AND_DISK)
     left = blocked.select("bucket", F.col("doc_id").alias("doc_id_l"), F.col("fp").alias("fp_l"))
     right = blocked.select("bucket", F.col("doc_id").alias("doc_id_r"), F.col("fp").alias("fp_r"))
     pairs = (
@@ -537,12 +535,6 @@ def simhash_near_duplicates(
         .distinct()
     )
     if return_stats:
-        if stats is None:
-            stats = blocked.groupBy("bucket").agg(
-                F.count("*").alias("bucket_size"),
-                F.lit(1).alias("n_salts"),
-                F.lit(0).cast("long").alias("lost_pairs"),
-            )
         return pairs, stats
     return pairs
 

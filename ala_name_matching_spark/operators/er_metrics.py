@@ -85,8 +85,7 @@ def pair_quality(
 def blocking_quality(
     blocks: DataFrame,
     gold: DataFrame,
-    n_records: int | None = None,
-    records: DataFrame | None = None,
+    records: DataFrame,
     block_col: str = "block_id",
     id_col: str = "record_id",
     gold_cols: tuple[str, str] = ("record_id_l", "record_id_r"),
@@ -97,16 +96,13 @@ def blocking_quality(
     the comparison budget the match step will actually pay (a pair in two
     blocks is scored twice unless deduped), computable from one groupBy
     without materializing any pair. A gold pair is covered when its two
-    records share >= 1 block. Pass n_records (or a `records` frame to
-    count) for the all-pairs denominator.
+    records share >= 1 block. The distinct ids of `records` give the
+    all-pairs denominator.
 
     reduction_ratio = 1 - n_candidates / (n*(n-1)/2)   (clamped >= 0)
     pairs_completeness = n_gold_covered / n_gold
     """
-    if n_records is None:
-        if records is None:
-            raise ValueError("pass n_records or records")
-        n_records = records.select(id_col).distinct().count()
+    n_records = records.select(id_col).distinct().count()
     sizes = blocks.groupBy(block_col).agg(F.count("*").alias("s"))
     cand = sizes.agg(
         F.coalesce(

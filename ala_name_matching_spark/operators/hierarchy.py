@@ -10,10 +10,9 @@ V2 in SURVEY.md §2).
 Spark-first design: the hierarchy table (taxonomy analog) is orders of
 magnitude smaller than the record corpus -- the reference itself walks it
 sequentially in memory -- so the primary lane is a driver DFS over a
-collected edge list (gated by `max_driver_nodes`, default
-`_DRIVER_TREE_MAX_NODES` = 5M nodes, the same discipline as the clustering
-driver lane). For hierarchies too large to collect there is a
-distributed lane: subtree sizes bottom-up + DFS offsets top-down, one
+collected edge list (gated by `_DRIVER_TREE_MAX_NODES` = 5M nodes, the
+same discipline as the clustering driver lane). For hierarchies too large
+to collect there is a distributed lane: subtree sizes bottom-up + DFS offsets top-down, one
 bounded join iteration per tree level (depth iterations, NOT node
 iterations -- taxonomic/org trees are shallow). Both lanes produce identical
 intervals given the same deterministic child ordering (sort by node id).
@@ -29,7 +28,6 @@ _DRIVER_TREE_MAX_NODES = 5_000_000
 
 def nested_set_encode(
     edges: DataFrame,
-    max_driver_nodes: int | None = None,
     max_depth: int = 32,
 ) -> DataFrame:
     """(node_id, lft, rgt, depth) nested-set labels for a forest.
@@ -41,10 +39,7 @@ def nested_set_encode(
     node_id order. Containment test: descendant(d, a) iff
     a.lft < d.lft AND d.rgt < a.rgt.
     """
-    if max_driver_nodes is None:
-        max_driver_nodes = _DRIVER_TREE_MAX_NODES
-    n_nodes = edges.count()
-    if n_nodes <= max_driver_nodes:
+    if edges.count() <= _DRIVER_TREE_MAX_NODES:
         pdf = edges.select("node_id", "parent_id").toPandas()
         out = _driver_nested_set(
             list(zip(pdf["node_id"], pdf["parent_id"]))

@@ -79,7 +79,6 @@ def search_ladder(
     queries: DataFrame,
     index: DataFrame,
     threshold: float = DEFAULT_MATCH_THRESHOLD,
-    priority_col: str | None = None,
 ) -> DataFrame:
     """Match each query row to its best index row through the tier ladder.
 
@@ -112,10 +111,7 @@ def search_ladder(
 
     q = _prep(queries)
     idx = _prep(index)
-    idx = idx.withColumn(
-        "priority",
-        F.col(priority_col) if priority_col else F.length(F.col("canon_text")),
-    )
+    idx = idx.withColumn("priority", F.length(F.col("canon_text")))
 
     tiers = [
         ("norm_key", "EXACT"),

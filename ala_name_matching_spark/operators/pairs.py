@@ -35,15 +35,13 @@ PAYLOAD_COLS = ["record_id", "canon_text", "role", "tool", "phonetic_tokens"]
 AUTHOR_SIM_THRESHOLD = 0.8
 
 
-def candidate_pairs(salted_blocks: DataFrame, dedupe: bool = True) -> DataFrame:
+def candidate_pairs(salted_blocks: DataFrame) -> DataFrame:
     """Unordered candidate pairs from the salted block table.
 
     Shuffle profile: one hash-partitioned self-join on block_id (bounded per
-    block by the salting cap -> no quadratic straggler), then -- only when
-    several tiers can propose the same pair -- one distinct on
-    (record_id_l, record_id_r). With a single blocking tier the salted
-    sub-blocks are disjoint, duplicates are impossible, and `dedupe=False`
-    skips a full pair-table shuffle.
+    block by the salting cap -> no quadratic straggler), then one distinct
+    on (record_id_l, record_id_r), since several tiers can propose the same
+    pair.
     """
     left = salted_blocks.select(
         F.col("block_id"), F.col("record_id").alias("record_id_l")
@@ -54,8 +52,7 @@ def candidate_pairs(salted_blocks: DataFrame, dedupe: bool = True) -> DataFrame:
     pairs = left.join(right, "block_id").filter(
         F.col("record_id_l") < F.col("record_id_r")
     )
-    pairs = pairs.select("record_id_l", "record_id_r")
-    return pairs.distinct() if dedupe else pairs
+    return pairs.select("record_id_l", "record_id_r").distinct()
 
 
 def payload_pairs(
@@ -96,9 +93,7 @@ def payload_pairs(
 
 def apply_pair_scores(
     joined: DataFrame,
-    has_tokens: bool = True,
     min_partitions: int | None = None,
-    author_metric: str = "jw",
 ) -> DataFrame:
     """A1 scoring + V5 gate over a pair frame that already carries payloads.
 
@@ -109,14 +104,7 @@ def apply_pair_scores(
     regime; with well-bounded pair volumes (narrow blocking keys) the extra
     shuffle of the payload-heavy pair rows costs more than it saves, so the
     default is no repartition.
-
-    author_metric: "jw" (default; the fast vectorized kernel) or "swg"
-    (Smith-Waterman-Gotoh -- the metric the reference actually calls at
-    ALANameSearcher.java:1381-1391; ~30x more DP work per pair, so opt-in
-    for author-shaped short fields, parity-tested in tests/test_swg.py).
     """
-    if author_metric not in ("jw", "swg"):
-        raise ValueError(f"author_metric must be 'jw' or 'swg', got {author_metric!r}")
     if min_partitions:
         joined = joined.repartition(min_partitions)
     cols = pair_score_cols(
@@ -126,8 +114,8 @@ def apply_pair_scores(
         F.col("role_r"),
         F.col("tool_l"),
         F.col("tool_r"),
-        F.col("phonetic_tokens_l") if has_tokens else None,
-        F.col("phonetic_tokens_r") if has_tokens else None,
+        F.col("phonetic_tokens_l"),
+        F.col("phonetic_tokens_r"),
     )
     out = joined
     for name, col in cols.items():
@@ -150,13 +138,7 @@ def apply_pair_scores(
     # hard conflict. role remains hard: it is the structural homonym axis.
     prep_l = F.regexp_replace(F.col("tool_l"), r"[\p{P}\s]", "")
     prep_r = F.regexp_replace(F.col("tool_r"), r"[\p{P}\s]", "")
-    if author_metric == "swg":
-        from ala_name_matching_spark.functions.swg import swg_udf
-
-        author_sim_col = swg_udf()(prep_l, prep_r)
-    else:
-        author_sim_col = jaro_winkler_udf(prep_l, prep_r)
-    author_similar = author_sim_col >= AUTHOR_SIM_THRESHOLD
+    author_similar = jaro_winkler_udf(prep_l, prep_r) >= AUTHOR_SIM_THRESHOLD
     tool_conflict = (
         F.col("tool_l").isNotNull()
         & F.col("tool_r").isNotNull()

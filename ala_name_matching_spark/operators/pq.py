@@ -228,11 +228,9 @@ def pq_adc_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    dim: int | None = None,
-    codebooks: DataFrame | None = None,
 ) -> DataFrame:
-    """End-to-end PQ search: train (unless codebooks given), encode the
-    corpus, answer every query by ADC.
+    """End-to-end PQ search: train the codebooks, encode the corpus, answer
+    every query by ADC.
 
     Output: (query_id, vec_id, adist, rank) -- the topk nearest by
     approximate squared L2 distance, rank 1-based, ties to lower vec_id.
@@ -241,13 +239,9 @@ def pq_adc_topk(
     AFTER ranking on the unrounded value would reintroduce engine skew --
     so the rank orders by the ROUNDED sum, which both engines share.
     """
-    if dim is None:
-        dim = int(vectors.select(F.size(vec_col).alias("d")).first()["d"])
+    dim = int(vectors.select(F.size(vec_col).alias("d")).first()["d"])
     subdim = dim // m_subs
-    if codebooks is None:
-        codebooks = train_pq_codebooks(
-            vectors, m_subs, k, iters, id_col, vec_col, dim
-        )
+    codebooks = train_pq_codebooks(vectors, m_subs, k, iters, id_col, vec_col, dim)
     codes = pq_encode(vectors, codebooks, m_subs, subdim, id_col, vec_col)
 
     qsv = _subvectors(queries, m_subs, subdim, query_id_col, vec_col).select(
@@ -376,7 +370,6 @@ def ivfpq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    dim: int | None = None,
     exclude_self: bool = True,
 ) -> DataFrame:
     """IVF-PQ composition -- the FAISS default index shape: the IVF
@@ -401,8 +394,7 @@ def ivfpq_topk(
         ivf_train_centroids,
     )
 
-    if dim is None:
-        dim = int(vectors.select(F.size(vec_col).alias("d")).first()["d"])
+    dim = int(vectors.select(F.size(vec_col).alias("d")).first()["d"])
     subdim = dim // m_subs
 
     centroids = ivf_train_centroids(vectors, n_centroids, vec_col=vec_col)

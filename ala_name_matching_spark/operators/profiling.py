@@ -14,40 +14,27 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def profile_columns(
-    df: DataFrame,
-    cols: list[str] | None = None,
-    exact_distinct: bool = True,
-) -> DataFrame:
-    """One row per profiled column:
+def profile_columns(df: DataFrame) -> DataFrame:
+    """One row per column of `df`:
     (col_name, n, n_null, n_distinct, min_str, max_str).
 
     min/max are cast to string so heterogeneous column types stack into one
     table (the Deequ convention); null-only columns yield null min/max.
 
-    SCALE: single pass. With exact_distinct=True the multi-countDistinct
-    agg goes through Catalyst's Expand (input replicated once per distinct
-    aggregate) -- exact and oracle-checkable, the right call up to ~10
-    profiled columns. At 100 TB width, pass exact_distinct=False:
-    approx_count_distinct (HyperLogLog++, relativeSD 5%) profiles any
-    number of columns in one non-expanded pass. Both variants produce ONE
-    aggregate row (no shuffle of data rows -- partial aggs reduce every
+    SCALE: single pass. The multi-countDistinct agg goes through Catalyst's
+    Expand (input replicated once per distinct aggregate) -- exact and
+    oracle-checkable, the right call up to ~10 profiled columns. It produces
+    ONE aggregate row (no shuffle of data rows -- partial aggs reduce every
     partition to a single row) which is then unpivoted driver-free via
     stack().
     """
-    if cols is None:
-        cols = df.columns
-    distinct = (
-        (lambda c: F.count_distinct(F.col(c)))
-        if exact_distinct
-        else (lambda c: F.approx_count_distinct(F.col(c)))
-    )
+    cols = df.columns
     aggs = [F.count(F.lit(1)).alias("__n")]
     for c in cols:
         aggs.extend(
             [
                 F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"{c}__nulls"),
-                distinct(c).alias(f"{c}__distinct"),
+                F.count_distinct(F.col(c)).alias(f"{c}__distinct"),
                 F.min(F.col(c)).cast("string").alias(f"{c}__min"),
                 F.max(F.col(c)).cast("string").alias(f"{c}__max"),
             ]

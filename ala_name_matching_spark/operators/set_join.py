@@ -33,9 +33,8 @@ Scale notes: the vocabulary groupBy and the prefix equi-join are both
 partial-aggregated shuffles on token; candidate verification carries the
 two ranked-token arrays through id joins (array payloads ride exactly two
 shuffles). A still-hot prefix token (a token both rare enough to enter
-prefixes and shared by millions of records) is bounded by max_prefix_df:
-posting lists above the cap are dropped with the same lost-pair
-accounting discipline as cap_lsh_buckets (default None = exact).
+prefixes and shared by millions of records) is not capped: the join stays
+exact, and that token's posting list self-joins in full.
 
 The ranked table is consumed by four plan branches and deliberately NOT
 persisted: measured at sf0.1, recompute is 3.6 s warm vs 7.4 s with an
@@ -103,16 +102,13 @@ def similarity_join(
     id_col: str = "doc_id",
     text_col: str = "text",
     shingle_n: int = 1,
-    max_prefix_df: int | None = None,
 ) -> DataFrame:
     """Exact token-set Jaccard >= threshold self-join via prefix filtering.
 
     Returns (doc_id_l, doc_id_r, overlap, jaccard) with doc_id_l < doc_id_r,
     jaccard rounded to 4 dp for cross-engine hashing (the filter runs on the
-    unrounded value). With max_prefix_df=None the output is EXACT (equal to
-    the brute-force all-pairs join); a cap drops prefix posting lists longer
-    than max_prefix_df, trading bounded recall loss for a hard hot-token
-    ceiling (the dropped df mass is visible in ranked_token_sets' df table).
+    unrounded value). The output is EXACT (equal to the brute-force
+    all-pairs join).
     """
     if not (0.0 < threshold <= 1.0):
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
@@ -126,14 +122,6 @@ def similarity_join(
         "n",
         F.explode(F.slice("toks", 1, prefix_len.cast("int"))).alias("token"),
     )
-    if max_prefix_df is not None:
-        hot = (
-            pref.groupBy("token")
-            .agg(F.count("*").alias("pdf"))
-            .where(F.col("pdf") > max_prefix_df)
-            .select("token")
-        )
-        pref = pref.join(F.broadcast(hot), "token", "left_anti")
 
     # distinct aliases per side: same-lineage `token == token` would hit
     # Spark's ambiguous-self-join detection (it resolves it, with a WARN,

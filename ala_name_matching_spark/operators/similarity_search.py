@@ -298,7 +298,6 @@ def ivf_topk(
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: np.ndarray | None = None,
     rank_rounded: bool = False,
 ) -> DataFrame:
     """IVF-flat ANN top-k: probe the nprobe nearest inverted lists, exact
@@ -318,8 +317,7 @@ def ivf_topk(
     probing all 16 lists reproduces brute force exactly (both asserted in
     tests/test_similarity_search.py).
     """
-    if centroids is None:
-        centroids = ivf_train_centroids(corpus, n_centroids, vec_col=vec_col)
+    centroids = ivf_train_centroids(corpus, n_centroids, vec_col=vec_col)
     home = ivf_assign_udf(centroids, nprobe=1)
     probe = ivf_assign_udf(centroids, nprobe=nprobe)
     c = corpus.select(
@@ -346,7 +344,6 @@ def ivf_topk(
 def embedding_near_duplicates(
     vectors: DataFrame,
     threshold: float = 0.95,
-    dim: int | None = None,
     n_planes: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -360,9 +357,7 @@ def embedding_near_duplicates(
     tradeoff (L narrow (bucket, id, vec) entries per vector). Candidates
     are deduped on ids before the exact cosine verify.
     """
-    if dim is None:
-        first = vectors.select(F.size(vec_col).alias("d")).first()
-        dim = int(first["d"])
+    dim = int(vectors.select(F.size(vec_col).alias("d")).first()["d"])
     sig = lsh_multitable_udf(dim, n_planes, n_tables)
     v = vectors.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v")

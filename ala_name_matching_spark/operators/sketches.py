@@ -50,16 +50,14 @@ def heavy_hitters(
     df: DataFrame,
     col: str,
     phi: float = 0.001,
-    capacity: int | None = None,
 ) -> DataFrame:
     """(item, exact_count) for every value of `col` with frequency > phi*n.
 
-    Exact output via the sketch-then-verify protocol above. `capacity`
-    defaults to ceil(2/phi) -- the factor-2 margin keeps the candidate set
+    Exact output via the sketch-then-verify protocol above. The summary
+    capacity is ceil(2/phi) -- the factor-2 margin keeps the candidate set
     comfortably complete after merging (guarantee needs only ceil(1/phi)).
     """
-    if capacity is None:
-        capacity = int(2.0 / phi) + 1
+    capacity = int(2.0 / phi) + 1
 
     def summarize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         counts: dict = {}

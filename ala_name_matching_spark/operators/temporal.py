@@ -30,7 +30,6 @@ def asof_join(
     payload: list[str] | None = None,
     tiebreak: str | None = None,
     prefix: str = "r_",
-    tolerance_us: int | None = None,
 ) -> DataFrame:
     """Backward-inclusive as-of join (left join semantics).
 
@@ -41,8 +40,7 @@ def asof_join(
 
     `tiebreak`: right column ordering equal-timestamp right rows (the LAST
     under ascending tiebreak wins) -- pass a unique id for determinism when
-    right timestamps can collide. `tolerance_us`: matches older than this
-    many microseconds are nulled (the pandas merge_asof tolerance).
+    right timestamps can collide.
     """
     on = [on] if isinstance(on, str) else list(on)
     if payload is None:
@@ -81,21 +79,7 @@ def asof_join(
         *left_only,
         *[F.last(c, ignorenulls=True).over(w).alias(c) for c in r_cols],
     )
-    out = carried.filter(F.col("__is_left") == 1)
-    if tolerance_us is not None:
-        # cast: parquet timestamps are NTZ and unix_micros requires TIMESTAMP
-        # (sessions run pinned-UTC, so the cast is value-preserving)
-        stale = (
-            F.unix_micros(F.col("__ts").cast("timestamp"))
-            - F.unix_micros(F.col(f"{prefix}{right_ts}").cast("timestamp"))
-        ) > tolerance_us
-        out = out.select(
-            *on,
-            "__ts",
-            *left_only,
-            *[F.when(stale, F.lit(None)).otherwise(F.col(c)).alias(c) for c in r_cols],
-        )
-    return out.select(
+    return carried.filter(F.col("__is_left") == 1).select(
         *on, F.col("__ts").alias(left_ts), *left_only, *r_cols
     )
 
@@ -103,7 +87,6 @@ def asof_join(
 def rollup_cascade(
     events: DataFrame,
     ts_col: str = "ts",
-    group_cols: list[str] | None = None,
     value_col: str = "value",
     resolutions: tuple[str, ...] = ("minute", "hour", "day"),
 ) -> DataFrame:
@@ -111,7 +94,7 @@ def rollup_cascade(
     time resolutions, where each COARSER level is re-aggregated from the
     next FINER level's output -- the raw table is scanned exactly once.
 
-    (resolution, bucket_start, <group_cols...>, n_events, sum_value).
+    (resolution, bucket_start, event_type, n_events, sum_value).
 
     SCALE: this is the TimescaleDB/Druid rollup discipline. At 100 TB the
     minute-level aggregate is ~6 orders of magnitude smaller than raw
@@ -121,13 +104,11 @@ def rollup_cascade(
     reconstructed downstream as sum/count. Correctness of the cascade is
     oracle-checked against direct per-resolution GROUP BYs over raw.
     """
-    if group_cols is None:
-        group_cols = ["event_type"]
     from pyspark import StorageLevel
 
     fine, *coarser = resolutions
     level = events.groupBy(
-        F.date_trunc(fine, F.col(ts_col)).alias("bucket_start"), *group_cols
+        F.date_trunc(fine, F.col(ts_col)).alias("bucket_start"), "event_type"
     ).agg(
         F.count("*").alias("n_events"),
         F.sum(value_col).alias("sum_value"),
@@ -135,35 +116,40 @@ def rollup_cascade(
     # persist each level: WITHOUT it the lazy DAG recomputes the fine
     # aggregate (and its raw scan) once per union branch -- three raw scans,
     # exactly what the cascade exists to avoid. In production each level is
-    # a committed table, not a cache.
-    level = level.persist(StorageLevel.MEMORY_AND_DISK)
-    out = [level.select(F.lit(fine).alias("resolution"), "*")]
-    for res in coarser:
-        level = level.groupBy(
-            F.date_trunc(res, F.col("bucket_start")).alias("bucket_start"),
-            *group_cols,
-        ).agg(
-            F.sum("n_events").alias("n_events"),
-            F.sum("sum_value").alias("sum_value"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        out.append(level.select(F.lit(res).alias("resolution"), "*"))
-    result = out[0]
-    for lvl in out[1:]:
-        result = result.unionByName(lvl)
-    return result.select(
-        "resolution",
-        "bucket_start",
-        *group_cols,
-        "n_events",
-        F.round("sum_value", 4).alias("sum_value"),
-    )
+    # a committed table, not a cache. The union is checkpointed eagerly so
+    # the levels can be released before returning.
+    levels = [level.persist(StorageLevel.MEMORY_AND_DISK)]
+    try:
+        out = [level.select(F.lit(fine).alias("resolution"), "*")]
+        for res in coarser:
+            level = level.groupBy(
+                F.date_trunc(res, F.col("bucket_start")).alias("bucket_start"),
+                "event_type",
+            ).agg(
+                F.sum("n_events").alias("n_events"),
+                F.sum("sum_value").alias("sum_value"),
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+            levels.append(level)
+            out.append(level.select(F.lit(res).alias("resolution"), "*"))
+        result = out[0]
+        for lvl in out[1:]:
+            result = result.unionByName(lvl)
+        return result.select(
+            "resolution",
+            "bucket_start",
+            "event_type",
+            "n_events",
+            F.round("sum_value", 4).alias("sum_value"),
+        ).localCheckpoint(eager=True)
+    finally:
+        for lvl in levels:
+            lvl.unpersist()
 
 
 def scd2_intervals(
     changes: DataFrame,
     key_cols: list[str] | str = "user_id",
     ts_col: str = "ts",
-    attr_cols: list[str] | None = None,
     tiebreak: str | None = None,
 ) -> DataFrame:
     """Slowly-changing-dimension type 2: a change log -> versioned rows with
@@ -178,10 +164,7 @@ def scd2_intervals(
     if idempotent writes should merge.
     """
     key_cols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    if attr_cols is None:
-        attr_cols = [
-            c for c in changes.columns if c not in key_cols + [ts_col]
-        ]
+    attr_cols = [c for c in changes.columns if c not in key_cols + [ts_col]]
     order = [F.col(ts_col)] + ([F.col(tiebreak)] if tiebreak else [])
     w = Window.partitionBy(*key_cols).orderBy(*order)
     return changes.select(

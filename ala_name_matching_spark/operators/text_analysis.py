@@ -257,7 +257,6 @@ def tfidf_topk(
     k: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n_docs: int | None = None,
 ):
     """Top-k TF-IDF terms per document (keyword extraction / corpus
     characterization). tfidf = tf * ln(N / df); ties broken by term asc so
@@ -266,15 +265,12 @@ def tfidf_topk(
     Scale shape: one explode + a (doc, term) count (map-side combinable),
     a term-level df aggregation (small: vocabulary-sized, broadcast back),
     and a per-doc window over candidate terms only. N comes from a count
-    when not supplied -- at 100 TB pass the table's footer/snapshot row
-    count instead of paying a scan. Equal-(tf, df) terms get byte-identical
-    scores in any engine, so the term-asc tie-break makes the top-k
-    engine-reproducible.
+    of `docs`. Equal-(tf, df) terms get byte-identical scores in any
+    engine, so the term-asc tie-break makes the top-k engine-reproducible.
     """
     from pyspark.sql import Window
 
-    if n_docs is None:
-        n_docs = docs.count()
+    n_docs = docs.count()
     tf = (
         docs.select(F.col(id_col).alias("doc_id"), F.explode(_tokens(F.col(text_col))).alias("term"))
         .groupBy("doc_id", "term")

@@ -64,11 +64,6 @@ from ala_name_matching_spark.sources.checkpoints import CheckpointManager
 class PipelineConfig:
     block_cap: int = DEFAULT_BLOCK_CAP
     match_threshold: float = DEFAULT_MATCH_THRESHOLD
-    # 20-byte binary record ids (blocking.with_record_id(binary=True)):
-    # ~3x lighter CC-label/edge/pair shuffle bytes than conv-string ids at
-    # 10^12 rows; cluster partitions are identical
-    # (tests/test_pipeline_e2e.py::test_binary_id_lane_cluster_parity)
-    binary_ids: bool = False
 
 
 def _driver_label_artifact(ckpt: CheckpointManager) -> bool:
@@ -131,7 +126,7 @@ def run_pipeline(
         # No phonetic kernel (reps re-derive it post-agg), no norm/canon
         # text (restored lazily below) -- p1 is a pure JVM projection and
         # its write bytes are ~halved (pipeline_features docstring).
-        lambda: pipeline_features(transcripts, binary_ids=cfg.binary_ids),
+        lambda: pipeline_features(transcripts),
     )
     # NOTE on caching: measured at 120k turns, persist()ing features is a
     # net LOSS (102 s vs 83 s e2e) -- the phonetic_tokens arrays are heavy to

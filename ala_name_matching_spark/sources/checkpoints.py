@@ -78,7 +78,7 @@ class CheckpointManager:
         n = self.row_count(name)
         return df.count() if n is None else n
 
-    def materialize(self, phase: str, df: DataFrame, partition_by: list[str] | None = None) -> DataFrame:
+    def materialize(self, phase: str, df: DataFrame) -> DataFrame:
         """Write the phase output (snapshot commit analog) and read it back.
 
         Reading back truncates lineage -- the checkpoint doubles as the
@@ -90,10 +90,7 @@ class CheckpointManager:
         if self.exists(phase):
             return self.read(phase)
         t0 = time.time()
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(self._path(phase))
+        df.write.mode("overwrite").parquet(self._path(phase))
         out = self.read(phase)
         # Per-partition lineage rows (S5): one output file per write task, so
         # parquet footers carry the per-partition row counts -- metadata-only,

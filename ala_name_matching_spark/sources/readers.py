@@ -9,7 +9,6 @@ have no wrapper: callers use `spark.read` directly.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def write_table(df: DataFrame, path: str, fmt: str = "parquet", mode: str = "overwrite"):
@@ -54,8 +53,6 @@ def compact_table(
     spark: SparkSession,
     path: str,
     target_file_mb: int = 128,
-    slack: float = 1.5,
-    collapse_partitions: dict | None = None,
 ) -> dict:
     """S3 -- small-file compaction of a parquet table directory (the
     reference's index optimize/forceMerge(1), DwcaNameIndexer.java:614-626;
@@ -66,7 +63,7 @@ def compact_table(
     pay one task + one footer read per file (10^6 small files = a dead
     NameNode/S3 listing and a 10^6-task scan). Bin-pack: n_target =
     ceil(total_bytes / target); skipped unless the current file count
-    exceeds n_target * slack (idempotent -- re-running on a compacted table
+    exceeds 1.5 * n_target (idempotent -- re-running on a compacted table
     is a no-op). The rewrite is coalesce(n_target) -- a NARROW rewrite, no
     shuffle: each output task concatenates whole input splits.
 
@@ -80,14 +77,8 @@ def compact_table(
     the original untouched and the tmp dir removed. A crash between delete
     and rename is recoverable from the tmp dir.
 
-    `collapse_partitions` handles tables whose layout is partitioned by a
-    lineage column (the retrieval index's `epoch`): pass {"epoch": -1} to
-    rewrite every partition's rows under the single given value while
-    KEEPING the partitionBy layout -- the Lucene forceMerge analogy
-    (segment identity is gone, directory contract preserved, so future
-    streaming appends still land in a consistent structure). Without it a
-    partitioned table would be rewritten flat and the next epoch=N append
-    would create a conflicting directory structure.
+    The rewrite is flat: a table partitioned by directory is not kept in
+    its partitionBy layout.
 
     Returns {files_before, bytes_total, files_after, compacted} (+
     skipped_reason when refused).
@@ -111,21 +102,10 @@ def compact_table(
     if fs.exists(sink_log):
         stats["skipped_reason"] = "streaming-sink _spark_metadata present"
         return stats
-    if len(files) <= n_target * slack:
+    if len(files) <= n_target * 1.5:
         return stats
     tmp = path.rstrip("/") + "._compact_tmp"
-    df = spark.read.parquet(path)
-    if collapse_partitions:
-        for c, v in collapse_partitions.items():
-            df = df.withColumn(c, F.lit(v))
-        writer = (
-            df.coalesce(n_target)
-            .write.mode("overwrite")
-            .partitionBy(*collapse_partitions)
-        )
-    else:
-        writer = df.coalesce(n_target).write.mode("overwrite")
-    writer.parquet(tmp)
+    spark.read.parquet(path).coalesce(n_target).write.mode("overwrite").parquet(tmp)
     # best-effort concurrent-writer guard: abort if the listing changed
     # while we rewrote (still a race window -- see docstring contract)
     if sorted(_list_data_files(spark, path)) != sorted(files):

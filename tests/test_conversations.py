@@ -48,31 +48,6 @@ def test_neardup_normalization_and_distinct_turns(spark):
     assert got[0]["jaccard"] == 1.0 and got[0]["overlap"] == 2
 
 
-def test_neardup_max_df_drops_boilerplate(spark):
-    """A greeting shared by every conversation must not connect otherwise
-    unrelated conversations once max_df excludes it -- and it leaves the
-    denominator too (set semantics over the informative universe)."""
-    rows = (
-        _conv("a", ["hi", "alpha", "beta"])
-        + _conv("b", ["hi", "gamma", "delta"])
-        + _conv("c", ["hi", "alpha", "beta"])
-    )
-    df = _df(spark, rows)
-    # exact: all three pair up through "hi" (a-b at J=1/5 < 0.5 drops anyway;
-    # a-c at J=1.0 stays)
-    exact = {
-        (r["conv_l"], r["conv_r"])
-        for r in conv_neardup_pairs(df, threshold=0.5).collect()
-    }
-    assert exact == {("a", "c")}
-    # capped at max_df=2: "hi" (df=3) leaves the universe; a-c still J=1.0
-    capped = {
-        (r["conv_l"], r["conv_r"], r["overlap"], r["jaccard"])
-        for r in conv_neardup_pairs(df, threshold=0.5, max_df=2).collect()
-    }
-    assert capped == {("a", "c", 2, 1.0)}
-
-
 def test_prefix_pairs_strict_and_order_sensitive(spark):
     """p is the first 2 turns of f (match); s has the SAME TURN SET as p in
     reversed order (no match -- prefixes are ordered); u is unrelated."""
@@ -179,22 +154,6 @@ def test_render_conversations_order_and_text_equality(spark):
     # per-turn text equality: every turn's text appears verbatim
     for t in rows["text"]:
         assert t in out[rows[rows["text"] == t]["conv_id"].iloc[0]]["text"]
-
-
-def test_render_conversations_without_roles(spark):
-    import pandas as pd
-
-    from ala_name_matching_spark.operators.conversations import (
-        render_conversations,
-    )
-
-    rows = pd.DataFrame(
-        {"conv_id": ["c", "c"], "turn_idx": [1, 0], "text": ["y", "x"]}
-    )
-    out = render_conversations(
-        spark.createDataFrame(rows), role_col=None
-    ).collect()
-    assert out[0]["text"] == "x\ny"
 
 
 def test_extract_sft_pairs_adjacency(spark):

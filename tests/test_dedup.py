@@ -161,20 +161,12 @@ def test_band_keys_match_hashlib_replay(spark):
     assert {tuple(r) for r in got.collect()} == want
 
 
-def test_simhash_pigeonhole_exact_recall(spark):
-    """Pigeonhole property, exhaustively: with n_bands=4 and max_hamming<=3,
-    the banded candidate generation finds EVERY pair an exact all-pairs
-    hamming scan finds (uncapped buckets) -- banding only prunes, never
-    misses inside the guarantee radius."""
+def _simhash_docs(spark):
+    """60 light random word substitutions of one sentence: a spread of
+    small hamming distances."""
     import random
 
     import pandas as pd
-    from pyspark.sql import functions as F
-
-    from ala_name_matching_spark.operators.dedup import (
-        simhash_near_duplicates,
-        simhash_udf,
-    )
 
     rng = random.Random(7)
     vocab = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta"]
@@ -182,17 +174,28 @@ def test_simhash_pigeonhole_exact_recall(spark):
     rows = []
     for i in range(60):
         words = base[0].split()
-        # light random substitutions create a spread of hamming distances
         for _ in range(rng.randrange(0, 3)):
             words[rng.randrange(len(words))] = rng.choice(vocab)
         rows.append((i, " ".join(words)))
-    docs = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
+    return spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
 
+
+def test_simhash_pigeonhole_exact_recall(spark):
+    """Pigeonhole property, exhaustively: with n_bands=4 and max_hamming<=3,
+    the banded candidate generation finds EVERY pair an exact all-pairs
+    hamming scan finds (no bucket reaches the cap) -- banding only prunes,
+    never misses inside the guarantee radius."""
+    from pyspark.sql import functions as F
+
+    from ala_name_matching_spark.operators.dedup import (
+        simhash_near_duplicates,
+        simhash_udf,
+    )
+
+    docs = _simhash_docs(spark)
     banded = {
         (r["doc_id_l"], r["doc_id_r"])
-        for r in simhash_near_duplicates(
-            docs, max_hamming=3, n_bands=4, bucket_cap=None
-        ).collect()
+        for r in simhash_near_duplicates(docs, max_hamming=3, n_bands=4).collect()
     }
     fp = docs.select("doc_id", simhash_udf(F.col("text")).alias("fp"))
     l = fp.select(F.col("doc_id").alias("l"), F.col("fp").alias("fl"))
@@ -206,6 +209,31 @@ def test_simhash_pigeonhole_exact_recall(spark):
     }
     assert banded == exact
     assert len(exact) > 0  # the fixture actually produced near-dups
+
+
+def test_simhash_return_stats_lost_pair_ledger(spark, monkeypatch):
+    """return_stats=True reports each bucket's split: under a cap above the
+    largest bucket nothing is lost; under a tiny cap buckets split, the
+    ledger counts lost pairs, and the surviving pairs are a subset."""
+    from pyspark.sql import functions as F
+
+    from ala_name_matching_spark.operators import dedup
+
+    docs = _simhash_docs(spark)
+
+    def run():
+        pairs, stats = dedup.simhash_near_duplicates(
+            docs, max_hamming=3, n_bands=4, return_stats=True
+        )
+        got = {(r["doc_id_l"], r["doc_id_r"]) for r in pairs.collect()}
+        return got, stats.agg(F.max("bucket_size"), F.sum("lost_pairs")).first()
+
+    whole, (largest, lost) = run()
+    assert largest < dedup.DEFAULT_BUCKET_CAP and lost == 0
+    monkeypatch.setattr(dedup, "DEFAULT_BUCKET_CAP", 4)
+    split, (_, lost) = run()
+    assert lost > 0
+    assert split < whole
 
 
 # --- exact-Jaccard CC lane ----------------------------------------------------

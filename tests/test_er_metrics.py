@@ -55,7 +55,8 @@ def test_blocking_quality_counts(spark):
     gold = _pairs(
         spark, [("a", "b"), ("a", "d")], cols=("record_id_l", "record_id_r")
     )
-    r = blocking_quality(blocks, gold, n_records=5).collect()[0]
+    records = spark.createDataFrame([(c,) for c in "abcde"], "record_id string")
+    r = blocking_quality(blocks, gold, records).collect()[0]
     assert (r["n_records"], r["n_candidates"]) == (5, 4)
     assert (r["n_gold"], r["n_gold_covered"]) == (2, 1)
     assert r["reduction_ratio"] == 0.6
@@ -72,7 +73,7 @@ def test_blocking_quality_multiblock_pair_counted_once_for_coverage(spark):
         )
     )
     gold = _pairs(spark, [("a", "b")], cols=("record_id_l", "record_id_r"))
-    r = blocking_quality(blocks, gold, n_records=2).collect()[0]
+    r = blocking_quality(blocks, gold, blocks).collect()[0]
     assert r["n_candidates"] == 2  # multiset budget
     assert r["n_gold_covered"] == 1
     assert r["pairs_completeness"] == 1.0

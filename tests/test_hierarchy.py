@@ -3,6 +3,7 @@ parity, V2 species-split containment."""
 
 import pandas as pd
 
+from ala_name_matching_spark.operators import hierarchy
 from ala_name_matching_spark.operators.hierarchy import (
     nested_set_encode,
     species_split_check,
@@ -38,21 +39,16 @@ def test_nested_set_golden(spark):
     assert out["a"]["lft"] < out["d"]["lft"] < out["d"]["rgt"] < out["a"]["rgt"]
 
 
-def test_driver_distributed_parity(spark):
+def test_driver_distributed_parity(spark, monkeypatch):
     # deterministic random-ish forest: 3 roots, branching by modulus
     pairs = [("n000", None), ("n001", None), ("n002", None)]
     for i in range(3, 120):
         parent = i // 3  # shallow wide tree, depth ~ log3
         pairs.append((f"n{i:03d}", f"n{parent:03d}"))
     edges = _edges(spark, pairs)
-    want = sorted(
-        nested_set_encode(edges, max_driver_nodes=10**9).collect(),
-        key=lambda r: r["node_id"],
-    )
-    got = sorted(
-        nested_set_encode(edges, max_driver_nodes=0).collect(),
-        key=lambda r: r["node_id"],
-    )
+    want = sorted(nested_set_encode(edges).collect(), key=lambda r: r["node_id"])
+    monkeypatch.setattr(hierarchy, "_DRIVER_TREE_MAX_NODES", 0)
+    got = sorted(nested_set_encode(edges).collect(), key=lambda r: r["node_id"])
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
 

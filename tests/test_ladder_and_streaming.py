@@ -337,9 +337,7 @@ def test_streamed_index_compaction_preserves_scores(spark, tmp_path):
     key = lambda r: (r["query_id"], r["doc_id"], r["score"], r["rank"])
     before = sorted(map(key, _bm25_topk_from_index(spark, idx, queries).collect()))
     n_before = len(glob.glob(f"{idx}/postings/**/*.parquet", recursive=True))
-    stats = compact_table(
-        spark, f"{idx}/postings", collapse_partitions={"epoch": -1}
-    )
+    stats = compact_table(spark, f"{idx}/postings")
     n_after = len(glob.glob(f"{idx}/postings/**/*.parquet", recursive=True))
     after = sorted(map(key, _bm25_topk_from_index(spark, idx, queries).collect()))
     assert after == before

@@ -1,5 +1,8 @@
 """Guard: the package ships only what a shipped path reaches.
 
+Two checks: every definition has a shipped caller, and every option has a
+shipped setter.
+
 A top-level function or class of the package is live when its name occurs
 as code in a root or in the body of another live definition, taken as a
 transitive closure. The roots are the package's module-level code (every
@@ -14,6 +17,17 @@ it is live itself.
 One module is exempt: `plans/evaluate.py` is the evaluator of the pairwise
 F1 >= 0.99 gate (`tests/test_pipeline_e2e.py`). It is safety code whose only
 caller is that gate test by design, so its definitions are roots too.
+
+An option is a defaulted parameter of a top-level function, or of a method
+of a top-level class, whose name appears in an `if`, conditional-expression
+or `while` test of that function: it selects a branch. It is set when a
+call in a root or in package code passes it by keyword, by position, or
+through `*args` / `**kwargs`. The callee is matched by name (`f(...)` or
+`x.f(...)`); `Class(...)` calls `Class.__init__`, `partial(f, ...)` calls
+`f`, and a method's first parameter (self/cls) takes no positional
+argument unless it is a staticmethod. An option no shipped call sets only
+ever takes its default, so the branch behind it runs only in tests; it
+should be a constant instead. EXEMPT_OPTIONS lists the few kept on purpose.
 """
 
 from __future__ import annotations
@@ -28,6 +42,20 @@ ROOT_EXCLUDED = [os.path.join("perfbench", "tests")]
 EXEMPT = {os.path.join(PKG, "plans", "evaluate.py")}
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
+_TESTS = (ast.If, ast.IfExp, ast.While)
+
+EXEMPT_OPTIONS = {
+    "readers.write_table(fmt)": "a deployment setting: Iceberg is the "
+    "production format, parquet the fallback without the Iceberg runtime",
+    "dedup.minhash_lsh_candidates(return_stats)": "the lost-pair ledger of "
+    "the capped LSH buckets (ROADMAP aim 3)",
+    "dedup.simhash_near_duplicates(return_stats)": "the lost-pair ledger of "
+    "the capped SimHash buckets (ROADMAP aim 3)",
+    "linkage.fs_em_multilevel(m_init)": "test_linkage starts the model at "
+    "fs_em's init to show it reduces exactly to the reference fs_em",
+    "linkage.fs_em_multilevel(u_init)": "as m_init",
+}
 
 
 def _code_names(node: ast.AST) -> set[str]:
@@ -74,6 +102,95 @@ def dead_definitions(
     return sorted(f"{p}:{n.lineno} {n.name}" for p, n in pending)
 
 
+def _functions(path: str, tree: ast.Module):
+    """(name, node, callee names, self offset) of every top-level function
+    and every method of a top-level class; `name` is `module.f` or
+    `module.Class.f`."""
+    module = os.path.splitext(os.path.basename(path))[0]
+    for node in tree.body:
+        if isinstance(node, _FUNCS):
+            yield f"{module}.{node.name}", node, {node.name}, 0
+        elif isinstance(node, ast.ClassDef):
+            for fn in node.body:
+                if not isinstance(fn, _FUNCS):
+                    continue
+                static = any(
+                    isinstance(d, ast.Name) and d.id == "staticmethod"
+                    for d in fn.decorator_list
+                )
+                names = {fn.name} | ({node.name} if fn.name == "__init__" else set())
+                yield f"{module}.{node.name}.{fn.name}", fn, names, 0 if static else 1
+
+
+def _options(fn: ast.FunctionDef) -> list[tuple[str, int | None]]:
+    """(option, positional index or None if keyword-only) of `fn`."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    defaulted = [(p.arg, i) for i, p in enumerate(pos) if i >= len(pos) - len(a.defaults)]
+    defaulted += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    tested = {
+        n.id
+        for sub in ast.walk(fn)
+        if isinstance(sub, _TESTS)
+        for n in ast.walk(sub.test)
+        if isinstance(n, ast.Name)
+    }
+    return [(name, i) for name, i in defaulted if name in tested]
+
+
+def _calls(sources: list[str]) -> dict[str, list[tuple[list, list]]]:
+    """callee name -> [(positional args, keywords)] of every call."""
+    out = {}
+    for text in sources:
+        for node in ast.walk(ast.parse(text)):
+            if not isinstance(node, ast.Call):
+                continue
+            func, args = node.func, node.args
+            if _callee(func) == "partial" and args:
+                func, args = args[0], args[1:]
+            name = _callee(func)
+            if name is not None:
+                out.setdefault(name, []).append((args, node.keywords))
+    return out
+
+
+def _callee(func: ast.AST) -> str | None:
+    if isinstance(func, ast.Name):
+        return func.id
+    if isinstance(func, ast.Attribute):
+        return func.attr
+    return None
+
+
+def _is_set(calls: list[tuple[list, list]], option: str, index: int | None) -> bool:
+    for args, keywords in calls:
+        if any(k.arg is None or k.arg == option for k in keywords):
+            return True
+        if index is not None and (
+            index < len(args) or any(isinstance(a, ast.Starred) for a in args)
+        ):
+            return True
+    return False
+
+
+def unset_options(
+    package: dict[str, str], roots: dict[str, str], exempt: set[str] = frozenset()
+) -> list[str]:
+    """`path:line module.f(option)` of every package option no call in a
+    root or in package code sets; options named in `exempt` are skipped."""
+    calls = _calls(list(roots.values()) + list(package.values()))
+    out = []
+    for path, text in package.items():
+        for name, fn, callees, offset in _functions(path, ast.parse(text)):
+            sites = [c for callee in callees for c in calls.get(callee, [])]
+            for option, index in _options(fn):
+                key = f"{name}({option})"
+                pos = None if index is None else index - offset
+                if key not in exempt and not _is_set(sites, option, pos):
+                    out.append(f"{path}:{fn.lineno} {key}")
+    return sorted(out)
+
+
 def _read_tree(entries: list[str], excluded: list[str] = ()) -> dict[str, str]:
     out = {}
     for entry in entries:
@@ -102,6 +219,15 @@ def test_every_package_definition_is_referenced():
         _read_tree([PKG]), _read_tree(ROOTS, ROOT_EXCLUDED), EXEMPT
     )
     assert not dead, "definitions no shipped path reaches:\n" + "\n".join(dead)
+
+
+def test_every_option_has_a_shipped_setter():
+    package, roots = _read_tree([PKG]), _read_tree(ROOTS, ROOT_EXCLUDED)
+    unset = unset_options(package, roots, set(EXEMPT_OPTIONS))
+    assert not unset, "options no shipped call sets:\n" + "\n".join(unset)
+    # an exemption whose option is gone or now has a setter is stale
+    names = {entry.split()[1] for entry in unset_options(package, roots)}
+    assert set(EXEMPT_OPTIONS) <= names, set(EXEMPT_OPTIONS) - names
 
 
 _LIB = '''
@@ -168,12 +294,79 @@ def recursive_dead():
 '''
 
 
+_OPTS = '''
+from functools import partial
+
+
+def in_test(x, lane=False):
+    return 1 if lane else 0
+
+
+def by_keyword(x, lane=False):
+    if lane:
+        return 1
+
+
+def by_position(x, lane=False):
+    while lane:
+        lane = False
+
+
+def by_partial(x, lane=False):
+    return 1 if lane else 0
+
+
+def by_kwargs(x, lane=False):
+    return 1 if lane else 0
+
+
+def exempt_lane(x, lane=False):
+    return 1 if lane else 0
+
+
+def not_an_option(x, width=3):
+    return x * width
+
+
+class Box:
+    def __init__(self, lane=False):
+        self.v = 1 if lane else 0
+
+    def method(self, lane=False):
+        return 1 if lane else 0
+
+    def unset_method(self, x, lane=False):
+        return 1 if lane else 0
+
+
+def caller():
+    by_keyword(1, lane=True)
+    by_position(1, True)
+    partial(by_partial, 1, True)
+    opts = {"lane": True}
+    by_kwargs(1, **opts)
+    Box(lane=True).method(True)
+    Box().unset_method(True)
+'''
+
+
 def test_guard_scanner_on_an_in_memory_package():
     package = {"pkg/lib.py": _LIB, "pkg/evaluate.py": _EXEMPT_MOD, "pkg/lib2.py": _LIB2}
     roots = {
         "entry.py": 'from pkg.lib import live_entry\nprint(f"{in_fstring()}")\n'
         "live_entry()  # in_comment\n",
     }
+    # Options: set only from a test source (never passed as a root), or a
+    # method's positional argument landing on an earlier parameter: flagged.
+    # Set by keyword, position, partial(...), **kw or Class(...): live. A
+    # defaulted parameter no branch tests is not an option. An exempt
+    # option is skipped, and reported without the exemption.
+    opts = {"pkg/opts.py": _OPTS}
+    flagged = {"opts.Box.unset_method(lane)", "opts.in_test(lane)"}
+    unset = unset_options(opts, roots, {"opts.exempt_lane(lane)"})
+    assert {u.split()[1] for u in unset} == flagged
+    unset = unset_options(opts, roots)
+    assert {u.split()[1] for u in unset} == flagged | {"opts.exempt_lane(lane)"}
     dead = {
         entry.split()[1]
         for entry in dead_definitions(package, roots, {"pkg/evaluate.py"})

@@ -134,30 +134,6 @@ def test_checkpoint_resume(spark, transcripts, tmp_path, monkeypatch):
     assert sum(m["rows"] for m in p5) > 0
 
 
-def test_binary_id_lane_cluster_parity(spark, transcripts, clustered):
-    """The 20-byte binary record-id lane (PipelineConfig.binary_ids) must
-    produce EXACTLY the same cluster partitions as the string lane --
-    cluster labels are lane-local (min id under each encoding), so compare
-    the partition of (conv_id, turn_idx) keys into clusters, not labels."""
-    out_bin = run_pipeline(
-        transcripts.drop("entity_id"), config=PipelineConfig(binary_ids=True)
-    )
-
-    def partition(df):
-        rows = df.select("conv_id", "turn_idx", "cluster_id").collect()
-        by_cluster = {}
-        for r in rows:
-            by_cluster.setdefault(r["cluster_id"], set()).add(
-                (r["conv_id"], r["turn_idx"])
-            )
-        return frozenset(frozenset(v) for v in by_cluster.values())
-
-    assert partition(out_bin) == partition(clustered)
-    # the binary id is fixed-width 20 bytes
-    one = out_bin.select("record_id").first()["record_id"]
-    assert isinstance(one, (bytes, bytearray)) and len(one) == 20
-
-
 def test_repair_pipeline_clusters(spark, tmp_path):
     """Post-process repair at the rep grain: strict=0 must reproduce the
     original partition (relabeled); strict above every score must shatter

@@ -54,7 +54,7 @@ def test_adc_approximates_true_distance(spark):
     q = df.orderBy("vec_id").limit(3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    out = pq_adc_topk(q, df, m_subs=4, k=8, iters=2, topk=50, dim=16)
+    out = pq_adc_topk(q, df, m_subs=4, k=8, iters=2, topk=50)
     rows = out.collect()
     # exact self-match: adist(q, q) is the quantization residual, which is
     # minimal among all vectors sharing ALL codes -- the self vector must
@@ -78,8 +78,8 @@ def test_adc_deterministic_across_runs(spark):
     q = df.orderBy("vec_id").limit(2).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    a = sorted(map(tuple, pq_adc_topk(q, df, m_subs=4, k=6, iters=2, topk=7, dim=16).collect()))
-    b = sorted(map(tuple, pq_adc_topk(q, df, m_subs=4, k=6, iters=2, topk=7, dim=16).collect()))
+    a = sorted(map(tuple, pq_adc_topk(q, df, m_subs=4, k=6, iters=2, topk=7).collect()))
+    b = sorted(map(tuple, pq_adc_topk(q, df, m_subs=4, k=6, iters=2, topk=7).collect()))
     assert a == b
 
 

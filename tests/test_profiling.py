@@ -22,13 +22,6 @@ def test_profile_columns_exact(spark):
     assert (rb["n"], rb["n_null"], rb["n_distinct"], rb["min_str"], rb["max_str"]) == (4, 2, 2, "x", "y")
 
 
-def test_profile_columns_approx_path(spark):
-    # HLL lane: same shape, counts within the documented 5% envelope
-    d = spark.createDataFrame(pd.DataFrame({"a": list(range(100))}))
-    out = profile_columns(d, exact_distinct=False).collect()[0]
-    assert out["n"] == 100 and abs(out["n_distinct"] - 100) <= 10
-
-
 def test_content_checksum_order_invariant_and_sensitive(spark):
     from ala_name_matching_spark.operators.profiling import content_checksum
 

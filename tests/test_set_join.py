@@ -125,27 +125,6 @@ def test_threshold_one_is_exact_duplicates_only(spark):
     assert got == [(1, 2), (1, 4), (2, 4)]
 
 
-def test_max_prefix_df_caps_hot_tokens(spark):
-    # every doc shares the hot token; pairs found ONLY via it are lost
-    # under the cap (documented lossy mode), uniques survive via rare tokens
-    docs = _mkdocs(
-        spark,
-        [
-            (1, "hot a b"),
-            (2, "hot a b"),
-            (3, "hot c d"),
-            (4, "hot c d"),
-            (5, "hot e f"),
-        ],
-    )
-    exact = similarity_join(docs, 0.9).count()
-    capped = similarity_join(docs, 0.9, max_prefix_df=3).count()
-    # rare tokens a/b and c/d still pair 1-2 and 3-4 under the cap
-    assert exact == 2 and capped == 2
-    # with a cap of 0 every posting list is dropped: no candidates at all
-    assert similarity_join(docs, 0.9, max_prefix_df=0).count() == 0
-
-
 def test_invalid_threshold_raises(spark):
     docs = _mkdocs(spark, [(1, "a")])
     with pytest.raises(ValueError):

@@ -140,7 +140,12 @@ def test_author_soft_gate_a4(spark):
         "record_id_l", "record_id_r", "canon_text_l", "canon_text_r",
         "role_l", "role_r", "tool_l", "tool_r",
     ])
-    out = apply_pair_scores(spark.createDataFrame(pdf), has_tokens=False)
+    from pyspark.sql import functions as F
+
+    pairs = spark.createDataFrame(pdf).withColumns(
+        {f"phonetic_tokens_{s}": F.split(f"canon_text_{s}", " ") for s in "lr"}
+    )
+    out = apply_pair_scores(pairs)
     got = {r["record_id_l"]: r["homonym_conflict"] for r in out.collect()}
     assert got == {"a1": False, "b1": True, "c1": True, "d1": False}
 

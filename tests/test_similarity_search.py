@@ -9,7 +9,6 @@ from ala_name_matching_spark.operators.similarity_search import (
     brute_force_topk,
     embedding_near_duplicates,
     ivf_topk,
-    ivf_train_centroids,
     lsh_topk,
 )
 
@@ -75,17 +74,16 @@ def test_ivf_recall_floor_vs_brute_force(spark):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 20)
     truth = {(r["query_id"], r["vec_id"]) for r in brute_force_topk(emb, q, k=5).collect()}
-    cents = ivf_train_centroids(emb, n_centroids=16)
     got = {
         (r["query_id"], r["vec_id"])
-        for r in ivf_topk(emb, q, k=5, nprobe=4, centroids=cents).collect()
+        for r in ivf_topk(emb, q, k=5, n_centroids=16, nprobe=4).collect()
     }
     recall = len(got & truth) / len(truth)
     print(f"IVF recall@5 = {recall:.3f}")
     assert recall >= 0.6
     full = {
         (r["query_id"], r["vec_id"])
-        for r in ivf_topk(emb, q, k=5, nprobe=16, centroids=cents).collect()
+        for r in ivf_topk(emb, q, k=5, n_centroids=16, nprobe=16).collect()
     }
     assert full == truth
 
@@ -129,7 +127,6 @@ def test_ivf_index_roundtrip_matches_inmemory(spark, tmp_path):
         build_ivf_index,
         ivf_topk,
         ivf_topk_from_index,
-        ivf_train_centroids,
     )
 
     corpus = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -140,9 +137,8 @@ def test_ivf_index_roundtrip_matches_inmemory(spark, tmp_path):
         (r["query_id"], r["rank"]): r["vec_id"]
         for r in ivf_topk_from_index(spark, path, queries, k=3, nprobe=3).collect()
     }
-    cents = ivf_train_centroids(corpus, 8)
     in_memory = {
         (r["query_id"], r["rank"]): r["vec_id"]
-        for r in ivf_topk(corpus, queries, k=3, n_centroids=8, nprobe=3, centroids=cents).collect()
+        for r in ivf_topk(corpus, queries, k=3, n_centroids=8, nprobe=3).collect()
     }
     assert from_index == in_memory and len(from_index) == 30

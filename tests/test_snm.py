@@ -10,22 +10,30 @@ from ala_name_matching_spark.operators.blocking import (
 )
 
 
+def _ranks(df, n_parts):
+    """global_rank over `n_parts` range partitions (its shuffle-partition
+    count), as {id: rank}."""
+    conf = df.sparkSession.conf
+    old = conf.get("spark.sql.shuffle.partitions")
+    conf.set("spark.sql.shuffle.partitions", str(n_parts))
+    try:
+        return {r["id"]: r["rank"] for r in global_rank(df, ["k", "id"]).collect()}
+    finally:
+        conf.set("spark.sql.shuffle.partitions", old)
+
+
 def test_global_rank_matches_sorted_order_across_partitions(spark):
     rows = [(i, f"key-{(i * 7919) % 101:03d}") for i in range(300)]
     df = spark.createDataFrame(rows, "id long, k string").repartition(7)
     # force many range partitions so offsets are exercised
-    got = {
-        r["id"]: r["rank"]
-        for r in global_rank(df, ["k", "id"], n_parts=11).collect()
-    }
+    got = _ranks(df, 11)
     want = {id_: i for i, (_, id_) in enumerate(sorted((k, i) for i, k in rows))}
     assert got == want
 
 
 def test_global_rank_more_partitions_than_rows(spark):
     df = spark.createDataFrame([(1, "b"), (2, "a")], "id long, k string")
-    got = {r["id"]: r["rank"] for r in global_rank(df, ["k", "id"], n_parts=16).collect()}
-    assert got == {2: 0, 1: 1}
+    assert _ranks(df, 16) == {2: 0, 1: 1}
 
 
 def _brute_pairs(rows, w):

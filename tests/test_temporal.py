@@ -40,15 +40,6 @@ def test_asof_equal_ts_inclusive_and_tiebreak(spark):
     assert out[0]["r_rv"] == 9  # inclusive at equal ts, last under tiebreak
 
 
-def test_asof_tolerance(spark):
-    left = _mk(spark, [(1, pd.Timestamp("2024-01-01 01:00"), "l0")], ["k", "ts", "lv"])
-    right = _mk(spark, [(1, pd.Timestamp("2024-01-01 00:00"), 5)], ["k", "ts", "rv"])
-    ok = asof_join(left, right, on="k", tolerance_us=3600 * 1_000_000).collect()[0]
-    assert ok["r_rv"] == 5
-    stale = asof_join(left, right, on="k", tolerance_us=60 * 1_000_000).collect()[0]
-    assert stale["r_rv"] is None and stale["r_ts"] is None
-
-
 def test_rollup_cascade_matches_direct(spark):
     """Cascade (hour from minute, day from hour) == direct per-resolution
     GROUP BYs over raw -- the re-aggregability contract."""
@@ -57,9 +48,13 @@ def test_rollup_cascade_matches_direct(spark):
     from ala_name_matching_spark.operators.temporal import rollup_cascade
 
     e = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    spark.catalog.clearCache()  # other tests' caches share this session
+    cascade = rollup_cascade(e)
+    # the persisted levels are released before the call returns
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     got = {
         (r["resolution"], r["bucket_start"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in rollup_cascade(e).collect()
+        for r in cascade.collect()
     }
     for res in ["minute", "hour", "day"]:
         direct = {
