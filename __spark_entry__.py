@@ -2303,7 +2303,7 @@ def _q_cosine_join_pairs(spark, sf_dir):
     # synthetic fixture's ~200-word vocabulary makes EVERY doc pair share
     # terms, so exact all-pairs degenerates to sum(df^2) ~ N^2 candidate
     # rows regardless of algorithm -- a fixture pathology, not an
-    # operator property (Zipfian corpora prune via idf + max_df).
+    # operator property (Zipfian corpora prune via idf).
     from ala_name_matching_spark.operators.cosine_join import (
         tfidf_cosine_join,
     )

@@ -10,11 +10,14 @@ to its point-query mode, implemented in operators/ladder.py for search mode).
 
 Skew handling (north_rule): the reference never faces hot keys (Lucene
 doesn't care); at 10^12 turns a hot block would quadratically explode the
-pair join. We (a) compute block sizes with one aggregation on the key table
-only, (b) split blocks larger than `block_cap` into ceil(size/cap) salted
-sub-blocks via a deterministic hash of the record id, and (c) record
-dropped-pair fractions in the metrics table. AQE skew-join remains on as a
-backstop (session.py).
+pair join. Every bucketing lane -- the ER blocks here and the MinHash,
+SimHash, ICWS and embedding LSH buckets -- caps its buckets with one rule
+(salt_split, salt_sql): a bucket larger than the cap is split into
+ceil(size/cap) salted sub-buckets by a deterministic hash of the row id,
+and the pairs the split loses are counted. ER blocks keep a block table
+for p4's payload self-join (salt_and_cap_blocks); the LSH lanes pair inside
+one aggregated row per sub-bucket (capped_buckets, bucket_pairs). AQE
+skew-join remains on as a backstop (session.py).
 """
 
 from __future__ import annotations
@@ -35,6 +38,9 @@ TIER_CANON = 2
 TIER_PHONETIC = 3
 
 DEFAULT_BLOCK_CAP = 200
+# the bucket cap of the LSH lanes (MinHash, SimHash, ICWS, embedding LSH);
+# they read it at call time, so a test can lower it
+LSH_BUCKET_CAP = 2000
 
 
 def with_record_id(df: DataFrame) -> DataFrame:
@@ -259,6 +265,76 @@ def _group_hash_cols(canon_key, role, tool_c) -> list:
     ]
 
 
+def salt_split(sizes: DataFrame, size_col: str, cap: int) -> DataFrame:
+    """Adds (n_salts, lost_pairs) to a frame holding one bucket size per
+    row (`size_col`): the ceil(n/cap) salted split of a bucket over the cap,
+    and the pairs that split loses, C(n,2) minus the pairs of a balanced
+    split (n_salts parts whose sizes differ by at most 1).
+
+    lost_pairs is an UPPER bound on what the real split loses: C(x,2) is
+    convex, so of all splits of n ids into n_salts parts the balanced one
+    keeps the fewest pairs. The hash salt (salt_sql) keeps at least as many,
+    also when one of its salts comes out empty.
+    """
+    n = size_col
+    base, rem = f"CAST({n} / n_salts AS BIGINT)", f"pmod({n}, n_salts)"
+    sub_pairs = f"(n_salts - {rem}) * {base} * ({base} - 1) / 2 + {rem} * ({base} + 1) * {base} / 2"
+    return sizes.selectExpr(
+        "*", f"CASE WHEN {n} <= {cap} THEN 1 ELSE CAST(ceil({n} / {cap}) AS INT) END AS n_salts"
+    ).selectExpr("*", f"CAST({n} * ({n} - 1) / 2 - ({sub_pairs}) AS BIGINT) AS lost_pairs")
+
+
+def salt_sql(id_col: str) -> str:
+    """The salt of a row in a bucket split by salt_split: 0 for an uncapped
+    bucket, else pmod(xxhash64(id), n_salts) -- deterministic, and
+    independent of the bucket key, so a row takes the same salt in every
+    bucket split into the same number of salts."""
+    return f"IF(n_salts = 1, 0, pmod(xxhash64({id_col}), n_salts))"
+
+
+def capped_buckets(
+    entries: DataFrame, keys: list[str], id_col: str, item: str, cap: int
+) -> DataFrame:
+    """(*keys, salt, bucket_size, n_salts, lost_pairs, items): one row per
+    bucket of `entries` (the rows sharing `keys`), or per salted sub-bucket
+    of a bucket over `cap`, with `items` the sorted array of the SQL
+    expression `item` over its rows. The LSH lanes pair inside these rows
+    (bucket_pairs), so no bucket is ever self-joined.
+
+    The bucket size is a window count, so rows are salted (salt_sql on
+    `id_col`) before the collect_list: a mega-bucket is never gathered into
+    one row. The window's exchange on `keys` also satisfies the aggregate's
+    grouping (a superset of `keys`), so the kernel is one shuffle and reads
+    `entries` once. lost_pairs is salt_split's upper bound.
+    """
+    part = ", ".join(keys)
+    sized = salt_split(
+        entries.selectExpr("*", f"count(*) OVER (PARTITION BY {part}) AS bucket_size"),
+        "bucket_size",
+        cap,
+    )
+    return (
+        sized.selectExpr(
+            *keys, "bucket_size", "n_salts", "lost_pairs", f"{item} AS item",
+            f"{salt_sql(id_col)} AS salt",
+        )
+        .groupBy(*keys, "salt", "bucket_size", "n_salts", "lost_pairs")
+        .agg(F.expr("sort_array(collect_list(item)) AS items"))
+    )
+
+
+def bucket_pairs(left: str, right: str) -> str:
+    """SQL generator over a capped_buckets row: every pair (left, right) of
+    its sorted `items`, each item with the items after it, kept when
+    left < right (an item listed twice never pairs with itself; struct
+    items compare by their first field, the id)."""
+    return (
+        "inline(filter(flatten(transform(items, (a, i) -> "
+        "transform(slice(items, i + 2, size(items)), b -> "
+        f"named_struct('{left}', a, '{right}', b)))), p -> p.{left} < p.{right}))"
+    )
+
+
 def salt_and_cap_blocks(
     blocks: DataFrame,
     block_cap: int = DEFAULT_BLOCK_CAP,
@@ -266,23 +342,22 @@ def salt_and_cap_blocks(
     """Split oversized blocks into deterministic salted sub-blocks.
 
     Returns (salted_blocks, block_stats). salted_blocks has `block_id` =
-    tier|block_key|salt; block_stats is the per-block size/salt/lost-pair
-    accounting destined for the metrics table (S5 analog,
-    DwcaNameIndexer.writeMetadata, DwcaNameIndexer.java:1052-1083).
+    xxhash64(tier, block_key, salt); block_stats is the per-block
+    size/salt/lost-pair accounting destined for the metrics table (S5
+    analog, DwcaNameIndexer.writeMetadata, DwcaNameIndexer.java:1052-1083):
+    salt_split's n_salts and lost_pairs, plus pairs_full = C(n,2) and
+    pairs_retained_est = pairs_full - lost_pairs.
 
-    The size aggregation shuffles only (tier, key, record_id) -- narrow
-    columns -- then broadcast-joins sizes back when the distinct-key set is
-    small, else a regular hash join; AQE decides (autoBroadcastJoinThreshold).
-    Lost pairs per split block: C(n,2) - sum_salt C(n_s,2); recall loss is
-    bounded and reported, exactly the "block-size capping" contract of the
-    north rule.
+    The split is the capped_buckets rule, kept in block-table form because
+    p4 self-joins the blocks with their payloads (payload_pairs). The size
+    aggregation shuffles only (tier, key, record_id) -- narrow columns --
+    then broadcast-joins sizes back when the distinct-key set is small,
+    else a regular hash join; AQE decides (autoBroadcastJoinThreshold).
     """
-    sizes = blocks.groupBy("tier", "block_key").agg(F.count("*").alias("block_size"))
-    sizes = sizes.withColumn(
-        "n_salts",
-        F.when(F.col("block_size") <= block_cap, F.lit(1)).otherwise(
-            F.ceil(F.col("block_size") / block_cap).cast("int")
-        ),
+    sizes = salt_split(
+        blocks.groupBy("tier", "block_key").agg(F.count("*").alias("block_size")),
+        "block_size",
+        block_cap,
     )
     # Singleton blocks can never produce a pair -- drop them before the
     # size join and the (much more expensive) pair self-join. Reps are
@@ -291,12 +366,7 @@ def salt_and_cap_blocks(
     # converts it to a broadcast join at runtime.
     salted = (
         blocks.join(sizes.filter(F.col("block_size") >= 2), ["tier", "block_key"])
-        .withColumn(
-            "salt",
-            F.when(F.col("n_salts") == 1, F.lit(0)).otherwise(
-                F.pmod(F.xxhash64("record_id"), F.col("n_salts")).cast("int")
-            ),
-        )
+        .withColumn("salt", F.expr(salt_sql("record_id")))
         .withColumn(
             # 64-bit hash id, not a "tier|key|salt" string: the pair
             # self-join shuffles every block row twice keyed by block_id, so
@@ -312,16 +382,7 @@ def salt_and_cap_blocks(
     )
     stats = sizes.withColumn(
         "pairs_full", F.col("block_size") * (F.col("block_size") - 1) / 2
-    ).withColumn(
-        # expected retained pairs under even salt split
-        "pairs_retained_est",
-        F.when(F.col("n_salts") == 1, F.col("pairs_full")).otherwise(
-            (F.col("block_size") / F.col("n_salts"))
-            * (F.col("block_size") / F.col("n_salts") - 1)
-            / 2
-            * F.col("n_salts")
-        ),
-    )
+    ).withColumn("pairs_retained_est", F.col("pairs_full") - F.col("lost_pairs"))
     return salted, stats
 
 

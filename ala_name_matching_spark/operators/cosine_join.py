@@ -37,13 +37,9 @@ before overflow).
 
 SCALE: vocabulary df is one partial-agg groupBy; the postings self-join
 shuffles on term, so a boilerplate term shared by 10^9 docs is the
-classic quadratic hot key -- `max_df` REDEFINES THE VECTOR SPACE by
-dropping terms above the cap BEFORE weighting and normalization (the
-textbook stopword-pruning move: those terms carry the least idf and the
-most join cost). With the cap the join is exact *in the capped space*
--- identical documents still score 1.0 because norms exclude the capped
-terms too -- and what was pruned is exactly the terms `tfidf_weights`
-leaves out under the same cap. Default None = exact in the full space.
+classic quadratic hot key. The join is exact in the full vector space and
+caps no term: a corpus with such terms prunes them upstream (stopword
+removal), which redefines the vector space rather than approximating it.
 """
 
 from __future__ import annotations
@@ -72,22 +68,16 @@ def tfidf_weights(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_df: int | None = None,
 ) -> DataFrame:
     """(id, term, w): L2-normalized TF-IDF weights, one row per (doc, term).
 
     tf = raw in-doc count; idf = ln((N+1)/(df+1)) + 1 (strictly positive,
-    so the shared-term completeness argument holds). With `max_df`, terms
-    above the document-frequency cap are dropped BEFORE weighting and
-    normalization, so the output is a proper unit-norm vector in the
-    capped space. The norm is the sqrt of an integer-quantized sum (see
-    module determinism contract).
+    so the shared-term completeness argument holds). The norm is the sqrt
+    of an integer-quantized sum (see module determinism contract).
     """
     tf = _term_freqs(docs, id_col, text_col)
     n_docs = docs.select(F.countDistinct(id_col).alias("_n"))
     df_t = tf.groupBy("term").agg(F.count("*").alias("_df"))
-    if max_df is not None:
-        df_t = df_t.where(F.col("_df") <= max_df)
     w = (
         tf.join(df_t, "term")
         .join(F.broadcast(n_docs))
@@ -127,22 +117,20 @@ def tfidf_cosine_join(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.8,
-    max_df: int | None = None,
 ) -> DataFrame:
     """(id_l, id_r, cosine): every pair with TF-IDF cosine >= threshold.
 
-    Exact in the full vector space when max_df is None; with max_df set,
-    exact in the CAPPED space (terms above the cap removed before
-    weighting/normalization -- see module SCALE note). Pairs are emitted once with
-    id_l < id_r; cosine is 6-dp rounded, the keep decision is made on
-    the quantized integer dot so both engines agree at the boundary.
+    Exact in the full vector space (see module SCALE note). Pairs are
+    emitted once with id_l < id_r; cosine is 6-dp rounded, the keep
+    decision is made on the quantized integer dot so both engines agree at
+    the boundary.
     """
     # the weighted-postings projection feeds BOTH sides of the self-join
     # -- persist it, or the lazy DAG runs the whole tf-idf chain once per
     # branch (bm25_topk's analyze-once discipline); the thresholded
     # result is eagerly checkpointed so the corpus-sized cache is
     # released before returning
-    wts = tfidf_weights(docs, id_col, text_col, max_df=max_df)
+    wts = tfidf_weights(docs, id_col, text_col)
     wts.persist()
     try:
         a = wts.select(

@@ -24,72 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ala_name_matching_spark.functions.normalize import norm_text_col
-
-
-DEFAULT_BUCKET_CAP = 2000
-
-
-def cap_lsh_buckets(
-    entries: DataFrame,
-    bucket_col: str,
-    bucket_cap: int = DEFAULT_BUCKET_CAP,
-    id_col: str = "doc_id",
-) -> tuple[DataFrame, DataFrame]:
-    """Salt oversized LSH buckets (boilerplate text -> mega-buckets) with
-    lost-pair accounting -- the blocking-layer salt_and_cap_blocks contract
-    (operators/blocking.py:329) applied to band/bit buckets.
-
-    An uncapped bucket of n rows self-joins into n^2/2 candidate pairs; a
-    boilerplate-heavy corpus at 100 TB routinely produces 10^6-row buckets
-    (10^12 pairs from ONE bucket). Splitting into ceil(n/cap) salted
-    sub-buckets bounds the per-bucket join at cap^2/2 and total pair volume
-    at ~n*cap/2, at a quantified recall cost reported per bucket in the
-    stats frame (bucket, bucket_size, n_salts, lost_pairs). lost_pairs uses
-    the balanced-split identity C(n,2) - sum_s C(n_s,2) with sizes differing
-    by <= 1 -- under the xxhash salt the actual sub-bucket sizes are only
-    approximately balanced, so the reported figure is the expected/lower
-    bound (same estimate contract as the ER tier's pairs_retained_est,
-    operators/blocking.py:380). Returns (salted_entries, stats); salted
-    entries replace `bucket_col` with a 64-bit salted hash id.
-    """
-    sizes = _salt_split(
-        entries.groupBy(bucket_col).agg(F.count("*").alias("bucket_size")), bucket_cap
-    )
-    stats = sizes.select(
-        F.col(bucket_col).alias("bucket"), "bucket_size", "n_salts", "lost_pairs"
-    )
-    salted = (
-        entries.join(sizes.filter(F.col("bucket_size") >= 2), bucket_col)
-        .withColumn(
-            "salt",
-            F.when(F.col("n_salts") == 1, F.lit(0)).otherwise(
-                F.pmod(F.xxhash64(id_col), F.col("n_salts")).cast("int")
-            ),
-        )
-        .withColumn("_bkt", F.xxhash64(F.col(bucket_col), F.col("salt")))
-        .drop(bucket_col, "bucket_size", "n_salts", "lost_pairs", "salt")
-        .withColumnRenamed("_bkt", bucket_col)
-    )
-    return salted, stats
-
-
-def _salt_split(sizes: DataFrame, bucket_cap: int | None) -> DataFrame:
-    """Adds (n_salts, lost_pairs) to a per-bucket `bucket_size` frame: the
-    ceil(n/cap) salted split of an oversized bucket and the pairs it loses,
-    C(n,2) minus the sub-bucket pairs by the balanced-split identity
-    (expected value; see cap_lsh_buckets on hash-salt balance).
-    bucket_cap=None keeps every bucket whole (n_salts 1, lost_pairs 0)."""
-    k = (
-        f"CASE WHEN bucket_size <= {bucket_cap} THEN 1"
-        f" ELSE CAST(ceil(bucket_size / {bucket_cap}) AS INT) END"
-        if bucket_cap
-        else "1"
-    )
-    base, rem = "CAST(bucket_size / n_salts AS BIGINT)", "pmod(bucket_size, n_salts)"
-    sub_pairs = f"(n_salts - {rem}) * {base} * ({base} - 1) / 2 + {rem} * ({base} + 1) * {base} / 2"
-    return sizes.selectExpr("*", f"{k} AS n_salts").selectExpr(
-        "*", f"CAST(bucket_size * (bucket_size - 1) / 2 - ({sub_pairs}) AS BIGINT) AS lost_pairs"
-    )
+from ala_name_matching_spark.operators import blocking
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -258,67 +193,34 @@ def minhash_lsh_candidates(
     num_hashes: int = 16,
     bands: int = 4,
     shingle_n: int = 3,
-    bucket_cap: int | None = DEFAULT_BUCKET_CAP,
     return_stats: bool = False,
 ) -> DataFrame:
     """LSH candidate pairs: docs sharing >= 1 band of their MinHash signature.
 
     rows/bands tradeoff: P(candidate) = 1-(1-J^r)^b with r=num_hashes/bands.
-    Shape: the band table (one partially aggregated shuffle on doc_id), one
-    exchange on band_key feeding both the bucket-size window and the
-    (band_key, salt) id-list aggregate (_lsh_sub_buckets), pairs generated
-    inside each sub-bucket row, then one distinct across bands. Hot buckets (boilerplate text at
-    100 TB) are bounded by `bucket_cap`: a bucket over the cap is split into
-    ceil(n/cap) salted sub-buckets (pmod(xxhash64(doc_id), n_salts), the
-    cap_lsh_buckets salt) before any id list is built, so no row ever holds
-    or pairs more than one ~cap-sized sub-bucket. The per-bucket stats
-    (bucket, bucket_size, n_salts, lost_pairs) come from the same rows (pass
-    return_stats=True for (pairs, stats)); bucket_cap=None disables capping
-    (oracle-exactness mode for small corpora).
+    Shape: the band table (one partially aggregated shuffle on doc_id), the
+    capped-bucket kernel (blocking.capped_buckets: one exchange on band_key
+    feeding both the bucket-size window and the (band_key, salt) id-list
+    aggregate), pairs generated inside each sub-bucket row, then one
+    distinct across bands. Hot buckets (boilerplate text at 100 TB) are
+    bounded by blocking.LSH_BUCKET_CAP: a bucket over the cap is split into
+    ceil(n/cap) salted sub-buckets before any id list is built, so no row
+    ever holds or pairs more than one ~cap-sized sub-bucket. The per-bucket
+    stats (bucket, bucket_size, n_salts, lost_pairs; lost_pairs an upper
+    bound) come from the same rows: pass return_stats=True for
+    (pairs, stats).
     """
-    # pairs (doc_id_l < doc_id_r) of a sub-bucket's sorted id array `ids`:
-    # each id a (0-based index i) pairs with the ids after it
-    pair_rows = (
-        "inline(filter(flatten(transform(ids, (a, i) -> "
-        "transform(slice(ids, i + 2, size(ids)), b -> "
-        "named_struct('doc_id_l', a, 'doc_id_r', b)))), p -> p.doc_id_l < p.doc_id_r))"
+    buckets = blocking.capped_buckets(
+        minhash_band_table(docs, id_col, text_col, num_hashes, bands, shingle_n),
+        ["band_key"], "doc_id", "doc_id", blocking.LSH_BUCKET_CAP,
     )
-    buckets = _lsh_sub_buckets(
-        minhash_band_table(docs, id_col, text_col, num_hashes, bands, shingle_n), bucket_cap
-    )
-    pairs = buckets.selectExpr(pair_rows).distinct()
+    pairs = buckets.selectExpr(blocking.bucket_pairs("doc_id_l", "doc_id_r")).distinct()
     if return_stats:
         stats = buckets.selectExpr(
             "band_key AS bucket", "bucket_size", "n_salts", "lost_pairs"
         ).distinct()
         return pairs, stats
     return pairs
-
-
-def _lsh_sub_buckets(bands: DataFrame, bucket_cap: int | None) -> DataFrame:
-    """(band_key, salt, bucket_size, n_salts, lost_pairs, ids) over a
-    (doc_id, band_key) band table: one row per bucket, or per salted
-    sub-bucket of a bucket over the cap, with its sorted doc ids.
-
-    The bucket size is a window count, so ids are salted per row before the
-    collect_list: a boilerplate mega-bucket is never gathered into one row.
-    The window's exchange on band_key also satisfies the aggregate's
-    grouping (band_key is a subset of its keys), so this is one shuffle.
-    """
-    sized = _salt_split(
-        bands.selectExpr(
-            "doc_id", "band_key", "count(*) OVER (PARTITION BY band_key) AS bucket_size"
-        ),
-        bucket_cap,
-    )
-    return (
-        sized.selectExpr(
-            "band_key", "bucket_size", "n_salts", "lost_pairs", "doc_id",
-            "IF(n_salts = 1, 0, pmod(xxhash64(doc_id), n_salts)) AS salt",
-        )
-        .groupBy("band_key", "salt", "bucket_size", "n_salts", "lost_pairs")
-        .agg(F.expr("sort_array(collect_list(doc_id)) AS ids"))
-    )
 
 
 def ngram_jaccard_pairs(
@@ -489,11 +391,13 @@ def simhash_near_duplicates(
     Banded candidate generation (Charikar/Manku-style): the 64-bit
     fingerprint is split into `n_bands` equal bit-bands; candidates are
     pairs agreeing on >= 1 band. Pigeonhole guarantee: every pair with
-    hamming <= n_bands - 1 is found (a bucket over DEFAULT_BUCKET_CAP is
-    SPLIT by cap_lsh_buckets, which weakens this to within-sub-bucket pairs
-    -- the lost-pair count is reported in the stats frame; pass
-    return_stats=True). Hamming verification is JVM bit_count(xor); the
-    explode is linear in rows x bands.
+    hamming <= n_bands - 1 is found (a bucket over blocking.LSH_BUCKET_CAP
+    is split by the capped-bucket kernel, which weakens this to pairs
+    inside one sub-bucket -- the lost-pair upper bound is reported in the
+    stats frame; pass return_stats=True). The kernel reads the fingerprint
+    table once (window and aggregate share one exchange), so the
+    fingerprint UDF runs once per doc and query, with nothing cached;
+    hamming is JVM bit_count(xor) on the in-row pairs.
     """
     band_bits = 64 // n_bands
     mask = (1 << band_bits) - 1
@@ -510,31 +414,21 @@ def simhash_near_duplicates(
             for b in range(n_bands)
         ]
     )
-    blocked = fp.select("doc_id", "fp", F.explode(bands).alias("bucket"))
-    # persist the narrow (doc_id, fp, bucket) table BEFORE capping: the
-    # bucket-size aggregation, the cap join, and the two self-join sides are
-    # four consumers that would each re-run the fingerprint kernel + scan
-    # (measured 5.4 s -> 2.4 s at bench scale from persisting at all; the cap
-    # stage doubles the waste if it lands on the unpersisted table); rows x
-    # bands x ~24 bytes is negligible vs the corpus
-    from pyspark import StorageLevel
-
-    blocked = blocked.persist(StorageLevel.MEMORY_AND_DISK)
-    blocked, stats = cap_lsh_buckets(blocked, "bucket", DEFAULT_BUCKET_CAP)
-    # capped table feeds both self-join sides: persist so the cap stage
-    # runs once (the pre-cap cache feeds the cap's agg + join)
-    blocked = blocked.persist(StorageLevel.MEMORY_AND_DISK)
-    left = blocked.select("bucket", F.col("doc_id").alias("doc_id_l"), F.col("fp").alias("fp_l"))
-    right = blocked.select("bucket", F.col("doc_id").alias("doc_id_r"), F.col("fp").alias("fp_r"))
+    buckets = blocking.capped_buckets(
+        fp.select("doc_id", "fp", F.explode(bands).alias("bucket")),
+        ["bucket"], "doc_id", "named_struct('doc_id', doc_id, 'fp', fp)",
+        blocking.LSH_BUCKET_CAP,
+    )
     pairs = (
-        left.join(right, "bucket")
-        .filter(F.col("doc_id_l") < F.col("doc_id_r"))
-        .withColumn("hamming", F.bit_count(F.col("fp_l").bitwiseXOR(F.col("fp_r"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_id_l", "doc_id_r", "hamming")
+        buckets.selectExpr(blocking.bucket_pairs("l", "r"))
+        .selectExpr(
+            "l.doc_id AS doc_id_l", "r.doc_id AS doc_id_r", "bit_count(l.fp ^ r.fp) AS hamming"
+        )
+        .where(F.col("hamming") <= max_hamming)
         .distinct()
     )
     if return_stats:
+        stats = buckets.selectExpr("bucket", "bucket_size", "n_salts", "lost_pairs").distinct()
         return pairs, stats
     return pairs
 

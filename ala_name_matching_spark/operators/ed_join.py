@@ -50,12 +50,10 @@ Scale shape: the gram df groupBy and the prefix equi-join are
 partial-aggregated shuffles on the gram; the per-record prefix selection
 is one groupBy with a bounded K-slice (K = q*d + 1, typically ~13); the
 verify join carries only (id, s, L) -- never a pair-expanded text column
-fan-out beyond the surviving candidates. A gram that is globally frequent
-yet still lands in prefixes (possible only for records with < K grams,
-i.e. very short strings) is bounded by `max_prefix_df`: posting lists
-above the cap are dropped with lost-pair accounting, the
-cap_lsh_buckets / max_prefix_df discipline of the LSH and set-join lanes
-(default None = exact).
+fan-out beyond the surviving candidates. The join is exact: no posting
+list is capped, so a gram that is globally frequent yet still lands in
+prefixes (possible only for records with < K grams, i.e. very short
+strings) pairs its whole posting list.
 """
 
 from __future__ import annotations
@@ -106,24 +104,14 @@ def positional_qgrams(
     )
 
 
-def prefix_postings(
-    grams: DataFrame,
-    d: int,
-    q: int = 3,
-    max_prefix_df: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
+def prefix_postings(grams: DataFrame, d: int, q: int = 3) -> DataFrame:
     """Rarest-first prefix index: first q*d + 1 grams per record under the
-    global (gram df ASC, gram, pos) order.
-
-    Returns (postings, dropped_stats). postings = (id, L, g, pos);
-    dropped_stats = (g, posting_len) for prefix grams whose posting list
-    exceeded max_prefix_df and was dropped (empty when max_prefix_df is
-    None -- the exact configuration). The df groupBy and the prefix
-    regroup are the only shuffles.
+    global (gram df ASC, gram, pos) order, as (id, L, g, pos) rows. The df
+    groupBy and the prefix regroup are the only shuffles.
     """
     k = q * d + 1
     gdf = grams.groupBy("g").agg(F.count("*").alias("gdf"))
-    pref = (
+    return (
         grams.join(gdf, "g")
         .groupBy("id", "L")
         .agg(
@@ -140,16 +128,6 @@ def prefix_postings(
         )
         .select("id", "L", F.col("__e.g").alias("g"), F.col("__e.pos").alias("pos"))
     )
-    if max_prefix_df is None:
-        return pref, pref.sparkSession.createDataFrame(
-            [], "g string, posting_len long"
-        )
-    sizes = pref.groupBy("g").agg(F.count("*").alias("posting_len"))
-    dropped = sizes.where(F.col("posting_len") > max_prefix_df)
-    kept = pref.join(
-        F.broadcast(dropped.select("g")), "g", "left_anti"
-    )
-    return kept, dropped
 
 
 def _short_string_pairs(
@@ -206,18 +184,16 @@ def edit_similarity_join(
     str_col: str = "s",
     d: int = 4,
     q: int = 3,
-    max_prefix_df: int | None = None,
 ) -> DataFrame:
     """All pairs (id_l < id_r) with exact edit distance <= d.
 
     Output: (id_l, id_r, dist) -- dist is the exact Levenshtein distance.
-    With max_prefix_df=None the filters are lossless and the result equals
-    the brute-force truth set (oracle-checked); with a cap, dropped hot
-    prefix grams are accounted in prefix_postings' stats frame.
+    The filters are lossless, so the result equals the brute-force truth
+    set (oracle-checked).
     """
     lim = q * (d - 1) + 1
     grams = positional_qgrams(df, id_col=id_col, str_col=str_col, q=q)
-    pref, _ = prefix_postings(grams, d=d, q=q, max_prefix_df=max_prefix_df)
+    pref = prefix_postings(grams, d=d, q=q)
     # the prefix table feeds BOTH sides of the candidate self-join; without
     # a barrier the gram explode + df groupBy + regroup execute twice.
     # Unlike set_join's ranked table (heavy token arrays -- measured

@@ -29,6 +29,7 @@ from ala_name_matching_spark.operators.blocking import (
     with_blocking_columns,
     with_record_id,
 )
+from ala_name_matching_spark.operators.pairs import homonym_conflict_col
 
 MATCH_PROXIMITY = 0.1  # MatchMetrics.java:31
 
@@ -93,7 +94,9 @@ def search_ladder(
         SHOUT -- the QUESTION_SPECIES / CONFER / INDETERMINATE analogs,
         F10 issue_flags);
       * HOMONYM -- the query ended NO_MATCH but a candidate passed the score
-        gate and was rejected ONLY by the role-context conflict (the
+        gate and was rejected ONLY by the homonym gate batch ER applies
+        (pairs.homonym_conflict_col: a role conflict, or a tool conflict
+        the author-similarity waiver does not lift -- the
         unresolvable-HomonymException case; a context-resolved homonym
         carries no code, matching validateHomonyms semantics);
       * EXCLUDED / ASSOCIATED_EXCLUDED -- when the index carries
@@ -145,20 +148,20 @@ def search_ladder(
             F.col("q_tool"), F.col("i_tool"),
             F.col("q_ptoks"), F.col("i_ptoks"),
         )
-        scored_all = cands.withColumn("score", cols["score"])
-        role_conflict = (
-            F.col("q_role").isNotNull()
-            & F.col("i_role").isNotNull()
-            & (F.col("q_role") != F.col("i_role"))
+        scored_all = cands.withColumn("score", cols["score"]).withColumn(
+            "conflict",
+            homonym_conflict_col(
+                F.col("q_role"), F.col("i_role"), F.col("q_tool"), F.col("i_tool")
+            ),
         )
         # homonym-rejected: would have matched on score but for the context
         # gate -- recorded per query, surfaced only if it ends NO_MATCH
         homonym_parts.append(
-            scored_all.filter(role_conflict & (F.col("score") >= threshold))
+            scored_all.filter(F.col("conflict") & (F.col("score") >= threshold))
             .select("query_id")
             .distinct()
         )
-        scored = scored_all.filter(~role_conflict & (F.col("score") >= threshold))
+        scored = scored_all.filter(~F.col("conflict") & (F.col("score") >= threshold))
         # A2: rank by proximity-bucketed score then priority, deterministic;
         # non-excluded candidates outrank excluded ones (the reference's
         # getNonExcludedName preference)

@@ -10,14 +10,15 @@ same computation is a block self-join followed by expression-based scoring:
      both payloads riding the one block shuffle -- payload_pairs),
   2. score with pair_score_cols (only the Jaro-Winkler kernel leaves the
      JVM, via Arrow),
-  3. hard homonym gate (V5 analog): identical-text pairs whose secondary
-     context (role/tool) conflicts are rejected with an error code rather
-     than merged (ALANameSearcher homonym path :1253-1265,1418-1491).
+  3. homonym gate (homonym_conflict_col, shared with the search ladder):
+     pairs whose secondary context (role/tool) conflicts are rejected with
+     an error code rather than merged (ALANameSearcher homonym path
+     :1253-1265,1418-1491).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ala_name_matching_spark.functions.similarity import (
@@ -120,32 +121,10 @@ def apply_pair_scores(
     out = joined
     for name, col in cols.items():
         out = out.withColumn(name, col)
-    # V5 analog -- homonym hard gate: same canonical text but conflicting
-    # secondary context must not merge (FIXTURES.md §1 adversarial homonyms;
-    # reference resolves homonyms via author/classification agreement and
-    # errors out otherwise, ALANameSearcher.java:1418-1491).
-    role_conflict = (
-        F.col("role_l").isNotNull()
-        & F.col("role_r").isNotNull()
-        & (F.col("role_l") != F.col("role_r"))
+    out = out.withColumn(
+        "homonym_conflict",
+        homonym_conflict_col(F.col("role_l"), F.col("role_r"), F.col("tool_l"), F.col("tool_r")),
     )
-    # A4 analog -- soft author gate: a tool-field disagreement is WAIVED when
-    # the prepared strings (punctuation/whitespace stripped, the
-    # prepareAuthor analog) are >= 0.8 similar by the JW kernel -- mirroring
-    # validateHomonymByAuthor's SWG(author, author) >= 0.8 acceptance
-    # (ALANameSearcher.java:1377-1391). Near-equal variants ("sql" vs
-    # "sql2") merge; genuinely different tools ("sql" vs "browser") stay a
-    # hard conflict. role remains hard: it is the structural homonym axis.
-    prep_l = F.regexp_replace(F.col("tool_l"), r"[\p{P}\s]", "")
-    prep_r = F.regexp_replace(F.col("tool_r"), r"[\p{P}\s]", "")
-    author_similar = jaro_winkler_udf(prep_l, prep_r) >= AUTHOR_SIM_THRESHOLD
-    tool_conflict = (
-        F.col("tool_l").isNotNull()
-        & F.col("tool_r").isNotNull()
-        & (F.col("tool_l") != F.col("tool_r"))
-        & ~F.coalesce(author_similar, F.lit(False))
-    )
-    out = out.withColumn("homonym_conflict", role_conflict | tool_conflict)
     # V7 analog: error codes accumulate instead of aborting
     out = out.withColumn(
         "error_codes",
@@ -154,6 +133,36 @@ def apply_pair_scores(
         ),
     )
     return out
+
+
+def homonym_conflict_col(role_l: Column, role_r: Column, tool_l: Column, tool_r: Column) -> Column:
+    """The homonym gate of every pair decision, batch (apply_pair_scores)
+    and search (ladder.search_ladder): true when the pair's secondary
+    context conflicts, so it must not merge however well the text scores.
+
+    V5 analog -- a role conflict is a hard gate: same canonical text but
+    conflicting context must not merge (FIXTURES.md §1 adversarial
+    homonyms; the reference resolves homonyms via author/classification
+    agreement and errors out otherwise, ALANameSearcher.java:1418-1491).
+    A4 analog -- the tool gate is soft: a tool disagreement is WAIVED when
+    the prepared strings (punctuation/whitespace stripped, the
+    prepareAuthor analog) are >= 0.8 similar by the JW kernel, mirroring
+    validateHomonymByAuthor's SWG(author, author) >= 0.8 acceptance
+    (ALANameSearcher.java:1377-1391). Near-equal variants ("sql" vs
+    "sql2") merge; genuinely different tools ("sql" vs "browser") stay a
+    conflict. role remains hard: it is the structural homonym axis.
+    """
+    role_conflict = role_l.isNotNull() & role_r.isNotNull() & (role_l != role_r)
+    prep_l = F.regexp_replace(tool_l, r"[\p{P}\s]", "")
+    prep_r = F.regexp_replace(tool_r, r"[\p{P}\s]", "")
+    author_similar = jaro_winkler_udf(prep_l, prep_r) >= AUTHOR_SIM_THRESHOLD
+    tool_conflict = (
+        tool_l.isNotNull()
+        & tool_r.isNotNull()
+        & (tool_l != tool_r)
+        & ~F.coalesce(author_similar, F.lit(False))
+    )
+    return role_conflict | tool_conflict
 
 
 def match_edges(

@@ -34,12 +34,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def jl_signs(dim: int, k: int, seed: str = "jl-v1") -> list[list[int]]:
+# the seed of the sign matrix, hashed into every sign
+SEED = "jl-v1"
+
+
+def jl_signs(dim: int, k: int) -> list[list[int]]:
     """k x dim Rademacher sign matrix from md5 parity (deterministic)."""
     return [
         [
             1
-            if int(hashlib.md5(f"{seed}-{j}-{i}".encode()).hexdigest()[-1], 16) % 2
+            if int(hashlib.md5(f"{SEED}-{j}-{i}".encode()).hexdigest()[-1], 16) % 2
             else -1
             for i in range(dim)
         ]
@@ -53,7 +57,6 @@ def random_projection(
     k: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: str = "jl-v1",
 ) -> DataFrame:
     """(vec_id, rp): project to k dims; rp elements 6-dp rounded.
 
@@ -62,7 +65,7 @@ def random_projection(
     identically through both engines' float parsers (it does for the
     shortest-repr form, just less obviously).
     """
-    signs = jl_signs(dim, k, seed)
+    signs = jl_signs(dim, k)
     scale = 1.0 / (k ** 0.5)
     # stage the double cast ONCE -- getItem on a materialized column is
     # cheap; an inline transform() would be re-evaluated per output dim
@@ -89,10 +92,9 @@ def random_projection_oracle_sql(
     table: str = "embeddings",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: str = "jl-v1",
 ) -> str:
     """DuckDB replay: the SAME fixed-order +- chains, textually."""
-    signs = jl_signs(dim, k, seed)
+    signs = jl_signs(dim, k)
     scale = 1.0 / (k ** 0.5)
     chains = []
     for j in range(k):

@@ -225,8 +225,6 @@ def phrase_match(
     query_id_col: str = "query_id",
     query_text_col: str = "qtext",
     analyzer=tokens_col,
-    anchored: bool = True,
-    broadcast_anchor_max_rows: int = 5_000_000,
 ) -> DataFrame:
     """(query_id, doc_id, n_hits) -- exact-phrase occurrences per doc.
 
@@ -250,25 +248,23 @@ def phrase_match(
     The anchor pre-filter is applied as a BROADCAST semi-join only while
     the anchor table is provably small: its exact size is the sum of the
     rarest terms' df values (already computed for anchor selection), and
-    when that exceeds `broadcast_anchor_max_rows` the same semi-join runs
+    when that exceeds _BROADCAST_ANCHOR_MAX_ROWS the same semi-join runs
     as a shuffle join instead -- identical output, no oversized broadcast.
     The guard is automatic; callers never need to size the corpus
-    themselves (anchored=False remains available to skip anchoring
-    entirely).
+    themselves.
     """
     posts = build_positional_postings(docs, id_col, text_col, analyzer)
     posts.persist()
     try:
-        return _phrase_match_body(
-            posts, queries, query_id_col, query_text_col, analyzer,
-            anchored, broadcast_anchor_max_rows,
-        )
+        return _phrase_match_body(posts, queries, query_id_col, query_text_col, analyzer)
     finally:
         posts.unpersist()
 
 
+# the largest anchor table phrase_match broadcasts; read at call time
+_BROADCAST_ANCHOR_MAX_ROWS = 5_000_000
 # test introspection: how the last phrase_match call shipped its anchor
-# semi-join ("broadcast" | "shuffle" | None when anchored=False)
+# semi-join ("broadcast" | "shuffle")
 _LAST_ANCHOR_MODE = None
 
 
@@ -278,11 +274,8 @@ def _phrase_match_body(
     query_id_col: str,
     query_text_col: str,
     analyzer,
-    anchored: bool,
-    broadcast_anchor_max_rows: int = 5_000_000,
 ) -> DataFrame:
     global _LAST_ANCHOR_MODE
-    _LAST_ANCHOR_MODE = None
     qt = (
         queries.select(
             F.col(query_id_col).alias("query_id"),
@@ -298,49 +291,48 @@ def _phrase_match_body(
     votes = posts.join(F.broadcast(qt), "term").select(
         "query_id", "doc_id", (F.col("pos") - F.col("j")).alias("start"), "nq"
     )
-    if anchored:
-        # anchor = each query's lowest-df term (ties: lowest slot j); its
-        # postings, shifted by the slot, enumerate every POSSIBLE start.
-        # df is computed AFTER restricting postings to queried terms (the
-        # bm25_topk discipline): the full-vocabulary groupBy would shuffle
-        # every term in the corpus to rank a handful of query terms.
-        df_q = (
-            posts.join(F.broadcast(qt.select("term").distinct()), "term")
-            .groupBy("term")
-            .agg(F.count("*").alias("_df"))
-        )
-        qdf = qt.join(F.broadcast(df_q), "term")
-        wq = Window.partitionBy("query_id").orderBy(
-            F.col("_df").asc(), F.col("j").asc()
-        )
-        rarest = (
-            qdf.withColumn("_rk", F.row_number().over(wq))
-            .filter(F.col("_rk") == 1)
-            .select("query_id", "term", F.col("j").alias("_ja"), "_df")
-        )
-        # auto-guard (VERDICT r02 #2): the anchor table has EXACTLY
-        # sum(rarest._df) rows, known before building it; broadcast only
-        # under the cap, otherwise ship the same semi-join through the
-        # shuffle. The extra action is a tiny aggregate over one row per
-        # query, on top of the already-persisted postings.
-        est_row = rarest.agg(F.sum("_df").alias("s")).first()
-        est = int(est_row["s"] or 0)
-        anchors = posts.join(F.broadcast(rarest.drop("_df")), "term").select(
-            "query_id", "doc_id", (F.col("pos") - F.col("_ja")).alias("start")
-        )
-        if est <= broadcast_anchor_max_rows:
-            _LAST_ANCHOR_MODE = "broadcast"
-            anchors = F.broadcast(anchors)
-        else:
-            _LAST_ANCHOR_MODE = "shuffle"
-        votes = votes.join(anchors, ["query_id", "doc_id", "start"], "left_semi")
+    # anchor = each query's lowest-df term (ties: lowest slot j); its
+    # postings, shifted by the slot, enumerate every POSSIBLE start.
+    # df is computed AFTER restricting postings to queried terms (the
+    # bm25_topk discipline): the full-vocabulary groupBy would shuffle
+    # every term in the corpus to rank a handful of query terms.
+    df_q = (
+        posts.join(F.broadcast(qt.select("term").distinct()), "term")
+        .groupBy("term")
+        .agg(F.count("*").alias("_df"))
+    )
+    qdf = qt.join(F.broadcast(df_q), "term")
+    wq = Window.partitionBy("query_id").orderBy(
+        F.col("_df").asc(), F.col("j").asc()
+    )
+    rarest = (
+        qdf.withColumn("_rk", F.row_number().over(wq))
+        .filter(F.col("_rk") == 1)
+        .select("query_id", "term", F.col("j").alias("_ja"), "_df")
+    )
+    # auto-guard (VERDICT r02 #2): the anchor table has EXACTLY
+    # sum(rarest._df) rows, known before building it; broadcast only
+    # under the cap, otherwise ship the same semi-join through the
+    # shuffle. The extra action is a tiny aggregate over one row per
+    # query, on top of the already-persisted postings.
+    est_row = rarest.agg(F.sum("_df").alias("s")).first()
+    est = int(est_row["s"] or 0)
+    anchors = posts.join(F.broadcast(rarest.drop("_df")), "term").select(
+        "query_id", "doc_id", (F.col("pos") - F.col("_ja")).alias("start")
+    )
+    if est <= _BROADCAST_ANCHOR_MAX_ROWS:
+        _LAST_ANCHOR_MODE = "broadcast"
+        anchors = F.broadcast(anchors)
+    else:
+        _LAST_ANCHOR_MODE = "shuffle"
+    votes = votes.join(anchors, ["query_id", "doc_id", "start"], "left_semi")
     full = (
         votes.groupBy("query_id", "doc_id", "start", "nq")
         .agg(F.count("*").alias("_c"))
         .filter(F.col("_c") == F.col("nq"))
     )
     out = full.groupBy("query_id", "doc_id").agg(F.count("*").alias("n_hits"))
-    # eager: the persisted postings are consumed here (twice when anchored),
+    # eager: the persisted postings are consumed here (votes, df, anchors),
     # so the caller (phrase_match) can unpersist them on return instead of
     # leaking a corpus-sized cache per call
     return out.localCheckpoint(eager=True)

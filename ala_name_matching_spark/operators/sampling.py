@@ -80,46 +80,6 @@ def stratified_sample(
     return df.filter(bucket < cut)
 
 
-# how the strict-weights error message shows a NULL weight (message text,
-# not an error code of functions/errors.ERROR_CATALOG)
-_NULL_TEXT = "NULL"
-
-
-def _positive_weights(
-    df: DataFrame, weight_col: str, strict: bool
-) -> DataFrame:
-    """Shared weight-domain gate for the A-ES samplers. A-ES assigns
-    zero mass to weight <= 0 (ln(u)/w flips sign), so those rows are
-    filtered; with `strict` the filter becomes an execution-time
-    raise_error -- zero extra Spark actions, the check rides the same
-    scan -- for callers where a non-positive (or NULL) weight is an
-    upstream bug.
-
-    The raise is an ordinary filter predicate, so Catalyst may combine it
-    with, push it past, or evaluate it before the caller's own filters: a
-    caller filter (before or after the sampler) does not reliably shield
-    rows from the check. Clean the weight column upstream instead."""
-    w = F.col(weight_col).cast("double")
-    if strict:
-        # concat with NULL is NULL, so a NULL weight is named explicitly
-        shown = F.coalesce(F.col(weight_col).cast("string"), F.lit(_NULL_TEXT))
-        # schema-preserving: the raise rides the filter itself
-        return df.where(
-            F.when(w > 0, F.lit(True)).otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            f"weighted sample: non-positive weight in "
-                            f"'{weight_col}' (strict_weights=True): "
-                        ),
-                        shown,
-                    )
-                ).cast("boolean")
-            )
-        )
-    return df.where(w > 0)
-
-
 def _es_key(id_col: str, weight_col: str, salt: str):
     """The shared A-ES sort key: ln(u)/w from a 52-bit salted-md5 uniform,
     9-dp rounded -- the cross-engine determinism contract both the global
@@ -143,7 +103,6 @@ def weighted_sample(
     weight_col: str,
     k: int,
     salt: str = "aes-v1",
-    strict_weights: bool = False,
 ) -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement: the
     Efraimidis-Spirtes exponential-keys scheme (A-ES, Inf. Proc. Letters
@@ -177,7 +136,7 @@ def weighted_sample(
 
     key = _es_key(id_col, weight_col, salt)
     base = (
-        _positive_weights(df, weight_col, strict_weights)
+        df.where(F.col(weight_col).cast("double") > 0)
         .withColumn("es_key", key)
         .withColumn("_negkey", -F.col("es_key"))
     )
@@ -193,7 +152,6 @@ def weighted_sample_per_group(
     id_col: str = "doc_id",
     salt: str = "aes-v1",
     n_salts: int = 32,
-    strict_weights: bool = False,
 ) -> DataFrame:
     """Top-k weighted sample WITHIN each group (A-ES per key): the
     per-domain quota variant of weighted_sample -- "k quality-weighted
@@ -223,17 +181,12 @@ def weighted_sample_per_group(
     the cluster. Output: input columns + es_key + es_rank (0-based
     within group).
 
-    Rows with weight <= 0 carry zero A-ES mass and are EXCLUDED;
-    `strict_weights=True` turns silent exclusion into an execution-time
-    error for pipelines where a non-positive weight means an upstream
-    bug rather than "don't sample me".
+    Rows with weight <= 0 (or NULL) carry zero A-ES mass and are EXCLUDED.
     """
     from pyspark.sql import Window
 
     key = _es_key(id_col, weight_col, salt)
-    base = _positive_weights(df, weight_col, strict_weights).withColumn(
-        "es_key", key
-    )
+    base = df.where(F.col(weight_col).cast("double") > 0).withColumn("es_key", key)
     s = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salts)).cast("int")
     order = [F.col("es_key").desc(), F.col(id_col).asc()]
     w1 = Window.partitionBy(group_col, "_salt").orderBy(*order)

@@ -32,8 +32,8 @@ Spark shape, built for 100 TB:
     per-pair expression (r05; the per-pair codegen chain ran at ~3 us/
     pair, the matmul at ~ns/pair). Per-cluster state is (cell x dim),
     bounded by the k ~ |C|/target rule. Hot clusters at scale are the
-    same failure mode as hot ER blocks -- cap/salt with
-    operators/blocking.salt_and_cap_blocks if cluster-size stats show
+    same failure mode as hot LSH buckets -- cap/salt with
+    operators/blocking.capped_buckets if cluster-size stats show
     skew (uniform random fixtures don't).
 
 Determinism contract (what makes the DuckDB oracle possible): centroids

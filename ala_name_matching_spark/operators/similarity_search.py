@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ala_name_matching_spark.operators import blocking
+
 ANN_SEED = 42
 
 
@@ -354,23 +356,30 @@ def embedding_near_duplicates(
     Recall for a pair at angle theta: 1 - (1 - p^b)^L with
     p = 1 - theta/pi. Single-table b=10 at cosine 0.95 finds only ~1/3 of
     true pairs; 8 tables lift that to ~0.96 at the standard index-size
-    tradeoff (L narrow (bucket, id, vec) entries per vector). Candidates
-    are deduped on ids before the exact cosine verify.
+    tradeoff (L narrow (bucket, id, vec) entries per vector). Buckets pair
+    inside the rows of the capped-bucket kernel (blocking.capped_buckets,
+    cap blocking.LSH_BUCKET_CAP), the exact cosine is verified on those
+    in-row pairs, and a pair found in several tables is kept once.
     """
     dim = int(vectors.select(F.size(vec_col).alias("d")).first()["d"])
     sig = lsh_multitable_udf(dim, n_planes, n_tables)
     v = vectors.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v")
     ).withColumn("bucket", F.explode(sig(F.col("v"))))
-    left = v.select("bucket", F.col("vec_id").alias("vec_id_l"), F.col("v").alias("v_l"))
-    right = v.select("bucket", F.col("vec_id").alias("vec_id_r"), F.col("v").alias("v_r"))
+    buckets = blocking.capped_buckets(
+        v, ["bucket"], "vec_id", "named_struct('vec_id', vec_id, 'v', v)",
+        blocking.LSH_BUCKET_CAP,
+    )
     return (
-        left.join(right, "bucket")
-        .filter(F.col("vec_id_l") < F.col("vec_id_r"))
-        .dropDuplicates(["vec_id_l", "vec_id_r"])
-        .withColumn("cosine", cosine_col(F.col("v_l"), F.col("v_r")))
+        buckets.selectExpr(blocking.bucket_pairs("l", "r"))
+        .select(
+            F.col("l.vec_id").alias("vec_id_l"),
+            F.col("r.vec_id").alias("vec_id_r"),
+            cosine_col(F.col("l.v"), F.col("r.v")).alias("cosine"),
+        )
         .filter(F.col("cosine") >= threshold)
         .select("vec_id_l", "vec_id_r", F.round("cosine", 6).alias("cosine"))
+        .distinct()
     )
 
 

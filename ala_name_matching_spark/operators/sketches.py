@@ -32,6 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ala_name_matching_spark.operators import blocking
+
 
 def _mg_reduce(counts: dict, capacity: int) -> None:
     """In-place Misra-Gries decrement step: shrink to < capacity keys."""
@@ -697,7 +699,9 @@ def icws_lsh_candidates(
 
     Band key = md5 over the band's slot signatures serialized in slot
     order (slot:term:t joined with '|') -- a pinned string form, so the
-    whole candidate set replays in SQL.
+    whole candidate set replays in SQL. Buckets pair through the
+    capped-bucket kernel (blocking.capped_buckets), so a bucket over
+    blocking.LSH_BUCKET_CAP pairs only inside its salted sub-buckets.
     """
     if k % n_bands != 0:
         raise ValueError(
@@ -724,15 +728,11 @@ def icws_lsh_candidates(
             .alias("bkey")
         )
     )
-    a = bands.select(
-        F.col(id_col).alias("id_a"), "band", "bkey"
-    )
-    b = bands.select(
-        F.col(id_col).alias("id_b"), "band", "bkey"
+    buckets = blocking.capped_buckets(
+        bands, ["band", "bkey"], id_col, id_col, blocking.LSH_BUCKET_CAP
     )
     return (
-        a.join(b, ["band", "bkey"])
-        .where(F.col("id_a") < F.col("id_b"))
+        buckets.selectExpr(blocking.bucket_pairs("id_a", "id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count("*").cast("long").alias("n_shared_bands"))
     )

@@ -68,23 +68,3 @@ def test_cosine_matches_numpy_brute_force(spark):
                 assert got[(i, j)] == pytest.approx(cos, abs=1e-5)
             elif cos < 0.3 - 1e-9:
                 assert (i, j) not in got
-
-
-def test_cosine_max_df_cap_and_accounting(spark):
-    from ala_name_matching_spark.operators.cosine_join import (
-        tfidf_cosine_join,
-        tfidf_weights,
-    )
-
-    # 'common' appears in every doc; pairs are only linked through it
-    rows = [(i, f"common unique{i}") for i in range(6)]
-    d = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
-    uncapped = tfidf_cosine_join(d, threshold=0.01).collect()
-    assert len(uncapped) == 15  # all C(6,2) pairs share 'common'
-    capped = tfidf_cosine_join(d, threshold=0.01, max_df=3).collect()
-    assert capped == []  # the only shared term was capped away
-    # the cap drops exactly the one term's 6 postings before weighting
-    full = {(r["doc_id"], r["term"]) for r in tfidf_weights(d).collect()}
-    kept = {(r["doc_id"], r["term"]) for r in tfidf_weights(d, max_df=3).collect()}
-    assert kept <= full
-    assert full - kept == {(i, "common") for i in range(6)}

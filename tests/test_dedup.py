@@ -70,15 +70,15 @@ def test_simhash_near_duplicates(docs):
     assert (0, 4) not in pairs and (0, 5) not in pairs
 
 
-def test_lsh_bucket_cap_bounds_megabucket(spark):
+def test_lsh_bucket_cap_bounds_megabucket(spark, monkeypatch):
     """Round-2 verdict item 9: a boilerplate mega-bucket is split by the
     bucket cap; pair volume is bounded and the recall cost is REPORTED
     (lost_pairs stats row), never silent."""
     import pandas as pd
     from pyspark.sql import functions as F
 
+    from ala_name_matching_spark.operators import blocking
     from ala_name_matching_spark.operators.dedup import (
-        cap_lsh_buckets,
         minhash_band_table,
         minhash_lsh_candidates,
     )
@@ -87,41 +87,99 @@ def test_lsh_bucket_cap_bounds_megabucket(spark):
     rows = [(i, "this exact boilerplate sentence repeats everywhere") for i in range(120)]
     docs = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
 
-    uncapped = minhash_lsh_candidates(docs, bucket_cap=None)
-    assert uncapped.count() == 120 * 119 // 2  # full quadratic blow-up
+    # under the default cap the 120-doc buckets stay whole
+    assert minhash_lsh_candidates(docs).count() == 120 * 119 // 2
 
-    capped, stats = minhash_lsh_candidates(docs, bucket_cap=30, return_stats=True)
+    monkeypatch.setattr(blocking, "LSH_BUCKET_CAP", 30)
+    capped, stats = minhash_lsh_candidates(docs, return_stats=True)
     n_capped = capped.count()
     # each of the 4 sub-buckets holds ~30 docs -> <= 4 * C(30.. ,2) pairs
     assert n_capped < 120 * 119 // 2 / 2
     srows = stats.filter(F.col("n_salts") > 1).collect()
     assert srows, "split buckets must surface a stats row"
     assert all(r["lost_pairs"] > 0 for r in srows)
-    # accounting identity per bucket: kept + lost = C(n,2)
     for r in srows:
         n = r["bucket_size"]
         assert r["lost_pairs"] < n * (n - 1) // 2
-    # parity with the salt-then-self-join form over the same band table:
-    # cap_lsh_buckets + a band self-join gives the same pairs and stats
-    salted, ref_stats = cap_lsh_buckets(minhash_band_table(docs), "band_key", 30)
+    # parity with a salted self-join over the same band table, written out
+    # here: ceil(120/30) = 4 salts by pmod(xxhash64(doc_id), 4)
+    salted = minhash_band_table(docs).withColumn(
+        "salt", F.expr("pmod(xxhash64(doc_id), 4)")
+    )
     ref_pairs = (
         salted.alias("a")
-        .join(salted.alias("b"), "band_key")
+        .join(salted.alias("b"), ["band_key", "salt"])
         .where(F.col("a.doc_id") < F.col("b.doc_id"))
         .select(F.col("a.doc_id").alias("doc_id_l"), F.col("b.doc_id").alias("doc_id_r"))
     )
     assert {tuple(r) for r in capped.collect()} == {tuple(r) for r in ref_pairs.collect()}
-    assert sorted(map(tuple, stats.collect())) == sorted(map(tuple, ref_stats.collect()))
+    ref_stats = {(r["band_key"], 120, 4, 5400) for r in salted.select("band_key").distinct().collect()}
+    assert set(map(tuple, stats.collect())) == ref_stats
     # the mega-bucket is salted before any id list is built: no row holds
     # the whole bucket's 120 ids, only one ~30-id sub-bucket
-    from ala_name_matching_spark.operators.dedup import _lsh_sub_buckets
-
-    sub = _lsh_sub_buckets(minhash_band_table(docs), 30).selectExpr(
-        "band_key", "bucket_size", "size(ids) AS n_ids"
-    ).collect()
+    sub = blocking.capped_buckets(
+        minhash_band_table(docs), ["band_key"], "doc_id", "doc_id", 30
+    ).selectExpr("band_key", "bucket_size", "size(items) AS n_ids").collect()
     assert {r["bucket_size"] for r in sub} == {120}
     assert max(r["n_ids"] for r in sub) < 60
     assert sum(r["n_ids"] for r in sub) == 120 * len({r["band_key"] for r in sub})
+
+
+def test_capped_bucket_lost_pairs_every_lane(spark, monkeypatch):
+    """One planted 120-id bucket under a cap of 30, in every lane that caps
+    buckets. ceil(120/30) = 4 salts; the balanced split keeps 4 * C(30,2)
+    of C(120,2) pairs, so each ledger reports 7140 - 1740 = 5400 lost
+    pairs. That figure is an upper bound: a lane never emits fewer than
+    C(120,2) - 5400 pairs from the bucket. ICWS reports no ledger; its
+    pairs must each fall inside one salt."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from ala_name_matching_spark.operators import blocking, dedup
+    from ala_name_matching_spark.operators.sketches import icws_lsh_candidates
+
+    full, lost = 120 * 119 // 2, 5400
+    monkeypatch.setattr(blocking, "LSH_BUCKET_CAP", 30)
+    rows = [(i, "this exact boilerplate sentence repeats everywhere") for i in range(120)]
+    docs = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
+
+    # MinHash and SimHash: identical docs share every band bucket, and each
+    # bucket salts the same ids alike, so the distinct pairs are one
+    # bucket's pairs
+    for pairs, stats in (
+        dedup.minhash_lsh_candidates(docs, return_stats=True),
+        dedup.simhash_near_duplicates(docs, return_stats=True),
+    ):
+        assert {r["lost_pairs"] for r in stats.collect()} == {lost}
+        assert full - pairs.count() <= lost
+
+    # ER blocks: the 120 records of one block, capped at 30
+    blocks = spark.createDataFrame(
+        [(3, "hot", f"r{i}") for i in range(120)], "tier int, block_key string, record_id string"
+    )
+    salted, stats = blocking.salt_and_cap_blocks(blocks, block_cap=30)
+    (st,) = stats.collect()
+    assert st["n_salts"] == 4 and st["lost_pairs"] == lost
+    assert st["pairs_full"] == full and st["pairs_full"] - st["pairs_retained_est"] == lost
+    emitted = (
+        salted.alias("a")
+        .join(salted.alias("b"), "block_id")
+        .where(F.col("a.record_id") < F.col("b.record_id"))
+        .count()
+    )
+    assert full - emitted <= lost
+
+    # ICWS: 120 identical weighted sets share every band bucket
+    tf = spark.createDataFrame(
+        [(i, f"t{j}", float(j + 1)) for i in range(120) for j in range(5)],
+        "doc_id long, term string, w double",
+    )
+    pairs = icws_lsh_candidates(tf, k=32, n_bands=8)
+    salts = pairs.selectExpr(
+        "pmod(xxhash64(id_a), 4) AS salt_a", "pmod(xxhash64(id_b), 4) AS salt_b"
+    ).collect()
+    assert salts and all(r["salt_a"] == r["salt_b"] for r in salts)
+    assert full - len(salts) <= lost
 
 
 def test_band_keys_match_hashlib_replay(spark):
@@ -217,7 +275,7 @@ def test_simhash_return_stats_lost_pair_ledger(spark, monkeypatch):
     ledger counts lost pairs, and the surviving pairs are a subset."""
     from pyspark.sql import functions as F
 
-    from ala_name_matching_spark.operators import dedup
+    from ala_name_matching_spark.operators import blocking, dedup
 
     docs = _simhash_docs(spark)
 
@@ -229,8 +287,8 @@ def test_simhash_return_stats_lost_pair_ledger(spark, monkeypatch):
         return got, stats.agg(F.max("bucket_size"), F.sum("lost_pairs")).first()
 
     whole, (largest, lost) = run()
-    assert largest < dedup.DEFAULT_BUCKET_CAP and lost == 0
-    monkeypatch.setattr(dedup, "DEFAULT_BUCKET_CAP", 4)
+    assert largest < blocking.LSH_BUCKET_CAP and lost == 0
+    monkeypatch.setattr(blocking, "LSH_BUCKET_CAP", 4)
     split, (_, lost) = run()
     assert lost > 0
     assert split < whole

@@ -83,6 +83,30 @@ def test_ladder_homonym_gate(spark, index):
     assert out["index_id"] == "i#3"
 
 
+def test_ladder_homonym_gate_matches_batch(spark):
+    """The ladder rejects a pair the way batch ER does: one shared gate
+    (pairs.homonym_conflict_col). c1 and c2 share text and role but their
+    tools differ and the author-similarity waiver does not lift it; c3 is a
+    one-letter misspelling of c2 with c2's tool. Batch ER keeps c1 apart,
+    so the ladder must not match c1 to either: NO_MATCH with HOMONYM."""
+    from ala_name_matching_spark.operators.ladder import search_ladder
+    from ala_name_matching_spark.plans.pipeline import run_pipeline
+
+    text = "please list the files in the project folder"
+    c1 = ("c", 1, "user", text, "sql", None)
+    c2 = ("c", 2, "user", text, "browser", None)
+    c3 = ("c", 3, "user", text.replace("project", "projekt"), "browser", None)
+    for other in (c2, c3):
+        (out,) = search_ladder(_df(spark, [c1]), _df(spark, [other])).collect()
+        assert out["match_type"] == "NO_MATCH" and out["index_id"] is None
+        assert set(out["error_codes"]) == {"HOMONYM", "NO_MATCH"}
+    clusters = {
+        r["record_id"]: r["cluster_id"]
+        for r in run_pipeline(_df(spark, [c1, c2, c3])).select("record_id", "cluster_id").collect()
+    }
+    assert clusters["c#2"] == clusters["c#3"] != clusters["c#1"]
+
+
 def test_streaming_incremental_match(spark, index, tmp_path):
     from ala_name_matching_spark.streaming.incremental import (
         incremental_match,

@@ -19,8 +19,10 @@ F1 >= 0.99 gate (`tests/test_pipeline_e2e.py`). It is safety code whose only
 caller is that gate test by design, so its definitions are roots too.
 
 An option is a defaulted parameter of a top-level function, or of a method
-of a top-level class, whose name appears in an `if`, conditional-expression
-or `while` test of that function: it selects a branch. It is set when a
+of a top-level class, that selects a branch: its name appears in an `if`,
+conditional-expression or `while` test of that function, or the function
+passes it on (as a bare name, by keyword or position) to a parameter of a
+callee that selects a branch, taken as a transitive closure. It is set when a
 call in a root or in package code passes it by keyword, by position, or
 through `*args` / `**kwargs`. The callee is matched by name (`f(...)` or
 `x.f(...)`); `Class(...)` calls `Class.__init__`, `partial(f, ...)` calls
@@ -122,20 +124,72 @@ def _functions(path: str, tree: ast.Module):
                 yield f"{module}.{node.name}.{fn.name}", fn, names, 0 if static else 1
 
 
-def _options(fn: ast.FunctionDef) -> list[tuple[str, int | None]]:
-    """(option, positional index or None if keyword-only) of `fn`."""
+def _params(fn: ast.FunctionDef) -> list[str]:
     a = fn.args
-    pos = a.posonlyargs + a.args
-    defaulted = [(p.arg, i) for i, p in enumerate(pos) if i >= len(pos) - len(a.defaults)]
-    defaulted += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
-    tested = {
+    return [p.arg for p in a.posonlyargs + a.args + a.kwonlyargs]
+
+
+def _tested(fn: ast.FunctionDef) -> set[str]:
+    """Names in an if, conditional-expression or while test of `fn`."""
+    return {
         n.id
         for sub in ast.walk(fn)
         if isinstance(sub, _TESTS)
         for n in ast.walk(sub.test)
         if isinstance(n, ast.Name)
     }
-    return [(name, i) for name, i in defaulted if name in tested]
+
+
+def _forwards(fn: ast.FunctionDef) -> list[tuple[str, list]]:
+    """(callee name, [(keyword or positional index, parameter)]) of every
+    call in `fn` that passes one of its parameters on as a bare name."""
+    params, out = set(_params(fn)), []
+    for node in ast.walk(fn):
+        if not isinstance(node, ast.Call):
+            continue
+        func, args = node.func, node.args
+        if _callee(func) == "partial" and args:
+            func, args = args[0], args[1:]
+        passed = [(k.arg, k.value) for k in node.keywords if k.arg] + list(enumerate(args))
+        slots = [(s, v.id) for s, v in passed if isinstance(v, ast.Name) and v.id in params]
+        if slots and _callee(func):
+            out.append((_callee(func), slots))
+    return out
+
+
+def _branch_params(functions: list) -> dict[str, set[str]]:
+    """name -> the parameters of each `_functions` entry that select a
+    branch: tested directly, or passed on to a callee parameter that does,
+    to a fixed point. Callees are matched by name, as for setters."""
+    by_callee = {}
+    for name, fn, callees, offset in functions:
+        for callee in callees:
+            by_callee.setdefault(callee, []).append((name, _params(fn)[offset:]))
+    branch = {name: _tested(fn) for name, fn, _, _ in functions}
+    forwards = {name: _forwards(fn) for name, fn, _, _ in functions}
+    changed = True
+    while changed:
+        changed = False
+        for name, calls in forwards.items():
+            for callee, slots in calls:
+                for target, t_params in by_callee.get(callee, []):
+                    for slot, param in slots:
+                        if isinstance(slot, int):
+                            slot = t_params[slot] if slot < len(t_params) else None
+                        if slot in branch[target] and param not in branch[name]:
+                            branch[name].add(param)
+                            changed = True
+    return branch
+
+
+def _options(fn: ast.FunctionDef, branch: set[str]) -> list[tuple[str, int | None]]:
+    """(option, positional index or None if keyword-only) of `fn`, given
+    the names of its parameters that select a branch."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    defaulted = [(p.arg, i) for i, p in enumerate(pos) if i >= len(pos) - len(a.defaults)]
+    defaulted += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    return [(name, i) for name, i in defaulted if name in branch]
 
 
 def _calls(sources: list[str]) -> dict[str, list[tuple[list, list]]]:
@@ -179,15 +233,20 @@ def unset_options(
     """`path:line module.f(option)` of every package option no call in a
     root or in package code sets; options named in `exempt` are skipped."""
     calls = _calls(list(roots.values()) + list(package.values()))
+    functions = [
+        (path, entry)
+        for path, text in package.items()
+        for entry in _functions(path, ast.parse(text))
+    ]
+    branch = _branch_params([entry for _, entry in functions])
     out = []
-    for path, text in package.items():
-        for name, fn, callees, offset in _functions(path, ast.parse(text)):
-            sites = [c for callee in callees for c in calls.get(callee, [])]
-            for option, index in _options(fn):
-                key = f"{name}({option})"
-                pos = None if index is None else index - offset
-                if key not in exempt and not _is_set(sites, option, pos):
-                    out.append(f"{path}:{fn.lineno} {key}")
+    for path, (name, fn, callees, offset) in functions:
+        sites = [c for callee in callees for c in calls.get(callee, [])]
+        for option, index in _options(fn, branch[name]):
+            key = f"{name}({option})"
+            pos = None if index is None else index - offset
+            if key not in exempt and not _is_set(sites, option, pos):
+                out.append(f"{path}:{fn.lineno} {key}")
     return sorted(out)
 
 
@@ -328,6 +387,26 @@ def not_an_option(x, width=3):
     return x * width
 
 
+def _branches(x, lane):
+    return 1 if lane else 0
+
+
+def forwards_unset(x, lane=False):
+    return _branches(x, lane)
+
+
+def forwards_twice(x, lane=False):
+    return forwards_unset(x, lane=lane)
+
+
+def forwards_set(x, lane=False):
+    return partial(_branches, x, lane=lane)()
+
+
+def forwards_width(x, width=3):
+    return not_an_option(x, width)
+
+
 class Box:
     def __init__(self, lane=False):
         self.v = 1 if lane else 0
@@ -347,6 +426,9 @@ def caller():
     by_kwargs(1, **opts)
     Box(lane=True).method(True)
     Box().unset_method(True)
+    forwards_twice(1)
+    forwards_set(1, lane=True)
+    forwards_width(1, 4)
 '''
 
 
@@ -360,9 +442,16 @@ def test_guard_scanner_on_an_in_memory_package():
     # method's positional argument landing on an earlier parameter: flagged.
     # Set by keyword, position, partial(...), **kw or Class(...): live. A
     # defaulted parameter no branch tests is not an option. An exempt
-    # option is skipped, and reported without the exemption.
+    # option is skipped, and reported without the exemption. A parameter
+    # passed on to a callee parameter that selects a branch is an option,
+    # through any number of hops, by position, keyword or partial(...);
+    # one passed on to a parameter no branch tests is not. A forwarding
+    # call sets the callee's option, so a chain is reported at the
+    # outermost function no call sets (forwards_twice, not forwards_unset).
     opts = {"pkg/opts.py": _OPTS}
-    flagged = {"opts.Box.unset_method(lane)", "opts.in_test(lane)"}
+    flagged = {
+        "opts.Box.unset_method(lane)", "opts.in_test(lane)", "opts.forwards_twice(lane)"
+    }
     unset = unset_options(opts, roots, {"opts.exempt_lane(lane)"})
     assert {u.split()[1] for u in unset} == flagged
     unset = unset_options(opts, roots)

@@ -17,11 +17,14 @@ def _vecs(spark, rows, dim):
     )
 
 
-def test_signs_deterministic_and_pm_one():
+def test_signs_deterministic_and_pm_one(monkeypatch):
+    from ala_name_matching_spark.operators import random_projection as rp
+
     a = jl_signs(8, 4)
     assert a == jl_signs(8, 4)
     assert all(s in (-1, 1) for row in a for s in row)
-    assert a != jl_signs(8, 4, seed="other")
+    monkeypatch.setattr(rp, "SEED", "other")
+    assert a != jl_signs(8, 4)
 
 
 def test_projection_shape_and_determinism(spark):

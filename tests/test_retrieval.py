@@ -145,11 +145,11 @@ def test_fuzzy_phrase_match_under_phonetic_analyzer(spark):
     assert got == {0: 1}  # order still enforced: doc 1 has the terms reversed
 
 
-def test_phrase_match_anchor_broadcast_autoguard(spark):
+def test_phrase_match_anchor_broadcast_autoguard(spark, monkeypatch):
     """VERDICT r02 #2: an all-frequent-terms phrase (every term in every
     doc -> anchor table = corpus-sized) must NOT be broadcast once the
     anchor size estimate exceeds the cap; the shuffle fallback is taken
-    automatically and the output is identical across all three modes."""
+    automatically and the output is identical in both modes."""
     from ala_name_matching_spark.operators import retrieval as R
 
     # every doc contains both query terms -> rarest-term df = n_docs, so
@@ -165,13 +165,10 @@ def test_phrase_match_anchor_broadcast_autoguard(spark):
     base = key(R.phrase_match(docs, q).collect())
     assert R._LAST_ANCHOR_MODE == "broadcast"  # default cap: small corpus fits
 
-    guarded = key(
-        R.phrase_match(docs, q, broadcast_anchor_max_rows=1).collect()
-    )
+    monkeypatch.setattr(R, "_BROADCAST_ANCHOR_MAX_ROWS", 1)
+    guarded = key(R.phrase_match(docs, q).collect())
     assert R._LAST_ANCHOR_MODE == "shuffle"  # cap exceeded -> fallback taken
-    unanchored = key(R.phrase_match(docs, q, anchored=False).collect())
-    assert R._LAST_ANCHOR_MODE is None
 
-    assert guarded == base == unanchored
+    assert guarded == base
     # sanity: 2 overlapping starts of "the quick" per doc
     assert base == [(1, i, 2) for i in range(20)]

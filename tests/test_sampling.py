@@ -271,12 +271,10 @@ def test_weighted_sample_per_group_no_unbounded_group_window(spark):
     assert "_salt" not in specs[0], plan
 
 
-def test_weighted_sample_strict_weights(spark):
-    """strict_weights=True turns the silent weight<=0 exclusion into an
-    execution-time error on BOTH sampler lanes; default stays drop."""
+def test_weighted_sample_drops_nonpositive_weights(spark):
+    """A-ES gives a weight <= 0 (or NULL) zero mass: both sampler lanes
+    drop such rows silently."""
     import pandas as pd
-    import pytest
-    from py4j.protocol import Py4JJavaError
 
     from ala_name_matching_spark.operators.sampling import (
         weighted_sample,
@@ -284,37 +282,18 @@ def test_weighted_sample_strict_weights(spark):
     )
 
     pdf = pd.DataFrame(
-        {"doc_id": range(20), "lang": ["en"] * 20, "w": [1.0] * 19 + [0.0]}
+        {"doc_id": range(20), "lang": ["en"] * 20, "w": [1.0] * 18 + [0.0, -1.0]}
     )
     df = spark.createDataFrame(pdf)
-    # default: the zero-weight row is dropped, no error
-    assert len(weighted_sample(df, "doc_id", "w", k=25).collect()) == 19
+    assert len(weighted_sample(df, "doc_id", "w", k=25).collect()) == 18
     assert (
         len(
             weighted_sample_per_group(df, "w", k=25, group_col="lang").collect()
         )
-        == 19
+        == 18
     )
-    with pytest.raises((Py4JJavaError, Exception)):
-        weighted_sample(
-            df, "doc_id", "w", k=25, strict_weights=True
-        ).collect()
-    with pytest.raises((Py4JJavaError, Exception)):
-        weighted_sample_per_group(
-            df, "w", k=25, group_col="lang", strict_weights=True
-        ).collect()
-    # a NULL weight fails too, and the message still names the column
-    # (concat with a NULL weight used to null the whole message)
     nulls = spark.createDataFrame(
         [(i, "en", None if i == 3 else 1.0) for i in range(20)],
         "doc_id long, lang string, w double",
     )
-    with pytest.raises(Exception) as err:
-        weighted_sample(nulls, "doc_id", "w", k=25, strict_weights=True).collect()
-    assert "non-positive weight in 'w' (strict_weights=True): NULL" in str(err.value)
-    # strict passes untouched when all weights are positive
-    ok = spark.createDataFrame(pdf[pdf.w > 0])
-    assert (
-        len(weighted_sample(ok, "doc_id", "w", k=25, strict_weights=True).collect())
-        == 19
-    )
+    assert len(weighted_sample(nulls, "doc_id", "w", k=25).collect()) == 19
