@@ -7,8 +7,8 @@ idiomatic Spark record-linkage pipeline over tables of multi-turn transcripts:
     normalize -> blocking keys (exact / canonical / phonetic tiers)
               -> salted, size-capped blocking joins
               -> vectorized pairwise scoring (Jaro-Winkler + Levenshtein + token-set)
-              -> large-star/small-star connected components
-              -> deterministic per-cluster representative election
+              -> connected components + deterministic per-cluster
+                 representative election (one engine: cluster_labels)
 
 Layout:
     functions/  scalar & similarity functions (SURVEY.md §2.2, §2.4 A1)

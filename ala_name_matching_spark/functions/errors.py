@@ -64,11 +64,6 @@ ERROR_CATALOG: dict[str, tuple[str, str, str]] = {
         "operators/validation.misapplied_resolution",
         "all senses misapplied but they agree on one target -- resolved to it",
     ),
-    "PARENT_CHILD_SYNONYM": (
-        "PARENT_CHILD_SYNONYM (ErrorType.java:59)",
-        "(no operator: kept so the catalog covers the reference enum)",
-        "directed parent chain closed on itself",
-    ),
     "NO_MATCH": (
         "(MetricsResultDTO null result; SPECIES_PLURAL's reject outcome, "
         "ErrorType.java:30)",

@@ -1,30 +1,34 @@
-"""Transitive clustering: large-star/small-star connected components.
+"""Transitive clustering: one engine for components and representatives.
 
 The reference's "Large Taxon Collider" groups instances into progressively
 coarser concept buckets with in-memory hash maps and iterates resolution to a
 fixpoint (Taxonomy.resolve, ala-name-matching-builder/src/main/java/au/org/
-ala/names/index/Taxonomy.java:480-499, fixpoint loop :732-752). The Spark
-formulation is the alternating large-star/small-star connected-components
-algorithm (Kiveris et al., "Connected Components in MapReduce and Beyond",
-SoCC'14) on the accepted-edge DataFrame -- O(log n) rounds, each round two
-shuffles on the node id.
+ala/names/index/Taxonomy.java:480-499, fixpoint loop :732-752), then elects
+each bucket's principal (ALATaxonResolver.principals). Both steps are
+`cluster_labels`: small graphs run one numpy kernel on the driver; large
+graphs run one block-local pass when their edges stay inside salted
+sub-blocks, else the alternating large-star/small-star connected-components
+rounds (Kiveris et al., "Connected Components in MapReduce and Beyond",
+SoCC'14) -- O(log n) rounds, each two shuffles on the node id -- plus one
+election aggregate.
 
-Node ids are strings ordered lexicographically; the component label is the
-minimum record_id, which makes the result deterministic (the reference's
-documented tie non-determinism, ALATaxonResolver.java:147-151, is removed).
+Node ids keep their column's own order, the one Spark compares them in:
+numeric for integer ids, UTF-8 bytes for strings. The component label is the
+minimum id and the representative the maximum priority, ties to the minimum
+id, which makes the result deterministic (the reference's documented tie
+non-determinism, ALATaxonResolver.java:147-151, is removed).
 
-Driver-side convergence check via a count of label changes; lineage is
-truncated every round with localCheckpoint (at production scale: write the
-frontier to an Iceberg table every ~3 rounds and resume from the snapshot --
-see plans/pipeline.py checkpointing).
+The star rounds check convergence on the driver (count + xor-hash of the
+edges) and truncate lineage every round with localCheckpoint (at production
+scale: write the frontier to an Iceberg table every ~3 rounds and resume
+from the snapshot -- see plans/pipeline.py checkpointing).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -66,29 +70,30 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return out
 
 
-# Driver union-find takes over below this edge count; env-tunable so the
-# scaling bench can force the distributed lane (the driver lane's cost grows
-# with |edges| and does NOT scale with executors -- fast in absolute terms at
-# small graphs, but a non-scaling component of the two-cluster-size ratio).
-_DRIVER_CC_MAX_EDGES = int(
-    os.environ.get("ALA_SPARK_DRIVER_CC_MAX_EDGES", str(5_000_000))
-)
+# cluster_labels collects the edges and labels them on the driver at or
+# below this edge count: one collect beats 3-5 distributed rounds x 2 jobs
+# each (the small-side reasoning of a broadcast join). Tests and the scaling
+# bench set it to 0 to force the distributed lanes.
+_DRIVER_CC_MAX_EDGES = 5_000_000
+
+_MAX_STAR_ROUNDS = 20
 
 
-def _uf_core(pdf):
-    """Vectorized union-find over lexicographic node ranks.
+def _labels_and_winners_pdf(pdf):
+    """Label + representative election over an edge pandas frame (src, dst,
+    src_prio, dst_prio): (node, cluster_id, representative_id) for every
+    node of the edge graph.
 
-    Returns (sorted_uniques, a, b, lab): `sorted_uniques[r]` is the node id
-    of rank r, `a`/`b` the per-edge endpoint ranks, `lab[r]` the component
-    root rank (= rank of the lexicographic-min member, so "label = min
-    record_id" survives the integer encoding).
-
-    Vectorized min-label propagation + pointer jumping (the numpy form of
-    large-star/small-star): labels are monotone non-increasing and bounded,
-    so this converges in O(log n) vectorized rounds -- measured ~10x faster
-    than a per-edge python union-find loop at 300k edges, which matters
-    because this runs on the driver and is a constant (non-scaling) cost
-    in the two-cluster-size criterion.
+    Pure pandas/numpy: the kernel of the driver lane and of the block-local
+    mapInPandas lane. Nodes are ranked in their column's order (numeric ids
+    numerically, strings by UTF-8 bytes); vectorized min-label propagation
+    + pointer jumping (the numpy form of large-star/small-star) then
+    converges in O(log n) rounds, since labels are monotone non-increasing
+    and bounded -- measured ~10x faster than a per-edge python union-find
+    loop at 300k edges. The label is the rank-min node. Election is B7 (the
+    `priority_election` query's rule): winner = max priority, ties to the
+    min node (ALATaxonResolver.principals analog with the documented tie
+    non-determinism removed).
     """
     import numpy as np
     import pandas as pd
@@ -96,20 +101,21 @@ def _uf_core(pdf):
     codes, uniques = pd.factorize(
         pd.concat([pdf["src"], pdf["dst"]], ignore_index=True), sort=False
     )
-    uniques = np.asarray(uniques, dtype=object)
-    # lex order of node ids. UTF-8 byte order == code-point order, so sorting
-    # the fixed-width bytes view gives the same ranks ~10x faster than an
-    # object-dtype argsort; non-ASCII ids fall back to the object sort.
+    uniques = np.asarray(uniques)
     try:
-        order = np.argsort(uniques.astype("S"))
+        # strings: UTF-8 byte order == code-point order, so sorting the
+        # fixed-width bytes view gives the same ranks ~10x faster than an
+        # object-dtype argsort; non-ASCII ids fall back to the object sort
+        by_rank = np.argsort(uniques.astype("S") if uniques.dtype == object else uniques)
     except (UnicodeEncodeError, SystemError):
-        order = np.argsort(uniques)
-    rank = np.empty(len(uniques), dtype=np.int64)
-    rank[order] = np.arange(len(uniques))
+        by_rank = np.argsort(uniques)
+    n_nodes = len(uniques)
+    rank = np.empty(n_nodes, dtype=np.int64)
+    rank[by_rank] = np.arange(n_nodes)
     n = len(pdf)
     a = rank[codes[:n]]
     b = rank[codes[n:]]
-    lab = np.arange(len(uniques), dtype=np.int64)
+    lab = np.arange(n_nodes, dtype=np.int64)
     while True:
         m = np.minimum(lab[a], lab[b])
         np.minimum.at(lab, a, m)
@@ -121,100 +127,35 @@ def _uf_core(pdf):
             lab = nl
         if np.array_equal(lab[a], lab[b]):
             break
-    sorted_uniques = uniques[order]
-    return sorted_uniques, rank, codes, a, b, lab
-
-
-def _driver_union_find(edges: DataFrame) -> DataFrame:
-    """Small-graph fast path: collect edges, union-find on the driver.
-
-    Identical labels to the distributed algorithm (component label = min
-    node id). The contracted rep graph is usually orders of magnitude
-    smaller than the record table (canonical groups pre-merged), so below
-    `_DRIVER_CC_MAX_EDGES` a single collect beats 3-5 distributed rounds x 2
-    jobs each -- the same small-side reasoning as a broadcast join. At
-    10^12-turn scale the distributed path takes over automatically.
-    """
-    import pandas as pd
-
-    # Arrow-batched transfer (an order of magnitude faster than collect()'s
-    # row-object path for millions of edges), then integer union-find over
-    # lexicographic ranks so "label = min record_id" survives the encoding.
-    pdf = edges.select("src", "dst").toPandas()
-    spark = edges.sparkSession
-    if len(pdf) == 0:
-        return spark.createDataFrame([], "record_id string, cluster_id string")
-    sorted_uniques, rank, codes, a, b, lab = _uf_core(pdf)
-    n = len(pdf)
-    out = pd.DataFrame(
-        {
-            "record_id": sorted_uniques[rank[codes[:n]]],
-            "cluster_id": sorted_uniques[lab[rank[codes[:n]]]],
-        }
-    )
-    out2 = pd.DataFrame(
-        {
-            "record_id": sorted_uniques[rank[codes[n:]]],
-            "cluster_id": sorted_uniques[lab[rank[codes[n:]]]],
-        }
-    )
-    out = pd.concat([out, out2], ignore_index=True).drop_duplicates("record_id")
-    return spark.createDataFrame(out)
-
-
-def _labels_and_winners_pdf(pdf):
-    """Label + representative election over an edge pandas frame (src, dst,
-    src_prio, dst_prio): (grp_rep, cluster_id, representative_id) for every
-    NODE of the edge graph.
-
-    Pure pandas/numpy; shared by the driver lanes and the block-local
-    mapInPandas kernel. Election is B7 (the `priority_election` query's
-    rule): winner = max priority, ties broken by lexicographic-min node id
-    (ALATaxonResolver.principals analog with the documented tie
-    non-determinism removed). Every member
-    group of a multi-group cluster is an edge endpoint, so endpoint prios
-    (carried on the edge table by match_edges) cover exactly the groups that
-    need election -- groups outside the graph are singleton clusters and
-    elect themselves via coalesce, no aggregation anywhere.
-    """
-    import numpy as np
-    import pandas as pd
-
-    if len(pdf) == 0:
-        return pd.DataFrame(
-            {"grp_rep": pd.Series(dtype=object),
-             "cluster_id": pd.Series(dtype=object),
-             "representative_id": pd.Series(dtype=object)}
-        )
-    sorted_uniques, rank, codes, a, b, lab = _uf_core(pdf)
-    n_nodes = len(sorted_uniques)
-    # per-node priority (consistent across edges; last write wins is fine)
+    # every rank is an edge endpoint; a node's priority is the same on all
+    # its edges, so the last write wins
     prio = np.zeros(n_nodes, dtype=np.int64)
     prio[a] = pdf["src_prio"].to_numpy(dtype=np.int64)
     prio[b] = pdf["dst_prio"].to_numpy(dtype=np.int64)
-    nodes = np.unique(np.concatenate([a, b]))
-    roots = lab[nodes]
     # winner per root: max prio, ties -> min rank. lexsort: last key primary.
-    order = np.lexsort((nodes, -prio[nodes], roots))
-    first = np.ones(len(order), dtype=bool)
-    sr = roots[order]
-    first[1:] = sr[1:] != sr[:-1]
-    win_rank = nodes[order][first]  # winner node rank per distinct root
-    win_root = sr[first]
+    order = np.lexsort((np.arange(n_nodes), -prio, lab))
+    roots = lab[order]
+    first = np.ones(n_nodes, dtype=bool)
+    first[1:] = roots[1:] != roots[:-1]
     winner_of = np.empty(n_nodes, dtype=np.int64)
-    winner_of[win_root] = win_rank
+    winner_of[roots[first]] = order[first]
+    ids = uniques[by_rank]
     return pd.DataFrame(
-        {
-            "grp_rep": sorted_uniques[nodes],
-            "cluster_id": sorted_uniques[roots],
-            "representative_id": sorted_uniques[winner_of[roots]],
-        }
+        {"node": ids, "cluster_id": ids[lab], "representative_id": ids[winner_of[lab]]}
+    )
+
+
+def _label_schema(edges: DataFrame) -> T.StructType:
+    """(node, cluster_id, representative_id), typed as the edges' ids."""
+    t = edges.schema["src"].dataType
+    return T.StructType(
+        [T.StructField(c, t) for c in ("node", "cluster_id", "representative_id")]
     )
 
 
 def block_local_labels(edges: DataFrame) -> DataFrame:
-    """(grp_rep, cluster_id, representative_id) for every edge node, computed
-    with ONE exchange -- no iterative star rounds.
+    """cluster_labels' lane for edges that carry `block_id`, computed with
+    ONE exchange -- no iterative star rounds.
 
     Exploits single-tier block-locality: every record belongs to exactly one
     salted sub-block (blocking.salt_and_cap_blocks), edges exist only within
@@ -245,41 +186,25 @@ def block_local_labels(edges: DataFrame) -> DataFrame:
     return (
         edges.select("src", "dst", "src_prio", "dst_prio", "block_id")
         .repartition(num_partitions, "block_id")
-        .mapInPandas(
-            per_partition,
-            "grp_rep string, cluster_id string, representative_id string",
-        )
+        .mapInPandas(per_partition, _label_schema(edges))
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    max_iterations: int = 20,
-    driver_max_edges: int | None = None,
-) -> DataFrame:
-    """(record_id, cluster_id) for every node appearing in `edges`.
-
-    cluster_id = lexicographic min record_id of the component. Iterates
-    large-star/small-star until the edge multiset is a stable star forest
-    (signature: count + sum of xxhash64 of the sorted pair). Graphs under
-    `driver_max_edges` use the driver union-find fast path (same labels).
+def _star_labels(edges: DataFrame) -> DataFrame:
+    """cluster_labels' lane for edges without `block_id`: large-star/
+    small-star rounds until the edge multiset is a stable star forest
+    (signature: count + xor of xxhash64 of the sorted pair), then ONE
+    partially aggregated min(struct(-prio, node)) per cluster + a join back
+    -- the skew-immune agg+join shape of `fusion.golden_record`'s
+    representative pick, NOT a row_number window: a mega-cluster
+    (boilerplate at 100 TB) reduces map-side to one row per partition
+    instead of sorting all members in one window partition.
     """
-    # resolve at call time so runtime overrides of the module global (tests,
-    # env flips) switch this gate and group_label_table's gate together
-    if driver_max_edges is None:
-        driver_max_edges = _DRIVER_CC_MAX_EDGES
+    # no input distinct/materialization: edge phases arrive committed and
+    # pair-unique; round 1's small-star distinct dedupes anything else
     cur = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    if driver_max_edges > 0:
-        # cheap narrow count (upstream edge phase is already materialized);
-        # union-find tolerates duplicate edges, so no distinct() shuffle and
-        # no extra localCheckpoint on the driver path
-        if cur.count() <= driver_max_edges:
-            return _driver_union_find(cur)
-    # no input distinct/materialization: the edge phase arrives committed
-    # (a parquet scan) and already pair-unique (salted sub-blocks are
-    # pair-disjoint); round 1's small-star distinct dedupes anything else
     prev_sig = None
-    for _round in range(max_iterations):
+    for _round in range(_MAX_STAR_ROUNDS):
         cur = _small_star(_large_star(cur)).localCheckpoint(eager=True)
         sig_row = cur.agg(
             F.count("*").alias("n"),
@@ -291,10 +216,64 @@ def connected_components(
         if sig == prev_sig:
             break
         prev_sig = sig
-    # stable state: every edge is (node, root); add the roots themselves
-    assign = cur.select(F.col("src").alias("record_id"), F.col("dst").alias("cluster_id"))
-    roots = cur.select(F.col("dst").alias("record_id"), F.col("dst").alias("cluster_id")).distinct()
-    return assign.union(roots).distinct()
+    # stable state: every edge is (node, root); a root (and a node seen on
+    # self-loops only) labels itself
+    nodes = (
+        edges.select(F.col("src").alias("node"), F.col("src_prio").alias("prio"))
+        .union(edges.select("dst", "dst_prio"))
+        .groupBy("node")
+        .agg(F.max("prio").alias("prio"))
+    )
+    labels = nodes.join(
+        cur.select(F.col("src").alias("node"), F.col("dst").alias("cluster_id")),
+        "node",
+        "left",
+    ).withColumn("cluster_id", F.coalesce("cluster_id", "node"))
+    best = labels.groupBy("cluster_id").agg(
+        F.min(F.struct((-F.col("prio")).alias("nprio"), F.col("node").alias("rep"))).alias("b")
+    )
+    return labels.join(best, "cluster_id").select(
+        "node", "cluster_id", F.col("b.rep").alias("representative_id")
+    )
+
+
+def cluster_labels(edges: DataFrame, n_edges: int | None = None) -> DataFrame:
+    """(node, cluster_id, representative_id) for every node of `edges`.
+
+    The package's one clustering engine. `edges` has (src, dst), optionally
+    (src_prio, dst_prio) integer election priorities (0 when absent) and
+    `block_id` (match_edges' salted sub-block). cluster_id is the
+    component's min node id in the id column's order; representative_id
+    its max-priority node, ties to the min id. `n_edges`, when known
+    (checkpoint footer counts), skips the sizing job.
+
+    Lanes: at or below `_DRIVER_CC_MAX_EDGES` edges, one Arrow collect and
+    `_labels_and_winners_pdf` on the driver, the ~|nodes|-sized result
+    broadcast to whatever it attaches to. Above it, `block_local_labels`
+    when the edges carry block_id, else `_star_labels`. All lanes give the
+    same labels.
+    """
+    if "src_prio" not in edges.columns:
+        edges = edges.withColumns({"src_prio": F.lit(0), "dst_prio": F.lit(0)})
+    if n_edges is None:
+        n_edges = edges.count()
+    if n_edges <= _DRIVER_CC_MAX_EDGES:
+        pdf = edges.select("src", "dst", "src_prio", "dst_prio").toPandas()
+        return F.broadcast(
+            edges.sparkSession.createDataFrame(_labels_and_winners_pdf(pdf), _label_schema(edges))
+        )
+    if "block_id" in edges.columns:
+        return block_local_labels(edges)
+    return _star_labels(edges)
+
+
+def connected_components(edges: DataFrame) -> DataFrame:
+    """(record_id, cluster_id) for every node appearing in `edges`: the
+    label-only view of cluster_labels (cluster_id = min id of the
+    component)."""
+    return cluster_labels(edges.select("src", "dst")).select(
+        F.col("node").alias("record_id"), "cluster_id"
+    )
 
 
 def group_label_table(
@@ -310,44 +289,23 @@ def group_label_table(
     group, so the per-cluster winner under (max priority, ties to min
     record_id) is decidable on the rep table alone. Labels are identical to
     CC on the full record graph: group_rep is the min record of its group and
-    the component label is the min rep. Election is `_labels_and_winners_pdf`
-    (B7, ALATaxonResolver.principals analog, deterministic tie-break).
+    the component label is the min rep.
 
     `rep_edges` is the match_edges output (src, dst, src_prio, dst_prio,
-    block_id); `n_edges`, when known (checkpoint footer counts), skips the
-    sizing job. Small graphs (the common case -- the rep graph is the
-    contraction of exact duplicates) take the driver lane: numpy union-find
-    + election over the collected edge list, and the ~|nodes|-sized label
-    frame broadcast-attaches to the rep table. Large graphs go distributed
-    through block_local_labels: the pipeline blocks on a single tier, so
-    components are confined to one salted sub-block and one repartition +
-    partition-local union-find replaces iterated star rounds.
+    block_id), labeled by cluster_labels (`n_edges` as there): small graphs
+    (the common case -- the rep graph is the contraction of exact
+    duplicates) on the driver, the label frame broadcast-attached to the rep
+    table; large graphs block-local, one repartition + partition-local
+    union-find in place of iterated star rounds. Groups outside the edge
+    graph are singleton clusters and elect themselves via coalesce.
     """
-    spark = reps.sparkSession
-    if n_edges is None:
-        n_edges = rep_edges.count()
-    if n_edges <= _DRIVER_CC_MAX_EDGES:
-        label_pdf = _labels_and_winners_pdf(
-            rep_edges.select("src", "dst", "src_prio", "dst_prio").toPandas()
-        )
-        labels = F.broadcast(
-            spark.createDataFrame(label_pdf)
-            if len(label_pdf)
-            else spark.createDataFrame(
-                [], "grp_rep string, cluster_id string, representative_id string"
-            )
-        )
-    else:
-        labels = block_local_labels(rep_edges)
-    groups = reps.select("_g1", "_g2", F.col("record_id").alias("grp_rep"))
-    return (
-        groups.join(labels, "grp_rep", "left")
-        .withColumn("cluster_id", F.coalesce(F.col("cluster_id"), F.col("grp_rep")))
-        .withColumn(
-            "representative_id",
-            F.coalesce(F.col("representative_id"), F.col("grp_rep")),
-        )
-        .select("_g1", "_g2", "cluster_id", "representative_id")
+    labels = cluster_labels(rep_edges, n_edges)
+    groups = reps.select("_g1", "_g2", F.col("record_id").alias("node"))
+    return groups.join(labels, "node", "left").select(
+        "_g1",
+        "_g2",
+        F.coalesce("cluster_id", "node").alias("cluster_id"),
+        F.coalesce("representative_id", "node").alias("representative_id"),
     )
 
 
@@ -376,7 +334,7 @@ def label_attach_arrow(reps_tbl, label_pdf):
         )
     lbl = pa.Table.from_pandas(label_pdf, preserve_index=False)
     joined = reps_tbl.join(
-        lbl, keys=["record_id"], right_keys=["grp_rep"], join_type="left outer"
+        lbl, keys=["record_id"], right_keys=["node"], join_type="left outer"
     )
     return pa.table(
         {
@@ -597,10 +555,6 @@ def incremental_cc_update(
         .select(F.col("_ra").alias("src"), F.col("_rb").alias("dst"))
         .distinct()
     )
-    if rep_edges.isEmpty():
-        return lab_all.select(
-            F.col("_id").alias(id_col), F.col("_rep").alias(cluster_col)
-        )
     rep_map = connected_components(rep_edges).select(
         F.col("record_id").alias("_rep"),
         F.col("cluster_id").alias("_new_rep"),

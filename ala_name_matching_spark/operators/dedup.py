@@ -17,7 +17,6 @@ free-text corpora. Scale notes per function.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -25,6 +24,7 @@ from pyspark.sql import types as T
 
 from ala_name_matching_spark.functions.normalize import norm_text_col
 from ala_name_matching_spark.operators import blocking
+from ala_name_matching_spark.operators.clustering import cluster_labels
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -486,16 +486,11 @@ def neardup_clusters(
 ) -> DataFrame:
     """(doc_id, cluster_rep): transitive near-dup clusters, rep = min doc_id.
 
-    Drives the pipeline's connected-components engine (large-star/small-star
-    with the gated driver union-find fast path, clustering.py) over near-dup
-    edges and maps every document -- singletons included -- to its component
-    representative. `keep = (doc_id == cluster_rep)` is the dedup keep-list.
-
-    CC compares node ids *lexicographically* (string keys in the ER
-    pipeline); int64 doc ids are therefore encoded as zero-padded 20-digit
-    strings (lex order == numeric order for non-negative int64) and the
-    label cast back, so `cluster_rep` is the numeric min -- exactly what a
-    SQL oracle's min() over the reachability closure computes.
+    Runs the package's clustering engine (clustering.cluster_labels) over
+    near-dup edges, with the doc ids as they are, and maps every document --
+    singletons included -- to its component representative, the numeric min
+    doc id, exactly what a SQL oracle's min() over the reachability closure
+    computes. `keep = (doc_id == cluster_rep)` is the dedup keep-list.
 
     Pass `edges` to cluster a precomputed pair table (e.g. the LSH-verified
     pairs at scale); default is the exact `jaccard_edges` baseline so the
@@ -503,28 +498,10 @@ def neardup_clusters(
     """
     if edges is None:
         edges = jaccard_edges(docs, id_col, text_col, shingle_n, threshold)
-    return _attach_reps(docs.select(F.col(id_col).alias("doc_id")), _neardup_labels(edges))
-
-
-# int64 doc id -> 20-digit string: lex order == numeric order (non-negative
-# ids), the node-id encoding of the CC engine and its driver kernels
-_ID_PAD = "%020d"
-
-
-def _neardup_labels(edges: DataFrame, driver_max_edges: int | None = None) -> DataFrame:
-    """(doc_id, cluster_rep) for every node of a near-dup edge table, through
-    clustering.connected_components on padded ids (driver_max_edges as
-    there)."""
-    from ala_name_matching_spark.operators.clustering import connected_components
-
-    pad = lambda c: F.format_string(_ID_PAD, c)  # noqa: E731
-    return connected_components(
-        edges.select(pad(F.col("doc_id_l")).alias("src"), pad(F.col("doc_id_r")).alias("dst")),
-        driver_max_edges=driver_max_edges,
-    ).select(
-        F.col("record_id").cast("long").alias("doc_id"),
-        F.col("cluster_id").cast("long").alias("cluster_rep"),
-    )
+    labels = cluster_labels(
+        edges.select(F.col("doc_id_l").alias("src"), F.col("doc_id_r").alias("dst"))
+    ).select(F.col("node").alias("doc_id"), F.col("cluster_id").alias("cluster_rep"))
+    return _attach_reps(docs.select(F.col(id_col).alias("doc_id")), labels)
 
 
 def _attach_reps(nodes: DataFrame, labels: DataFrame) -> DataFrame:
@@ -624,25 +601,14 @@ def dedup_keep_best(
     all dups" but "keep the best exemplar" (boilerplate-heavy mirrors lose
     to the cleanest copy).
 
-    Two lanes, split at clustering._DRIVER_CC_MAX_EDGES edges (the gate of
-    connected_components and group_label_table). Small graphs collect the
-    edges and run union-find + election in numpy on the driver
-    (clustering._labels_and_winners_pdf over padded ids with priority
-    rint(quality * 1e6) -- exact, quality_score_col rounds to 6 places --
-    so max priority then min id is the same rule); the node labels
-    broadcast-attach to the docs. Large graphs run distributed CC and a
-    single partially aggregated min(struct(-quality, doc_id)) per cluster
-    + a join back -- the skew-immune agg+join shape of
-    `fusion.golden_record`'s representative pick, NOT a row_number window:
-    a mega-cluster (boilerplate at 100 TB) reduces map-side to one row per
-    partition instead of sorting all members in one window partition.
-
+    Clustering and election are one clustering.cluster_labels call over
+    the edges with priority rint(quality * 1e6) -- exact, quality_score_col
+    rounds to 6 places -- so max priority then min doc_id is the rule above.
     Pass `edges` (quality_edges over e.g. LSH-verified pairs) for the
     production lane, and `n_edges` when known (checkpoint footer counts) to
     skip the sizing job; the default exact-Jaccard lane keeps the whole
     query oracle-checkable.
     """
-    from ala_name_matching_spark.operators import clustering
     from ala_name_matching_spark.operators.text_analysis import quality_score_col
 
     if edges is None:
@@ -653,43 +619,22 @@ def dedup_keep_best(
         F.col(id_col).alias("doc_id"),
         quality_score_col(F.col(text_col)).alias("quality"),
     )
-    if n_edges is None:
-        n_edges = edges.count()
-    if n_edges <= clustering._DRIVER_CC_MAX_EDGES:
-        pdf = edges.select("doc_id_l", "doc_id_r", "quality_l", "quality_r").toPandas()
-        label_pdf = clustering._labels_and_winners_pdf(
-            pd.DataFrame({
-                "src": pdf["doc_id_l"].map(_ID_PAD.__mod__),
-                "dst": pdf["doc_id_r"].map(_ID_PAD.__mod__),
-                "src_prio": np.rint(pdf["quality_l"] * 1e6).astype("int64"),
-                "dst_prio": np.rint(pdf["quality_r"] * 1e6).astype("int64"),
-            })
-        )
-        labels = docs.sparkSession.createDataFrame(
-            pd.DataFrame({
-                "doc_id": label_pdf["grp_rep"].astype("int64"),
-                "cluster_rep": label_pdf["cluster_id"].astype("int64"),
-                "keep": label_pdf["grp_rep"] == label_pdf["representative_id"],
-            }),
-            "doc_id bigint, cluster_rep bigint, keep boolean",
-        )
-        return _attach_reps(q, F.broadcast(labels)).select(
-            "doc_id", "cluster_rep", "quality", F.coalesce("keep", F.lit(True)).alias("keep")
-        )
-    # over the gate: distributed CC directly (its own driver check would
-    # only recount the edges to fail the same gate)
-    member = _attach_reps(q, _neardup_labels(edges, driver_max_edges=0))
-    best = member.groupBy("cluster_rep").agg(
-        F.min(F.struct((-F.col("quality")).alias("nq"), F.col("doc_id").alias("best_id"))).alias("b")
+    prio = lambda c: F.rint(F.col(c) * 1e6).cast("long")  # noqa: E731
+    labels = cluster_labels(
+        edges.select(
+            F.col("doc_id_l").alias("src"),
+            F.col("doc_id_r").alias("dst"),
+            prio("quality_l").alias("src_prio"),
+            prio("quality_r").alias("dst_prio"),
+        ),
+        n_edges,
+    ).select(
+        F.col("node").alias("doc_id"),
+        F.col("cluster_id").alias("cluster_rep"),
+        (F.col("node") == F.col("representative_id")).alias("keep"),
     )
-    return (
-        member.join(best, "cluster_rep")
-        .select(
-            "doc_id",
-            "cluster_rep",
-            "quality",
-            (F.col("doc_id") == F.col("b.best_id")).alias("keep"),
-        )
+    return _attach_reps(q, labels).select(
+        "doc_id", "cluster_rep", "quality", F.coalesce("keep", F.lit(True)).alias("keep")
     )
 
 

@@ -9,8 +9,9 @@ al. orderings):
                failing the hard gates (map-only, pure JVM)
   c2_exact     exact dedup on normalized text (keep lowest id per group)
   c3_neardup   MinHash-LSH candidates -> exact-Jaccard verify, committed
-               as the side phase c3_edges -> connected components +
-               quality-aware keep-best election (dedup_keep_best)
+               as the side phase c3_edges -> quality-aware keep-best
+               (dedup_keep_best: components and election in one
+               clustering.cluster_labels call)
   c4_strip     cross-doc duplicated-span removal on the survivors
 
 Every stage is built or resumed by CheckpointManager.phase (a committed

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from ala_name_matching_spark.operators.ladder import search_ladder
 
@@ -44,6 +45,32 @@ def _write_epoch_idempotent(df: DataFrame, epoch_id: int, path: str) -> None:
         .partitionBy("epoch")
         .parquet(path)
     )
+
+
+class _ReleasingQuery(StreamingQuery):
+    """A StreamingQuery that unpersists the corpus-side tables its batch
+    handler reads once the query has terminated -- awaited to the end or
+    stopped -- so a drained query leaves no cache behind in the session."""
+
+    def __init__(self, query: StreamingQuery, cached: list[DataFrame]):
+        super().__init__(query._jsq)
+        self._cached = cached
+
+    def _release(self) -> None:
+        for df in self._cached:
+            df.unpersist()
+        self._cached = []
+
+    def awaitTermination(self, timeout=None):
+        try:
+            return super().awaitTermination(timeout)
+        finally:
+            if not self.isActive:
+                self._release()
+
+    def stop(self) -> None:
+        super().stop()
+        self._release()
 
 
 def read_transcript_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -138,11 +165,11 @@ def streaming_neardup_match(
     Writes (doc_id_l=query, doc_id_r=corpus, jaccard, epoch) effectively
     exactly-once (epoch-partitioned idempotent sink).
 
-    SCALE: the corpus band table is computed ONCE and persisted (in
-    production it is the committed index table, not a cache); per
-    micro-batch the work is batch-sized -- band build on the new docs only,
-    a hash join on band_key against the index, and verification on the
-    candidate pairs only. Nothing rescans the corpus text except the
+    SCALE: the corpus band table is computed ONCE and persisted until the
+    query terminates (in production it is the committed index table, not a
+    cache); per micro-batch the work is batch-sized -- band build on the new
+    docs only, a hash join on band_key against the index, and verification
+    on the candidate pairs only. Nothing rescans the corpus text except the
     semi-join-pruned verify side.
     """
     from ala_name_matching_spark.operators.dedup import (
@@ -171,12 +198,13 @@ def streaming_neardup_match(
         )
         _write_epoch_idempotent(verified, epoch_id, out_path)
 
-    return (
+    query = (
         stream.writeStream.foreachBatch(handle)
         .option("checkpointLocation", checkpoint_path)
         .trigger(availableNow=True)
         .start()
     )
+    return _ReleasingQuery(query, [corpus_bands])
 
 
 def streaming_index_update(
@@ -258,7 +286,8 @@ def streaming_semdedup_match(
     work bounded by the batch x its clusters).
 
     The centroid matrix and the cluster-partitioned corpus are computed
-    once up front (in production: the committed semdedup index tables).
+    once up front and persisted until the query terminates (in
+    production: the committed semdedup index tables).
     Per micro-batch: one Arrow matmul to assign, an equi-join on
     cluster_id against the persisted members, exact cosine verify.
     Writes (vec_id, corpus_vec_id, cluster_id, cosine, epoch) effectively
@@ -347,12 +376,13 @@ def streaming_semdedup_match(
         )
         _write_epoch_idempotent(matched, epoch_id, out_path)
 
-    return (
+    query = (
         stream.writeStream.foreachBatch(handle)
         .option("checkpointLocation", checkpoint_path)
         .trigger(availableNow=True)
         .start()
     )
+    return _ReleasingQuery(query, [members, cv])
 
 
 def streaming_drift_monitor(

@@ -118,9 +118,9 @@ def test_checkpoint_mode_parity(spark, fixture_docs, tmp_path):
 @pytest.mark.parametrize("checkpointed", [False, True])
 def test_c3_distributed_lane_parity(spark, fixture_docs, tmp_path, monkeypatch, checkpointed):
     """c3's dedup_keep_best elects on the driver at or below
-    _DRIVER_CC_MAX_EDGES (the c3_edges footer count) and runs distributed CC
-    above it: both lanes keep the same docs."""
-    from ala_name_matching_spark.operators import clustering, dedup
+    _DRIVER_CC_MAX_EDGES (the c3_edges footer count) and runs the star
+    rounds above it: both lanes keep the same docs."""
+    from ala_name_matching_spark.operators import clustering
     from ala_name_matching_spark.sources.checkpoints import CheckpointManager
 
     def run(lane):
@@ -129,9 +129,9 @@ def test_c3_distributed_lane_parity(spark, fixture_docs, tmp_path, monkeypatch, 
         return sorted(map(tuple, out["clean"].collect())), out["stats"].collect()
 
     calls = []
-    real_labels = dedup._neardup_labels
+    real_labels = clustering._star_labels
     monkeypatch.setattr(
-        dedup, "_neardup_labels",
+        clustering, "_star_labels",
         lambda *a, **k: calls.append("distributed") or real_labels(*a, **k),
     )
     driver = run("driver")

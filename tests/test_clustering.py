@@ -76,19 +76,31 @@ def test_group_label_table_empty_edges(spark, monkeypatch, lane):
     assert _group_labels(spark, ["a", "b"], []) == {"a": ("a", "a"), "b": ("b", "b")}
 
 
-def test_distributed_matches_driver_path(spark):
-    """Large-star/small-star must produce identical labels to driver UF."""
-    edges = [
-        ("a", "b"), ("b", "c"), ("c", "a"), ("x", "y"),
-        ("m", "n"), ("n", "o"), ("o", "p"), ("p", "m"), ("q", "m"),
-    ]
+_STR_EDGES = [
+    ("a", "b"), ("b", "c"), ("c", "a"), ("x", "y"),
+    ("m", "n"), ("n", "o"), ("o", "p"), ("p", "m"), ("q", "m"),
+]
+# 10 < 9 < 100 as decimal strings: the label must follow the numeric order
+_INT_EDGES = [(9, 10), (100, 9), (7, 8)]
+
+
+@pytest.mark.parametrize(
+    "edges, expected",
+    [
+        (_STR_EDGES, {**dict.fromkeys("abc", "a"), **dict.fromkeys("xy", "x"),
+                      **dict.fromkeys("mnopq", "m")}),
+        (_INT_EDGES, {9: 9, 10: 9, 100: 9, 7: 7, 8: 7}),
+    ],
+    ids=["string", "bigint"],
+)
+def test_distributed_matches_driver_path(spark, monkeypatch, edges, expected):
+    """Large-star/small-star must produce identical labels to the driver
+    kernel: the min id in the id column's own order."""
     df = spark.createDataFrame(pd.DataFrame(edges, columns=["src", "dst"]))
     driver = {r["record_id"]: r["cluster_id"] for r in connected_components(df).collect()}
-    dist = {
-        r["record_id"]: r["cluster_id"]
-        for r in connected_components(df, driver_max_edges=0).collect()
-    }
-    assert driver == dist
+    monkeypatch.setattr(cl, "_DRIVER_CC_MAX_EDGES", 0)
+    dist = {r["record_id"]: r["cluster_id"] for r in connected_components(df).collect()}
+    assert driver == dist == expected
 
 
 def test_p5_three_lane_parity(spark, monkeypatch, tmp_path):
@@ -147,8 +159,8 @@ def test_incremental_cc_parity_with_full_recompute(spark):
         incremental_cc_update,
     )
 
-    old = [(1, 2), (3, 4), (10, 11)]
-    new = [(2, 3), (20, 21), (11, 20)]  # merges {1..4}; chains 10-11-20-21
+    old = [(1, 2), (3, 4), (9, 10), (10, 11)]  # 9-10 crosses a digit boundary
+    new = [(2, 3), (20, 21), (11, 20)]  # merges {1..4}; chains 9-10-11-20-21
     old_e = spark.createDataFrame(pd.DataFrame(old, columns=["src", "dst"]))
     new_e = spark.createDataFrame(pd.DataFrame(new, columns=["src", "dst"]))
     labels = connected_components(old_e)
@@ -161,7 +173,7 @@ def test_incremental_cc_parity_with_full_recompute(spark):
         for r in connected_components(old_e.unionByName(new_e)).collect()
     }
     assert inc == full
-    assert inc[4] == 1 and inc[21] == 10
+    assert inc[4] == 1 and inc[21] == inc[10] == 9
     # newcomers 20, 21 were never in the committed labeling
     assert 20 in inc and 21 in inc
 

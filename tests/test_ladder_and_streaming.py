@@ -107,6 +107,53 @@ def test_ladder_homonym_gate_matches_batch(spark):
     assert clusters["c#2"] == clusters["c#3"] != clusters["c#1"]
 
 
+def test_ladder_matches_land_in_one_batch_cluster(spark, tmp_path):
+    """Held-out parity of stream and batch ER on a seeded transcript set:
+    each query of a held-out slice is matched against the rest through
+    search_ladder, then run_pipeline clusters the union. Every ladder match
+    (q, i) must land in one batch cluster. Placeholder texts are left out:
+    the ladder skips `__ph__` keys while batch ER keeps each placeholder
+    its own group. p3 must report 0 lost pairs, so salting cannot hide a
+    divergence."""
+    from pyspark.sql import functions as F
+
+    from ala_name_matching_spark.operators.blocking import (
+        with_blocking_columns,
+        with_record_id,
+    )
+    from ala_name_matching_spark.operators.ladder import search_ladder
+    from ala_name_matching_spark.plans.pipeline import run_pipeline
+    from ala_name_matching_spark.sources.checkpoints import CheckpointManager
+    from ala_name_matching_spark.sources.transcripts import synthesize_transcripts
+
+    t = synthesize_transcripts(spark, 2000, partitions=4).drop("entity_id")
+    t = t.localCheckpoint(eager=True)
+    held_out = F.pmod(F.xxhash64("conv_id", "turn_idx"), 10) == 0
+    matches = [
+        (r["query_id"], r["index_id"])
+        for r in search_ladder(t.where(held_out), t.where(~held_out))
+        .where(F.col("index_id").isNotNull())
+        .collect()
+    ]
+    placeholders = {
+        r["record_id"]
+        for r in with_blocking_columns(with_record_id(t))
+        .where(F.col("canon_key").startswith("__ph__"))
+        .select("record_id")
+        .collect()
+    }
+    ckpt = CheckpointManager(spark, str(tmp_path / "ckpt"))
+    cluster = {
+        r["record_id"]: r["cluster_id"]
+        for r in run_pipeline(t, checkpoints=ckpt).select("record_id", "cluster_id").collect()
+    }
+    assert ckpt.read("p3_block_stats").agg(F.sum("lost_pairs")).first()[0] == 0
+    checked = [(q, i) for q, i in matches if not {q, i} & placeholders]
+    assert len(checked) >= 100, "the held-out slice must exercise the ladder"
+    split = [(q, i) for q, i in checked if cluster[q] != cluster[i]]
+    assert not split, split[:10]
+
+
 def test_streaming_incremental_match(spark, index, tmp_path):
     from ala_name_matching_spark.streaming.incremental import (
         incremental_match,
@@ -407,6 +454,48 @@ def test_streaming_semdedup_match(spark, tmp_path):
     }
     assert (100, 7) in got and got[(100, 7)] >= 0.999999
     assert not any(v == 101 for v, _ in got)
+
+
+def test_streaming_matches_release_corpus_caches(spark, tmp_path):
+    """streaming_neardup_match and streaming_semdedup_match persist their
+    corpus side for the batch handler; once the query has drained, the
+    session holds no more cached RDDs than before the call."""
+    import numpy as np
+
+    from ala_name_matching_spark.streaming.incremental import (
+        streaming_neardup_match,
+        streaming_semdedup_match,
+    )
+
+    def n_cached():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    def drain(start, rows, ddl, name):
+        src = str(tmp_path / f"{name}_in")
+        spark.createDataFrame(rows, ddl).write.parquet(src)
+        stream = spark.readStream.schema(ddl).parquet(src)
+        before = n_cached()
+        q = start(stream, str(tmp_path / f"{name}_out"), str(tmp_path / f"{name}_ckpt"))
+        assert q.awaitTermination(120)
+        assert n_cached() == before, name
+
+    text = "the quick brown fox jumps over the lazy dog near the river bank"
+    docs = spark.createDataFrame([(100, text), (101, "unrelated invoices due")],
+                                 "doc_id long, text string")
+    drain(
+        lambda s, out, ck: streaming_neardup_match(s, docs, out, ck),
+        [(1, text.replace("river", "stream"))], "doc_id long, text string", "nd",
+    )
+    base = np.random.RandomState(5).standard_normal((20, 8))
+    vecs = spark.createDataFrame(
+        [(i, [float(x) for x in base[i]]) for i in range(20)],
+        "vec_id long, embedding array<double>",
+    )
+    drain(
+        lambda s, out, ck: streaming_semdedup_match(s, vecs, out, ck, n_clusters=2),
+        [(100, [float(x) for x in base[3] * 2.0])],
+        "vec_id long, embedding array<double>", "sd",
+    )
 
 
 def test_streaming_index_replay_is_idempotent(spark, tmp_path):

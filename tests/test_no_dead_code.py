@@ -1,7 +1,7 @@
 """Guard: the package ships only what a shipped path reaches.
 
-Two checks: every definition has a shipped caller, and every option has a
-shipped setter.
+Three checks: every definition has a shipped caller, every option has a
+shipped setter, and package code reads no environment knob.
 
 A top-level function or class of the package is live when its name occurs
 as code in a root or in the body of another live definition, taken as a
@@ -30,6 +30,10 @@ through `*args` / `**kwargs`. The callee is matched by name (`f(...)` or
 argument unless it is a staticmethod. An option no shipped call sets only
 ever takes its default, so the branch behind it runs only in tests; it
 should be a constant instead. EXEMPT_OPTIONS lists the few kept on purpose.
+
+An environment read (`os.environ`, `os.getenv`, or either imported by name)
+is an option no call site shows: a branch that only a shell setting selects.
+EXEMPT_ENV lists the deployment settings the session reads on purpose.
 """
 
 from __future__ import annotations
@@ -57,6 +61,12 @@ EXEMPT_OPTIONS = {
     "linkage.fs_em_multilevel(m_init)": "test_linkage starts the model at "
     "fs_em's init to show it reduces exactly to the reference fs_em",
     "linkage.fs_em_multilevel(u_init)": "as m_init",
+}
+
+EXEMPT_ENV = {
+    "session(SPARK_GRAFT_CPUS)": "a deployment setting: the host's CPU "
+    "budget, which sizes the default local master and its shuffle partitions",
+    "session(SPARK_DRIVER_MEMORY)": "a deployment setting: the driver JVM heap",
 }
 
 
@@ -250,6 +260,46 @@ def unset_options(
     return sorted(out)
 
 
+def _env_key(node: ast.AST, parents: dict) -> str:
+    """The variable an environment access names: the first argument of the
+    call (`getenv("X")`, `environ.get("X")`) or the subscript
+    (`environ["X"]`) when it is a string literal, else `?`."""
+    up = parents.get(node)
+    if isinstance(up, ast.Attribute):
+        up = parents.get(up)
+    key = None
+    if isinstance(up, ast.Call) and up.args:
+        key = up.args[0]
+    elif isinstance(up, ast.Subscript):
+        key = up.slice
+    if isinstance(key, ast.Constant) and isinstance(key.value, str):
+        return key.value
+    return "?"
+
+
+def env_reads(package: dict[str, str], exempt: set[str] = frozenset()) -> list[str]:
+    """`path:line module(VAR)` of every environment access in `package`;
+    reads named in `exempt` are skipped."""
+    out = []
+    for path, text in package.items():
+        module = os.path.splitext(os.path.basename(path))[0]
+        tree = ast.parse(text)
+        parents = {c: n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute):
+                name = node.attr
+            elif isinstance(node, ast.Name):
+                name = node.id
+            else:
+                continue
+            if name not in ("environ", "getenv"):
+                continue
+            key = f"{module}({_env_key(node, parents)})"
+            if key not in exempt:
+                out.append(f"{path}:{node.lineno} {key}")
+    return sorted(out)
+
+
 def _read_tree(entries: list[str], excluded: list[str] = ()) -> dict[str, str]:
     out = {}
     for entry in entries:
@@ -287,6 +337,15 @@ def test_every_option_has_a_shipped_setter():
     # an exemption whose option is gone or now has a setter is stale
     names = {entry.split()[1] for entry in unset_options(package, roots)}
     assert set(EXEMPT_OPTIONS) <= names, set(EXEMPT_OPTIONS) - names
+
+
+def test_package_reads_no_environment_knob():
+    package = _read_tree([PKG])
+    reads = env_reads(package, set(EXEMPT_ENV))
+    assert not reads, "environment reads in package code:\n" + "\n".join(reads)
+    # an exemption whose read is gone is stale
+    names = {entry.split()[1] for entry in env_reads(package)}
+    assert set(EXEMPT_ENV) <= names, set(EXEMPT_ENV) - names
 
 
 _LIB = '''
@@ -432,6 +491,21 @@ def caller():
 '''
 
 
+_ENV = '''
+import os
+from os import environ, getenv
+
+A = os.environ.get("KNOB_A", "1")
+B = os.getenv("KNOB_B")
+C = environ["KNOB_C"]
+D = "KNOB_D" in os.environ
+
+
+def knob(name):
+    return getenv(name)
+'''
+
+
 def test_guard_scanner_on_an_in_memory_package():
     package = {"pkg/lib.py": _LIB, "pkg/evaluate.py": _EXEMPT_MOD, "pkg/lib2.py": _LIB2}
     roots = {
@@ -473,6 +547,15 @@ def test_guard_scanner_on_an_in_memory_package():
     assert dead == {
         "in_comment", "in_docstring", "in_test", "cycle_a", "cycle_b", "recursive_dead"
     }
+    # Environment reads: environ.get, getenv, a subscript, a membership test
+    # and a read by a non-literal name, by attribute or imported name, are
+    # each reported once; the import itself is not a read. An exempt read
+    # is skipped.
+    reads = env_reads({"pkg/env.py": _ENV}, {"env(KNOB_A)"})
+    assert sorted(r.split()[1] for r in reads) == [
+        "env(?)", "env(?)", "env(KNOB_B)", "env(KNOB_C)"
+    ]
+    assert len(env_reads({"pkg/env.py": _ENV})) == 5
 
 
 def test_guard_roots_hold_no_test_source():

@@ -177,7 +177,7 @@ def test_error_catalog_integrity():
     assert not stray, f"undocumented code literals in operators/: {stray}"
     # and the catalog itself covers the reference's core enum families
     assert {"HOMONYM", "EXCLUDED", "ASSOCIATED_EXCLUDED", "MISAPPLIED",
-            "PARENT_CHILD_SYNONYM", "QUESTION"} <= set(ERROR_CATALOG)
+            "QUESTION"} <= set(ERROR_CATALOG)
 
 
 def test_dm_fuzzy_lookup_cross_spelling(spark):

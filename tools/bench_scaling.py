@@ -65,7 +65,8 @@ sys.path.insert(0, ".")
 # measure a code path production never takes -- and its cost grows with the
 # input while using zero executors, i.e. it is the textbook non-scaling
 # component. Absolute-throughput numbers with the lane ON come from bench.py.
-os.environ.setdefault("ALA_SPARK_DRIVER_CC_MAX_EDGES", "0")
+from ala_name_matching_spark.operators import clustering
+clustering._DRIVER_CC_MAX_EDGES = 0
 from ala_name_matching_spark.plans.pipeline import run_pipeline
 from ala_name_matching_spark.session import get_spark
 from ala_name_matching_spark.sources.checkpoints import CheckpointManager
