@@ -232,7 +232,9 @@ def _star_labels(edges: DataFrame) -> DataFrame:
     best = labels.groupBy("cluster_id").agg(
         F.min(F.struct((-F.col("prio")).alias("nprio"), F.col("node").alias("rep"))).alias("b")
     )
-    return labels.join(best, "cluster_id").select(
+    # left, not inner: `best` has a row per cluster_id either way, and a
+    # label-only caller (connected_components) then prunes the election
+    return labels.join(best, "cluster_id", "left").select(
         "node", "cluster_id", F.col("b.rep").alias("representative_id")
     )
 

@@ -8,10 +8,14 @@ effectively exactly-once (foreachBatch checkpoint + epoch-partitioned
 idempotent writes -- see _write_epoch_idempotent).
 
 Design for scale:
-  * state (the clustered feature table) lives in the checkpointed table
-    store (Iceberg in production); each micro-batch broadcast- or
-    hash-joins against it with the SAME batch operators (operators/ladder) --
-    no separate streaming codepath to keep semantically in sync.
+  * the static side of every lane (the ladder's prepared index, the
+    near-dup corpus bands, the SemDeDup members) is built ONCE when the
+    stream starts, persisted until the query terminates and released by
+    _ReleasingQuery; each micro-batch does batch-sized work against it
+    with the SAME batch operators (operators/ladder, operators/dedup) --
+    no separate streaming codepath to keep semantically in sync;
+  * every lane starts through _start_batches: one foreachBatch wiring,
+    one empty-batch guard, one availableNow trigger.
 """
 
 from __future__ import annotations
@@ -20,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ala_name_matching_spark.operators.ladder import search_ladder
+from ala_name_matching_spark.operators.ladder import prepare_index, search_ladder
 
 TRANSCRIPT_DDL = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
@@ -47,10 +51,22 @@ def _write_epoch_idempotent(df: DataFrame, epoch_id: int, path: str) -> None:
     )
 
 
+def _checkpoint_rdds(df: DataFrame) -> dict:
+    """{rdd id: rdd} of the local-checkpoint RDDs `df` reads -- the
+    LogicalRDD leaves of its plan, whose blocks DataFrame.unpersist does
+    not free."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    nodes = (leaves.apply(i) for i in range(leaves.size()))
+    return {
+        n.rdd().id(): n.rdd() for n in nodes if n.getClass().getSimpleName() == "LogicalRDD"
+    }
+
+
 class _ReleasingQuery(StreamingQuery):
-    """A StreamingQuery that unpersists the corpus-side tables its batch
-    handler reads once the query has terminated -- awaited to the end or
-    stopped -- so a drained query leaves no cache behind in the session."""
+    """A StreamingQuery that unpersists the static-side tables (corpus or
+    prepared index) its batch handler reads once the query has terminated
+    -- awaited to the end or stopped -- so a drained query leaves no cache
+    behind in the session."""
 
     def __init__(self, query: StreamingQuery, cached: list[DataFrame]):
         super().__init__(query._jsq)
@@ -71,6 +87,25 @@ class _ReleasingQuery(StreamingQuery):
     def stop(self) -> None:
         super().stop()
         self._release()
+
+
+def _start_batches(
+    stream: DataFrame, checkpoint_path: str, handle, cached=()
+) -> _ReleasingQuery:
+    """Start `stream`, draining the available micro-batches through
+    `handle(batch_df, epoch_id)`; empty batches never reach it. The
+    returned query unpersists `cached` once it has terminated."""
+    def run(batch_df: DataFrame, epoch_id: int) -> None:
+        if not batch_df.isEmpty():
+            handle(batch_df, epoch_id)
+
+    query = (
+        stream.writeStream.foreachBatch(run)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+    )
+    return _ReleasingQuery(query, list(cached))
 
 
 def read_transcript_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -94,22 +129,29 @@ def incremental_match(
 ):
     """Match each arriving turn against the cluster-representative index.
 
-    foreachBatch applies the batch search ladder to the micro-batch and
-    writes (query_id, index_id, score, match_type) to `out_path` --
-    effectively exactly-once via the epoch-partitioned idempotent sink
-    (_write_epoch_idempotent). Returns the StreamingQuery (caller stops it).
+    The index is prepared once (ladder.prepare_index) and persisted until
+    the query terminates; foreachBatch applies the batch search ladder to
+    the micro-batch against it and writes (query_id, index_id, score,
+    match_type, error_codes) to `out_path` -- effectively exactly-once via
+    the epoch-partitioned idempotent sink (_write_epoch_idempotent). The
+    ladder's query-side barrier is released once its batch is written.
+    Returns the StreamingQuery (caller stops it).
     """
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _write_epoch_idempotent(search_ladder(batch_df, index), epoch_id, out_path)
+    prepared = prepare_index(index).persist()
+    index_rdds = _checkpoint_rdds(prepared)
 
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    def handle(batch_df: DataFrame, epoch_id: int) -> None:
+        matched = search_ladder(batch_df, prepared)
+        try:
+            _write_epoch_idempotent(matched, epoch_id, out_path)
+        finally:
+            # release the ladder's barrier, never the inputs' own checkpoints
+            inputs = index_rdds.keys() | _checkpoint_rdds(batch_df).keys()
+            for rdd_id, rdd in _checkpoint_rdds(matched).items():
+                if rdd_id not in inputs:
+                    rdd.unpersist(False)
+
+    return _start_batches(stream, checkpoint_path, handle, cached=[prepared])
 
 
 def streaming_exact_dedup(
@@ -183,8 +225,6 @@ def streaming_neardup_match(
     corpus_bands.persist()
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         q_bands = minhash_band_table(
             batch_df, id_col, text_col, num_hashes, bands, shingle_n
         ).select(F.col("doc_id").alias("doc_id_l"), "band_key")
@@ -198,13 +238,7 @@ def streaming_neardup_match(
         )
         _write_epoch_idempotent(verified, epoch_id, out_path)
 
-    query = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return _ReleasingQuery(query, [corpus_bands])
+    return _start_batches(stream, checkpoint_path, handle, cached=[corpus_bands])
 
 
 def streaming_index_update(
@@ -240,8 +274,6 @@ def streaming_index_update(
     analyzer = analyzer or tokens_col
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         analyzed = batch_df.select(
             F.col(id_col).alias("doc_id"), analyzer(F.col(text_col)).alias("_toks")
         )
@@ -259,12 +291,7 @@ def streaming_index_update(
         finally:
             analyzed.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, checkpoint_path, handle)
 
 
 def streaming_semdedup_match(
@@ -362,8 +389,6 @@ def streaming_semdedup_match(
         )
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         q = batch_df.select(
             F.col(id_col).alias("vec_id"),
             unit_rounded_col(F.col(vec_col)).alias("qnv"),
@@ -376,13 +401,7 @@ def streaming_semdedup_match(
         )
         _write_epoch_idempotent(matched, epoch_id, out_path)
 
-    query = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return _ReleasingQuery(query, [members, cv])
+    return _start_batches(stream, checkpoint_path, handle, cached=[members, cv])
 
 
 def streaming_drift_monitor(
@@ -438,8 +457,6 @@ def streaming_drift_monitor(
     s = float(smoothing)
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         cur = (
             batch_df.select(F.col(value_col).cast("long").alias("_v"))
@@ -487,9 +504,4 @@ def streaming_drift_monitor(
         )
         _write_epoch_idempotent(out, epoch_id, out_path)
 
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, checkpoint_path, handle)

@@ -103,6 +103,23 @@ def test_distributed_matches_driver_path(spark, monkeypatch, edges, expected):
     assert driver == dist == expected
 
 
+def test_label_only_components_skip_the_star_election(spark, monkeypatch):
+    """connected_components drops representative_id, so the star lane's
+    election (one aggregate + its join) must leave its optimized plan.
+    cluster_labels' plan joins the labels to the star forest, then joins
+    them to the election aggregate, which reads that first join again: 3
+    Joins. The label-only plan keeps the first join alone."""
+    import re
+
+    df = spark.createDataFrame(pd.DataFrame(_STR_EDGES, columns=["src", "dst"]))
+    monkeypatch.setattr(cl, "_DRIVER_CC_MAX_EDGES", 0)
+
+    def joins(out):
+        return len(re.findall(r"\bJoin ", out._jdf.queryExecution().optimizedPlan().toString()))
+
+    assert (joins(connected_components(df)), joins(cl.cluster_labels(df))) == (1, 3)
+
+
 def test_p5_three_lane_parity(spark, monkeypatch, tmp_path):
     """The three p5 lanes agree record by record.
 

@@ -49,7 +49,7 @@ def index(spark):
 
 
 def test_ladder_tiers(spark, index):
-    from ala_name_matching_spark.operators.ladder import search_ladder
+    from ala_name_matching_spark.operators.ladder import prepare_index, search_ladder
 
     queries = _df(
         spark,
@@ -64,7 +64,7 @@ def test_ladder_tiers(spark, index):
             ("q", 3, "user", "totally unrelated text about gardening tips", None, None),
         ],
     )
-    out = {r["query_id"]: r for r in search_ladder(queries, index).collect()}
+    out = {r["query_id"]: r for r in search_ladder(queries, prepare_index(index)).collect()}
     assert out["q#0"]["match_type"] == "EXACT" and out["q#0"]["index_id"] == "i#0"
     assert out["q#1"]["match_type"] == "CANONICAL" and out["q#1"]["index_id"] == "i#1"
     assert out["q#2"]["match_type"] == "PHONETIC" and out["q#2"]["index_id"] == "i#2"
@@ -74,12 +74,12 @@ def test_ladder_tiers(spark, index):
 def test_ladder_homonym_gate(spark, index):
     # identical text but conflicting role -> must not match the 'user' row;
     # resolves to the role-compatible homonym (i#3) instead (V5 analog)
-    from ala_name_matching_spark.operators.ladder import search_ladder
+    from ala_name_matching_spark.operators.ladder import prepare_index, search_ladder
 
     queries = _df(
         spark, [("q", 0, "tool", "the deploy restarted the cluster", None, None)]
     )
-    out = search_ladder(queries, index).collect()[0]
+    out = search_ladder(queries, prepare_index(index)).collect()[0]
     assert out["index_id"] == "i#3"
 
 
@@ -89,7 +89,7 @@ def test_ladder_homonym_gate_matches_batch(spark):
     tools differ and the author-similarity waiver does not lift it; c3 is a
     one-letter misspelling of c2 with c2's tool. Batch ER keeps c1 apart,
     so the ladder must not match c1 to either: NO_MATCH with HOMONYM."""
-    from ala_name_matching_spark.operators.ladder import search_ladder
+    from ala_name_matching_spark.operators.ladder import prepare_index, search_ladder
     from ala_name_matching_spark.plans.pipeline import run_pipeline
 
     text = "please list the files in the project folder"
@@ -97,7 +97,7 @@ def test_ladder_homonym_gate_matches_batch(spark):
     c2 = ("c", 2, "user", text, "browser", None)
     c3 = ("c", 3, "user", text.replace("project", "projekt"), "browser", None)
     for other in (c2, c3):
-        (out,) = search_ladder(_df(spark, [c1]), _df(spark, [other])).collect()
+        (out,) = search_ladder(_df(spark, [c1]), prepare_index(_df(spark, [other]))).collect()
         assert out["match_type"] == "NO_MATCH" and out["index_id"] is None
         assert set(out["error_codes"]) == {"HOMONYM", "NO_MATCH"}
     clusters = {
@@ -121,7 +121,7 @@ def test_ladder_matches_land_in_one_batch_cluster(spark, tmp_path):
         with_blocking_columns,
         with_record_id,
     )
-    from ala_name_matching_spark.operators.ladder import search_ladder
+    from ala_name_matching_spark.operators.ladder import prepare_index, search_ladder
     from ala_name_matching_spark.plans.pipeline import run_pipeline
     from ala_name_matching_spark.sources.checkpoints import CheckpointManager
     from ala_name_matching_spark.sources.transcripts import synthesize_transcripts
@@ -131,7 +131,7 @@ def test_ladder_matches_land_in_one_batch_cluster(spark, tmp_path):
     held_out = F.pmod(F.xxhash64("conv_id", "turn_idx"), 10) == 0
     matches = [
         (r["query_id"], r["index_id"])
-        for r in search_ladder(t.where(held_out), t.where(~held_out))
+        for r in search_ladder(t.where(held_out), prepare_index(t.where(~held_out)))
         .where(F.col("index_id").isNotNull())
         .collect()
     ]
@@ -183,7 +183,7 @@ def test_ladder_error_codes(spark, index):
     (performErrorCheckSearch analog, ALANameSearcher.java:660-682)."""
     from pyspark.sql import functions as F
 
-    from ala_name_matching_spark.operators.ladder import search_ladder
+    from ala_name_matching_spark.operators.ladder import prepare_index, search_ladder
 
     queries = _df(
         spark,
@@ -199,7 +199,7 @@ def test_ladder_error_codes(spark, index):
             ("q", 3, "user", "Re: Customer invoice was reconciled fully", None, None),
         ],
     )
-    out = {r["query_id"]: r for r in search_ladder(queries, index).collect()}
+    out = {r["query_id"]: r for r in search_ladder(queries, prepare_index(index)).collect()}
     assert out["q#0"]["error_codes"] == []
     assert set(out["q#1"]["error_codes"]) == {"HOMONYM", "NO_MATCH"}
     assert out["q#2"]["error_codes"] == ["NO_MATCH"]
@@ -220,16 +220,48 @@ def test_ladder_error_codes(spark, index):
             ("q", 0, "user", "the deploy restarted the cluster", None, None),
         ],
     )
-    out2 = search_ladder(q2, idx2).collect()[0]
+    out2 = search_ladder(q2, prepare_index(idx2)).collect()[0]
     assert out2["index_id"] == "i#0"
     assert "EXCLUDED" in out2["error_codes"]
 
     # role-null query qualifies against both the excluded i#0 and the
     # non-excluded i#3 -> non-excluded preferred, ASSOCIATED_EXCLUDED code
     q3 = _df(spark, [("q", 0, None, "the deploy restarted the cluster", None, None)])
-    out3 = search_ladder(q3, idx2).collect()[0]
+    out3 = search_ladder(q3, prepare_index(idx2)).collect()[0]
     assert out3["index_id"] == "i#3"
     assert "ASSOCIATED_EXCLUDED" in out3["error_codes"]
+
+
+def test_ladder_tier_precedence(spark):
+    """The first tier with a qualifying candidate decides the match type,
+    and the exclusion preference and the sibling/homonym codes are decided
+    inside that tier only: an excluded EXACT candidate still beats a clean
+    PHONETIC-only one, a PHONETIC-only excluded sibling does not mark an
+    EXACT winner, and a homonym rejected in the EXACT tier leaves a
+    PHONETIC match without a HOMONYM code."""
+    from ala_name_matching_spark.operators.ladder import prepare_index, search_ladder
+
+    clean = "the pipeline migrated the usage dashboard"
+    typo = "the pipelinne migrated the usage dashbaord"  # phonetic tier only
+
+    def match(index_rows, excluded=()):
+        idx = _df(spark, index_rows).withColumn(
+            "is_excluded", F.col("turn_idx").isin(*excluded) if excluded else F.lit(False)
+        )
+        q = _df(spark, [("q", 0, "user", clean, None, None)])
+        return search_ladder(q, prepare_index(idx)).collect()[0]
+
+    out = match([("i", 0, "user", clean, None, None), ("i", 1, "user", typo, None, None)], [0])
+    assert (out["match_type"], out["index_id"]) == ("EXACT", "i#0")
+    assert out["error_codes"] == ["EXCLUDED"]
+
+    out = match([("i", 0, "user", clean, None, None), ("i", 1, "user", typo, None, None)], [1])
+    assert (out["match_type"], out["index_id"]) == ("EXACT", "i#0")
+    assert out["error_codes"] == []
+
+    out = match([("i", 0, "tool", clean, None, None), ("i", 1, "user", typo, None, None)])
+    assert (out["match_type"], out["index_id"]) == ("PHONETIC", "i#1")
+    assert out["error_codes"] == []
 
 
 def test_streaming_exact_dedup(spark, tmp_path):
@@ -456,13 +488,16 @@ def test_streaming_semdedup_match(spark, tmp_path):
     assert not any(v == 101 for v, _ in got)
 
 
-def test_streaming_matches_release_corpus_caches(spark, tmp_path):
-    """streaming_neardup_match and streaming_semdedup_match persist their
-    corpus side for the batch handler; once the query has drained, the
-    session holds no more cached RDDs than before the call."""
+def test_streaming_matches_release_corpus_caches(spark, index, tmp_path):
+    """streaming_neardup_match, streaming_semdedup_match and
+    incremental_match persist their corpus or index side for the batch
+    handler; once the query has drained, the session holds no more cached
+    RDDs than before the call."""
     import numpy as np
 
     from ala_name_matching_spark.streaming.incremental import (
+        TRANSCRIPT_DDL,
+        incremental_match,
         streaming_neardup_match,
         streaming_semdedup_match,
     )
@@ -495,6 +530,11 @@ def test_streaming_matches_release_corpus_caches(spark, tmp_path):
         lambda s, out, ck: streaming_semdedup_match(s, vecs, out, ck, n_clusters=2),
         [(100, [float(x) for x in base[3] * 2.0])],
         "vec_id long, embedding array<double>", "sd",
+    )
+    drain(
+        lambda s, out, ck: incremental_match(s, index, out, ck),
+        [("s", 0, "user", "the deploy restarted the cluster", None, None)],
+        TRANSCRIPT_DDL, "im",
     )
 
 

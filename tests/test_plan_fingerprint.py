@@ -168,3 +168,68 @@ def test_bench_query_shuffle_inventory(spark, name, max_shuf, need_bcast, no_smj
         assert "SortMergeJoin" not in plan, (
             f"{name}: a small side fell out of broadcast into sort-merge"
         )
+
+
+# ---------------------------------------------------------------------------
+# Stream ER's per-batch cost. Against a prepared index, search_ladder
+# starts exactly one Spark job (the barrier on the prepared queries, read
+# by the candidate join and by the all-queries projection), and its result
+# plan has two exchanges, both on query_id: the per-query aggregate and the
+# join back onto every query. The stacked queries are broadcast into the
+# (tier, k) join, so the persisted index never shuffles per batch.
+# incremental_match prepares its index once per stream, not per batch.
+# ---------------------------------------------------------------------------
+
+_LADDER_MAX_SHUFFLES = 2
+
+
+def test_ladder_runs_one_job_per_batch(spark, transcripts):
+    from pyspark.sql import functions as F
+
+    from ala_name_matching_spark.operators.ladder import prepare_index, search_ladder
+
+    index = prepare_index(transcripts.where(F.col("turn_idx") > 0)).persist()
+    try:
+        index.count()
+        sc = spark.sparkContext
+        sc.setJobGroup("ladder_per_batch", "search_ladder against a prepared index")
+        try:
+            out = search_ladder(transcripts.where(F.col("turn_idx") == 0), index)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup("ladder_per_batch")) == 1
+        n = _shuffles(out)
+        assert n <= _LADDER_MAX_SHUFFLES, f"search_ladder gained a shuffle: {n}"
+        assert out.count() == 60
+    finally:
+        index.unpersist()
+
+
+def test_incremental_match_prepares_the_index_once(spark, transcripts, tmp_path, monkeypatch):
+    from pyspark.sql import functions as F
+
+    from ala_name_matching_spark.streaming import incremental
+
+    calls = []
+    prepare, search = incremental.prepare_index, incremental.search_ladder
+    monkeypatch.setattr(
+        incremental, "prepare_index", lambda i: calls.append("prepare") or prepare(i)
+    )
+    monkeypatch.setattr(
+        incremental, "search_ladder", lambda q, i: calls.append("search") or search(q, i)
+    )
+    src = str(tmp_path / "in")
+    for turn in (0, 1):  # one file per micro-batch
+        transcripts.where(F.col("turn_idx") == turn).coalesce(1).write.mode("append").parquet(src)
+    stream = (
+        spark.readStream.schema(incremental.TRANSCRIPT_DDL)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    q = incremental.incremental_match(
+        stream, transcripts.where(F.col("turn_idx") > 1), str(tmp_path / "out"),
+        str(tmp_path / "ckpt"),
+    )
+    assert q.awaitTermination(120)
+    assert calls == ["prepare", "search", "search"]
+    assert spark.read.parquet(str(tmp_path / "out")).count() == 120
