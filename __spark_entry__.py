@@ -29,6 +29,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ala_name_matching_spark.sources.checkpoints import barrier, cached
+
 SF_DEFAULT = "/root/testdata/sf0.001"
 
 
@@ -704,9 +706,7 @@ def _q_lca_pairs(spark, sf_dir):
         F.concat(F.lit("c"), F.col("c_custkey")).alias("node_id"),
         F.concat(F.lit("n"), F.col("c_nationkey")).alias("parent_id"),
     )
-    ns = nested_set_encode(r.unionByName(n).unionByName(c)).localCheckpoint(
-        eager=True
-    )
+    ns = barrier(nested_set_encode(r.unionByName(n).unionByName(c)))
     sample = _read(spark, sf_dir, "customer").where(
         F.col("c_custkey") % 100 == 0
     ).select(F.concat(F.lit("c"), F.col("c_custkey")).alias("node_id"))
@@ -1045,7 +1045,7 @@ def _finish_stream(q, build_result, *tmp_dirs):
         if not q.awaitTermination(300):
             q.stop()
             raise RuntimeError("streaming query did not finish within 300 s")
-        return build_result().localCheckpoint(eager=True)
+        return barrier(build_result())
     finally:
         for d in tmp_dirs:
             shutil.rmtree(d, ignore_errors=True)
@@ -1330,10 +1330,9 @@ def _q_compaction_checksum(spark, sf_dir):
         d.repartition(16).write.parquet(path)
         stats = compact_table(spark, path, target_file_mb=1024)
         back = spark.read.parquet(path)
-        return (
+        return barrier(
             content_checksum(back, ["doc_id", "lang", "text"], group_col="lang")
             .withColumn("compacted", F.lit(bool(stats["compacted"])))
-            .localCheckpoint(eager=True)
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -1360,14 +1359,9 @@ def _q_ann_ivf_persisted_topk(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="ivf_idx_")
     try:
         build_ivf_index(corpus, f"{tmp}/idx", n_centroids=16)
-        return ivf_topk_from_index(
-            spark,
-            f"{tmp}/idx",
-            queries,
-            k=5,
-            nprobe=6,
-            rank_rounded=True,
-        ).localCheckpoint(eager=True)
+        return barrier(
+            ivf_topk_from_index(spark, f"{tmp}/idx", queries, k=5, nprobe=6)
+        )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1613,9 +1607,8 @@ def _q_bucketed_join_parity(spark, sf_dir):
         j = read_table(spark, "bkq_orders").join(
             read_table(spark, "bkq_lineitem"), "o_orderkey"
         )
-        return (
-            j.groupBy("o_orderkey", "o_custkey")
-            .agg(
+        return barrier(
+            j.groupBy("o_orderkey", "o_custkey").agg(
                 F.count("*").cast("long").alias("n_items"),
                 F.sum(F.round(F.col("l_quantity")).cast("long"))
                 .cast("long")
@@ -1629,7 +1622,6 @@ def _q_bucketed_join_parity(spark, sf_dir):
                     / 100.0
                 ).alias("revenue"),
             )
-            .localCheckpoint(eager=True)
         )
     finally:
         spark.sql("DROP TABLE IF EXISTS bkq_orders")
@@ -2166,14 +2158,11 @@ def _icws_tf(spark, sf_dir):
     from ala_name_matching_spark.operators.text_analysis import _tokens
 
     docs = _docs(spark, sf_dir).where(F.col("doc_id") % 50 == 0)
-    return (
-        docs.select(
-            "doc_id", F.explode(_tokens(F.col("text"))).alias("term")
-        )
+    return barrier(
+        docs.select("doc_id", F.explode(_tokens(F.col("text"))).alias("term"))
         .where(F.length("term") > 0)
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("w"))
-        .localCheckpoint(eager=True)
     )
 
 
@@ -2255,11 +2244,8 @@ def _q_kmv_containment(spark, sf_dir):
     )
     sk = kmv_sketch_table(toks, "tok", ["lang"], k=64)
     cont = kmv_containment(sk, "lang", k=64)
-    d = (
-        toks.where(F.col("tok").isNotNull())
-        .select("lang", "tok")
-        .distinct()
-        .localCheckpoint(eager=True)
+    d = barrier(
+        toks.where(F.col("tok").isNotNull()).select("lang", "tok").distinct()
     )
     n = d.groupBy("lang").agg(F.count("*").cast("long").alias("n"))
     xi = (
@@ -2365,11 +2351,8 @@ def _q_kmv_overlap(spark, sf_dir):
     # exact lane (exists only to exhibit estimator quality next to the
     # estimates): the distinct vocabulary feeds both the per-lang counts
     # and the intersection join -- materialize it once
-    d = (
-        toks.where(F.col("tok").isNotNull())
-        .select("lang", "tok")
-        .distinct()
-        .localCheckpoint(eager=True)
+    d = barrier(
+        toks.where(F.col("tok").isNotNull()).select("lang", "tok").distinct()
     )
     n = d.groupBy("lang").agg(F.count("*").cast("long").alias("n"))
     xi = (
@@ -2987,21 +2970,17 @@ def _q_uncertain_pairs(spark, sf_dir):
 
     feats = ["g_jacc", "g_lev", "g_len"]
     # the gamma pair table feeds the histogram collect AND the posterior
-    # join -- persist it or the levenshtein comparator runs twice
+    # join -- cache it or the levenshtein comparator runs twice
     pairs = _fs_ml_pairs(spark, sf_dir)
-    pairs.persist()
-    try:
+    with cached(pairs):
         w = fellegi_sunter_multilevel_weights(
             pairs, feats, levels=[3, 3, 3], iters=_FS_ITERS
         )
-        return (
+        return barrier(
             pairs.join(F.broadcast(w.select(*feats, "posterior")), feats)
             .where((F.col("posterior") > 0.05) & (F.col("posterior") < 0.95))
             .select("doc_id_l", "doc_id_r", *feats, "posterior")
-            .localCheckpoint(eager=True)
         )
-    finally:
-        pairs.unpersist()
 
 
 def _q_fs_level_weights(spark, sf_dir):
@@ -3914,9 +3893,7 @@ def _q_cluster_triangles(spark, sf_dir):
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     # the shingle self-join runs once: both the CC labeling and the
     # triangle routing consume the materialized skinny edge table
-    edges = jaccard_edges(docs, shingle_n=3, threshold=0.5).localCheckpoint(
-        eager=True
-    )
+    edges = barrier(jaccard_edges(docs, shingle_n=3, threshold=0.5))
     labels = neardup_clusters(docs, shingle_n=3, threshold=0.5, edges=edges)
     return cluster_triangles(
         labels,
@@ -3940,9 +3917,7 @@ def _q_edge_support_bridges(spark, sf_dir):
     from ala_name_matching_spark.operators.er_metrics import edge_support
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    edges = jaccard_edges(docs, shingle_n=3, threshold=0.5).localCheckpoint(
-        eager=True
-    )
+    edges = barrier(jaccard_edges(docs, shingle_n=3, threshold=0.5))
     labels = neardup_clusters(docs, shingle_n=3, threshold=0.5, edges=edges)
     return edge_support(
         labels,
@@ -3969,9 +3944,7 @@ def _q_incremental_cc(spark, sf_dir):
     )
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    all_edges = jaccard_edges(
-        docs, shingle_n=3, threshold=0.5
-    ).localCheckpoint(eager=True)
+    all_edges = barrier(jaccard_edges(docs, shingle_n=3, threshold=0.5))
     old_edges = all_edges.where(F.col("jaccard") >= 0.6)
     new_edges = all_edges.where(F.col("jaccard") < 0.6)
     labels = neardup_clusters(
@@ -4041,9 +4014,7 @@ def _q_kcore_membership(spark, sf_dir):
     from ala_name_matching_spark.operators.er_metrics import k_core
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    edges = jaccard_edges(docs, shingle_n=3, threshold=0.5).localCheckpoint(
-        eager=True
-    )
+    edges = barrier(jaccard_edges(docs, shingle_n=3, threshold=0.5))
     labels = neardup_clusters(docs, shingle_n=3, threshold=0.5, edges=edges)
     return k_core(
         labels,
@@ -4196,8 +4167,7 @@ def _q_ann_lsh_topk(spark, sf_dir):
     # asserted in tests/test_similarity_search.py); the planted copies make
     # the driver row value-checked (see _ann_planted_corpus_and_queries)
     return lsh_topk(
-        corpus, queries, dim=64, k=5, n_planes=8, n_tables=16, multiprobe=1,
-        rank_rounded=True,
+        corpus, queries, dim=64, k=5, n_planes=8, n_tables=16, multiprobe=1
     )
 
 
@@ -4241,9 +4211,7 @@ def _q_ann_ivf_topk(spark, sf_dir):
     # 0.79 vs cosine_topk on the ORGANIC fixture; nprobe=16 reproduces
     # brute force exactly (tests/test_similarity_search.py); the planted
     # copies make the driver row value-checked
-    return ivf_topk(
-        corpus, queries, k=5, n_centroids=16, nprobe=6, rank_rounded=True
-    )
+    return ivf_topk(corpus, queries, k=5, n_centroids=16, nprobe=6)
 
 
 # Double-Metaphone fuzzy-lookup fixture (VERDICT r02 #7). Literal surname

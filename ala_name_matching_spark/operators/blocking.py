@@ -31,6 +31,7 @@ from ala_name_matching_spark.functions.normalize import (
     norm_text_col,
 )
 from ala_name_matching_spark.functions.phonetic import phonetic_struct_udf
+from ala_name_matching_spark.sources.checkpoints import barrier
 
 # Tier ids, by decreasing specificity (J1 exact, J2 canonical, J4 phonetic).
 TIER_EXACT = 1
@@ -481,14 +482,14 @@ def bounded_window_input(df: DataFrame, const_col: str = "_one") -> DataFrame:
     empty-partition WindowExec).
 
     This helper adds a constant partition column and materializes it
-    through an eager localCheckpoint: after the checkpoint the column is a
+    through a barrier: after the barrier the column is a
     real (non-foldable) attribute, so Catalyst cannot constant-fold it out
     of the window's partition spec. The window still runs on one partition
     -- the correct plan for a bounded table -- but the choice is explicit
-    and auditable. NEVER call this on a data-grain table: the checkpoint
+    and auditable. NEVER call this on a data-grain table: the barrier
     materializes the input, and the single partition would serialize.
     """
-    return df.withColumn(const_col, F.lit(0)).localCheckpoint(eager=True)
+    return barrier(df.withColumn(const_col, F.lit(0)))
 
 
 def bounded_topk_ranked(

@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ala_name_matching_spark.sources.checkpoints import barrier
+
 _D = "~"  # delimiter; word_pattern must exclude it
 
 
@@ -199,10 +201,9 @@ def learn_merges(
     # the vocabulary is re-consumed by every iteration's histogram AND by
     # each merge rewrite; without a barrier the corpus scan + word-count
     # groupBy behind it re-execute O(n_merges) times (measured: 13.2 s ->
-    # 3.4 s at sf0.1 for 3 merges). The vocab is the BOUNDED table here --
-    # checkpointing it is the persisted-index pattern, not a corpus
-    # materialization.
-    encoded = encode_symbols(vocab).localCheckpoint(eager=True)
+    # 3.4 s at sf0.1 for 3 merges). The vocab is the BOUNDED table here,
+    # not a corpus materialization.
+    encoded = barrier(encode_symbols(vocab))
     merges = []
     for step in range(1, n_merges + 1):
         top = (

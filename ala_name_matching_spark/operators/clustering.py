@@ -19,7 +19,7 @@ id, which makes the result deterministic (the reference's documented tie
 non-determinism, ALATaxonResolver.java:147-151, is removed).
 
 The star rounds check convergence on the driver (count + xor-hash of the
-edges) and truncate lineage every round with localCheckpoint (at production
+edges) and truncate lineage every round with a barrier (at production
 scale: write the frontier to an Iceberg table every ~3 rounds and resume
 from the snapshot -- see plans/pipeline.py checkpointing).
 """
@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ala_name_matching_spark.sources.checkpoints import barrier
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -205,7 +207,7 @@ def _star_labels(edges: DataFrame) -> DataFrame:
     cur = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
     prev_sig = None
     for _round in range(_MAX_STAR_ROUNDS):
-        cur = _small_star(_large_star(cur)).localCheckpoint(eager=True)
+        cur = barrier(_small_star(_large_star(cur)))
         sig_row = cur.agg(
             F.count("*").alias("n"),
             F.bit_xor(
@@ -542,7 +544,7 @@ def incremental_cc_update(
     newcomers = ends.join(lab, "_id", "left_anti").select(
         "_id", F.col("_id").alias("_rep")
     )
-    lab_all = lab.unionByName(newcomers).localCheckpoint(eager=True)
+    lab_all = barrier(lab.unionByName(newcomers))
     # contract each new edge to the rep graph
     ra = lab_all.select(
         F.col("_id").alias("_a"), F.col("_rep").alias("_ra")

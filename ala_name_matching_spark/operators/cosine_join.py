@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ala_name_matching_spark.operators.text_analysis import _tokens
+from ala_name_matching_spark.sources.checkpoints import barrier, cached
 
 NORM_SCALE = 1_000_000_000  # 1e9: per-doc norm accumulation
 DOT_SCALE = 1_000_000_000_000  # 1e12: per-pair dot accumulation
@@ -126,13 +127,10 @@ def tfidf_cosine_join(
     the boundary.
     """
     # the weighted-postings projection feeds BOTH sides of the self-join
-    # -- persist it, or the lazy DAG runs the whole tf-idf chain once per
-    # branch (bm25_topk's analyze-once discipline); the thresholded
-    # result is eagerly checkpointed so the corpus-sized cache is
-    # released before returning
+    # -- cache it, or the lazy DAG runs the whole tf-idf chain once per
+    # branch (bm25_topk's analyze-once discipline)
     wts = tfidf_weights(docs, id_col, text_col)
-    wts.persist()
-    try:
+    with cached(wts):
         a = wts.select(
             F.col("term"), F.col(id_col).alias("_l"), F.col("w").alias("_wl")
         )
@@ -152,13 +150,13 @@ def tfidf_cosine_join(
             )
             .where(F.col("_dq") >= F.lit(t_q))
         )
-        return dots.select(
-            F.col("_l").alias("id_l"),
-            F.col("_r").alias("id_r"),
-            F.round(
-                F.col("_dq").cast("double") / F.lit(float(DOT_SCALE)), 6
-            ).alias("cosine"),
-        ).localCheckpoint(eager=True)
-    finally:
-        wts.unpersist()
+        return barrier(
+            dots.select(
+                F.col("_l").alias("id_l"),
+                F.col("_r").alias("id_r"),
+                F.round(
+                    F.col("_dq").cast("double") / F.lit(float(DOT_SCALE)), 6
+                ).alias("cosine"),
+            )
+        )
 

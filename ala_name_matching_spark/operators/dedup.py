@@ -25,6 +25,7 @@ from pyspark.sql import types as T
 from ala_name_matching_spark.functions.normalize import norm_text_col
 from ala_name_matching_spark.operators import blocking
 from ala_name_matching_spark.operators.clustering import cluster_labels
+from ala_name_matching_spark.sources.checkpoints import barrier, cached
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -737,8 +738,7 @@ def ngram_containment_pairs(
             .select("g")
         )
         sh = sh.join(F.broadcast(keep), "g")
-    sh = sh.persist()
-    try:
+    with cached(sh):
         cnt = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
         shared = (
             sh.select("g", F.col("doc_id").alias("doc_id_l"))
@@ -770,12 +770,7 @@ def ngram_containment_pairs(
                 "doc_id_l", "doc_id_r", "shared", "containment_l", "containment_r"
             )
         )
-        # eager: the persisted shingle table feeds three consumers above;
-        # materialize the (small) pair result so the corpus-sized cache can
-        # be released instead of leaking across calls
-        return out.localCheckpoint(eager=True)
-    finally:
-        sh.unpersist()
+        return barrier(out)
 
 
 # --- Winnowing fingerprints (Schleimer et al. 2003, the MOSS algorithm) --------

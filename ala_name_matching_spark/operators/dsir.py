@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ala_name_matching_spark.sources.checkpoints import barrier
+
 
 def hashed_buckets(
     docs: DataFrame,
@@ -99,14 +101,9 @@ def importance_weights(
 
     # each side's bucket table is re-consumed (model counts + totals +
     # scoring join) -- barrier once so the corpus scan/tokenize runs once
-    # per side, keeping the documented two-scan cost (the bpe/pprl/logreg
-    # bounded-table checkpoint rule)
-    src_b = hashed_buckets(source, id_col, text_col, n_buckets).localCheckpoint(
-        eager=True
-    )
-    tgt_b = hashed_buckets(target, id_col, text_col, n_buckets).localCheckpoint(
-        eager=True
-    )
+    # per side, keeping the documented two-scan cost
+    src_b = barrier(hashed_buckets(source, id_col, text_col, n_buckets))
+    tgt_b = barrier(hashed_buckets(target, id_col, text_col, n_buckets))
 
     m_s = _bucket_model(src_b, n_buckets, alpha).withColumnRenamed(
         "logp", "logp_s"

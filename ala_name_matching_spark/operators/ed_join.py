@@ -61,6 +61,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ala_name_matching_spark.sources.checkpoints import barrier
+
 # sentinel pad chars outside any real alphabet (Gravano 2001 uses # / $)
 _PAD_L = "\x01"
 _PAD_R = "\x02"
@@ -199,8 +201,8 @@ def edit_similarity_join(
     # Unlike set_join's ranked table (heavy token arrays -- measured
     # slower to checkpoint than recompute) this is K rows of
     # (id, L, g, pos) per record, so materializing is the cheap side:
-    # eager localCheckpoint halves the query (measured at sf0.1).
-    pref = pref.localCheckpoint(eager=True)
+    # the barrier halves the query (measured at sf0.1).
+    pref = barrier(pref)
 
     l = pref.select(
         F.col("g"),

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ala_name_matching_spark.sources.checkpoints import barrier, cached
+
 
 def _canon_pairs(pairs: DataFrame, l: str, r: str) -> DataFrame:
     """Distinct unordered pairs as (a, b) with a < b."""
@@ -449,15 +451,15 @@ def _route_intra_edges(
     edge_cols: tuple[str, str],
 ) -> DataFrame:
     """(_c, _a, _b): canonicalized (a < b) edges routed to their cluster,
-    same-cluster only, eagerly checkpointed (the skinny table every graph
-    QA kernel fans out from). Caller owns labels' persist lifecycle."""
+    same-cluster only, behind a barrier (the skinny table every graph
+    QA kernel fans out from). The caller caches labels."""
     la = labels.select(
         F.col(id_col).alias("_ida"), F.col(cluster_col).alias("_ca")
     )
     lb = labels.select(
         F.col(id_col).alias("_idb"), F.col(cluster_col).alias("_cb")
     )
-    return (
+    return barrier(
         _canon_pairs(edges, *edge_cols)
         .select(F.col("a").alias("_ida"), F.col("b").alias("_idb"))
         .join(la, "_ida")
@@ -468,7 +470,6 @@ def _route_intra_edges(
             F.col("_ida").alias("_a"),
             F.col("_idb").alias("_b"),
         )
-        .localCheckpoint(eager=True)
     )
 
 
@@ -506,24 +507,17 @@ def cluster_triangles(
     where no wedge exists.
     """
     # labels feeds three branches (two routing sides + sizes) and edges'
-    # lineage is typically the expensive similarity join -- persist both,
-    # and checkpoint the skinny routed edge table, or the lazy DAG
+    # lineage is typically the expensive similarity join: without the
+    # cache and the barrier on the skinny routed edge table the lazy DAG
     # re-executes the whole upstream per reuse (measured: 220 Exchanges
-    # unpersisted vs 11 at sf0.01). Result is per-cluster-bounded, so it
-    # is eagerly checkpointed and the caches released before returning
-    # (the bm25_topk lifecycle discipline).
-    labels.persist()
-    # try opens IMMEDIATELY after persist (the edge_support/k_core
-    # discipline): the eager checkpoints below execute jobs, and an
-    # exception there must still unpersist the labels cache
-    try:
+    # vs 11 at sf0.01)
+    with cached(labels):
         e = _route_intra_edges(labels, edges, id_col, cluster_col, edge_cols)
-        deg = (
+        deg = barrier(
             e.select("_c", F.col("_a").alias("_n"))
             .unionAll(e.select("_c", F.col("_b").alias("_n")))
             .groupBy("_c", "_n")
             .agg(F.count("*").cast("long").alias("_deg"))
-            .localCheckpoint(eager=True)
         )
         per_cluster = deg.groupBy("_c").agg(
             F.sum(F.expr("_deg * (_deg - 1L) div 2")).cast("long").alias("n_wedges"),
@@ -570,7 +564,7 @@ def cluster_triangles(
         trans = F.when(
             nw > 0, F.lit(3.0) * nt.cast("double") / nw.cast("double")
         ).otherwise(F.lit(0.0))
-        return (
+        return barrier(
             sizes.join(per_cluster.drop("_n_with_edges"), "_c", "left")
             .join(n_edges, "_c", "left")
             .join(tri, "_c", "left")
@@ -582,10 +576,7 @@ def cluster_triangles(
                 nt.alias("n_triangles"),
                 F.round(trans, 6).alias("transitivity"),
             )
-            .localCheckpoint(eager=True)
         )
-    finally:
-        labels.unpersist()
 
 
 def edge_support(
@@ -610,21 +601,19 @@ def edge_support(
     neighbors are enumerated from the LOWER-degree endpoint of each edge
     and verified against the other endpoint's adjacency with one
     semi-join -- the per-edge cost is min(deg_a, deg_b), the same
-    hub-safety argument as the degree-ordered triangle count. Skinny
-    tables are eagerly checkpointed (multi-branch reuse).
+    hub-safety argument as the degree-ordered triangle count.
 
     Output: (cluster_id, id_a, id_b, support, is_bridge) with
     id_a < id_b, one row per in-cluster edge.
     """
-    labels.persist()
-    try:
+    with cached(labels):
         e = _route_intra_edges(labels, edges, id_col, cluster_col, edge_cols)
         sym = e.select("_c", F.col("_a").alias("_x"), F.col("_b").alias("_y")).unionAll(
             e.select("_c", F.col("_b").alias("_x"), F.col("_a").alias("_y"))
         )
-        deg = sym.groupBy("_c", "_x").agg(
-            F.count("*").cast("long").alias("_deg")
-        ).localCheckpoint(eager=True)
+        deg = barrier(
+            sym.groupBy("_c", "_x").agg(F.count("*").cast("long").alias("_deg"))
+        )
         ed = (
             e.join(
                 deg.select(
@@ -663,7 +652,7 @@ def edge_support(
         ).groupBy("_c", "_a", "_b").agg(
             F.count("*").cast("long").alias("support")
         )
-        return (
+        return barrier(
             e.join(tri, ["_c", "_a", "_b"], "left")
             .select(
                 F.col("_c").alias(cluster_col),
@@ -676,10 +665,7 @@ def edge_support(
                     "is_bridge"
                 ),
             )
-            .localCheckpoint(eager=True)
         )
-    finally:
-        labels.unpersist()
 
 
 def k_core(
@@ -715,14 +701,12 @@ def k_core(
     Distributed shape per round: one groupBy + two semi/anti joins on
     the skinny edge table -- no windows, no collect of the graph.
     """
-    labels.persist()
-    try:
+    with cached(labels):
         e = _route_intra_edges(labels, edges, id_col, cluster_col, edge_cols)
-        nodes = (
+        nodes = barrier(
             e.select("_c", F.col("_a").alias("_n"))
             .unionAll(e.select("_c", F.col("_b").alias("_n")))
             .distinct()
-            .localCheckpoint(eager=True)
         )
         # degrees are computed over ALL surviving nodes (left join,
         # coalesce 0), not just edge endpoints -- a node whose every
@@ -743,18 +727,18 @@ def k_core(
             deg = cur_nodes.join(edge_deg, ["_c", "_n"], "left").select(
                 "_c", "_n", F.coalesce(F.col("_d"), F.lit(0)).alias("_d")
             )
-            drop = (
-                deg.where(F.col("_d") < k)
-                .select("_c", "_n", F.lit(r).cast("int").alias("round_removed"))
-                .localCheckpoint(eager=True)
+            drop = barrier(
+                deg.where(F.col("_d") < k).select(
+                    "_c", "_n", F.lit(r).cast("int").alias("round_removed")
+                )
             )
             if drop.isEmpty():
                 break
             removed = removed.unionByName(drop)
-            cur_nodes = cur_nodes.join(
-                drop.select("_c", "_n"), ["_c", "_n"], "left_anti"
-            ).localCheckpoint(eager=True)
-            cur_e = (
+            cur_nodes = barrier(
+                cur_nodes.join(drop.select("_c", "_n"), ["_c", "_n"], "left_anti")
+            )
+            cur_e = barrier(
                 cur_e.join(
                     drop.select("_c", F.col("_n").alias("_a")),
                     ["_c", "_a"],
@@ -765,20 +749,15 @@ def k_core(
                     ["_c", "_b"],
                     "left_anti",
                 )
-                .localCheckpoint(eager=True)
             )
-        return (
-            nodes.join(removed, ["_c", "_n"], "left")
-            .select(
+        return barrier(
+            nodes.join(removed, ["_c", "_n"], "left").select(
                 F.col("_c").alias(cluster_col),
                 F.col("_n").alias(id_col),
                 F.col("round_removed").isNull().alias("in_core"),
                 "round_removed",
             )
-            .localCheckpoint(eager=True)
         )
-    finally:
-        labels.unpersist()
 
 
 def threshold_sweep(

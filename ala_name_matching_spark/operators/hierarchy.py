@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ala_name_matching_spark.sources.checkpoints import barrier
+
 _DRIVER_TREE_MAX_NODES = 5_000_000
 
 
@@ -99,7 +101,7 @@ def _distributed_nested_set(edges: DataFrame, max_depth: int) -> DataFrame:
     this is a handful of small-table joins, never a per-node loop.
     """
     spark = edges.sparkSession
-    e = edges.select("node_id", "parent_id").localCheckpoint(eager=True)
+    e = barrier(edges.select("node_id", "parent_id"))
 
     # ---- pass 1: subtree sizes bottom-up
     sizes = e.select("node_id").withColumn("size", F.lit(None).cast("long"))
@@ -132,9 +134,11 @@ def _distributed_nested_set(edges: DataFrame, max_depth: int) -> DataFrame:
                 (F.col("child_total") + 1).alias("size"),
             )
         )
-        new_resolved = resolved.unionByName(
-            child_sum.join(resolved.select("node_id"), "node_id", "left_anti")
-        ).localCheckpoint(eager=True)
+        new_resolved = barrier(
+            resolved.unionByName(
+                child_sum.join(resolved.select("node_id"), "node_id", "left_anti")
+            )
+        )
         if new_resolved.count() == resolved.count():
             break
         resolved = new_resolved
@@ -165,7 +169,7 @@ def _distributed_nested_set(edges: DataFrame, max_depth: int) -> DataFrame:
     )
     all_levels = [cur]
     for depth in range(1, max_depth + 1):
-        nxt = (
+        nxt = barrier(
             with_off.join(
                 cur.select(
                     F.col("node_id").alias("parent_id"),
@@ -181,7 +185,6 @@ def _distributed_nested_set(edges: DataFrame, max_depth: int) -> DataFrame:
                 ),
                 F.lit(depth).alias("depth"),
             )
-            .localCheckpoint(eager=True)
         )
         if nxt.isEmpty():
             break

@@ -35,6 +35,7 @@ from ala_name_matching_spark.operators.blocking import (
     with_record_id,
 )
 from ala_name_matching_spark.operators.pairs import homonym_conflict_col
+from ala_name_matching_spark.sources.checkpoints import barrier
 
 MATCH_PROXIMITY = 0.1  # MatchMetrics.java:31
 
@@ -138,7 +139,7 @@ def search_ladder(
     """
     from ala_name_matching_spark.operators.phrase import issue_flags_col
 
-    q = _prep(queries).localCheckpoint(eager=True)
+    q = barrier(_prep(queries))
     cands = (
         _stacked(q, "query")
         .filter(~F.col("k").startswith("__ph__"))

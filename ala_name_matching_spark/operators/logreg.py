@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ala_name_matching_spark.sources.checkpoints import barrier
+
 
 def tf_features(
     docs: DataFrame,
@@ -89,10 +91,7 @@ def train_logreg(
     """
     spark = feats.sparkSession
     # feats & labels are consumed every iteration: barrier once
-    data = (
-        feats.join(labels.select("id", "y"), "id")
-        .localCheckpoint(eager=True)
-    )
+    data = barrier(feats.join(labels.select("id", "y"), "id"))
     n_docs = data.select("id").distinct().count()
     w: dict[int, float] = {}
     for _ in range(iters):

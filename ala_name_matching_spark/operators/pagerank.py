@@ -13,12 +13,10 @@ Spark shape, built for 10^11-edge graphs:
     their out-degree, precomputed once) and ONE partial-aggregated
     groupBy(dst). Dangling mass (nodes with no out-edges) is a 1-row
     aggregate broadcast back -- never a driver scalar in the loop.
-  * ranks are materialized per iteration (localCheckpoint), so the
-    lineage never grows with iteration count; superseded iterations'
-    blocks are dead references the driver GC / ContextCleaner reclaim
-    (the bench harness forces that GC between queries).
+  * ranks pass a lineage barrier per iteration, so the lineage never
+    grows with iteration count.
   * the node, degree, and degree-carrying edge tables are each computed
-    once and checkpointed -- every per-iteration join reads a
+    once behind a barrier -- every per-iteration join reads a
     materialized table, never the raw edge lineage.
 
 Determinism contract (the unrolled-Lloyd/EM construction applied to
@@ -36,6 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ala_name_matching_spark.sources.checkpoints import barrier
 
 _Q = 1_000_000_000  # nano-unit quantization for order-free rank sums
 
@@ -65,32 +65,23 @@ def pagerank(
     e = edges.select(
         F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")
     )
-    nodes = (
+    nodes = barrier(
         e.select(F.col("src").alias("node_id"))
         .unionByName(e.select(F.col("dst").alias("node_id")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    # deg is checkpointed: the per-iteration dangling anti-join probes it,
-    # and without the barrier each iteration would replay the full edge
-    # scan + groupBy behind it
-    deg = (
-        e.groupBy("src")
-        .agg(F.count("*").cast("long").alias("_deg"))
-        .localCheckpoint(eager=True)
-    )
+    # the per-iteration dangling anti-join probes deg
+    deg = barrier(e.groupBy("src").agg(F.count("*").cast("long").alias("_deg")))
     # edges carry their out-degree once, so the per-iteration join is
     # ranks-vs-edges only (the degree join never repeats)
-    ed = e.join(deg, "src").localCheckpoint(eager=True)
+    ed = barrier(e.join(deg, "src"))
     nn = nodes.groupBy().agg(F.count("*").cast("long").alias("_n"))
 
-    ranks = (
-        nodes.crossJoin(F.broadcast(nn))
-        .select(
+    ranks = barrier(
+        nodes.crossJoin(F.broadcast(nn)).select(
             "node_id",
             F.round(F.lit(1.0) / F.col("_n"), 9).alias("rank"),
         )
-        .localCheckpoint(eager=True)
     )
     for _ in range(iters):
         contrib = (
@@ -115,7 +106,7 @@ def pagerank(
         )
         cs = F.coalesce(F.col("_cq"), F.lit(0)).cast("double") / F.lit(float(_Q))
         ds = F.col("_dq").cast("double") / F.lit(float(_Q))
-        nxt = (
+        ranks = barrier(
             nodes.join(contrib, "node_id", "left")
             .crossJoin(F.broadcast(dang))
             .crossJoin(F.broadcast(nn))
@@ -127,9 +118,7 @@ def pagerank(
                     9,
                 ).alias("rank"),
             )
-            .localCheckpoint(eager=True)
         )
-        ranks = nxt
     return ranks
 
 
@@ -157,14 +146,15 @@ def hits(
     """
     if iters < 1:
         raise ValueError(f"hits: iters must be >= 1, got {iters}")
-    e = edges.select(
-        F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")
-    ).localCheckpoint(eager=True)
-    nodes = (
+    e = barrier(
+        edges.select(
+            F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")
+        )
+    )
+    nodes = barrier(
         e.select(F.col("src").alias("node_id"))
         .unionByName(e.select(F.col("dst").alias("node_id")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
     def l2_normalized(scores: DataFrame, col: str) -> DataFrame:
@@ -187,9 +177,7 @@ def hits(
             ).alias(col),
         )
 
-    hub = nodes.select(
-        "node_id", F.lit(1.0).alias("hub")
-    ).localCheckpoint(eager=True)
+    hub = barrier(nodes.select("node_id", F.lit(1.0).alias("hub")))
     auth = None
     for _ in range(iters):
         a_raw = (
@@ -207,7 +195,7 @@ def hits(
             "node_id",
             F.coalesce(F.col("authority"), F.lit(0.0)).alias("authority"),
         )
-        auth = l2_normalized(a_full, "authority").localCheckpoint(eager=True)
+        auth = barrier(l2_normalized(a_full, "authority"))
         h_raw = (
             e.join(auth.withColumnRenamed("node_id", "dst"), "dst")
             .groupBy(F.col("src").alias("node_id"))
@@ -222,7 +210,7 @@ def hits(
         h_full = nodes.join(h_raw, "node_id", "left").select(
             "node_id", F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub")
         )
-        hub = l2_normalized(h_full, "hub").localCheckpoint(eager=True)
+        hub = barrier(l2_normalized(h_full, "hub"))
     return hub.join(auth, "node_id").select("node_id", "hub", "authority")
 
 

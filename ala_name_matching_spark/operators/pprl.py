@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ala_name_matching_spark.sources.checkpoints import barrier
+
 _PAD = "_"  # Schnell-style field padding so edge bigrams are anchored
 
 
@@ -111,7 +113,7 @@ def bloom_encode(
         ).alias("g"),
     )
     # consumed twice (vocab + join): barrier the skinny (id, g) stream
-    grams = grams.localCheckpoint(eager=True)
+    grams = barrier(grams)
     gpos = (
         grams.select("g")
         .distinct()
@@ -140,8 +142,8 @@ def dice_pairs(
     # the encoding projection (per-record md5 position sets -- interpreted
     # HOF over ~k*len elements) feeds BOTH sides of the self-join; a
     # barrier executes it once (the ed_join prefix-table rule: skinny
-    # payload -> checkpoint wins; measured ~2x at sf0.1)
-    encoded = encoded.localCheckpoint(eager=True)
+    # payload -> the barrier wins; measured ~2x at sf0.1)
+    encoded = barrier(encoded)
     l = encoded.select(
         F.col(block_col).alias("__b"),
         F.col("id").alias("id_l"),

@@ -48,6 +48,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ala_name_matching_spark.sources.checkpoints import barrier
+
 
 def _subvectors(
     vectors: DataFrame,
@@ -134,7 +136,7 @@ def train_pq_codebooks(
     spark = vectors.sparkSession
 
     sv = _subvectors(vectors, m_subs, subdim, id_col, vec_col)
-    sv = sv.localCheckpoint(eager=True)  # bounded: N*M skinny rows
+    sv = barrier(sv)  # bounded: N*M skinny rows
 
     seed_ids = [
         r["vec_id"]

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ala_name_matching_spark.operators.dedup import tokens_col
+from ala_name_matching_spark.sources.checkpoints import barrier, cached
 
 K1 = 1.2
 B = 0.75
@@ -73,28 +74,20 @@ def bm25_topk(
     analyzed = docs.select(
         F.col(id_col).alias("doc_id"), analyzer(F.col(text_col)).alias("_toks")
     )
-    analyzed.persist()
     posts = (
         analyzed.select("doc_id", F.explode_outer("_toks").alias("term"))
         .filter(F.col("term").isNotNull() & (F.col("term") != ""))
         .groupBy("term", "doc_id")
         .agg(F.count("*").alias("tf"))
     )
-    posts.persist()
-    try:
+    with cached(analyzed, posts):
         dl = analyzed.select("doc_id", F.size("_toks").alias("dl"))
         stats = dl.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).first()
         n_docs, avgdl = int(stats["n"]), float(stats["avgdl"])
 
         qterms = query_terms(queries, query_id_col, query_text_col, analyzer)
         out = bm25_score_candidates(posts, dl, n_docs, avgdl, qterms, k, k1, b)
-        # materialize the (queries x k)-sized result eagerly so the big
-        # caches can be released before returning -- otherwise every call
-        # leaks corpus-sized cached blocks for the session's lifetime
-        return out.localCheckpoint(eager=True)
-    finally:
-        posts.unpersist()
-        analyzed.unpersist()
+        return barrier(out)
 
 
 def query_terms(
@@ -172,8 +165,7 @@ def build_index(
     analyzed = docs.select(
         F.col(id_col).alias("doc_id"), analyzer(F.col(text_col)).alias("_toks")
     )
-    analyzed.persist()
-    try:
+    with cached(analyzed):
         (
             analyzed.select("doc_id", F.explode_outer("_toks").alias("term"))
             .filter(F.col("term").isNotNull() & (F.col("term") != ""))
@@ -191,8 +183,6 @@ def build_index(
             .partitionBy("epoch")
             .parquet(f"{path}/doclen")
         )
-    finally:
-        analyzed.unpersist()
 
 
 def build_positional_postings(
@@ -254,11 +244,8 @@ def phrase_match(
     themselves.
     """
     posts = build_positional_postings(docs, id_col, text_col, analyzer)
-    posts.persist()
-    try:
+    with cached(posts):
         return _phrase_match_body(posts, queries, query_id_col, query_text_col, analyzer)
-    finally:
-        posts.unpersist()
 
 
 # the largest anchor table phrase_match broadcasts; read at call time
@@ -332,7 +319,4 @@ def _phrase_match_body(
         .filter(F.col("_c") == F.col("nq"))
     )
     out = full.groupBy("query_id", "doc_id").agg(F.count("*").alias("n_hits"))
-    # eager: the persisted postings are consumed here (votes, df, anchors),
-    # so the caller (phrase_match) can unpersist them on return instead of
-    # leaking a corpus-sized cache per call
-    return out.localCheckpoint(eager=True)
+    return barrier(out)

@@ -52,6 +52,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ala_name_matching_spark.sources.checkpoints import barrier, cached
 
 
 def unit_rounded_col(vec_col: Column) -> Column:
@@ -153,8 +154,7 @@ def semdedup(
     v = vectors.select(
         F.col(id_col).alias("vec_id"), unit_rounded_col(F.col(vec_col)).alias("nv")
     )
-    v.persist()
-    try:
+    with cached(v):
         cents = kmeans_fit(v, n_clusters, iters, dim)
         assign = _assign_udf(cents)
         a = v.withColumn("cluster_id", assign(F.col("nv")))
@@ -181,16 +181,13 @@ def semdedup(
             )
             .withColumn("_pruned", F.lit(True))
         )
-        return (
-            a.join(pruned, "vec_id", "left")
-            .select(
+        return barrier(
+            a.join(pruned, "vec_id", "left").select(
                 "vec_id",
                 "cluster_id",
                 F.coalesce(~F.col("_pruned"), F.lit(True)).alias("keep"),
             )
         )
-    finally:
-        v.unpersist()
 
 
 def _make_cluster_prune(threshold: float):

@@ -37,8 +37,8 @@ prefixes and shared by millions of records) is not capped: the join stays
 exact, and that token's posting list self-joins in full.
 
 The ranked table is consumed by four plan branches and deliberately NOT
-persisted: measured at sf0.1, recompute is 3.6 s warm vs 7.4 s with an
-eager localCheckpoint -- the same heavy-token-array result as the ER
+persisted: measured at sf0.1, recompute is 3.6 s warm vs 7.4 s behind a
+barrier -- the same heavy-token-array result as the ER
 pipeline's reverted features persist (PLANS.md). A production run over a
 static corpus would write ranked_token_sets to parquet once (the
 persisted-index pattern of retrieval.build_index) and join against it.

@@ -154,15 +154,13 @@ def lsh_topk(
     vec_col: str = "embedding",
     n_tables: int = 8,
     multiprobe: int = 1,
-    rank_rounded: bool = False,
 ) -> DataFrame:
     """ANN top-k: multi-table hyperplane LSH, exact cosine on candidates.
 
-    `rank_rounded=True` ranks on the 6-dp-ROUNDED cosine (tie-break vec_id
-    asc) instead of the raw double: needed when candidates tie at the same
-    true cosine (planted colinear copies), where raw-double ordering is
-    last-ulp noise that independent engines disagree on. Emitted cosines
-    are 6-dp-rounded either way.
+    Ranks on the 6-dp-ROUNDED cosine (tie-break vec_id asc), not the raw
+    double: candidates that tie at the same true cosine (planted colinear
+    copies) would otherwise be ordered by last-ulp noise that independent
+    engines disagree on. Emitted cosines are 6-dp-rounded.
 
     Structure (classic LSH index): `n_tables` independent tables of
     `n_planes` bits each; a candidate is any corpus vector sharing >= 1
@@ -209,9 +207,8 @@ def lsh_topk(
         .dropDuplicates(["query_id", "vec_id"])
         .withColumn("cosine", cosine_col(F.col("qv"), F.col("cv")))
     )
-    order_col = F.round(F.col("cosine"), 6) if rank_rounded else F.col("cosine")
     w = Window.partitionBy("query_id").orderBy(
-        order_col.desc(), F.col("vec_id").asc()
+        F.round(F.col("cosine"), 6).desc(), F.col("vec_id").asc()
     )
     return (
         scored.filter(F.col("query_id") != F.col("vec_id"))
@@ -300,12 +297,11 @@ def ivf_topk(
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    rank_rounded: bool = False,
 ) -> DataFrame:
     """IVF-flat ANN top-k: probe the nprobe nearest inverted lists, exact
     cosine rerank on the candidates. Output schema matches brute_force_topk
-    for drop-in recall measurement. `rank_rounded` as in lsh_topk (rank on
-    the 6-dp cosine for cross-engine-stable ordering of exact ties).
+    for drop-in recall measurement. Ranks on the 6-dp cosine, as lsh_topk
+    does (cross-engine-stable ordering of exact ties).
 
     Scale shape at 100 TB: training touches a bounded sample; the corpus is
     assigned once (narrow Arrow matmul, no shuffle) and the candidate join
@@ -331,9 +327,8 @@ def ivf_topk(
     scored = c.join(q, "list_id").withColumn(
         "cosine", cosine_col(F.col("qv"), F.col("cv"))
     )
-    order_col = F.round(F.col("cosine"), 6) if rank_rounded else F.col("cosine")
     w = Window.partitionBy("query_id").orderBy(
-        order_col.desc(), F.col("vec_id").asc()
+        F.round(F.col("cosine"), 6).desc(), F.col("vec_id").asc()
     )
     return (
         scored.filter(F.col("query_id") != F.col("vec_id"))
@@ -449,7 +444,6 @@ def ivf_topk_from_index(
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    rank_rounded: bool = False,
 ) -> DataFrame:
     """Query a persisted IVF index (build_ivf_index layout).
 
@@ -458,8 +452,8 @@ def ivf_topk_from_index(
     scan time (dynamic partition pruning against the broadcast query side)
     -- the physical read is ~corpus * nprobe / n_centroids, matching the
     in-memory ivf_topk's candidate volume but without recomputing
-    assignments per query batch. `rank_rounded` as in ivf_topk (rank on
-    the 6-dp cosine for cross-engine-stable ordering of exact ties).
+    assignments per query batch. Ranks on the 6-dp cosine, as ivf_topk
+    does.
     """
     cen = spark.read.parquet(f"{path}/centroids").collect()
     centroids = np.zeros((len(cen), len(cen[0]["centroid"])))
@@ -473,9 +467,8 @@ def ivf_topk_from_index(
     scored = c.join(q, "list_id").withColumn(
         "cosine", cosine_col(F.col("qv"), F.col("cv"))
     )
-    order_col = F.round(F.col("cosine"), 6) if rank_rounded else F.col("cosine")
     w = Window.partitionBy("query_id").orderBy(
-        order_col.desc(), F.col("vec_id").asc()
+        F.round(F.col("cosine"), 6).desc(), F.col("vec_id").asc()
     )
     return (
         scored.filter(F.col("query_id") != F.col("vec_id"))

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ala_name_matching_spark.operators import blocking
+from ala_name_matching_spark.sources.checkpoints import barrier
 
 
 def _mg_reduce(counts: dict, capacity: int) -> None:
@@ -473,8 +474,8 @@ def kmv_pair_overlap(
 
     # the sketch is <= k rows per group but its LINEAGE is the corpus-wide
     # distinct + window -- it feeds four branches below, so materialize it
-    # once (eager checkpoint of a tiny table) instead of re-deriving
-    sketch = sketch.localCheckpoint(eager=True)
+    # once instead of re-deriving
+    sketch = barrier(sketch)
     a = sketch.select(
         F.col(group_col).alias("g_a"), F.col("h").alias("h")
     )

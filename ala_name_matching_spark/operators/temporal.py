@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ala_name_matching_spark.sources.checkpoints import barrier, cached
+
 
 def asof_join(
     left: DataFrame,
@@ -104,8 +106,6 @@ def rollup_cascade(
     reconstructed downstream as sum/count. Correctness of the cascade is
     oracle-checked against direct per-resolution GROUP BYs over raw.
     """
-    from pyspark import StorageLevel
-
     fine, *coarser = resolutions
     level = events.groupBy(
         F.date_trunc(fine, F.col(ts_col)).alias("bucket_start"), "event_type"
@@ -113,37 +113,35 @@ def rollup_cascade(
         F.count("*").alias("n_events"),
         F.sum(value_col).alias("sum_value"),
     )
-    # persist each level: WITHOUT it the lazy DAG recomputes the fine
-    # aggregate (and its raw scan) once per union branch -- three raw scans,
-    # exactly what the cascade exists to avoid. In production each level is
-    # a committed table, not a cache. The union is checkpointed eagerly so
-    # the levels can be released before returning.
-    levels = [level.persist(StorageLevel.MEMORY_AND_DISK)]
-    try:
-        out = [level.select(F.lit(fine).alias("resolution"), "*")]
-        for res in coarser:
-            level = level.groupBy(
-                F.date_trunc(res, F.col("bucket_start")).alias("bucket_start"),
-                "event_type",
-            ).agg(
-                F.sum("n_events").alias("n_events"),
-                F.sum("sum_value").alias("sum_value"),
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            levels.append(level)
-            out.append(level.select(F.lit(res).alias("resolution"), "*"))
-        result = out[0]
-        for lvl in out[1:]:
-            result = result.unionByName(lvl)
-        return result.select(
-            "resolution",
-            "bucket_start",
+    levels = [level]
+    out = [level.select(F.lit(fine).alias("resolution"), "*")]
+    for res in coarser:
+        level = level.groupBy(
+            F.date_trunc(res, F.col("bucket_start")).alias("bucket_start"),
             "event_type",
-            "n_events",
-            F.round("sum_value", 4).alias("sum_value"),
-        ).localCheckpoint(eager=True)
-    finally:
-        for lvl in levels:
-            lvl.unpersist()
+        ).agg(
+            F.sum("n_events").alias("n_events"),
+            F.sum("sum_value").alias("sum_value"),
+        )
+        levels.append(level)
+        out.append(level.select(F.lit(res).alias("resolution"), "*"))
+    result = out[0]
+    for lvl in out[1:]:
+        result = result.unionByName(lvl)
+    # cache each level (in order, so each reads the one before): WITHOUT it
+    # the lazy DAG recomputes the fine aggregate (and its raw scan) once per
+    # union branch -- three raw scans, exactly what the cascade exists to
+    # avoid. In production each level is a committed table, not a cache.
+    with cached(*levels):
+        return barrier(
+            result.select(
+                "resolution",
+                "bucket_start",
+                "event_type",
+                "n_events",
+                F.round("sum_value", 4).alias("sum_value"),
+            )
+        )
 
 
 def scd2_intervals(
@@ -377,7 +375,7 @@ def rfm_segments(
     USER-grain table (never the raw stream). Each rank runs on
     blocking.global_rank -- range-partition + per-partition local
     windows + a parallelism-bounded offset table -- so the lane stays
-    parallel at 10^9+ users; the per-user table is eagerly checkpointed
+    parallel at 10^9+ users; the per-user table passes a barrier
     once because the three rank passes and the total-count aggregate all
     re-consume it. Rows whose metrics are null (possible only when every
     event for a user carries a null timestamp or value) are excluded
@@ -415,11 +413,13 @@ def rfm_segments(
     )
     from ala_name_matching_spark.operators.blocking import global_rank
 
-    pu = per_user.where(
-        F.col("recency_days").isNotNull()
-        & F.col("frequency").isNotNull()
-        & F.col("monetary").isNotNull()
-    ).localCheckpoint(eager=True)
+    pu = barrier(
+        per_user.where(
+            F.col("recency_days").isNotNull()
+            & F.col("frequency").isNotNull()
+            & F.col("monetary").isNotNull()
+        )
+    )
 
     def quant(name):
         # global_rank is 0-based, so the 1-based formula's (rk - 1) is rk

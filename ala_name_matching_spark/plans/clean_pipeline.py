@@ -118,7 +118,7 @@ def run_clean_pipeline(
         return dedup.strip_dup_spans(df, id_col, text_col, span_n=span_n)
 
     # the input count is the only count() job: every stage count comes from
-    # its commit's parquet footers (count() of the localCheckpoint without
+    # its commit's parquet footers (count() of the barrier without
     # checkpoints)
     df, n_in, counts = docs, docs.count(), []
     for stage in (c1_quality, c2_exact, c3_neardup, c4_strip):

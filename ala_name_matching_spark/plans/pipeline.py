@@ -70,7 +70,7 @@ def _driver_label_artifact(ckpt: CheckpointManager) -> bool:
     """All-driver p5 lane: write p5_group_labels without any Spark job.
 
     Eligible when the committed edge phase is small (< _DRIVER_CC_MAX_EDGES,
-    known from parquet footers) and on local storage: pyarrow-read the edges,
+    known from parquet footers): pyarrow-read the edges,
     numpy union-find + election, Arrow-join the labels onto the (group hash
     -> rep) map read from the committed rep phase, write the phase artifact
     chunked. The two Spark jobs this replaces (label attach + group-table
@@ -85,11 +85,7 @@ def _driver_label_artifact(ckpt: CheckpointManager) -> bool:
     edges_pdf = ckpt.read_local_pandas(
         "p4_edges", ["src", "dst", "src_prio", "dst_prio"]
     )
-    if edges_pdf is None:
-        return False
     reps_tbl = ckpt.read_local_arrow("p2_canon_reps", ["_g1", "_g2", "record_id"])
-    if reps_tbl is None:
-        return False
     group_tbl = label_attach_arrow(reps_tbl, _labels_and_winners_pdf(edges_pdf))
     ckpt.write_driver_table("p5_group_labels", group_tbl, n_files=16)
     return True

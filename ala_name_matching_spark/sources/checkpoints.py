@@ -12,6 +12,13 @@ forceMerge(1), DwcaNameIndexer.java:131-186,614-626 -- S3 in SURVEY.md §2.1).
 The metrics table mirrors the reference's metadata.json/idmap.txt lineage
 outputs (DwcaNameIndexer.writeMetadata/writeIdMap, DwcaNameIndexer.java:
 1052-1130): one row per (phase, partition) with row counts and timings.
+
+Below a phase commit, the lineage barrier is `barrier(df)`: the package's
+only eager local checkpoint. Its blocks belong to the calling thread's
+innermost open `released()` scope and are freed when that scope exits;
+with no scope open it is not tracked. `cached(*dfs)` persists inputs that
+are read more than once for the duration of a block. No other module
+persists, unpersists or checkpoints (tests/test_no_dead_code.py).
 """
 
 from __future__ import annotations
@@ -19,8 +26,10 @@ from __future__ import annotations
 import glob
 import json
 import os
+import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -30,11 +39,58 @@ try:  # pragma: no cover - not present in this image
 except Exception:  # pragma: no cover
     HAS_ICEBERG = False
 
+# per-thread stack of open released() scopes: a streaming micro-batch runs
+# in the foreachBatch callback thread, beside the thread that started it
+_scopes = threading.local()
+
+
+def barrier(df: DataFrame) -> DataFrame:
+    """Cut the lineage of `df` with an eager local checkpoint, owned by the
+    innermost open released() scope of the calling thread (if any)."""
+    out = df.localCheckpoint(eager=True)
+    stack = getattr(_scopes, "stack", None)
+    if stack:
+        stack[-1].append(out._jdf.queryExecution().analyzed().rdd())
+    return out
+
+
+@contextmanager
+def released():
+    """Free every barrier taken inside the block when it exits. The
+    checkpoint's own RDD is unpersisted: DataFrame.unpersist() does not free
+    local-checkpoint blocks."""
+    if not hasattr(_scopes, "stack"):
+        _scopes.stack = []
+    _scopes.stack.append([])
+    try:
+        yield
+    finally:
+        for rdd in _scopes.stack.pop():
+            rdd.unpersist(True)
+
+
+@contextmanager
+def cached(*dfs: DataFrame):
+    """Persist `dfs` for the duration of the block."""
+    for df in dfs:
+        df.persist()
+    try:
+        yield
+    finally:
+        for df in dfs:
+            df.unpersist()
+
 
 class CheckpointManager:
     """Resumable phase-output store rooted at a working directory."""
 
     def __init__(self, spark: SparkSession, root: str, enabled: bool = True):
+        if "://" in root:
+            # exists() and the footer reads test the local file system, so a
+            # URL root would never resume a committed phase
+            raise ValueError(
+                f"CheckpointManager root must be a local directory, got {root!r}"
+            )
         self.spark = spark
         self.root = root
         self.enabled = enabled
@@ -54,22 +110,22 @@ class CheckpointManager:
         return self.spark.read.parquet(self._path(phase))
 
     def phase(self, name: str, build) -> DataFrame:
-        """Build-or-resume one phase: the single lineage-barrier rule.
+        """Build-or-resume one phase.
 
         A committed phase is read back and `build` is never called.
         Otherwise the output of `build()` is committed (materialize: write,
-        then read back). With checkpointing disabled it is cut with an eager
-        localCheckpoint instead: every phase output feeds >= 2 downstream
-        branches (or a count plus the next phase), and without the cut each
-        branch recomputes the whole upstream DAG -- measured 369 s vs 49 s
-        e2e at 150k turns / local[32], 206 s vs 32 s for the sf0.1
-        clean_pipeline query. `build` may commit the phase itself
-        (write_driver_table) and return None; it is then read back.
+        then read back). With checkpointing disabled it is cut with a
+        barrier instead: every phase output feeds >= 2 downstream branches
+        (or a count plus the next phase), and without the cut each branch
+        recomputes the whole upstream DAG -- measured 369 s vs 49 s e2e at
+        150k turns / local[32], 206 s vs 32 s for the sf0.1 clean_pipeline
+        query. `build` may commit the phase itself (write_driver_table) and
+        return None; it is then read back.
         """
         if self.exists(name):
             return self.read(name)
         if not self.enabled:
-            return build().localCheckpoint(eager=True)
+            return barrier(build())
         return self.materialize(name, build())
 
     def rows(self, name: str, df: DataFrame) -> int:
@@ -123,8 +179,8 @@ class CheckpointManager:
         return sum(self._footer_counts(phase))
 
     def _local_files(self, phase: str) -> list[str] | None:
-        """Part files of a committed phase on local storage, else None."""
-        if not self.exists(phase) or "://" in self.root:
+        """Part files of a committed phase, else None."""
+        if not self.exists(phase):
             return None
         return sorted(glob.glob(os.path.join(self._path(phase), "part-*")))
 
@@ -143,11 +199,10 @@ class CheckpointManager:
         return self._map_files(lambda f: pq.read_metadata(f).num_rows, files)
 
     def read_local_pandas(self, phase: str, columns: list[str] | None = None):
-        """Driver-side pyarrow read of a committed phase on LOCAL storage.
+        """Driver-side pyarrow read of a committed phase.
 
-        Returns a pandas frame, or None when the phase is uncommitted or the
-        root is an object store (production falls back to a Spark collect).
-        For small driver-side tables (edge lists, label maps) this replaces a
+        Returns a pandas frame, or None when the phase is uncommitted. For
+        small driver-side tables (edge lists, label maps) this replaces a
         full Spark job -- collect scheduling was a measurable fixed cost in
         the two-cluster-size criterion. The Iceberg analog is a direct
         manifest-guided pyarrow read of the snapshot's data files.
@@ -171,14 +226,13 @@ class CheckpointManager:
         """Persist a driver-side pandas frame as a readable parquet phase.
 
         Chunked into `n_files` so a Spark scan of it parallelizes. Returns
-        the path (None when checkpointing is off or the root is remote --
-        callers fall back to spark.createDataFrame). This is the fast lane
+        the path (None when checkpointing is off). This is the fast lane
         for shipping driver-computed tables (cluster labels) back into the
         distributed plan: pyarrow write + parquet scan measured well under
         half the cost of createDataFrame's arrow conversion at millions of
         rows.
         """
-        if not self.enabled or "://" in self.root:
+        if not self.enabled:
             return None
         import shutil
 

@@ -10,21 +10,25 @@ idempotent writes -- see _write_epoch_idempotent).
 Design for scale:
   * the static side of every lane (the ladder's prepared index, the
     near-dup corpus bands, the SemDeDup members) is built ONCE when the
-    stream starts, persisted until the query terminates and released by
+    stream starts, cached until the query terminates and released by
     _ReleasingQuery; each micro-batch does batch-sized work against it
     with the SAME batch operators (operators/ladder, operators/dedup) --
     no separate streaming codepath to keep semantically in sync;
   * every lane starts through _start_batches: one foreachBatch wiring,
-    one empty-batch guard, one availableNow trigger.
+    one empty-batch guard, one availableNow trigger, and one released()
+    scope per micro-batch that frees the batch's barriers once written.
 """
 
 from __future__ import annotations
+
+from contextlib import ExitStack
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ala_name_matching_spark.operators.ladder import prepare_index, search_ladder
+from ala_name_matching_spark.sources.checkpoints import cached, released
 
 TRANSCRIPT_DDL = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
@@ -51,31 +55,18 @@ def _write_epoch_idempotent(df: DataFrame, epoch_id: int, path: str) -> None:
     )
 
 
-def _checkpoint_rdds(df: DataFrame) -> dict:
-    """{rdd id: rdd} of the local-checkpoint RDDs `df` reads -- the
-    LogicalRDD leaves of its plan, whose blocks DataFrame.unpersist does
-    not free."""
-    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-    nodes = (leaves.apply(i) for i in range(leaves.size()))
-    return {
-        n.rdd().id(): n.rdd() for n in nodes if n.getClass().getSimpleName() == "LogicalRDD"
-    }
-
-
 class _ReleasingQuery(StreamingQuery):
-    """A StreamingQuery that unpersists the static-side tables (corpus or
-    prepared index) its batch handler reads once the query has terminated
-    -- awaited to the end or stopped -- so a drained query leaves no cache
-    behind in the session."""
+    """A StreamingQuery that closes the cached() scopes of the static-side
+    tables (corpus or prepared index) its batch handler reads once the
+    query has terminated -- awaited to the end or stopped -- so a drained
+    query leaves no cache behind in the session."""
 
-    def __init__(self, query: StreamingQuery, cached: list[DataFrame]):
+    def __init__(self, query: StreamingQuery, static: ExitStack):
         super().__init__(query._jsq)
-        self._cached = cached
+        self._static = static
 
     def _release(self) -> None:
-        for df in self._cached:
-            df.unpersist()
-        self._cached = []
+        self._static.close()
 
     def awaitTermination(self, timeout=None):
         try:
@@ -90,14 +81,15 @@ class _ReleasingQuery(StreamingQuery):
 
 
 def _start_batches(
-    stream: DataFrame, checkpoint_path: str, handle, cached=()
+    stream: DataFrame, checkpoint_path: str, handle, static: ExitStack
 ) -> _ReleasingQuery:
     """Start `stream`, draining the available micro-batches through
     `handle(batch_df, epoch_id)`; empty batches never reach it. The
-    returned query unpersists `cached` once it has terminated."""
+    returned query closes `static` once it has terminated."""
     def run(batch_df: DataFrame, epoch_id: int) -> None:
         if not batch_df.isEmpty():
-            handle(batch_df, epoch_id)
+            with released():
+                handle(batch_df, epoch_id)
 
     query = (
         stream.writeStream.foreachBatch(run)
@@ -105,7 +97,7 @@ def _start_batches(
         .trigger(availableNow=True)
         .start()
     )
-    return _ReleasingQuery(query, list(cached))
+    return _ReleasingQuery(query, static)
 
 
 def read_transcript_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -129,29 +121,21 @@ def incremental_match(
 ):
     """Match each arriving turn against the cluster-representative index.
 
-    The index is prepared once (ladder.prepare_index) and persisted until
-    the query terminates; foreachBatch applies the batch search ladder to
-    the micro-batch against it and writes (query_id, index_id, score,
+    The index is prepared once (ladder.prepare_index) and cached until the
+    query terminates; foreachBatch applies the batch search ladder to the
+    micro-batch against it and writes (query_id, index_id, score,
     match_type, error_codes) to `out_path` -- effectively exactly-once via
-    the epoch-partitioned idempotent sink (_write_epoch_idempotent). The
-    ladder's query-side barrier is released once its batch is written.
+    the epoch-partitioned idempotent sink (_write_epoch_idempotent).
     Returns the StreamingQuery (caller stops it).
     """
-    prepared = prepare_index(index).persist()
-    index_rdds = _checkpoint_rdds(prepared)
+    static = ExitStack()
+    prepared = prepare_index(index)
+    static.enter_context(cached(prepared))
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        matched = search_ladder(batch_df, prepared)
-        try:
-            _write_epoch_idempotent(matched, epoch_id, out_path)
-        finally:
-            # release the ladder's barrier, never the inputs' own checkpoints
-            inputs = index_rdds.keys() | _checkpoint_rdds(batch_df).keys()
-            for rdd_id, rdd in _checkpoint_rdds(matched).items():
-                if rdd_id not in inputs:
-                    rdd.unpersist(False)
+        _write_epoch_idempotent(search_ladder(batch_df, prepared), epoch_id, out_path)
 
-    return _start_batches(stream, checkpoint_path, handle, cached=[prepared])
+    return _start_batches(stream, checkpoint_path, handle, static)
 
 
 def streaming_exact_dedup(
@@ -207,7 +191,7 @@ def streaming_neardup_match(
     Writes (doc_id_l=query, doc_id_r=corpus, jaccard, epoch) effectively
     exactly-once (epoch-partitioned idempotent sink).
 
-    SCALE: the corpus band table is computed ONCE and persisted until the
+    SCALE: the corpus band table is computed ONCE and cached until the
     query terminates (in production it is the committed index table, not a
     cache); per micro-batch the work is batch-sized -- band build on the new
     docs only, a hash join on band_key against the index, and verification
@@ -222,7 +206,8 @@ def streaming_neardup_match(
     corpus_bands = minhash_band_table(
         corpus, id_col, text_col, num_hashes, bands, shingle_n
     ).select(F.col("doc_id").alias("doc_id_r"), "band_key")
-    corpus_bands.persist()
+    static = ExitStack()
+    static.enter_context(cached(corpus_bands))
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         q_bands = minhash_band_table(
@@ -238,7 +223,7 @@ def streaming_neardup_match(
         )
         _write_epoch_idempotent(verified, epoch_id, out_path)
 
-    return _start_batches(stream, checkpoint_path, handle, cached=[corpus_bands])
+    return _start_batches(stream, checkpoint_path, handle, static)
 
 
 def streaming_index_update(
@@ -277,8 +262,7 @@ def streaming_index_update(
         analyzed = batch_df.select(
             F.col(id_col).alias("doc_id"), analyzer(F.col(text_col)).alias("_toks")
         )
-        analyzed.persist()
-        try:
+        with cached(analyzed):
             posts = (
                 analyzed.select("doc_id", F.explode_outer("_toks").alias("term"))
                 .filter(F.col("term").isNotNull() & (F.col("term") != ""))
@@ -288,10 +272,8 @@ def streaming_index_update(
             _write_epoch_idempotent(posts, epoch_id, f"{index_path}/postings")
             dl = analyzed.select("doc_id", F.size("_toks").alias("dl"))
             _write_epoch_idempotent(dl, epoch_id, f"{index_path}/doclen")
-        finally:
-            analyzed.unpersist()
 
-    return _start_batches(stream, checkpoint_path, handle)
+    return _start_batches(stream, checkpoint_path, handle, ExitStack())
 
 
 def streaming_semdedup_match(
@@ -307,16 +289,16 @@ def streaming_semdedup_match(
     dim: int | None = None,
 ):
     """Streaming SemDeDup: arriving vectors are assigned to the CORPUS
-    k-means clusters and checked against the persisted members of their
+    k-means clusters and checked against the cached members of their
     own cluster only -- the batch semdedup's query-vs-index twin (exactly
     the streaming_neardup_match pattern: expensive index once, per-batch
     work bounded by the batch x its clusters).
 
     The centroid matrix and the cluster-partitioned corpus are computed
-    once up front and persisted until the query terminates (in
+    once up front and cached until the query terminates (in
     production: the committed semdedup index tables).
     Per micro-batch: one Arrow matmul to assign, an equi-join on
-    cluster_id against the persisted members, exact cosine verify.
+    cluster_id against the cached members, exact cosine verify.
     Writes (vec_id, corpus_vec_id, cluster_id, cosine, epoch) effectively
     exactly-once (epoch-partitioned idempotent sink).
 
@@ -343,7 +325,8 @@ def streaming_semdedup_match(
     cv = corpus.select(
         F.col(id_col).alias("corpus_vec_id"), unit_rounded_col(F.col(vec_col)).alias("cnv")
     )
-    cv.persist()
+    static = ExitStack()
+    static.enter_context(cached(cv))
     if n_clusters is None:
         n_clusters = max(8, cv.count() // 125)
     cents = kmeans_fit(
@@ -354,7 +337,7 @@ def streaming_semdedup_match(
     )
     assign = _assign_udf(cents)
     members = cv.withColumn("cluster_id", assign(F.col("cnv")))
-    members.persist()
+    static.enter_context(cached(members))
 
     def verify(key, qp: pd.DataFrame, mp: pd.DataFrame) -> pd.DataFrame:
         # One Arrow matmul per (batch x cluster) cell -- the blocked
@@ -401,7 +384,7 @@ def streaming_semdedup_match(
         )
         _write_epoch_idempotent(matched, epoch_id, out_path)
 
-    return _start_batches(stream, checkpoint_path, handle, cached=[members, cv])
+    return _start_batches(stream, checkpoint_path, handle, static)
 
 
 def streaming_drift_monitor(
@@ -504,4 +487,4 @@ def streaming_drift_monitor(
         )
         _write_epoch_idempotent(out, epoch_id, out_path)
 
-    return _start_batches(stream, checkpoint_path, handle)
+    return _start_batches(stream, checkpoint_path, handle, ExitStack())

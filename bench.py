@@ -137,25 +137,6 @@ BENCH_QUERIES = (
 )
 
 
-def gc_all(spark):
-    """Block-manager hygiene between timed runs.
-
-    Many operators eagerly localCheckpoint skinny intermediates whose
-    blocks are released only when the driver GCs the python DataFrame AND
-    the async ContextCleaner drains. At ~80 queries x 2 runs the backlog
-    of dead blocks squeezes execution memory and later pair-heavy queries
-    spill (measured: pprl 4.7 s -> 81 s, setsim 4.3 s -> 36 s purely from
-    run position). Forcing both GCs restores isolation so each number
-    measures the OPERATOR, not the block-manager backlog of its
-    predecessors.
-    """
-    import gc
-
-    gc.collect()
-    spark.sparkContext._jvm.System.gc()
-    spark.catalog.clearCache()
-
-
 def consume(df):
     """Force FULL materialization of every output column.
 
@@ -184,6 +165,7 @@ def main():
     import __spark_entry__ as entry_mod
     from ala_name_matching_spark.plans.pipeline import cluster_summary, run_pipeline
     from ala_name_matching_spark.session import get_spark
+    from ala_name_matching_spark.sources.checkpoints import released
     from ala_name_matching_spark.sources.transcripts import synthesize_transcripts
 
     spark = get_spark("bench", master=f"local[{CPUS}]", shuffle_partitions=CPUS)
@@ -199,26 +181,26 @@ def main():
         # measures the operator, not the JIT -- the same warm-up rule the
         # BENCH/BASELINE.md scaling protocol pins. JSON carries
         # "warmup_runs" so rounds are compared like-for-like.
-        fn()
-        # the warm pass's own dead checkpoint blocks are predecessor
-        # interference for the timed pass too -- same hygiene as between
-        # queries (measured: er_pipeline 6.2-7.7 s unGC'd vs 4.8 s with
-        # the warm pass's blocks released; both runs execute identically).
-        # Best-of-2 timed runs, the BENCH/BASELINE.md scaling protocol's
-        # best-of-N convention at bench scale: single timed runs showed a
-        # +-10% host-noise band (er_pipeline 4.79 vs 5.23 s across
-        # otherwise-identical full-suite runs), and min-of-N is the
-        # steady-state estimator the protocol already pins.
+        # Every run frees its own barriers when it ends (released()): a
+        # predecessor's dead blocks squeeze execution memory and make later
+        # pair-heavy queries spill (measured: pprl 4.7 s -> 81 s, setsim
+        # 4.3 s -> 36 s purely from run position while they were left to
+        # the driver GC). Best-of-2 timed runs, the BENCH/BASELINE.md
+        # scaling protocol's best-of-N convention at bench scale: single
+        # timed runs showed a +-10% host-noise band (er_pipeline 4.79 vs
+        # 5.23 s across otherwise-identical full-suite runs), and min-of-N
+        # is the steady-state estimator the protocol already pins.
+        with released():
+            fn()
         n = None
         best = None
         for _ in range(2):
-            gc_all(spark)
-            t0 = time.time()
-            n = fn()
-            dt = time.time() - t0
+            with released():
+                t0 = time.time()
+                n = fn()
+                dt = time.time() - t0
             best = dt if best is None else min(best, dt)
         timings[name] = round(best, 3)
-        gc_all(spark)
         return n
 
     # Input staging (untimed): the north rule's input is a STORED table
@@ -238,7 +220,8 @@ def main():
     # machinery, so the first timed query measures the operator -- the same
     # steady-state discipline as the BENCH/BASELINE.md scaling protocol.
     warm = synthesize_transcripts(spark, 2000, partitions=CPUS)
-    cluster_summary(run_pipeline(warm.drop("entity_id"))).count()
+    with released():
+        cluster_summary(run_pipeline(warm.drop("entity_id"))).count()
     spark.read.parquet(f"{SF_DIR}/documents.parquet").count()
 
     # the north-rule workload: full ER pipeline over the stored transcripts
@@ -274,13 +257,13 @@ def main():
                 # queries. Totals are NOT comparable to BENCH_r01/r02.
                 "consume": "bitxor-xxhash64-all-columns",
                 # each query: one untimed warm pass (codegen/JIT), then
-                # TWO timed runs with GC between, reporting the min --
-                # the scaling protocol's best-of-N steady-state estimator
-                # (single timed runs carried a +-10% host-noise band)
+                # TWO timed runs, each releasing its barriers, reporting
+                # the min -- the scaling protocol's best-of-N steady-state
+                # estimator (single timed runs carried a +-10% host-noise
+                # band)
                 "warmup_runs": 1,
                 "timed_runs": 2,
                 "timed_aggregation": "min",
-                "gc_between_warm_and_timed": True,
             }
         )
     )

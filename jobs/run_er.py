@@ -11,7 +11,7 @@ Cluster invocation (the north rule's `spark-submit --py-files` shape):
         jobs/run_er.py \
         --input  <iceberg-table-or-parquet-path> \
         --output <clusters-table-path> \
-        --checkpoint-dir <durable-path>
+        --checkpoint-dir <local-or-mounted-dir>
 
 The script never sets a master itself when launched through spark-submit, so
 the same file runs on YARN/K8s/standalone; `--master local[8]` (or plain

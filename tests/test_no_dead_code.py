@@ -1,7 +1,8 @@
 """Guard: the package ships only what a shipped path reaches.
 
-Three checks: every definition has a shipped caller, every option has a
-shipped setter, and package code reads no environment knob.
+Four checks: every definition has a shipped caller, every option has a
+shipped setter, package code reads no environment knob, and only
+`sources/checkpoints.py` caches or checkpoints.
 
 A top-level function or class of the package is live when its name occurs
 as code in a root or in the body of another live definition, taken as a
@@ -34,6 +35,12 @@ should be a constant instead. EXEMPT_OPTIONS lists the few kept on purpose.
 An environment read (`os.environ`, `os.getenv`, or either imported by name)
 is an option no call site shows: a branch that only a shell setting selects.
 EXEMPT_ENV lists the deployment settings the session reads on purpose.
+
+A call of `localCheckpoint`, `checkpoint`, `persist`, `unpersist` or `cache`
+in the package or `__spark_entry__.py` must sit in `sources/checkpoints.py`:
+everything else takes a lineage barrier with `barrier()` and caches shared
+inputs with `cached()`, so every barrier and cache is released by one
+mechanism (`released()`, the end of a `cached()` block).
 """
 
 from __future__ import annotations
@@ -62,6 +69,9 @@ EXEMPT_OPTIONS = {
     "fs_em's init to show it reduces exactly to the reference fs_em",
     "linkage.fs_em_multilevel(u_init)": "as m_init",
 }
+
+CACHE_CALLS = {"localCheckpoint", "checkpoint", "persist", "unpersist", "cache"}
+CACHE_OWNER = os.path.join(PKG, "sources", "checkpoints.py")
 
 EXEMPT_ENV = {
     "session(SPARK_GRAFT_CPUS)": "a deployment setting: the host's CPU "
@@ -300,6 +310,18 @@ def env_reads(package: dict[str, str], exempt: set[str] = frozenset()) -> list[s
     return sorted(out)
 
 
+def cache_calls(sources: dict[str, str], owner: str) -> list[str]:
+    """`path:line name` of every CACHE_CALLS call outside the `owner` module."""
+    out = []
+    for path, text in sources.items():
+        if path == owner:
+            continue
+        for node in ast.walk(ast.parse(text)):
+            if isinstance(node, ast.Call) and _callee(node.func) in CACHE_CALLS:
+                out.append(f"{path}:{node.lineno} {_callee(node.func)}")
+    return sorted(out)
+
+
 def _read_tree(entries: list[str], excluded: list[str] = ()) -> dict[str, str]:
     out = {}
     for entry in entries:
@@ -346,6 +368,14 @@ def test_package_reads_no_environment_knob():
     # an exemption whose read is gone is stale
     names = {entry.split()[1] for entry in env_reads(package)}
     assert set(EXEMPT_ENV) <= names, set(EXEMPT_ENV) - names
+
+
+def test_only_checkpoints_module_caches_or_checkpoints():
+    calls = cache_calls(_read_tree([PKG, "__spark_entry__.py"]), CACHE_OWNER)
+    assert not calls, (
+        "cache/checkpoint calls outside sources/checkpoints.py (use barrier() "
+        "or cached()):\n" + "\n".join(calls)
+    )
 
 
 _LIB = '''
@@ -506,6 +536,33 @@ def knob(name):
 '''
 
 
+_CACHES = '''
+"""Docstring naming df.persist() and localCheckpoint."""
+from ala_name_matching_spark.sources.checkpoints import barrier, cached
+
+persisted = 1  # df.unpersist() in a comment
+
+
+def lane(df, other):
+    with cached(other):
+        kept = barrier(df)
+    df.persist()
+    df.localCheckpoint(eager=True)
+    other.unpersist()
+    return kept.cache().checkpoint()
+'''
+
+_OWNER = '''
+def barrier(df):
+    return df.localCheckpoint(eager=True)
+
+
+def cached(df):
+    df.persist()
+    df.unpersist()
+'''
+
+
 def test_guard_scanner_on_an_in_memory_package():
     package = {"pkg/lib.py": _LIB, "pkg/evaluate.py": _EXEMPT_MOD, "pkg/lib2.py": _LIB2}
     roots = {
@@ -556,6 +613,13 @@ def test_guard_scanner_on_an_in_memory_package():
         "env(?)", "env(?)", "env(KNOB_B)", "env(KNOB_C)"
     ]
     assert len(env_reads({"pkg/env.py": _ENV})) == 5
+    # Cache calls: every call of a caching method outside the owner module
+    # is reported, by attribute; the owner's own calls, the helpers, names,
+    # comments and docstrings are not.
+    calls = cache_calls({"pkg/lib.py": _CACHES, "pkg/ck.py": _OWNER}, "pkg/ck.py")
+    assert [c.split()[1] for c in calls] == [
+        "persist", "localCheckpoint", "unpersist", "cache", "checkpoint"
+    ]
 
 
 def test_guard_roots_hold_no_test_source():

@@ -134,6 +134,61 @@ def test_checkpoint_resume(spark, transcripts, tmp_path, monkeypatch):
     assert sum(m["rows"] for m in p5) > 0
 
 
+def test_checkpoint_url_root_is_rejected(tmp_path, monkeypatch):
+    """exists() and the footer reads test the local file system, so a URL
+    root could never resume: the constructor refuses it and creates no
+    directory (os.makedirs would have made one named `s3:`)."""
+    import os
+
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ValueError, match="local directory"):
+        CheckpointManager(None, "s3://b/ck")
+    assert os.listdir(tmp_path) == []
+
+
+def test_released_frees_the_barriers_and_caches_of_its_thread(spark):
+    """A barrier belongs to the innermost open released() scope of the
+    thread that took it and is freed when that scope exits; cached()
+    unpersists its inputs when its block exits."""
+    import threading
+
+    from ala_name_matching_spark.sources.checkpoints import (
+        barrier,
+        cached,
+        released,
+    )
+
+    def stored():
+        return {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    before = stored()
+    with released():
+        outer = barrier(spark.range(100))
+        with released():
+            inner = barrier(outer.selectExpr("id * 2 AS id"))
+            assert inner.count() == 100 and len(stored() - before) == 2
+        assert len(stored() - before) == 1
+        # another thread's scope frees only that thread's barriers
+        seen = []
+
+        def other():
+            with released():
+                seen.append(barrier(spark.range(10)).count())
+                seen.append(len(stored() - before))
+
+        t = threading.Thread(target=other)
+        t.start()
+        t.join()
+        assert seen == [10, 2] and len(stored() - before) == 1
+        assert outer.count() == 100
+        shared = outer.selectExpr("id % 7 AS k")
+        with cached(shared):
+            assert shared.distinct().count() == 7
+            assert len(stored() - before) == 2
+        assert len(stored() - before) == 1
+    assert stored() - before == set()
+
+
 def test_repair_pipeline_clusters(spark, tmp_path):
     """Post-process repair at the rep grain: strict=0 must reproduce the
     original partition (relabeled); strict above every score must shatter

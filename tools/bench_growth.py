@@ -11,8 +11,8 @@ check that single-SF benching structurally cannot perform.
 
 Methodology matches bench.py: one untimed warm pass then a timed run
 (steady-state, not janino compile), consume = bit_xor(xxhash64(all
-columns)) so no subtree is prunable, and the inter-query double-GC +
-clearCache hygiene so run position cannot pollute ratios. Sub-150ms
+columns)) so no subtree is prunable, and every run frees its barriers
+(released()) so run position cannot pollute ratios. Sub-150ms
 small-SF times are floored before dividing: at that scale fixed
 per-query overhead (session round-trips, Arrow worker warm-up)
 dominates and a ratio would measure noise, not growth.
@@ -38,7 +38,8 @@ import time
 
 sys.path.insert(0, ".")
 
-from bench import consume, gc_all  # noqa: E402
+from ala_name_matching_spark.sources.checkpoints import released  # noqa: E402
+from bench import consume  # noqa: E402
 
 TOP_N = 10
 
@@ -73,16 +74,15 @@ SMALL_FLOOR_SEC = 0.15
 
 
 def timed_run(spark, fn, sf_dir):
-    consume(fn(spark, sf_dir))  # warm (codegen/JIT)
-    # release the warm pass's dead checkpoint blocks before timing --
-    # bench.py's warm-to-timed hygiene; the blocks scale with data, so
-    # skipping this inflates t_big more than t_small and fakes ratios
-    gc_all(spark)
-    t0 = time.time()
-    consume(fn(spark, sf_dir))
-    dt = time.time() - t0
-    gc_all(spark)
-    return dt
+    # the warm pass's barriers are released before timing: their blocks
+    # scale with data, so keeping them inflates t_big more than t_small
+    # and fakes ratios
+    with released():
+        consume(fn(spark, sf_dir))  # warm (codegen/JIT)
+    with released():
+        t0 = time.time()
+        consume(fn(spark, sf_dir))
+        return time.time() - t0
 
 
 def main():

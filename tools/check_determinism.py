@@ -9,45 +9,52 @@ local[4]/shuffle_partitions=7 and local[16]/shuffle_partitions=32 --
 and the order-insensitive value multiset must match exactly (same
 normalization as tools/check_oracles.py).
 
-The sweep also enforces the NO-GLOBAL-WINDOW guard (VERDICT r03 #1): fd 2
-is captured to a file before the JVM launches, and after both sessions run
-every query the log must contain ZERO `No Partition Defined` WindowExec
-warnings beyond the deliberate canary. Bounded single-partition windows
-must ride blocking.bounded_window_input (non-empty partition spec);
-unbounded ranks must ride global_rank / bounded_topk_ranked. A canary
-query runs an intentional empty-partition window first and its warning
-must APPEAR -- proving the guard is not vacuous (log level, appender and
-message text are all live).
+Each session runs in its own child process, so neither inherits the
+other's SparkContext (a second context in one process loses its Python
+accumulator channel), and each query runs inside one released() scope.
+
+The sweep also enforces the NO-GLOBAL-WINDOW guard (VERDICT r03 #1): each
+child captures its fd 2 to a log file before its JVM launches, and after it
+has run every query the log must contain ZERO `No Partition Defined`
+WindowExec warnings beyond the deliberate canary. Bounded single-partition
+windows must ride blocking.bounded_window_input (non-empty partition spec);
+unbounded ranks must ride global_rank / bounded_topk_ranked. Each child
+runs a canary query with an intentional empty-partition window first and
+its warning must APPEAR -- proving the guard is not vacuous (log level,
+appender and message text are all live). A child that fails prints the
+tail of its log; a clean child's log is deleted.
 
 Usage: python tools/check_determinism.py [sf_dir] [only_query ...]
 """
 
 from __future__ import annotations
 
+import multiprocessing
 import os
 import sys
 import tempfile
+from concurrent.futures import ProcessPoolExecutor
 
 sys.path.insert(0, ".")
 sys.path.insert(0, "tools")
 
+# the SAME normalization as the correctness gate -- imported, not copied,
+# so the two sweeps can never drift apart
+from check_oracles import frame_to_rows  # noqa: E402
+
 _GW_MSG = "No Partition Defined"
+CONFIGS = [("local[4]", 7), ("local[16]", 32)]
 
 
-def _capture_stderr():
-    """Redirect fd 2 to a tempfile BEFORE the JVM spawns (it inherits the
-    fd), so log4j WARN output is greppable afterwards."""
-    cap = tempfile.NamedTemporaryFile(
-        mode="w+", delete=False, prefix="det_stderr_", suffix=".log"
-    )
-    os.dup2(cap.fileno(), 2)
-    return cap
-
-
-def _gw_count(cap) -> int:
+def _gw_count(log_path: str) -> int:
     os.fsync(2)
-    with open(cap.name) as fh:
+    with open(log_path, errors="replace") as fh:
         return fh.read().count(_GW_MSG)
+
+
+def _tail(log_path: str, n: int = 40) -> str:
+    with open(log_path, errors="replace") as fh:
+        return "".join(fh.readlines()[-n:])
 
 
 def _run_canary(spark) -> None:
@@ -59,9 +66,38 @@ def _run_canary(spark) -> None:
         "_r", F.row_number().over(Window.orderBy("id"))
     ).agg(F.sum("_r")).collect()
 
-# the SAME normalization as the correctness gate -- imported, not copied,
-# so the two sweeps can never drift apart
-from check_oracles import frame_to_rows  # noqa: E402
+
+def _sweep(master: str, parts: int, sf_dir: str, names: list[str], log_path: str):
+    """Run the canary and every query in `names` under one session, in a
+    child process whose fd 2 goes to `log_path` (redirected BEFORE the JVM
+    spawns, which inherits it). Returns ({name: rows or ("ERROR", msg)},
+    canary warning count, total warning count)."""
+    os.dup2(os.open(log_path, os.O_WRONLY | os.O_APPEND), 2)
+    import __spark_entry__ as entry_mod
+    from ala_name_matching_spark.session import get_spark
+    from ala_name_matching_spark.sources.checkpoints import released
+
+    queries = entry_mod.queries()
+    spark = get_spark(
+        f"det-{parts}",
+        master=master,
+        shuffle_partitions=parts,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
+    try:
+        _run_canary(spark)
+        canary = _gw_count(log_path)
+        results = {}
+        for n in names:
+            try:
+                with released():
+                    df = queries[n](spark, sf_dir)
+                    results[n] = frame_to_rows(df.columns, df.collect())
+            except Exception as e:  # noqa: BLE001
+                results[n] = ("ERROR", repr(e)[:300])
+        return results, canary, _gw_count(log_path)
+    finally:
+        spark.stop()
 
 
 def main():
@@ -69,44 +105,47 @@ def main():
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entry_mod
-    from ala_name_matching_spark.session import get_spark
 
-    queries = entry_mod.queries()
-    names = [n for n in queries if not only or n in only]
-
-    configs = [
-        ("local[4]", 7),
-        ("local[16]", 32),
-    ]
-    cap = _capture_stderr()
-    canary_count = None
-    results: dict[str, list] = {n: [] for n in names}
-    for master, parts in configs:
-        spark = get_spark(
-            f"det-{parts}",
-            master=master,
-            shuffle_partitions=parts,
-            extra_conf={"spark.ui.showConsoleProgress": "false"},
-        )
-        if canary_count is None:
-            _run_canary(spark)
-            canary_count = _gw_count(cap)
-            if canary_count < 1:
-                print(
-                    "[FAIL] global-window guard is VACUOUS: the canary's "
-                    "empty-partition window produced no "
-                    f"'{_GW_MSG}' warning in the captured log"
-                )
-                sys.exit(2)
-        for n in names:
-            try:
-                df = queries[n](spark, sf_dir)
-                results[n].append(frame_to_rows(df.columns, df.collect()))
-            except Exception as e:  # noqa: BLE001
-                results[n].append(("ERROR", repr(e)[:300]))
-        spark.stop()
-
+    names = [n for n in entry_mod.queries() if not only or n in only]
     failures = []
+    results: dict[str, list] = {n: [] for n in names}
+    for master, parts in CONFIGS:
+        fd, log_path = tempfile.mkstemp(prefix="det_stderr_", suffix=".log")
+        os.close(fd)
+        try:
+            with ProcessPoolExecutor(
+                1, mp_context=multiprocessing.get_context("spawn")
+            ) as ex:
+                got, canary, total_gw = ex.submit(
+                    _sweep, master, parts, sf_dir, names, log_path
+                ).result()
+        except Exception as e:  # noqa: BLE001
+            print(f"[FAIL] {master}/{parts}: the session died ({e!r}); log tail:")
+            print(_tail(log_path))
+            sys.exit(2)
+        if canary < 1:
+            print(
+                f"[FAIL] {master}/{parts}: global-window guard is VACUOUS: the "
+                f"canary's empty-partition window produced no '{_GW_MSG}' "
+                "warning in the captured log; log tail:"
+            )
+            print(_tail(log_path))
+            sys.exit(2)
+        for n in names:
+            results[n].append(got[n])
+        if total_gw > canary:
+            failures.append(f"__global_window_guard__{master}")
+            print(
+                f"[FAIL] {master}/{parts} global-window guard: {total_gw - canary} "
+                f"'{_GW_MSG}' WindowExec warnings beyond the canary (log: {log_path})"
+            )
+        else:
+            os.remove(log_path)
+            print(
+                f"[ok] {master}/{parts} global-window guard: sweep log free of "
+                "empty-partition WindowExec warnings (canary fired, queries clean)"
+            )
+
     for n in names:
         a, b = results[n]
         if a[0] == "ERROR" or b[0] == "ERROR":
@@ -127,19 +166,6 @@ def main():
                 f"[FAIL] {n}: rows {len(a[1])} vs {len(b[1])}, "
                 f"first diffs: {diffs}"
             )
-    total_gw = _gw_count(cap)
-    extra_gw = total_gw - canary_count
-    if extra_gw > 0:
-        failures.append("__global_window_guard__")
-        print(
-            f"[FAIL] global-window guard: {extra_gw} '{_GW_MSG}' WindowExec "
-            f"warnings beyond the canary (log: {cap.name})"
-        )
-    else:
-        print(
-            "[ok] global-window guard: sweep log free of empty-partition "
-            "WindowExec warnings (canary fired, queries clean)"
-        )
     print(f"\n{len(failures)} failures: {failures}")
     sys.exit(1 if failures else 0)
 
