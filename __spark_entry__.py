@@ -1340,19 +1340,20 @@ def _q_compaction_checksum(spark, sf_dir):
 
 def _q_ann_ivf_persisted_topk(spark, sf_dir):
     # Persisted-IVF roundtrip (was tests-only): build_ivf_index writes
-    # centroids + list_id-partitioned lists to disk, ivf_topk_from_index
-    # answers from the files alone (partition pruning on the probed
-    # lists). Same planted fixture + (16 lists, nprobe=6, rounded-rank)
-    # config as ann_ivf_topk, so the analytic truth set -- the five
-    # colinear copies per query at cosine 1.0 -- is unchanged and the
-    # oracle is shared verbatim: a green row proves the index survives
+    # centroids + list_id-partitioned lists to disk, read_ivf_index returns
+    # them and ivf_search answers from the files alone (partition pruning
+    # on the probed lists). Same planted fixture + (16 lists, nprobe=6,
+    # rounded-rank) config as ann_ivf_topk, so the analytic truth set --
+    # the five colinear copies per query at cosine 1.0 -- is unchanged and
+    # the oracle is shared verbatim: a green row proves the index survives
     # the disk roundtrip bit-for-bit.
     import shutil
     import tempfile
 
     from ala_name_matching_spark.operators.similarity_search import (
         build_ivf_index,
-        ivf_topk_from_index,
+        ivf_search,
+        read_ivf_index,
     )
 
     corpus, queries = _ann_planted_corpus_and_queries(spark, sf_dir)
@@ -1360,7 +1361,7 @@ def _q_ann_ivf_persisted_topk(spark, sf_dir):
     try:
         build_ivf_index(corpus, f"{tmp}/idx", n_centroids=16)
         return barrier(
-            ivf_topk_from_index(spark, f"{tmp}/idx", queries, k=5, nprobe=6)
+            ivf_search(*read_ivf_index(spark, f"{tmp}/idx"), queries, k=5, nprobe=6)
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -4203,7 +4204,10 @@ def _q_sq_rerank_topk(spark, sf_dir):
 
 
 def _q_ann_ivf_topk(spark, sf_dir):
-    from ala_name_matching_spark.operators.similarity_search import ivf_topk
+    from ala_name_matching_spark.operators.similarity_search import (
+        ivf_index,
+        ivf_search,
+    )
 
     corpus, queries = _ann_planted_corpus_and_queries(spark, sf_dir)
     # IVF-flat scale path: 16-list coarse quantizer trained on a bounded
@@ -4211,7 +4215,7 @@ def _q_ann_ivf_topk(spark, sf_dir):
     # 0.79 vs cosine_topk on the ORGANIC fixture; nprobe=16 reproduces
     # brute force exactly (tests/test_similarity_search.py); the planted
     # copies make the driver row value-checked
-    return ivf_topk(corpus, queries, k=5, n_centroids=16, nprobe=6)
+    return ivf_search(*ivf_index(corpus, n_centroids=16), queries, k=5, nprobe=6)
 
 
 # Double-Metaphone fuzzy-lookup fixture (VERDICT r02 #7). Literal surname

@@ -473,6 +473,77 @@ def _route_intra_edges(
     )
 
 
+def _edge_supports(
+    labels: DataFrame,
+    edges: DataFrame,
+    id_col: str,
+    cluster_col: str,
+    edge_cols: tuple[str, str],
+) -> tuple[DataFrame, DataFrame]:
+    """The triangle kernel of cluster_triangles and edge_support.
+
+    Returns (sup, deg): `sup` is (_c, _a, _b, support), one row per routed
+    in-cluster edge with its number of common in-cluster neighbours;
+    `deg` is the (_c, _x, _deg) degree table behind a barrier. Common
+    neighbours are enumerated from the LOWER-degree endpoint of each edge
+    and verified against the other endpoint's adjacency with one
+    semi-join, so the per-edge cost is min(deg_a, deg_b): a hub of degree
+    d never fans out d^2 wedges. The caller caches labels.
+    """
+    e = _route_intra_edges(labels, edges, id_col, cluster_col, edge_cols)
+    sym = e.select("_c", F.col("_a").alias("_x"), F.col("_b").alias("_y")).unionAll(
+        e.select("_c", F.col("_b").alias("_x"), F.col("_a").alias("_y"))
+    )
+    deg = barrier(
+        sym.groupBy("_c", "_x").agg(F.count("*").cast("long").alias("_deg"))
+    )
+    ed = (
+        e.join(
+            deg.select(
+                "_c", F.col("_x").alias("_a"), F.col("_deg").alias("_da")
+            ),
+            ["_c", "_a"],
+        )
+        .join(
+            deg.select(
+                "_c", F.col("_x").alias("_b"), F.col("_deg").alias("_db")
+            ),
+            ["_c", "_b"],
+        )
+        .select(
+            "_c",
+            "_a",
+            "_b",
+            F.when(F.col("_da") <= F.col("_db"), F.col("_a"))
+            .otherwise(F.col("_b"))
+            .alias("_pivot"),
+            F.when(F.col("_da") <= F.col("_db"), F.col("_b"))
+            .otherwise(F.col("_a"))
+            .alias("_other"),
+        )
+    )
+    # candidate third vertices: neighbors of the pivot (cheaper side)
+    cand = ed.join(
+        sym.select("_c", F.col("_x").alias("_pivot"), F.col("_y").alias("_z")),
+        ["_c", "_pivot"],
+    ).where(F.col("_z") != F.col("_other"))
+    # verified: z also adjacent to the other endpoint
+    tri = cand.join(
+        sym.select("_c", F.col("_x").alias("_other"), F.col("_y").alias("_z")),
+        ["_c", "_other", "_z"],
+        "left_semi",
+    ).groupBy("_c", "_a", "_b").agg(
+        F.count("*").cast("long").alias("support")
+    )
+    sup = e.join(tri, ["_c", "_a", "_b"], "left").select(
+        "_c",
+        "_a",
+        "_b",
+        F.coalesce(F.col("support"), F.lit(0)).cast("long").alias("support"),
+    )
+    return sup, deg
+
+
 def cluster_triangles(
     labels: DataFrame,
     edges: DataFrame,
@@ -489,18 +560,13 @@ def cluster_triangles(
     are closure chains held together by single bridging edges -- the
     over-merge shape the repair lane (cluster_repair) re-clusters.
 
-    Distributed shape: edges are routed to clusters with two id-keyed
-    joins (as in cluster_cohesion); triangles are counted on the
-    DEGREE-ORDERED orientation (each undirected edge directed from the
-    endpoint with lexicographically smaller (degree, id)) -- the standard
-    trick that bounds every node's out-degree by O(sqrt(m)), so the
-    wedge-generating self-join on src cannot blow up on hub records the
-    way a naive id-ordered join does (a star of degree d generates d^2/2
-    id-ordered wedges but ZERO degree-ordered ones from the hub). The
-    count is orientation-invariant, which is what makes the simple
+    Distributed shape: the per-edge triangle support of edge_support
+    (_edge_supports, hub-safe), summed per cluster -- each triangle is
+    counted once by each of its three edges, so triangles = sum / 3.
+    The count is enumeration-invariant, which is what makes the simple
     id-ordered SQL replay a valid oracle. Wedges = sum over nodes of
-    C(deg, 2) -- one groupBy on the degree table, never materialized
-    as paths.
+    C(deg, 2) -- one groupBy on the same degree table, never
+    materialized as paths.
 
     Output: (cluster_id, n_members, n_edges, n_wedges, n_triangles,
     transitivity) for clusters with >= 2 members; transitivity is 0.0
@@ -512,45 +578,15 @@ def cluster_triangles(
     # re-executes the whole upstream per reuse (measured: 220 Exchanges
     # vs 11 at sf0.01)
     with cached(labels):
-        e = _route_intra_edges(labels, edges, id_col, cluster_col, edge_cols)
-        deg = barrier(
-            e.select("_c", F.col("_a").alias("_n"))
-            .unionAll(e.select("_c", F.col("_b").alias("_n")))
-            .groupBy("_c", "_n")
-            .agg(F.count("*").cast("long").alias("_deg"))
+        sup, deg = _edge_supports(labels, edges, id_col, cluster_col, edge_cols)
+        # every triangle closes over its three edges, so it is counted
+        # once in each of their supports
+        per_edge = sup.groupBy("_c").agg(
+            F.count("*").cast("long").alias("n_edges"),
+            F.expr("sum(support) div 3").cast("long").alias("n_triangles"),
         )
-        per_cluster = deg.groupBy("_c").agg(
-            F.sum(F.expr("_deg * (_deg - 1L) div 2")).cast("long").alias("n_wedges"),
-            F.count("*").cast("long").alias("_n_with_edges"),
-        )
-        n_edges = e.groupBy("_c").agg(F.count("*").cast("long").alias("n_edges"))
-        # degree-ordered orientation: src = smaller (deg, id) endpoint; carry
-        # the destination's order key so the wedge join can avoid double-count
-        da = deg.select(
-            F.col("_c"), F.col("_n").alias("_a"), F.col("_deg").alias("_dega")
-        )
-        db = deg.select(
-            F.col("_c"), F.col("_n").alias("_b"), F.col("_deg").alias("_degb")
-        )
-        ed = e.join(da, ["_c", "_a"]).join(db, ["_c", "_b"])
-        ka = F.struct(F.col("_dega").alias("d"), F.col("_a").alias("n"))
-        kb = F.struct(F.col("_degb").alias("d"), F.col("_b").alias("n"))
-        o = ed.select(
-            "_c",
-            F.when(ka < kb, F.col("_a")).otherwise(F.col("_b")).alias("_src"),
-            F.when(ka < kb, F.col("_b")).otherwise(F.col("_a")).alias("_dst"),
-            F.when(ka < kb, kb).otherwise(ka).alias("_dstkey"),
-        )
-        o1 = o.select("_c", "_src", F.col("_dst").alias("_x"), F.col("_dstkey").alias("_kx"))
-        o2 = o.select("_c", "_src", F.col("_dst").alias("_y"), F.col("_dstkey").alias("_ky"))
-        wedge = o1.join(o2, ["_c", "_src"]).where(F.col("_kx") < F.col("_ky"))
-        closing = o.select(
-            "_c", F.col("_src").alias("_x"), F.col("_dst").alias("_y")
-        )
-        tri = (
-            wedge.join(closing, ["_c", "_x", "_y"], "left_semi")
-            .groupBy("_c")
-            .agg(F.count("*").cast("long").alias("n_triangles"))
+        per_node = deg.groupBy("_c").agg(
+            F.sum(F.expr("_deg * (_deg - 1L) div 2")).cast("long").alias("n_wedges")
         )
         sizes = (
             labels.groupBy(F.col(cluster_col).alias("_c"))
@@ -558,16 +594,15 @@ def cluster_triangles(
             .where(F.col("n_members") >= 2)
         )
         # coalesce BEFORE the ratio: a cluster with wedges but no triangle
-        # row must score 0.0, not null
+        # must score 0.0, not null
         nt = F.coalesce(F.col("n_triangles"), F.lit(0)).cast("long")
         nw = F.coalesce(F.col("n_wedges"), F.lit(0)).cast("long")
         trans = F.when(
             nw > 0, F.lit(3.0) * nt.cast("double") / nw.cast("double")
         ).otherwise(F.lit(0.0))
         return barrier(
-            sizes.join(per_cluster.drop("_n_with_edges"), "_c", "left")
-            .join(n_edges, "_c", "left")
-            .join(tri, "_c", "left")
+            sizes.join(per_node, "_c", "left")
+            .join(per_edge, "_c", "left")
             .select(
                 F.col("_c").alias(cluster_col),
                 "n_members",
@@ -597,73 +632,22 @@ def edge_support(
     intact (a 2-truss repair, one deterministic step, vs the iterative
     strict-subgraph re-clustering of repair_low_cohesion).
 
-    Distributed shape: edges route to clusters (two id joins); common
-    neighbors are enumerated from the LOWER-degree endpoint of each edge
-    and verified against the other endpoint's adjacency with one
-    semi-join -- the per-edge cost is min(deg_a, deg_b), the same
-    hub-safety argument as the degree-ordered triangle count.
+    Distributed shape: edges route to clusters (two id joins) and the
+    triangle kernel (_edge_supports) counts each edge's common neighbors
+    at min(deg_a, deg_b) cost per edge.
 
     Output: (cluster_id, id_a, id_b, support, is_bridge) with
     id_a < id_b, one row per in-cluster edge.
     """
     with cached(labels):
-        e = _route_intra_edges(labels, edges, id_col, cluster_col, edge_cols)
-        sym = e.select("_c", F.col("_a").alias("_x"), F.col("_b").alias("_y")).unionAll(
-            e.select("_c", F.col("_b").alias("_x"), F.col("_a").alias("_y"))
-        )
-        deg = barrier(
-            sym.groupBy("_c", "_x").agg(F.count("*").cast("long").alias("_deg"))
-        )
-        ed = (
-            e.join(
-                deg.select(
-                    "_c", F.col("_x").alias("_a"), F.col("_deg").alias("_da")
-                ),
-                ["_c", "_a"],
-            )
-            .join(
-                deg.select(
-                    "_c", F.col("_x").alias("_b"), F.col("_deg").alias("_db")
-                ),
-                ["_c", "_b"],
-            )
-            .select(
-                "_c",
-                "_a",
-                "_b",
-                F.when(F.col("_da") <= F.col("_db"), F.col("_a"))
-                .otherwise(F.col("_b"))
-                .alias("_pivot"),
-                F.when(F.col("_da") <= F.col("_db"), F.col("_b"))
-                .otherwise(F.col("_a"))
-                .alias("_other"),
-            )
-        )
-        # candidate third vertices: neighbors of the pivot (cheaper side)
-        cand = ed.join(
-            sym.select("_c", F.col("_x").alias("_pivot"), F.col("_y").alias("_z")),
-            ["_c", "_pivot"],
-        ).where(F.col("_z") != F.col("_other"))
-        # verified: z also adjacent to the other endpoint
-        tri = cand.join(
-            sym.select("_c", F.col("_x").alias("_other"), F.col("_y").alias("_z")),
-            ["_c", "_other", "_z"],
-            "left_semi",
-        ).groupBy("_c", "_a", "_b").agg(
-            F.count("*").cast("long").alias("support")
-        )
+        sup, _ = _edge_supports(labels, edges, id_col, cluster_col, edge_cols)
         return barrier(
-            e.join(tri, ["_c", "_a", "_b"], "left")
-            .select(
+            sup.select(
                 F.col("_c").alias(cluster_col),
                 F.col("_a").alias("id_a"),
                 F.col("_b").alias("id_b"),
-                F.coalesce(F.col("support"), F.lit(0)).cast("long").alias(
-                    "support"
-                ),
-                (F.coalesce(F.col("support"), F.lit(0)) == 0).alias(
-                    "is_bridge"
-                ),
+                "support",
+                (F.col("support") == 0).alias("is_bridge"),
             )
         )
 

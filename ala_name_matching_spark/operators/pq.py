@@ -10,7 +10,7 @@ approximate distance to any database vector is the sum of M table lookups --
 no original vectors are touched at query time. Memory per vector drops from
 D floats to M codes; this is the compression layer that makes billion-scale
 ANN fit in RAM, and it composes with the IVF coarse quantizer this repo
-already has (similarity_search.ivf_topk): IVF prunes WHICH vectors to score,
+already has (similarity_search.ivf_index): IVF prunes WHICH vectors to score,
 PQ compresses HOW they are scored.
 
 Spark shape, built for 100 TB:
@@ -220,6 +220,40 @@ def _adc_rank(scored: "DataFrame", topk: int) -> "DataFrame":
     )
 
 
+def _pq_codes_and_grid(
+    queries: DataFrame,
+    vectors: DataFrame,
+    m_subs: int,
+    k: int,
+    iters: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+) -> tuple[DataFrame, DataFrame]:
+    """Train the codebooks and encode the corpus -> (vec_id, sub, code),
+    and build the ADC lookup grid -> (query_id, sub, code, d): the
+    |Q| * M * k table of ||q_s||^2 - 2<q_s, c> + ||c||^2."""
+    dim = int(vectors.select(F.size(vec_col).alias("d")).first()["d"])
+    subdim = dim // m_subs
+    codebooks = train_pq_codebooks(vectors, m_subs, k, iters, id_col, vec_col, dim)
+    codes = pq_encode(vectors, codebooks, m_subs, subdim, id_col, vec_col)
+    qsv = _subvectors(queries, m_subs, subdim, query_id_col, vec_col).select(
+        F.col("vec_id").alias("query_id"), "sub", F.col("sv").alias("qsv")
+    )
+    qnorm2 = _dot_sv("qsv", "qsv", subdim)
+    grid = qsv.join(F.broadcast(codebooks), "sub").select(
+        "query_id",
+        "sub",
+        "code",
+        (
+            qnorm2
+            - 2.0 * _dot_sv("qsv", "centroid", subdim)
+            + F.col("cnorm2")
+        ).alias("d"),
+    )
+    return codes, grid
+
+
 def pq_adc_topk(
     queries: DataFrame,
     vectors: DataFrame,
@@ -241,25 +275,8 @@ def pq_adc_topk(
     AFTER ranking on the unrounded value would reintroduce engine skew --
     so the rank orders by the ROUNDED sum, which both engines share.
     """
-    dim = int(vectors.select(F.size(vec_col).alias("d")).first()["d"])
-    subdim = dim // m_subs
-    codebooks = train_pq_codebooks(vectors, m_subs, k, iters, id_col, vec_col, dim)
-    codes = pq_encode(vectors, codebooks, m_subs, subdim, id_col, vec_col)
-
-    qsv = _subvectors(queries, m_subs, subdim, query_id_col, vec_col).select(
-        F.col("vec_id").alias("query_id"), "sub", F.col("sv").alias("qsv")
-    )
-    # |Q| * M * k distance table: the ADC lookup grid
-    qnorm2 = _dot_sv("qsv", "qsv", subdim)
-    grid = qsv.join(F.broadcast(codebooks), "sub").select(
-        "query_id",
-        "sub",
-        "code",
-        (
-            qnorm2
-            - 2.0 * _dot_sv("qsv", "centroid", subdim)
-            + F.col("cnorm2")
-        ).alias("d"),
+    codes, grid = _pq_codes_and_grid(
+        queries, vectors, m_subs, k, iters, id_col, vec_col, query_id_col
     )
     # M lookups per (query, vector), summed in sub order (sorted fold)
     return _adc_rank(
@@ -392,51 +409,19 @@ def ivfpq_topk(
     candidate (query, vector) pairs from the probed-list equi-join.
     """
     from ala_name_matching_spark.operators.similarity_search import (
-        ivf_assign_udf,
-        ivf_train_centroids,
+        ivf_index,
+        ivf_probe,
     )
 
-    dim = int(vectors.select(F.size(vec_col).alias("d")).first()["d"])
-    subdim = dim // m_subs
-
-    centroids = ivf_train_centroids(vectors, n_centroids, vec_col=vec_col)
-    home = ivf_assign_udf(centroids, nprobe=1)
-    probe = ivf_assign_udf(centroids, nprobe=nprobe)
-    cand = (
-        vectors.select(
-            F.col(id_col).alias("vec_id"),
-            F.element_at(home(F.col(vec_col)), 1).alias("list_id"),
-        )
-        .join(
-            queries.select(
-                F.col(query_id_col).alias("query_id"),
-                F.explode(probe(F.col(vec_col))).alias("list_id"),
-            ),
-            "list_id",
-        )
-        .select("query_id", "vec_id")
-    )
+    centroids, lists = ivf_index(vectors, n_centroids, id_col, vec_col)
+    cand = lists.join(
+        ivf_probe(centroids, queries, nprobe, query_id_col, vec_col), "list_id"
+    ).select("query_id", "vec_id")
     if exclude_self:
         cand = cand.where(F.col("query_id") != F.col("vec_id"))
 
-    codebooks = train_pq_codebooks(
-        vectors, m_subs, k, iters, id_col, vec_col, dim
-    )
-    codes = pq_encode(vectors, codebooks, m_subs, subdim, id_col, vec_col)
-
-    qsv = _subvectors(queries, m_subs, subdim, query_id_col, vec_col).select(
-        F.col("vec_id").alias("query_id"), "sub", F.col("sv").alias("qsv")
-    )
-    qnorm2 = _dot_sv("qsv", "qsv", subdim)
-    grid = qsv.join(F.broadcast(codebooks), "sub").select(
-        "query_id",
-        "sub",
-        "code",
-        (
-            qnorm2
-            - 2.0 * _dot_sv("qsv", "centroid", subdim)
-            + F.col("cnorm2")
-        ).alias("d"),
+    codes, grid = _pq_codes_and_grid(
+        queries, vectors, m_subs, k, iters, id_col, vec_col, query_id_col
     )
     # expand candidate PAIRS by their M code rows, then look up the grid
     # keyed on (query_id, sub, code) -- the joined volume is exactly

@@ -8,11 +8,16 @@ Three paths:
     in a numpy-vectorized Arrow kernel; candidates = bucket collisions,
     verified with exact cosine. The scale path: shuffle is linear in rows,
     the quadratic term is confined to in-bucket pairs.
-  * IVF (inverted-file) ANN -- coarse k-means quantizer trained on a bounded
-    deterministic sample, corpus assigned to its nearest centroid's inverted
-    list in one Arrow matmul, queries probe the `nprobe` nearest lists.
-    The equi-join on list_id replaces the crossJoin; candidate volume is
-    ~corpus * nprobe / n_centroids.
+  * IVF (inverted-file) ANN -- one index, one search. ivf_index trains a
+    coarse k-means quantizer on a bounded deterministic sample and assigns
+    the corpus to its nearest centroid's inverted list in one Arrow matmul;
+    build_ivf_index / read_ivf_index persist and reload that same
+    (centroids, lists) pair. ivf_search probes the `nprobe` nearest lists
+    per query over either source; the equi-join on list_id replaces the
+    crossJoin, so candidate volume is ~corpus * nprobe / n_centroids.
+
+LSH and IVF generate candidates their own way and share one verify-and-rank
+tail (_cosine_topk).
 
 At 100 TB the corpus side stays partitioned (bucketed by vector id); only
 signatures / list ids (a few bytes/row) shuffle.
@@ -155,12 +160,8 @@ def lsh_topk(
     n_tables: int = 8,
     multiprobe: int = 1,
 ) -> DataFrame:
-    """ANN top-k: multi-table hyperplane LSH, exact cosine on candidates.
-
-    Ranks on the 6-dp-ROUNDED cosine (tie-break vec_id asc), not the raw
-    double: candidates that tie at the same true cosine (planted colinear
-    copies) would otherwise be ordered by last-ulp noise that independent
-    engines disagree on. Emitted cosines are 6-dp-rounded.
+    """ANN top-k: multi-table hyperplane LSH, exact cosine on candidates
+    (ranked by _cosine_topk).
 
     Structure (classic LSH index): `n_tables` independent tables of
     `n_planes` bits each; a candidate is any corpus vector sharing >= 1
@@ -176,8 +177,7 @@ def lsh_topk(
     Scale shape at 100 TB: the corpus is hashed once (one Arrow matmul) and
     stores L narrow (bucket, id) entries per vector -- the standard LSH
     index-size tradeoff; the quadratic term is confined to in-bucket pairs;
-    candidates are deduped on ids before the exact rerank. Output schema
-    matches brute_force_topk for drop-in comparison.
+    candidates are deduped on ids before the exact rerank.
     """
     sig = lsh_multitable_udf(dim, n_planes, n_tables)
     c = (
@@ -200,12 +200,24 @@ def lsh_topk(
     else:
         probes = F.col("sigs")
     q = q.select("query_id", "qv", F.explode(probes).alias("bucket"))
-    scored = (
-        c.join(q, "bucket")
-        # a (query, vec) pair can collide in several tables/probes; dedupe
-        # on the ids BEFORE ranking so row_number sees each candidate once
-        .dropDuplicates(["query_id", "vec_id"])
-        .withColumn("cosine", cosine_col(F.col("qv"), F.col("cv")))
+    # a (query, vec) pair can collide in several tables/probes; dedupe on
+    # the ids BEFORE ranking so row_number sees each candidate once
+    return _cosine_topk(
+        c.join(q, "bucket").dropDuplicates(["query_id", "vec_id"]), k
+    )
+
+
+def _cosine_topk(candidates: DataFrame, k: int) -> DataFrame:
+    """The verify-and-rank tail every ANN lane shares: exact cosine of each
+    (query_id, qv, vec_id, cv) candidate, self-pairs dropped, top-k per
+    query on the 6-dp-rounded cosine with vec_id as tie-break.
+
+    Ranking on the rounded value, not the raw double, keeps candidates that
+    tie at the same true cosine (planted colinear copies) in an order that
+    independent engines agree on. Output schema matches brute_force_topk.
+    """
+    scored = candidates.withColumn(
+        "cosine", cosine_col(F.col("qv"), F.col("cv"))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.round(F.col("cosine"), 6).desc(), F.col("vec_id").asc()
@@ -289,23 +301,56 @@ def ivf_assign_udf(centroids: np.ndarray, nprobe: int = 1):
     return F.pandas_udf(assign, T.ArrayType(T.IntegerType()))
 
 
-def ivf_topk(
+def ivf_index(
     corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
     n_centroids: int = 16,
-    nprobe: int = 4,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> tuple[np.ndarray, DataFrame]:
+    """Build the IVF index: the trained centroids, and the corpus lazily
+    assigned to its home list as (vec_id, cv, list_id).
+
+    Training touches a bounded sample; the assignment is one narrow Arrow
+    matmul per batch, no shuffle. build_ivf_index persists this pair and
+    read_ivf_index returns it from disk, so ivf_search is one function
+    over either source.
+    """
+    centroids = ivf_train_centroids(corpus, n_centroids, vec_col=vec_col)
+    home = ivf_assign_udf(centroids, nprobe=1)
+    lists = corpus.select(
+        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv")
+    ).withColumn("list_id", F.element_at(home(F.col("cv")), 1))
+    return centroids, lists
+
+
+def ivf_probe(
+    centroids: np.ndarray,
+    queries: DataFrame,
+    nprobe: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF-flat ANN top-k: probe the nprobe nearest inverted lists, exact
-    cosine rerank on the candidates. Output schema matches brute_force_topk
-    for drop-in recall measurement. Ranks on the 6-dp cosine, as lsh_topk
-    does (cross-engine-stable ordering of exact ties).
+    """(query_id, qv, list_id): one row per query and probed list, the
+    `nprobe` lists whose centroids are nearest the query."""
+    probe = ivf_assign_udf(centroids, nprobe=nprobe)
+    return queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+    ).withColumn("list_id", F.explode(probe(F.col("qv"))))
 
-    Scale shape at 100 TB: training touches a bounded sample; the corpus is
-    assigned once (narrow Arrow matmul, no shuffle) and the candidate join
-    is an equi-join on list_id -- candidate volume ~ |C| * nprobe /
+
+def ivf_search(
+    centroids: np.ndarray,
+    lists: DataFrame,
+    queries: DataFrame,
+    k: int = 5,
+    nprobe: int = 4,
+) -> DataFrame:
+    """IVF-flat ANN top-k: probe the nprobe nearest inverted lists, join the
+    probes to `lists` on list_id, exact cosine rerank (_cosine_topk).
+
+    `centroids, lists` come from ivf_index (in memory) or read_ivf_index
+    (persisted); on a persisted index the list_id join prunes unprobed list
+    directories at scan time. Candidate volume ~ |C| * nprobe /
     n_centroids, tunable independently of corpus size. Hot lists (skewed
     data) are the IVF analog of hot blocks; cap/salt with the same
     machinery as ER blocks if list-size stats show skew. Measured on the
@@ -315,26 +360,8 @@ def ivf_topk(
     probing all 16 lists reproduces brute force exactly (both asserted in
     tests/test_similarity_search.py).
     """
-    centroids = ivf_train_centroids(corpus, n_centroids, vec_col=vec_col)
-    home = ivf_assign_udf(centroids, nprobe=1)
-    probe = ivf_assign_udf(centroids, nprobe=nprobe)
-    c = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv")
-    ).withColumn("list_id", F.element_at(home(F.col("cv")), 1))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    ).withColumn("list_id", F.explode(probe(F.col("qv"))))
-    scored = c.join(q, "list_id").withColumn(
-        "cosine", cosine_col(F.col("qv"), F.col("cv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("cosine"), 6).desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.filter(F.col("query_id") != F.col("vec_id"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", F.round("cosine", 6).alias("cosine"), "rank")
+    return _cosine_topk(
+        lists.join(ivf_probe(centroids, queries, nprobe), "list_id"), k
     )
 
 
@@ -380,14 +407,8 @@ def embedding_near_duplicates(
 
 # --- persisted IVF index (build once, query many) ------------------------------
 
-def build_ivf_index(
-    corpus: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the IVF index: centroids + list-assigned corpus, on disk.
+def build_ivf_index(corpus: DataFrame, path: str, n_centroids: int = 16) -> None:
+    """Write the ivf_index pair to disk; read_ivf_index returns it.
 
     The reference's whole architecture is "expensive index build once,
     cheap searches forever" (DwcaNameIndexer builds the Lucene dirs,
@@ -401,7 +422,7 @@ def build_ivf_index(
     assignment pass is one narrow Arrow matmul over the corpus.
     """
     spark = corpus.sparkSession
-    centroids = ivf_train_centroids(corpus, n_centroids, vec_col=vec_col)
+    centroids, lists = ivf_index(corpus, n_centroids)
     # single-slice parallelize, NOT createDataFrame().coalesce(1): the
     # default path slices 16 rows across defaultParallelism partitions
     # and coalesce(1) then drags one task through every python-eval
@@ -416,12 +437,7 @@ def build_ivf_index(
         ),
         "list_id int, centroid array<double>",
     ).write.mode("overwrite").parquet(f"{path}/centroids")
-    home = ivf_assign_udf(centroids, nprobe=1)
     (
-        corpus.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv")
-        )
-        .withColumn("list_id", F.element_at(home(F.col("cv")), 1))
         # one shuffle on list_id before the partitioned write: without it
         # every input partition writes a fragment into every list dir
         # (n_parts x n_centroids small files -- a scan then pays one task
@@ -429,50 +445,19 @@ def build_ivf_index(
         # file. This is the same pay-the-shuffle-at-write-time trade as
         # the bucketed layout. At 100 TB add a salt column to the
         # repartition to split hot lists across several writers/files.
-        .repartition("list_id")
+        lists.repartition("list_id")
         .write.mode("overwrite")
         .partitionBy("list_id")
         .parquet(f"{path}/lists")
     )
 
 
-def ivf_topk_from_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Query a persisted IVF index (build_ivf_index layout).
-
-    Probed lists land as a `list_id IN (...)` equi-join; because lists/ is
-    partitioned by list_id, Catalyst prunes unprobed list directories at
-    scan time (dynamic partition pruning against the broadcast query side)
-    -- the physical read is ~corpus * nprobe / n_centroids, matching the
-    in-memory ivf_topk's candidate volume but without recomputing
-    assignments per query batch. Ranks on the 6-dp cosine, as ivf_topk
-    does.
-    """
+def read_ivf_index(spark, path: str) -> tuple[np.ndarray, DataFrame]:
+    """The (centroids, lists) pair of a build_ivf_index layout: centroids
+    collected to the driver, lists as a lazy scan of the partitioned
+    directory."""
     cen = spark.read.parquet(f"{path}/centroids").collect()
     centroids = np.zeros((len(cen), len(cen[0]["centroid"])))
     for r in cen:
         centroids[r["list_id"]] = r["centroid"]
-    probe = ivf_assign_udf(centroids, nprobe=nprobe)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    ).withColumn("list_id", F.explode(probe(F.col("qv"))))
-    c = spark.read.parquet(f"{path}/lists")
-    scored = c.join(q, "list_id").withColumn(
-        "cosine", cosine_col(F.col("qv"), F.col("cv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("cosine"), 6).desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.filter(F.col("query_id") != F.col("vec_id"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    return centroids, spark.read.parquet(f"{path}/lists")

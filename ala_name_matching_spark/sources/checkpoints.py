@@ -57,8 +57,11 @@ def barrier(df: DataFrame) -> DataFrame:
 @contextmanager
 def released():
     """Free every barrier taken inside the block when it exits. The
-    checkpoint's own RDD is unpersisted: DataFrame.unpersist() does not free
-    local-checkpoint blocks."""
+    checkpoint's own RDD is freed: DataFrame.unpersist() does not free
+    local-checkpoint blocks. SparkContext.unpersistRDD is the call
+    RDD.unpersist makes, without its per-RDD warning that a locally
+    checkpointed RDD cannot be recomputed (package-private in Scala,
+    public in the bytecode py4j calls)."""
     if not hasattr(_scopes, "stack"):
         _scopes.stack = []
     _scopes.stack.append([])
@@ -66,7 +69,7 @@ def released():
         yield
     finally:
         for rdd in _scopes.stack.pop():
-            rdd.unpersist(True)
+            rdd.sparkContext().unpersistRDD(rdd.id(), True)
 
 
 @contextmanager
@@ -147,7 +150,8 @@ class CheckpointManager:
             return self.read(phase)
         t0 = time.time()
         df.write.mode("overwrite").parquet(self._path(phase))
-        out = self.read(phase)
+        # the schema just written, not inferred: inference costs a job
+        out = self.spark.read.schema(df.schema).parquet(self._path(phase))
         # Per-partition lineage rows (S5): one output file per write task, so
         # parquet footers carry the per-partition row counts -- metadata-only,
         # no rescan of the phase output. (Production Iceberg: the same counts

@@ -146,6 +146,33 @@ def test_checkpoint_url_root_is_rejected(tmp_path, monkeypatch):
     assert os.listdir(tmp_path) == []
 
 
+def test_materialize_reads_back_without_schema_inference(spark, tmp_path):
+    """A fresh commit reads the phase back with the schema it just wrote:
+    the write is its only Spark job (inference would start a second), and
+    the frame it returns has the written column names and types."""
+    df = spark.range(5).selectExpr(
+        "id",
+        "CAST(id AS STRING) AS s",
+        "id / 2 AS x",
+        "array(CAST(id AS DOUBLE)) AS v",
+        "id % 2 = 0 AS b",
+    )
+    ckpt = CheckpointManager(spark, str(tmp_path / "ck"))
+    sc = spark.sparkContext
+    sc.setJobGroup("materialize_read_back", "one fresh phase commit")
+    try:
+        out = ckpt.materialize("p", df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("materialize_read_back")) == 1
+
+    def types(frame):
+        return [(f.name, f.dataType.simpleString()) for f in frame.schema]
+
+    assert types(out) == types(df)
+    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, df.collect()))
+
+
 def test_released_frees_the_barriers_and_caches_of_its_thread(spark):
     """A barrier belongs to the innermost open released() scope of the
     thread that took it and is freed when that scope exits; cached()

@@ -8,7 +8,8 @@ from pyspark.sql import functions as F
 from ala_name_matching_spark.operators.similarity_search import (
     brute_force_topk,
     embedding_near_duplicates,
-    ivf_topk,
+    ivf_index,
+    ivf_search,
     lsh_topk,
 )
 
@@ -52,8 +53,8 @@ def test_embedding_near_duplicates(vectors):
 
 
 def test_ivf_topk_on_clones(vectors):
-    out = ivf_topk(
-        vectors, vectors.filter(F.col("vec_id") < 3), k=1, n_centroids=4, nprobe=2
+    out = ivf_search(
+        *ivf_index(vectors, n_centroids=4), vectors.filter(F.col("vec_id") < 3), k=1, nprobe=2
     )
     got = {r["query_id"]: r["vec_id"] for r in out.collect()}
     # a perturbed clone quantizes to the same coarse cell as its source
@@ -62,7 +63,7 @@ def test_ivf_topk_on_clones(vectors):
 
 def test_ivf_recall_floor_vs_brute_force(spark):
     """IVF recall gate, same protocol as the LSH gate below: recall@5 of the
-    published ivf_topk config (16 lists, nprobe=4) vs exact brute force on
+    published ivf_search config (16 lists, nprobe=4) vs exact brute force on
     the driver's 64-d uniform-random embeddings fixture. Deterministic
     (seeded sample + k-means++ + fixed data). nprobe=16 (probe everything)
     must be exact by construction -- that's the IVF correctness invariant."""
@@ -76,14 +77,14 @@ def test_ivf_recall_floor_vs_brute_force(spark):
     truth = {(r["query_id"], r["vec_id"]) for r in brute_force_topk(emb, q, k=5).collect()}
     got = {
         (r["query_id"], r["vec_id"])
-        for r in ivf_topk(emb, q, k=5, n_centroids=16, nprobe=4).collect()
+        for r in ivf_search(*ivf_index(emb, n_centroids=16), q, k=5, nprobe=4).collect()
     }
     recall = len(got & truth) / len(truth)
     print(f"IVF recall@5 = {recall:.3f}")
     assert recall >= 0.6
     full = {
         (r["query_id"], r["vec_id"])
-        for r in ivf_topk(emb, q, k=5, n_centroids=16, nprobe=16).collect()
+        for r in ivf_search(*ivf_index(emb, n_centroids=16), q, k=5, nprobe=16).collect()
     }
     assert full == truth
 
@@ -121,12 +122,11 @@ def test_ann_recall_floor_vs_brute_force(spark):
 
 
 def test_ivf_index_roundtrip_matches_inmemory(spark, tmp_path):
-    """Persisted-index queries reproduce the in-memory ivf_topk exactly
+    """Persisted-index queries reproduce the in-memory index exactly
     (same centroids -> same lists -> same candidates -> same top-k)."""
     from ala_name_matching_spark.operators.similarity_search import (
         build_ivf_index,
-        ivf_topk,
-        ivf_topk_from_index,
+        read_ivf_index,
     )
 
     corpus = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -135,10 +135,10 @@ def test_ivf_index_roundtrip_matches_inmemory(spark, tmp_path):
     build_ivf_index(corpus, path, n_centroids=8)
     from_index = {
         (r["query_id"], r["rank"]): r["vec_id"]
-        for r in ivf_topk_from_index(spark, path, queries, k=3, nprobe=3).collect()
+        for r in ivf_search(*read_ivf_index(spark, path), queries, k=3, nprobe=3).collect()
     }
     in_memory = {
         (r["query_id"], r["rank"]): r["vec_id"]
-        for r in ivf_topk(corpus, queries, k=3, n_centroids=8, nprobe=3).collect()
+        for r in ivf_search(*ivf_index(corpus, n_centroids=8), queries, k=3, nprobe=3).collect()
     }
     assert from_index == in_memory and len(from_index) == 30
